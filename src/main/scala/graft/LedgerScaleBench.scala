@@ -23,17 +23,17 @@ object LedgerScaleBench {
     if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
   }
 
-  /** Fresh throwaway state path: removes the dir AND the lock/staging
-    * SIBLINGS a previously crashed run leaves behind (path +
-    * "__takedown_lock" etc.), which would otherwise wedge the next run
-    * on the single-writer refusal until deleted by hand (ADVICE r20).
-    * Safe: the bench owns these throwaway paths.
+  /** Fresh throwaway state path: removes the dir AND the writer-lock,
+    * staging and backup SIBLINGS a previously crashed run leaves
+    * behind, which would otherwise wedge the next run on the writer
+    * lock's refusal until deleted by hand (ADVICE r20). Safe: the bench
+    * owns these throwaway paths.
     */
   private def freshPath(path: String): Unit = {
-    rm(new java.io.File(path))
-    Seq("__takedown_lock", "__refresh_lock", "__append_lock",
-      "__compact_lock", "__compact_staging", "__compact_backup")
-      .foreach(s => rm(new java.io.File(path + s)))
+    import graft.state.LedgerState._
+    (new java.io.File(path) +: Seq(lockPath(path), stagingPath(path),
+      backupPath(path)).map(p => new java.io.File(p.toUri.getPath)))
+      .foreach(rm)
   }
 
   def main(args: Array[String]): Unit = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.LongType
 import graft.functions.HashFunctions._
 import graft.functions.VectorFunctions
 import graft.sources.Tables
+import graft.state.LedgerState
 
 /** Deduplication operators over `documents`/`embeddings` (SURVEY §2.3
   * D1–D5). Scale design notes per operator:
@@ -915,81 +916,36 @@ object DedupOps extends QueryGroup {
     df.withColumn("pfx", substring(col("content_hash"), 1, 1))
       .repartition(col("pfx"))
 
-  /** Exclusive-create per-ledger WRITER lock (`__takedown_lock`):
-    * serializes every heal-or-mutate entry — refreshes, takedowns,
-    * compaction — on one ledger path. The r19-advice race this closes:
-    * a refresh healing a torn swap while a REMOVER is live would
-    * "restore" a slice the remover just renamed aside and discard the
-    * remover's staging — failing the takedown mid-flight and silently
-    * re-exposing removed hashes; and a bare append landing between a
-    * staged swap's snapshot read and its renames is discarded with the
-    * backup dir (lost ingest). Non-blocking: a held lock REFUSES
-    * (wedge, not corrupt); a crashed holder leaves a stale lock for
-    * the operator to delete after confirming no writer is live (the
-    * `__refresh_lock` contract).
-    */
-  private def withTakedownLock[T](fs: org.apache.hadoop.fs.FileSystem,
-      path: String, who: String)(body: => T): T = {
-    val lock = new org.apache.hadoop.fs.Path(path + "__takedown_lock")
-    fs.mkdirs(lock.getParent)
-    val acquired =
-      try { fs.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    require(acquired, s"takedown lock $lock already held — $who " +
-      "shares the single-writer ledger lock; if the holder crashed, " +
-      "delete the lock after confirming no writer is live")
-    try body finally fs.delete(lock, false)
-  }
-
   private[graft] def refreshLedger(s: SparkSession, path: String,
       prior: DataFrame): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // heal-then-append under the shared writer lock (r19-advice): the
-    // heal must never race a live takedown's swap, and the append must
-    // never land inside one
-    withTakedownLock(fs, path, "refreshLedger") {
-      refreshLedgerHeld(s, path, prior)
+    LedgerState.withWriter(fs, path, "refreshLedger") {
+      healSubDirSwaps(fs, p)
+      if (!ledgerDataExists(fs, p))
+        withPfx(prior).write.partitionBy("pfx").mode("overwrite").parquet(path)
+      else {
+        // maintenance reads the FULL ledger: pruning it by the prior
+        // side's prefixes would re-execute the corpus-sized prior
+        // pipeline a second time (driver collect) to derive a set that
+        // a full prior covers anyway — the prune belongs on the QUERY
+        // path (incrementalDedup), where the batch is small and built
+        val novel = novelHashes(s, path, prior)
+        if (!novel.isEmpty)
+          withPfx(novel).write.partitionBy("pfx").mode("append").parquet(path)
+      }
     }
   }
 
-  /** [[refreshLedger]]'s body, caller already holding the writer lock
-    * (the bloomed refresh nests here under its own acquisition).
+  /** `prior` hashes absent from the ledger, materialized (batch-sized)
+    * before any append so the write never scans its own destination.
     */
-  private def refreshLedgerHeld(s: SparkSession, path: String,
-      prior: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // heal a torn COMPACTION swap first (r20 review): with the live
-    // dir renamed aside and the promote never executed, the bootstrap
-    // branch below would otherwise re-create the ledger from `prior`
-    // alone — losing every hash not in today's prior and resurrecting
-    // takedowns — and the next compaction entry would then delete the
-    // backup holding the only real copy
-    val compactBackup = new org.apache.hadoop.fs.Path(
-      path + "__compact_backup")
-    if (!fs.exists(p) && fs.exists(compactBackup))
-      require(fs.rename(compactBackup, p),
-        s"could not restore $compactBackup to $path")
-    restoreTakedownBackups(fs, p) // heal a torn takedown swap too
-    if (!ledgerDataExists(fs, p))
-      withPfx(prior).write.partitionBy("pfx").mode("overwrite").parquet(path)
-    else {
-      // novel hashes only; materialized (batch-sized) before the append
-      // so the write never scans its own destination.
-      // maintenance reads the FULL ledger: pruning it by the prior
-      // side's prefixes would re-execute the corpus-sized prior
-      // pipeline a second time (driver collect) to derive a set that a
-      // full prior covers anyway — the prune belongs on the QUERY path
-      // (incrementalDedup), where the batch is small and already built
-      val novel = prior
-        .join(s.read.parquet(path).select("content_hash"),
-          Seq("content_hash"), "left_anti")
-        .localCheckpoint()
-      if (!novel.isEmpty)
-        withPfx(novel).write.partitionBy("pfx").mode("append").parquet(path)
-    }
-  }
+  private def novelHashes(s: SparkSession, path: String,
+      prior: DataFrame): DataFrame =
+    prior
+      .join(s.read.parquet(path).select("content_hash"),
+        Seq("content_hash"), "left_anti")
+      .localCheckpoint()
 
   /** The dedup step itself — the plan a daily ingest run executes:
     * ledger anti-join + within-batch collapse. Touches the ledger
@@ -1302,21 +1258,18 @@ object DedupOps extends QueryGroup {
     * place (the tombstones ⊆ ledger-ids invariant) and keyed by the
     * doc_id refresh never re-indexes, so un-shadowing them is exactly
     * the append the doc would otherwise get — without ever creating
-    * duplicate rows for one id. Runs under the shared writer lock: the
-    * r19 verdict race (a bare append landing inside a takedown's or
-    * compaction's staged swap is silently discarded with the backup)
-    * is closed by serialization, and the tombstone-set rewrite below
-    * must not interleave with a takedown's tombstone append.
+    * duplicate rows for one id. One writer at a time
+    * ([[graft.state.LedgerState]]): an append landing inside a
+    * takedown's or compaction's staged swap would be discarded with the
+    * backup, and the tombstone-set rewrite below must not interleave
+    * with a takedown's tombstone append.
     */
   private[graft] def refreshNearDupLedger(s: SparkSession, path: String,
       prior: DataFrame): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    withTakedownLock(fs, path, "refreshNearDupLedger") {
-      val backup = new org.apache.hadoop.fs.Path(path + "__compact_backup")
-      if (!fs.exists(p) && fs.exists(backup))
-        require(fs.rename(backup, p), s"could not restore $backup to $path")
-      healBandTombstoneSwap(fs, p)
+    LedgerState.withWriter(fs, path, "refreshNearDupLedger") {
+      healSubDirSwaps(fs, p)
       if (!fs.exists(p))
         minhashIndex(prior).write.mode("overwrite").parquet(path)
       else {
@@ -1339,12 +1292,12 @@ object DedupOps extends QueryGroup {
           if (!fresh.isEmpty)
             minhashIndex(fresh).write.mode("append").parquet(path)
           resurrect.foreach { r =>
-            // tombstone-set rewrite (tombstone-sized) by the staged
-            // swap discipline; a crash between the renames heals at
-            // the next writer entry ([[healBandTombstoneSwap]]), and
-            // a crash BEFORE this point just leaves the resurrected
-            // ids shadowed until the next refresh retries (novelty
-            // still sees them as absent-from-live — self-healing)
+            // tombstone-set rewrite (tombstone-sized), staged and
+            // swapped in; a torn swap heals at the next writer entry
+            // ([[healSubDirSwaps]]), and a crash BEFORE this point
+            // (after the append above) just leaves the resurrected ids
+            // shadowed until the next refresh retries (novelty still
+            // sees them as absent-from-live — self-healing)
             val remaining = tomb.get
               .join(broadcast(r), Seq("doc_id"), "left_anti")
               .localCheckpoint()
@@ -1358,16 +1311,7 @@ object DedupOps extends QueryGroup {
               fs.delete(stg, true)
               remaining.coalesce(1).write.mode("overwrite")
                 .parquet(stg.toString)
-              val b = bandTombBackup(p)
-              fs.delete(b, true)
-              require(fs.rename(bandTombDir(p), b),
-                s"could not move ${bandTombDir(p)} aside")
-              try require(fs.rename(stg, bandTombDir(p)),
-                s"could not promote $stg")
-              catch {
-                case e: Throwable => fs.rename(b, bandTombDir(p)); throw e
-              }
-              fs.delete(b, true)
+              LedgerState.swapIn(fs, bandTombDir(p), stg, bandTombBackup(p))
             }
           }
         }
@@ -1389,120 +1333,89 @@ object DedupOps extends QueryGroup {
     * partition dirs and therefore its pruned-scan PartitionFilters, an
     * unpartitioned ledger packs to ⌈bytes/128 MB⌉ files.
     *
-    * Crash-safe by rename-aside (the SchemaEvolution swap, on raw
-    * paths): the compacted copy is fully written to a staging dir
-    * first, the live dir is renamed ASIDE (not deleted) before staging
-    * takes its name, and the backup is dropped only after the swap —
-    * at every instant the full ledger exists under some path, and a
-    * crash leaves either the original intact (possibly under
-    * `__compact_backup`, restored on the next call) or the swap
-    * complete. Content is untouched — read-equivalence is spec-gated.
+    * Crash-safe by [[graft.state.LedgerState]]'s staged rename-aside
+    * swap. Content is untouched — read-equivalence is spec-gated.
     */
   private[graft] def compactLedger(s: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // writer lock (r19-advice): compaction's snapshot-read → staged
-    // swap must not race a takedown (each would delete the other's
-    // mid-swap backup) or discard an append/tombstone landing between
-    // its snapshot and its renames
-    withTakedownLock(fs, path, "compactLedger") {
-      compactLedgerHeld(s, path)
+    LedgerState.withWriter(fs, path, "compactLedger") {
+      require(fs.exists(p), s"no ledger at $path")
+      // heal torn sub-dir swaps BEFORE snapshotting (r19-advice high):
+      // the parquet scan below skips the underscore-prefixed
+      // `_takedown_backup_X` dir, so an unhealed torn swap would compact
+      // a copy MISSING that whole prefix slice and then destroy the
+      // slice's only surviving copy with the backup
+      healSubDirSwaps(fs, p)
+      val hadBloom = fs.exists(bloomMarker(path))
+      val staging = LedgerState.stagingPath(path)
+      fs.delete(staging, true)
+      // band-ledger tombstones are PURGED here (the d17 physical-removal
+      // rider): the compacted copy is built with the tombstoned doc_ids
+      // anti-joined out, and the `_tombstones` dir rides aside with the
+      // old dir and dies with the backup — takedowns stay O(takedown)
+      // at request time and the ledger pays one rewrite per compaction
+      // cycle it was already paying
+      val df = readBandTombstones(s, path).fold(s.read.parquet(path))(t =>
+        s.read.parquet(path).join(broadcast(t), Seq("doc_id"), "left_anti"))
+      if (df.columns.contains("pfx"))
+        // same write shape as refreshLedger's bootstrap: repartition ON
+        // pfx so each of the 16 partition dirs gets exactly one task's
+        // single file, keeping the pruned-read layout bit-compatible
+        df.repartition(col("pfx")).write.partitionBy("pfx")
+          .mode("overwrite").parquet(staging.toString)
+      else {
+        val bytes = fs.getContentSummary(p).getLength
+        val nFiles = math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20))
+        df.repartition(nFiles.toInt).write
+          .mode("overwrite").parquet(staging.toString)
+      }
+      LedgerState.swapIn(fs, p, staging, LedgerState.backupPath(path))
+      // d16 interplay (r19): the swap moved any `_bloom/` sidecar aside
+      // with the old dir and dropped it with the backup — readers would
+      // degrade to the full join until the next refresh self-heals.
+      // Better: compaction is also the fp-creep BOUND for takedowns
+      // (removeFromHashLedger shrinks the ledger but not the filter —
+      // safe, only over-approximate), so REBUILD the filter from the
+      // compacted rows whenever the pre-swap ledger carried one.
+      s.catalog.refreshByPath(path) // raw renames: invalidate listings
+      if (hadBloom)
+        commitBloom(fs, path,
+          buildBloom(s.read.parquet(path).select("content_hash")))
     }
   }
 
-  private def compactLedgerHeld(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val backup = new org.apache.hadoop.fs.Path(path + "__compact_backup")
-    // finish a crashed predecessor: staging is always safe to discard
-    // (the live dir was intact when it was being written); a leftover
-    // backup with no live dir means the crash hit between the renames
-    if (!fs.exists(p) && fs.exists(backup))
-      require(fs.rename(backup, p), s"could not restore $backup to $path")
-    require(fs.exists(p), s"no ledger at $path")
-    // heal a torn PER-PREFIX takedown swap BEFORE snapshotting
-    // (r19-advice high): the parquet scan below skips the
-    // underscore-prefixed `_takedown_backup_X` dir, so an unhealed
-    // torn swap would compact a copy MISSING that whole prefix slice
-    // and then destroy the slice's only surviving copy with the backup
-    restoreTakedownBackups(fs, p)
-    healBandTombstoneSwap(fs, p)
-    val hadBloom = fs.exists(bloomMarker(path))
-    val staging = new org.apache.hadoop.fs.Path(path + "__compact_staging")
-    fs.delete(staging, true)
-    // band-ledger tombstones are PURGED here (the d17 physical-removal
-    // rider): the compacted copy is built with the tombstoned doc_ids
-    // anti-joined out, and the `_tombstones` dir rides aside with the
-    // old dir and dies with the backup — takedowns stay O(takedown)
-    // at request time and the ledger pays one rewrite per compaction
-    // cycle it was already paying
-    val df = readBandTombstones(s, path).fold(s.read.parquet(path))(t =>
-      s.read.parquet(path).join(broadcast(t), Seq("doc_id"), "left_anti"))
-    if (df.columns.contains("pfx"))
-      // same write shape as refreshLedger's bootstrap: repartition ON
-      // pfx so each of the 16 partition dirs gets exactly one task's
-      // single file, keeping the pruned-read layout bit-compatible
-      df.repartition(col("pfx")).write.partitionBy("pfx")
-        .mode("overwrite").parquet(staging.toString)
-    else {
-      val bytes = fs.getContentSummary(p).getLength
-      val nFiles = math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20))
-      df.repartition(nFiles.toInt).write
-        .mode("overwrite").parquet(staging.toString)
-    }
-    fs.delete(backup, true)
-    require(fs.rename(p, backup), s"could not move $path aside")
-    try require(fs.rename(staging, p), s"could not promote $staging")
-    catch {
-      case e: Throwable =>
-        fs.rename(backup, p)
-        throw e
-    }
-    fs.delete(backup, true)
-    // d16 interplay (r19): the swap moved any `_bloom/` sidecar aside
-    // with the old dir and dropped it with the backup — readers would
-    // degrade to the full join until the next refresh self-heals.
-    // Better: compaction is also the fp-creep BOUND for takedowns
-    // (removeFromHashLedger shrinks the ledger but not the filter —
-    // safe, only over-approximate), so REBUILD the filter from the
-    // compacted rows whenever the pre-swap ledger carried one.
-    s.catalog.refreshByPath(path) // raw renames: invalidate listings
-    if (hadBloom)
-      commitBloom(fs, path,
-        buildBloom(s.read.parquet(path).select("content_hash")))
-  }
-
-  /** Restore any per-prefix takedown swap that crashed between its two
-    * renames (live `pfx=X` gone, `pfx=X__takedown_backup` present) —
-    * called at every hash-ledger writer entry, so a torn
-    * [[removeFromHashLedger]] self-heals instead of silently serving a
-    * ledger missing one prefix slice. Metadata-sized (one listing).
-    */
-  // takedown scratch dirs live INSIDE the ledger dir under leading
-  // underscores (the `_bloom` trick): invisible to the parquet scan's
-  // partition discovery, so a crash window can never surface removed
-  // rows under a garbage partition value
-  private def takedownStagingDir(p: org.apache.hadoop.fs.Path,
-      pf: String) = new org.apache.hadoop.fs.Path(p, s"_takedown_staging_$pf")
+  // takedown and tombstone scratch dirs live INSIDE the ledger dir
+  // under leading underscores (the `_bloom` trick): invisible to the
+  // parquet scan's partition discovery, so a crash window can never
+  // surface removed rows under a garbage partition value
+  private def takedownStagingDir(p: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(p, "_takedown_staging_all")
   private def takedownBackupDir(p: org.apache.hadoop.fs.Path,
       pf: String) = new org.apache.hadoop.fs.Path(p, s"_takedown_backup_$pf")
 
-  private def restoreTakedownBackups(
-      fs: org.apache.hadoop.fs.FileSystem,
+  /** Heal the sub-dir swaps writers run INSIDE a hash or band ledger —
+    * a takedown's prefix group (`pfx=X` ↔ `_takedown_backup_X`, rolled
+    * back whole while its staging dir shows it uncommitted) and the
+    * band tombstone rewrite (`_tombstones` ↔ `_tombstones_backup`) —
+    * then drop their staging dirs. Called at every writer entry, so a
+    * torn swap self-heals instead of serving a ledger missing a prefix
+    * slice or an outstanding takedown. One listing.
+    */
+  private def healSubDirSwaps(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(p))
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_takedown_backup_")) {
-          val live = new org.apache.hadoop.fs.Path(p,
-            s"pfx=${n.stripPrefix("_takedown_backup_")}")
-          if (!fs.exists(live))
-            require(fs.rename(st.getPath, live),
-              s"could not restore ${st.getPath}")
-          else fs.delete(st.getPath, true) // swap completed; drop relic
-        } else if (n.startsWith("_takedown_staging_"))
-          fs.delete(st.getPath, true) // stale staging: always safe
+    if (fs.exists(p)) {
+      val entries = fs.listStatus(p).map(_.getPath)
+      val staged = entries.filter(_.getName.startsWith("_takedown_staging_"))
+      entries.filter(_.getName.startsWith("_takedown_backup_")).foreach { b =>
+        LedgerState.heal(fs, new org.apache.hadoop.fs.Path(p,
+            s"pfx=${b.getName.stripPrefix("_takedown_backup_")}"), b,
+          rollBack = staged.nonEmpty)
       }
+      staged.foreach(fs.delete(_, true))
+      LedgerState.heal(fs, bandTombDir(p), bandTombBackup(p))
+      fs.delete(bandTombStaging(p), true)
+    }
 
   /** TAKEDOWN for the d9/d16 content-hash ledger (r19): remove
     * `hashes` (a `content_hash` frame — the reclaimed/DMCA'd/opted-out
@@ -1513,12 +1426,12 @@ object DedupOps extends QueryGroup {
     * PREFIX-PRUNED staged rewrite (the F16 swap at partition grain):
     * only the ≤16 `pfx=` partitions actually containing a removed hash
     * are rewritten — a takedown touches p/16 of the ledger's bytes,
-    * never O(ledger). Each affected partition dir is rewritten to a
-    * staging sibling (rows anti-joined against the broadcast takedown
-    * set), then swapped rename-aside: at every instant the partition
-    * exists under its live name or its `__takedown_backup` name, and
-    * every writer entry (refreshes, removals) restores a torn swap
-    * first. Idempotent — removing absent hashes rewrites nothing.
+    * never O(ledger). The affected partitions are rewritten under a
+    * staging dir (rows anti-joined against the broadcast takedown set)
+    * and swapped in as one group ([[graft.state.LedgerState]]): a crash
+    * leaves the whole takedown applied or none of it once the next
+    * writer heals. Idempotent — removing absent hashes rewrites
+    * nothing.
     *
     * d16's Bloom sidecar is delete-friendly BY CONSTRUCTION: removing
     * ledger rows PRESERVES bloom ⊇ ledger (the filter only
@@ -1526,17 +1439,14 @@ object DedupOps extends QueryGroup {
     * join, finds nothing, and is correctly NOVEL), so the filter is
     * left untouched here; the fp creep is bounded by
     * [[compactLedger]]'s rebuild-on-compact rule (spec-gated).
-    * Single-writer via the same exclusive-create lock discipline as
-    * the d16 refresh (two racing removals could double-swap a
-    * partition dir).
     */
   private[graft] def removeFromHashLedger(s: SparkSession, path: String,
       hashes: DataFrame): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(ledgerDataExists(fs, p), s"no hash ledger at $path")
-    withTakedownLock(fs, path, "removeFromHashLedger") {
-      restoreTakedownBackups(fs, p)
+    LedgerState.withWriter(fs, path, "removeFromHashLedger") {
+      require(ledgerDataExists(fs, p), s"no hash ledger at $path")
+      healSubDirSwaps(fs, p)
       // takedown-sized; consumed per affected prefix below
       val dead = hashes.select("content_hash").distinct().localCheckpoint()
       val pfxs = dead
@@ -1556,12 +1466,12 @@ object DedupOps extends QueryGroup {
         // ONE parallel job rewrites every affected slice into a shared
         // staging dir (partitionBy recreates the live pfx layout;
         // repartition ON pfx keeps one file per slice — the
-        // refreshLedger write discipline), then each slice swaps by
-        // the same per-partition rename-aside protocol. Sequential
+        // refreshLedger write discipline), then the slices swap in as
+        // one group (LedgerState.swapInAll). Sequential
         // per-prefix write jobs measured 16 × ~0.3 s of pure driver
         // scheduling on a 16-prefix takedown; the work is one pruned
         // scan either way.
-        val stagingAll = takedownStagingDir(p, "all")
+        val stagingAll = takedownStagingDir(p)
         fs.delete(stagingAll, true)
         s.read.parquet(path)
           .filter(col("pfx").isin(affected: _*))
@@ -1569,21 +1479,13 @@ object DedupOps extends QueryGroup {
           .repartition(col("pfx"))
           .write.partitionBy("pfx").mode("overwrite")
           .parquet(stagingAll.toString)
-        affected.foreach { pf =>
-          val live = new org.apache.hadoop.fs.Path(p, s"pfx=$pf")
-          val staged = new org.apache.hadoop.fs.Path(stagingAll, s"pfx=$pf")
-          // a slice whose every row was removed writes no staged dir:
-          // swap in an empty one (the prefix may refill on re-ingest)
-          if (!fs.exists(staged)) fs.mkdirs(staged)
-          val backup = takedownBackupDir(p, pf)
-          fs.delete(backup, true)
-          require(fs.rename(live, backup), s"could not move $live aside")
-          try require(fs.rename(staged, live),
-            s"could not promote $staged")
-          catch { case e: Throwable => fs.rename(backup, live); throw e }
-          fs.delete(backup, true)
-        }
-        fs.delete(stagingAll, true)
+        // a slice whose every row was removed writes no staged dir:
+        // swap in an empty one (the prefix may refill on re-ingest)
+        affected.foreach(pf => fs.mkdirs(
+          new org.apache.hadoop.fs.Path(stagingAll, s"pfx=$pf")))
+        LedgerState.swapInAll(fs, stagingAll, affected.map(pf =>
+          (new org.apache.hadoop.fs.Path(p, s"pfx=$pf"),
+            takedownBackupDir(p, pf))))
       }
       // the swap went through raw FS renames, which Spark's cached
       // file indexes don't see (Spark only invalidates paths IT
@@ -1616,23 +1518,6 @@ object DedupOps extends QueryGroup {
     new org.apache.hadoop.fs.Path(p, "_tombstones_backup")
   private def bandTombStaging(p: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(p, "_tombstones_staging")
-
-  /** Heal a tombstone-set rewrite that crashed between its renames —
-    * called at every band-ledger writer entry (the
-    * [[restoreTakedownBackups]] discipline, tombstone-sized).
-    */
-  private def healBandTombstoneSwap(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(p)) {
-      val live = bandTombDir(p)
-      val b = bandTombBackup(p)
-      if (fs.exists(b)) {
-        if (!fs.exists(live))
-          require(fs.rename(b, live), s"could not restore $b")
-        else fs.delete(b, true) // swap completed; drop relic
-      }
-      fs.delete(bandTombStaging(p), true) // stale staging: always safe
-    }
 
   /** The standing tombstone set (distinct doc_ids), or None when no
     * takedown is outstanding. Takedown-sized by the append-∩-ledger
@@ -1683,7 +1568,7 @@ object DedupOps extends QueryGroup {
     * O(ledger): the request writes one takedown-sized tombstone file;
     * the ledger's own files are untouched (IO-gated in
     * LedgerTakedownSpec). Idempotent — already-tombstoned or absent
-    * ids append nothing. Single-writer under the shared ledger lock
+    * ids append nothing. One writer at a time (LedgerState)
     * (a racing refresh/compaction could otherwise clear or purge
     * tombstones out from under the append's snapshot).
     */
@@ -1691,12 +1576,9 @@ object DedupOps extends QueryGroup {
       docIds: DataFrame): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    withTakedownLock(fs, path, "removeFromBandLedger") {
-      val backup = new org.apache.hadoop.fs.Path(path + "__compact_backup")
-      if (!fs.exists(p) && fs.exists(backup))
-        require(fs.rename(backup, p), s"could not restore $backup to $path")
+    LedgerState.withWriter(fs, path, "removeFromBandLedger") {
       require(fs.exists(p), s"no band ledger at $path")
-      healBandTombstoneSwap(fs, p)
+      healSubDirSwaps(fs, p)
       // tombstone only ids PRESENT in the ledger (broadcast semi over
       // the id column — pruned to one column, the same cost class as
       // the hash ledger's affected-prefix probe) and not already
@@ -2059,92 +1941,44 @@ object DedupOps extends QueryGroup {
     import graft.functions.BloomMembership
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // SINGLE-WRITER (exclusive-create lock, a sibling of the ledger):
-    // d9's plain hash ledger tolerates concurrent refreshes (worst
-    // case duplicate ledger rows — still correct), but the filter
-    // sidecar does NOT: two racers would each commit stored ∪ own-novel
-    // (commitBloom's read-increment-write clobbers the other's
-    // version) while BOTH append, leaving the committed filter missing
-    // the loser's hashes — false negatives, i.e. wrong answers, the
-    // exact invariant d16 rides on. A crash leaves a stale lock that
-    // WEDGES rather than corrupts (the compact-lock contract: delete
-    // it after confirming no refresher is live).
-    val lock = new org.apache.hadoop.fs.Path(path + "__refresh_lock")
-    fs.mkdirs(lock.getParent)
-    val acquired =
-      try { fs.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    require(acquired, s"refresh lock $lock already held — " +
-      "refreshLedgerBloomed is single-writer; if the holder crashed, " +
-      "delete the lock after confirming no refresher is live")
-    try refreshLedgerBloomedLocked(s, path, prior)
-    finally fs.delete(lock, false)
-  }
-
-  private def refreshLedgerBloomedLocked(s: SparkSession, path: String,
-      prior: DataFrame): Unit = {
-    import graft.functions.BloomMembership
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // __refresh_lock (held by our caller) serializes BLOOMED refreshes
-    // against each other; the takedown lock additionally serializes
-    // the heal + append against a live takedown's swap (r19-advice).
-    // Acquisition order is always refresh-then-takedown, and both are
-    // non-blocking, so a cross-holder just refuses — never deadlocks.
-    withTakedownLock(fs, path, "refreshLedgerBloomed") {
-      refreshLedgerBloomedHeld(s, path, prior)
-    }
-  }
-
-  private def refreshLedgerBloomedHeld(s: SparkSession, path: String,
-      prior: DataFrame): Unit = {
-    import graft.functions.BloomMembership
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // heal a torn COMPACTION swap BEFORE the branch decision below
-    // (r20): refreshLedgerHeld restores it too, but only after this
-    // method has already chosen the "bootstrap" branch — which would
-    // then APPEND to the restored ledger before committing the filter,
-    // inverting d16's flip-BEFORE-append crash ordering (a crash in
-    // that window leaves a grown ledger under a stale filter = false
-    // negatives). Restored here, the branch sees the data and takes
-    // the append path, whose ordering is correct.
-    val compactBackup = new org.apache.hadoop.fs.Path(
-      path + "__compact_backup")
-    if (!fs.exists(p) && fs.exists(compactBackup))
-      require(fs.rename(compactBackup, p),
-        s"could not restore $compactBackup to $path")
-    restoreTakedownBackups(fs, p) // heal a torn takedown swap too
-    if (!ledgerDataExists(fs, p)) {
-      refreshLedgerHeld(s, path, prior) // overwrite bootstrap clears dir
-      // sketch from the just-written parquet (a column read — cheaper
-      // than re-deriving the corpus-sized prior pipeline)
-      commitBloom(fs, path,
-        buildBloom(s.read.parquet(path).select("content_hash")))
-    } else {
-      val novel = prior
-        .join(s.read.parquet(path).select("content_hash"),
-          Seq("content_hash"), "left_anti")
-        .localCheckpoint()
-      if (!novel.isEmpty) {
-        val merged: Array[Byte] = (readBloom(s, path) match {
-          case Some(stored) =>
-            try Some(BloomMembership.merge(stored, buildBloom(novel)))
-            catch { // sizing changed: rebuild from ledger ∪ novel, once
-              case _: org.apache.spark.util.sketch
-                  .IncompatibleMergeException => None
-            }
-          case None => None // ledger without filter: rebuild, once
-        }).getOrElse(buildBloom(
-          s.read.parquet(path).select("content_hash")
-            .unionByName(novel.select("content_hash"))))
-        commitBloom(fs, path, merged) // flip BEFORE the append
-        withPfx(novel).write.partitionBy("pfx").mode("append").parquet(path)
-      } else if (readBloom(s, path).isEmpty)
-        // nothing novel but the filter is missing (manual deletion):
-        // self-heal from the standing ledger
+    // one writer at a time: two racing refreshes would each commit
+    // stored ∪ own-novel (commitBloom's read-increment-write clobbers
+    // the other's version) while BOTH append, leaving the committed
+    // filter missing the loser's hashes — false negatives, i.e. wrong
+    // answers. The writer's entry heal also runs BEFORE the branch
+    // below, so a torn compaction is restored first and takes the
+    // append path (flip BEFORE append), never a bootstrap over it.
+    LedgerState.withWriter(fs, path, "refreshLedgerBloomed") {
+      healSubDirSwaps(fs, p)
+      if (!ledgerDataExists(fs, p)) {
+        // overwrite bootstrap clears the dir
+        withPfx(prior).write.partitionBy("pfx").mode("overwrite").parquet(path)
+        // sketch from the just-written parquet (a column read — cheaper
+        // than re-deriving the corpus-sized prior pipeline)
         commitBloom(fs, path,
           buildBloom(s.read.parquet(path).select("content_hash")))
+      } else {
+        val novel = novelHashes(s, path, prior)
+        if (!novel.isEmpty) {
+          val merged: Array[Byte] = (readBloom(s, path) match {
+            case Some(stored) =>
+              try Some(BloomMembership.merge(stored, buildBloom(novel)))
+              catch { // sizing changed: rebuild from ledger ∪ novel, once
+                case _: org.apache.spark.util.sketch
+                    .IncompatibleMergeException => None
+              }
+            case None => None // ledger without filter: rebuild, once
+          }).getOrElse(buildBloom(
+            s.read.parquet(path).select("content_hash")
+              .unionByName(novel.select("content_hash"))))
+          commitBloom(fs, path, merged) // flip BEFORE the append
+          withPfx(novel).write.partitionBy("pfx").mode("append").parquet(path)
+        } else if (readBloom(s, path).isEmpty)
+          // nothing novel but the filter is missing (manual deletion):
+          // self-heal from the standing ledger
+          commitBloom(fs, path,
+            buildBloom(s.read.parquet(path).select("content_hash")))
+      }
     }
   }
 

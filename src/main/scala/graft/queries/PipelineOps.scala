@@ -25,16 +25,21 @@ object PipelineOps extends QueryGroup {
   /** Await every future, rethrowing the FIRST failure only after ALL
     * settle (the p6 rule, ADVICE r21: a failed stage must not leave
     * sibling jobs running in the background where they race the caller
-    * — or the bench harness's `clear()` — mid-write). Values are read
-    * off the completed futures by the caller.
+    * — or the bench harness's `clear()` — mid-write), with every other
+    * failure attached to it as suppressed (ADVICE r22: no failed stage
+    * goes unreported). Values are read off the completed futures by
+    * the caller.
     */
-  private def settleAll(fs: Seq[scala.concurrent.Future[_]])(
+  private[graft] def settleAll(fs: Seq[scala.concurrent.Future[_]])(
       implicit ec: scala.concurrent.ExecutionContext): Unit =
     scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(
         fs.map(_.transform(scala.util.Success(_)))),
       scala.concurrent.duration.Duration.Inf)
-      .collectFirst { case scala.util.Failure(e) => throw e }
+      .collect { case scala.util.Failure(e) => e }.distinct match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ => ()
+      }
 
   /** Driver pool for overlapping a chain's INDEPENDENT eager stages
     * (guide §2.6 — the p6 discipline generalized to the composed

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.LongType
 import graft.functions.TopKAggregate
 import graft.functions.VectorFunctions._
 import graft.sources.Tables
+import graft.state.LedgerState
 
 /** Similarity-search operators over `embeddings` (SURVEY §2.3 S1–S3).
   *
@@ -619,160 +620,6 @@ object SimilarityOps extends QueryGroup {
   private def fsOf(s: SparkSession, p: String) =
     hPath(p).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Append lease: entry-time lock checks alone leave a race — a
-    * compactor acquiring its lock while a multi-minute append is
-    * already in flight would snapshot the committed segs, rename the
-    * live dir aside, and promote staging; the in-flight segment lands
-    * in the backup and is deleted (r16 advisory). So appends HOLD an
-    * exclusive-create `__append_lock` for their whole duration and the
-    * compactor refuses while it exists — append-vs-compaction is
-    * serialized end-to-end in both directions (and concurrent appends,
-    * which would race the segment numbering, are serialized too).
-    *
-    * Crash recovery (r17; hardened r18): the lease RECORDS ITS
-    * HOLDER — `pid@hostname` — and an acquirer finding a lease whose
-    * recorded process is provably dead reclaims it (read →
-    * verify-still-dead → delete → retry once). Without this a hard
-    * crash mid-append would WEDGE every later append — in particular
-    * a streaming replay from the checkpoint, which must self-heal
-    * (the refresh itself is already crash-safe via the marker
-    * protocol; the lease only serializes). Creation is ATOMIC O_EXCL
-    * via nio for file-scheme paths — Hadoop's RawLocalFileSystem
-    * create(overwrite = false) is check-then-create, a TOCTOU hole —
-    * and exclusive fs.create elsewhere.
-    *
-    * "Provably dead" is deliberately narrow (r17 advisory): the
-    * recorded HOSTNAME must match this machine and procfs must exist —
-    * a pid number means nothing on another NFS client or a non-procfs
-    * OS, where a LIVE holder would be judged dead and double-writer
-    * corruption follows. Anywhere liveness can't be proven, the
-    * documented wedge + manual-delete contract stands. And the
-    * read-verify-delete itself is SERIALIZED by an exclusive
-    * cross-process FileLock on a sibling `__reclaim_mutex` (r17
-    * advisory, medium): without it, acquirer A could read a dead-pid
-    * lease, stall, and its pending delete would remove the LIVE lease
-    * acquirer B had meanwhile reclaimed and re-created — two
-    * appenders racing the segment numbering, the exact corruption the
-    * lease exists to prevent. Under the mutex, B's re-created lease
-    * is re-read by A's verify step and judged live, so A backs off.
-    */
-  private def pidAlive(pid: Long): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(s"/proc/$pid"))
-
-  private def procfsAvailable: Boolean =
-    java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/proc"))
-
-  private def localHost: String =
-    try java.net.InetAddress.getLocalHost.getHostName
-    catch { case _: java.io.IOException => "unknown-host" }
-
-  private def localPathOf(p: org.apache.hadoop.fs.Path)
-      : Option[java.nio.file.Path] = {
-    val uri = p.toUri
-    if (uri.getScheme == null || uri.getScheme == "file")
-      Some(java.nio.file.Paths.get(uri.getPath))
-    else None
-  }
-
-  /** Atomically create `lease` recording `pid@hostname`; false if
-    * held.
-    */
-  private def tryAcquireLease(fs: org.apache.hadoop.fs.FileSystem,
-      lease: org.apache.hadoop.fs.Path): Boolean = {
-    val holder = s"${ProcessHandle.current().pid()}@$localHost"
-      .getBytes("UTF-8")
-    localPathOf(lease) match {
-      case Some(lp) =>
-        try {
-          java.nio.file.Files.write(lp, holder,
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.io.IOException => false
-        }
-      case None =>
-        try {
-          val out = fs.create(lease, false)
-          out.write(holder); out.close(); true
-        } catch { case _: java.io.IOException => false }
-    }
-  }
-
-  /** True iff the recorded holder is PROVABLY dead: the lease names
-    * THIS host (a pid is meaningless on another NFS client), procfs
-    * exists to ask, and the pid is gone. A legacy pid-only lease
-    * (pre-r18) is judged on the same procfs test — it was written by
-    * a local-FS run. Anything unprovable is NOT dead: wedge, don't
-    * corrupt.
-    */
-  private def holderProvablyDead(txt: String): Boolean = {
-    def deadPid(p: String): Boolean = procfsAvailable &&
-      p.nonEmpty && p.forall(_.isDigit) && !pidAlive(p.toLong)
-    txt.split("@") match {
-      case Array(p, h) => h == localHost && deadPid(p)
-      case Array(p) => deadPid(p) // legacy pid-only lease
-      case _ => false
-    }
-  }
-
-  /** Reclaim `lease` iff its recorded holder is provably dead (local
-    * FS only). Returns true when the lease was removed. The whole
-    * read-verify-delete runs under an exclusive cross-process
-    * FileLock on a sibling mutex so a stalled reclaimer can never
-    * delete a lease a faster reclaimer has re-acquired (see
-    * [[withAppendLease]]'s header).
-    */
-  private def reclaimIfDead(fs: org.apache.hadoop.fs.FileSystem,
-      lease: org.apache.hadoop.fs.Path): Boolean =
-    localPathOf(lease).exists { lp =>
-      val mutex = java.nio.file.Paths.get(
-        lp.toString + "__reclaim_mutex")
-      try {
-        val ch = java.nio.channels.FileChannel.open(mutex,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          val lock = ch.lock() // exclusive, blocks across processes
-          try {
-            val txt = new String(
-              java.nio.file.Files.readAllBytes(lp), "UTF-8").trim
-            holderProvablyDead(txt) &&
-              java.nio.file.Files.deleteIfExists(lp)
-          } finally lock.release()
-        } finally ch.close()
-      } catch { case _: java.io.IOException => false }
-    }
-
-  private def withAppendLease[A](fs: org.apache.hadoop.fs.FileSystem,
-      path: String)(body: => A): A = {
-    val lease = hPath(path + "__append_lock")
-    fs.mkdirs(lease.getParent)
-    val acquired = tryAcquireLease(fs, lease) ||
-      (reclaimIfDead(fs, lease) && tryAcquireLease(fs, lease))
-    require(acquired, s"append lease $lease already held by a live " +
-      "process — ledger appends are single-writer; if the holder " +
-      "crashed on a non-local FS, delete the lease after confirming " +
-      "no appender is live")
-    try body finally fs.delete(lease, false)
-  }
-
-  /** The compactor's half of the lease protocol: called AFTER the
-    * compaction lock is acquired (so no new append can start — they
-    * check the compact lock first) but BEFORE any rename, refusing
-    * while an in-flight append holds its lease (a dead holder's lease
-    * is reclaimed first, as in [[withAppendLease]]).
-    */
-  private def requireNoAppendInFlight(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val lease = hPath(path + "__append_lock")
-    if (fs.exists(lease)) reclaimIfDead(fs, lease)
-    require(!fs.exists(lease),
-      s"append in flight on $path (lease present) — retry compaction " +
-        "after it completes; if the appender crashed on a non-local " +
-        "FS, delete the lease after confirming none is live")
-  }
-
   /** Committed segment numbers, ascending — the marker files are the
     * ledger's source of truth (metadata-sized listing, d9 class).
     */
@@ -863,37 +710,9 @@ object SimilarityOps extends QueryGroup {
     * compute against a slim id-only read, the corpus is never
     * re-assigned.
     */
-  /** Writer preconditions shared by EVERY segment writer (appends AND
-    * tombstones), checked under the held append lease:
-    *
-    *  - refuse while a compaction holds its lock: a segment committed
-    *    during the rename-aside window would land in the dir about to
-    *    be moved aside and silently vanish from the promoted ledger
-    *    (for a tombstone segment that is a LOST TAKEDOWN — the removed
-    *    vector would resurface). Lease-then-check: the compactor's
-    *    order is lock-then-check-lease, so an interleaving can make
-    *    both sides back off but never lets a segment ride into the
-    *    swap;
-    *  - restore a crashed compaction's `__compact_backup` (ledger
-    *    moved aside, staging never promoted) BEFORE writing — a write
-    *    into the empty live path would otherwise recreate the dir and
-    *    defeat the next reader's restore guard, forking the index.
-    */
-  private def guardSegmentWriter(
-      fs0: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    require(!fs0.exists(hPath(path + "__compact_lock")),
-      s"compaction in progress on $path (lock present) — retry the " +
-        "append after it completes; if the compactor crashed, delete " +
-        "the lock after confirming none is live")
-    if (!fs0.exists(hPath(path)) &&
-        fs0.exists(hPath(path + "__compact_backup")))
-      require(fs0.rename(hPath(path + "__compact_backup"), hPath(path)),
-        s"could not restore $path from its compaction backup")
-  }
-
   private[graft] def refreshIvfLedger(s: SparkSession, path: String,
-      prior: DataFrame): Unit = withAppendLease(fsOf(s, path), path) {
-    guardSegmentWriter(fsOf(s, path), path)
+      prior: DataFrame): Unit =
+      LedgerState.withWriter(fsOf(s, path), path, "refreshIvfLedger") {
     s8CleanTorn(s, path)
     val centDir = s"$path/centroids"
     if (s8CommittedSegs(s, path).isEmpty) {
@@ -920,45 +739,22 @@ object SimilarityOps extends QueryGroup {
     }
   }
 
-  /** F16's rename-aside discipline for the s8 segment chain: merge
-    * every committed segment into a single seg-0 under a staging
-    * ledger, then swap the WHOLE ledger dir aside-and-in — at every
-    * instant a full committed ledger exists under some path, and a
-    * crash leaves either the original intact (possibly under
-    * `__compact_backup`, restored by the next call) or the swap
-    * complete. Layout-preserving: the compacted seg is written by the
-    * same [[s8WriteSeg]] commit protocol, so the pruned-read plan is
-    * bit-identical; content equality is spec-gated.
+  /** F16's compaction for the s8 segment chain: merge every committed
+    * segment into a single seg-0 under a staging ledger, then swap the
+    * whole ledger dir in ([[graft.state.LedgerState]]'s writer lock and
+    * rename-aside swap). Layout-preserving: the compacted seg is
+    * written by the same [[s8WriteSeg]] commit protocol, so the
+    * pruned-read plan is bit-identical; content equality is
+    * spec-gated.
     */
   private[graft] def compactIvfLedger(s: SparkSession,
       path: String): Unit = {
     val fs = fsOf(s, path)
-    val live = hPath(path)
-    val backup = hPath(path + "__compact_backup")
-    // single-writer enforcement (exclusive-create lock, a SIBLING of
-    // the ledger so the swap renames never move it): two concurrent
-    // compactors racing the rename-aside window could each move the
-    // other's half-promoted ledger; refreshIvfLedger refuses to append
-    // while the lock is held for the same reason. A hard crash leaves
-    // a stale lock that WEDGES rather than corrupts — recovery is
-    // deleting the lock after confirming no compactor is live (the
-    // same operator judgment any single-writer ledger needs).
-    val lock = hPath(path + "__compact_lock")
-    fs.mkdirs(lock.getParent)
-    val acquired =
-      try { fs.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    require(acquired, s"compaction lock $lock already held — " +
-      "compactIvfLedger is single-writer; if the holder crashed, " +
-      "delete the lock after confirming no compactor is live")
-    try {
-      requireNoAppendInFlight(fs, path)
-      if (!fs.exists(live) && fs.exists(backup))
-        require(fs.rename(backup, live), s"could not restore $backup")
-      require(fs.exists(live), s"no s8 ledger at $path")
+    LedgerState.withWriter(fs, path, "compactIvfLedger") {
+      require(fs.exists(hPath(path)), s"no s8 ledger at $path")
       if (s8CommittedSegs(s, path).size > 1 ||
           tombCommittedSegs(s, path).nonEmpty) {
-        val staging = path + "__compact_staging"
+        val staging = LedgerState.stagingPath(path).toString
         fs.delete(hPath(staging), true)
         // consumed once, wholly before the swap — the live source stays
         // valid for the duration of the staging write. Committed
@@ -970,15 +766,19 @@ object SimilarityOps extends QueryGroup {
         s.read.parquet(s"$path/centroids")
           .write.mode("overwrite").parquet(s"$staging/centroids")
         s8WriteSeg(s, staging, 0, all)
-        fs.delete(backup, true)
-        require(fs.rename(live, backup), s"could not move $path aside")
-        try require(fs.rename(hPath(staging), live), "could not promote")
-        catch { case e: Throwable => fs.rename(backup, live); throw e }
-        fs.delete(backup, true)
-        // raw renames: invalidate cached file listings for the path
-        s.catalog.refreshByPath(path)
+        promoteStaging(s, path)
       }
-    } finally fs.delete(lock, false)
+    }
+  }
+
+  /** Swap a writer's fully written `__compact_staging` ledger in for
+    * the live one ([[LedgerState.swapIn]]); raw renames, so cached
+    * file listings of the path are invalidated.
+    */
+  private def promoteStaging(s: SparkSession, path: String): Unit = {
+    LedgerState.swapIn(fsOf(s, path), hPath(path),
+      LedgerState.stagingPath(path), LedgerState.backupPath(path))
+    s.catalog.refreshByPath(path)
   }
 
   /** QUANTIZER RETRAIN MIGRATION (r19, the r18 verdict's #4): s8's
@@ -992,16 +792,12 @@ object SimilarityOps extends QueryGroup {
     * bootstrap gets √(100n) cells, not its stale √n) and re-assign
     * every committed row through a staged parallel build.
     *
-    * Atomicity is the compaction machinery verbatim (retrain IS a
-    * compaction-class whole-ledger rewrite, so it takes the SAME
-    * lock — a retrain and a compaction cannot interleave): the staging
-    * ledger (new centroids + one re-assigned seg-0 + ids + marker) is
-    * fully written while the live dir stays untouched, then the
-    * rename-aside swap flips readers to the new quantizer in one
+    * Atomicity is compaction's ([[graft.state.LedgerState]]): the
+    * staging ledger (new centroids + one re-assigned seg-0 + ids +
+    * marker) is fully written while the live dir stays untouched, then
+    * the rename-aside swap flips readers to the new quantizer in one
     * metadata operation — a reader mid-migration reads the OLD
-    * quantizer's committed state until the flip, and every crash
-    * point is the compaction backup/restore contract (writers restore
-    * `__compact_backup` before touching the path). Committed
+    * quantizer's committed state until the flip. Committed
     * tombstones are applied during the rewrite (the physical-removal
     * hazard is the same as compaction's) and the retrained ledger
     * starts tomb-free. Determinism: trainCentroids' hash-sampled
@@ -1014,23 +810,9 @@ object SimilarityOps extends QueryGroup {
   private[graft] def retrainIvfLedger(s: SparkSession,
       path: String): Unit = {
     val fs = fsOf(s, path)
-    val live = hPath(path)
-    val backup = hPath(path + "__compact_backup")
-    val lock = hPath(path + "__compact_lock")
-    fs.mkdirs(lock.getParent)
-    val acquired =
-      try { fs.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    require(acquired, s"compaction lock $lock already held — " +
-      "retrainIvfLedger is single-writer (shares the compaction " +
-      "lock); if the holder crashed, delete the lock after confirming " +
-      "none is live")
-    try {
-      requireNoAppendInFlight(fs, path)
-      if (!fs.exists(live) && fs.exists(backup))
-        require(fs.rename(backup, live), s"could not restore $backup")
-      require(fs.exists(live), s"no s8 ledger at $path")
-      val staging = path + "__compact_staging"
+    LedgerState.withWriter(fs, path, "retrainIvfLedger") {
+      require(fs.exists(hPath(path)), s"no s8 ledger at $path")
+      val staging = LedgerState.stagingPath(path).toString
       fs.delete(hPath(staging), true)
       // the standing corpus = committed assign rows minus committed
       // tombstones; a plain frame over the segment scans — each
@@ -1046,13 +828,8 @@ object SimilarityOps extends QueryGroup {
       val cents = s.read.parquet(s"$staging/centroids")
       s8WriteSeg(s, staging, 0,
         assignNearest(corpus, cents).select("vec_id", "cid", "embedding"))
-      fs.delete(backup, true)
-      require(fs.rename(live, backup), s"could not move $path aside")
-      try require(fs.rename(hPath(staging), live), "could not promote")
-      catch { case e: Throwable => fs.rename(backup, live); throw e }
-      fs.delete(backup, true)
-      s.catalog.refreshByPath(path)
-    } finally fs.delete(lock, false)
+      promoteStaging(s, path)
+    }
   }
 
   // --------------------------------------------------------------- S13
@@ -1063,9 +840,9 @@ object SimilarityOps extends QueryGroup {
   // rewriting a corpus-sized index. Design mirrors the segment chain
   // it guards: tombstones are their own committed-segment chain
   // (`tombs/seg-k` + marker-last `tombcommits/seg-k`), appended under
-  // the SAME append lease (serialized with ingests and compaction),
-  // idempotent on replay (novel ids only), takedown-sized (KBs against
-  // a TB index). Readers that honor deletes anti-join the broadcast
+  // the ledger's one writer lock (graft.state.LedgerState), idempotent
+  // on replay (novel ids only), takedown-sized (KBs against a TB
+  // index). Readers that honor deletes anti-join the broadcast
   // tombstone set ABOVE the probe (s13); physical removal is deferred
   // to [[compactIvfLedger]], which applies every committed tombstone
   // while merging segments and leaves a tomb-free compacted ledger —
@@ -1095,27 +872,24 @@ object SimilarityOps extends QueryGroup {
   }
 
   /** Append a committed tombstone segment for `ids` (a `vec_id`
-    * frame). Lease-held (serialized with appends/compaction),
-    * marker-last (a torn tomb seg is invisible and overwritten by the
-    * next call), idempotent (already-tombstoned ids append nothing).
+    * frame). Under the ledger's writer lock, marker-last (a torn tomb
+    * seg is invisible and overwritten by the next call), idempotent
+    * (already-tombstoned ids append nothing).
     */
   private[graft] def tombstoneIds(s: SparkSession, path: String,
-      ids: DataFrame): Unit = withAppendLease(fsOf(s, path), path) {
+      ids: DataFrame): Unit = {
     val fs = fsOf(s, path)
-    // same writer preconditions as refreshIvfLedger: a tombstone
-    // committed into a compaction's rename-aside window would be
-    // DELETED un-applied (a lost takedown), and a write after a
-    // crashed compaction would fork the index over its backup
-    guardSegmentWriter(fs, path)
-    val novel = ids.select("vec_id").distinct()
-      .join(s8Tombs(s, path), Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    if (!novel.isEmpty) {
-      val segs = tombCommittedSegs(s, path)
-      val k = if (segs.isEmpty) 0 else segs.max + 1
-      novel.write.mode("overwrite").parquet(s"$path/tombs/seg-$k")
-      fs.mkdirs(hPath(s"$path/tombcommits"))
-      fs.create(hPath(s"$path/tombcommits/seg-$k"), true).close()
+    LedgerState.withWriter(fs, path, "tombstoneIds") {
+      val novel = ids.select("vec_id").distinct()
+        .join(s8Tombs(s, path), Seq("vec_id"), "left_anti")
+        .localCheckpoint()
+      if (!novel.isEmpty) {
+        val segs = tombCommittedSegs(s, path)
+        val k = if (segs.isEmpty) 0 else segs.max + 1
+        novel.write.mode("overwrite").parquet(s"$path/tombs/seg-$k")
+        fs.mkdirs(hPath(s"$path/tombcommits"))
+        fs.create(hPath(s"$path/tombcommits/seg-$k"), true).close()
+      }
     }
   }
 
@@ -1414,19 +1188,17 @@ object SimilarityOps extends QueryGroup {
     */
   /** Bounded retry for READ-path ledger refreshes (r17 advisory): a
     * query consuming the ledger (d15l/s11l/c1l's ensure-exists
-    * refresh) that collides with a concurrent appender's fail-fast
-    * lease should degrade to WAITING, not throw — the appender's work
-    * is exactly what the reader wants to see. Writers keep fail-fast:
-    * an ingest pipeline racing itself is a bug to surface. Linear
+    * refresh) that collides with a concurrent writer's fail-fast
+    * [[graft.state.LedgerBusy]] refusal should degrade to WAITING, not
+    * throw — the writer's work is exactly what the reader wants to
+    * see. Writers keep fail-fast: an ingest pipeline racing itself is a
+    * bug to surface. Linear
     * backoff, ~30 s worst case, then the original error propagates.
     */
   private[graft] def withLeaseRetry[A](attempts: Int = 5)(body: => A): A = {
     def go(i: Int): A =
       try body catch {
-        case e: IllegalArgumentException if i < attempts &&
-            e.getMessage != null &&
-            (e.getMessage.contains("append lease") ||
-              e.getMessage.contains("compaction in progress")) =>
+        case _: graft.state.LedgerBusy if i < attempts =>
           Thread.sleep(2000L * i)
           go(i + 1)
       }
@@ -1646,18 +1418,8 @@ object SimilarityOps extends QueryGroup {
     */
   private[graft] def refreshKnnLedger(s: SparkSession, path: String,
       prior: DataFrame, slimProbes: Boolean = true): Unit =
-      withAppendLease(fsOf(s, path), path) {
+      LedgerState.withWriter(fsOf(s, path), path, "refreshKnnLedger") {
     val fs = fsOf(s, path)
-    // single-writer + crashed-compaction recovery: the s8 refresh
-    // contract verbatim (see refreshIvfLedger)
-    require(!fs.exists(hPath(path + "__compact_lock")),
-      s"compaction in progress on $path (lock present) — retry the " +
-        "append after it completes; if the compactor crashed, delete " +
-        "the lock after confirming none is live")
-    if (!fs.exists(hPath(path)) &&
-        fs.exists(hPath(path + "__compact_backup")))
-      require(fs.rename(hPath(path + "__compact_backup"), hPath(path)),
-        s"could not restore $path from its compaction backup")
     cleanTorn(s, path, Seq("assign", "probes", "edges", "ids"))
     val centDir = s"$path/centroids"
 
@@ -1810,34 +1572,20 @@ object SimilarityOps extends QueryGroup {
     * EDGES compact to the per-qid top-KG of the union — the merge
     * itself, exact and idempotent by the heap-merge property, so the
     * merged-graph read is row-identical before and after (spec-gated).
-    * Same single-writer lock + whole-ledger swap: at every instant a
-    * full committed ledger exists under some path, and refreshKnnLedger
-    * restores a crashed swap's `__compact_backup` before appending.
+    * Same writer lock + whole-ledger swap
+    * ([[graft.state.LedgerState]]).
     */
   private[graft] def compactKnnLedger(s: SparkSession,
       path: String): Unit = {
     val fs = fsOf(s, path)
-    val live = hPath(path)
-    val backup = hPath(path + "__compact_backup")
-    val lock = hPath(path + "__compact_lock")
-    fs.mkdirs(lock.getParent)
-    val acquired =
-      try { fs.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    require(acquired, s"compaction lock $lock already held — " +
-      "compactKnnLedger is single-writer; if the holder crashed, " +
-      "delete the lock after confirming no compactor is live")
-    try {
-      requireNoAppendInFlight(fs, path)
-      if (!fs.exists(live) && fs.exists(backup))
-        require(fs.rename(backup, live), s"could not restore $backup")
-      require(fs.exists(live), s"no s10 ledger at $path")
+    LedgerState.withWriter(fs, path, "compactKnnLedger") {
+      require(fs.exists(hPath(path)), s"no s10 ledger at $path")
       val segs = s8CommittedSegs(s, path)
       val tombSegs = tombCommittedSegs(s, path)
       if (segs.size > 1 || tombSegs.nonEmpty) {
         // takedown-sized; consumed by several purge joins below
         val tombs = s8Tombs(s, path).localCheckpoint()
-        val staging = path + "__compact_staging"
+        val staging = LedgerState.stagingPath(path).toString
         fs.delete(hPath(staging), true)
         s.read.parquet(s"$path/centroids")
           .write.mode("overwrite").parquet(s"$staging/centroids")
@@ -1872,15 +1620,9 @@ object SimilarityOps extends QueryGroup {
           .write.mode("overwrite").parquet(s"$staging/edges/seg-0")
         fs.mkdirs(hPath(s"$staging/commits"))
         fs.create(hPath(s"$staging/commits/seg-0"), true).close()
-        fs.delete(backup, true)
-        require(fs.rename(live, backup), s"could not move $path aside")
-        try require(fs.rename(hPath(staging), live), "could not promote")
-        catch { case e: Throwable => fs.rename(backup, live); throw e }
-        fs.delete(backup, true)
-        // raw renames: invalidate cached file listings for the path
-        s.catalog.refreshByPath(path)
+        promoteStaging(s, path)
       }
-    } finally fs.delete(lock, false)
+    }
   }
 
   /** Compaction's edge output: the excluding merged read, REPAIRED for
@@ -1958,7 +1700,7 @@ object SimilarityOps extends QueryGroup {
   /** [[retrainIvfLedger]]'s sibling for the kNN-GRAPH ledger (r19):
     * fresh quantizer + full graph rebuild of the standing corpus
     * (committed assign rows minus committed tombstones) as a staged
-    * ledger, swapped in under the shared compaction lock. The staging
+    * ledger, swapped in under the ledger's writer lock. The staging
     * build IS a from-scratch bootstrap — `refreshKnnLedger` on the
     * staging path trains cells re-keyed to the CURRENT corpus size and
     * writes seg-0's s9 graph — so retrained ≡ from-scratch holds by
@@ -1972,40 +1714,21 @@ object SimilarityOps extends QueryGroup {
   private[graft] def retrainKnnLedger(s: SparkSession,
       path: String): Unit = {
     val fs = fsOf(s, path)
-    val live = hPath(path)
-    val backup = hPath(path + "__compact_backup")
-    val lock = hPath(path + "__compact_lock")
-    fs.mkdirs(lock.getParent)
-    val acquired =
-      try { fs.create(lock, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    require(acquired, s"compaction lock $lock already held — " +
-      "retrainKnnLedger is single-writer (shares the compaction " +
-      "lock); if the holder crashed, delete the lock after confirming " +
-      "none is live")
-    try {
-      requireNoAppendInFlight(fs, path)
-      if (!fs.exists(live) && fs.exists(backup))
-        require(fs.rename(backup, live), s"could not restore $backup")
-      require(fs.exists(live), s"no s10 ledger at $path")
-      val staging = path + "__compact_staging"
+    LedgerState.withWriter(fs, path, "retrainKnnLedger") {
+      require(fs.exists(hPath(path)), s"no s10 ledger at $path")
+      val staging = LedgerState.stagingPath(path).toString
       fs.delete(hPath(staging), true)
       val segs = s8CommittedSegs(s, path)
       val corpus = s10SegUnion(s, path, "assign", None,
           Seq(col("vec_id"), col("embedding")), segs)
         .join(broadcast(s8Tombs(s, path)), Seq("vec_id"), "left_anti")
-      // the staging build is a plain bootstrap (its own append lease
-      // on the staging path — disjoint from the live ledger's);
-      // layout follows the live marker
+      // the staging build is a plain bootstrap (its own writer lock on
+      // the staging path — disjoint from the live ledger's); layout
+      // follows the live marker
       refreshKnnLedger(s, staging, corpus,
         slimProbes = s10IsSlim(s, path))
-      fs.delete(backup, true)
-      require(fs.rename(live, backup), s"could not move $path aside")
-      try require(fs.rename(hPath(staging), live), "could not promote")
-      catch { case e: Throwable => fs.rename(backup, live); throw e }
-      fs.delete(backup, true)
-      s.catalog.refreshByPath(path)
-    } finally fs.delete(lock, false)
+      promoteStaging(s, path)
+    }
   }
 
   private val s10 = QueryDef(
@@ -2322,7 +2045,7 @@ object SimilarityOps extends QueryGroup {
   // index, a graph purge DAMAGES the survivors: every vertex that held
   // the removed id now has < KG edges (recall decay) until repaired.
   // Machinery: the tombstone chain is [[tombstoneIds]] verbatim (the
-  // s8/s10 ledgers share the committed-segment + lease protocol, so
+  // s8/s10 ledgers share the committed-segment + writer-lock protocol, so
   // the writer is path-generic); the merged read [[s10Graph]]
   // anti-joins the broadcast tombstone set on BOTH columns below the
   // heap — lower-ranked alive candidates backfill from the union

@@ -171,7 +171,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       SimilarityOps.refreshIvfLedger(spark, path, e) // 2-segment chain
       // a live compactor holds the lock: a second compactor and an
       // append both refuse loudly instead of racing the swap window
-      val lock = new java.io.File(path + "__compact_lock")
+      val lock = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
       lock.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         SimilarityOps.compactIvfLedger(spark, path)
@@ -192,7 +192,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
           in.toDF.toDF("vec_id", "embedding"), path + "_cold")
     } finally {
       rm(new java.io.File(path))
-      rm(new java.io.File(path + "__compact_lock"))
+      rm(new java.io.File(graft.state.LedgerState.lockPath(path).toString))
     }
   }
 
@@ -214,13 +214,11 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // DURING the append snapshot the segs and swap the live dir
       // aside, deleting the in-flight segment with the backup — the
       // lease closes that window end-to-end (r16 advisory)
-      val lease = new java.io.File(path + "__append_lock")
+      val lease = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
       lease.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         SimilarityOps.compactIvfLedger(spark, path)
-      // a failed compaction attempt releases its own lock, never the
-      // appender's lease
-      new java.io.File(path + "__compact_lock").exists() shouldBe false
+      // a refused compaction never releases the appender's lock
       lease.exists() shouldBe true
       // concurrent appends (which would race the segment numbering)
       // are serialized by the same lease
@@ -234,8 +232,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       lease.exists() shouldBe false
     } finally {
       rm(new java.io.File(path))
-      rm(new java.io.File(path + "__append_lock"))
-      rm(new java.io.File(path + "__compact_lock"))
+      rm(new java.io.File(graft.state.LedgerState.lockPath(path).toString))
     }
   }
 
@@ -802,7 +799,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // writer guards: a takedown REFUSES while a compaction holds its
       // lock (a tombstone committed into the rename-aside window would
       // be deleted un-applied — a lost takedown)...
-      val lockF = new java.io.File(tpath + "__compact_lock")
+      val lockF = new java.io.File(graft.state.LedgerState.lockPath(tpath).toString)
       lockF.createNewFile() shouldBe true
       val deadOne = e.filter(col("vec_id") === 0).select("vec_id")
       an[IllegalArgumentException] should be thrownBy
@@ -908,7 +905,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       SimilarityOps.retrainIvfLedger(spark, grown)
       assigns(grown) shouldBe assigns(fresh)
       // single-writer: the shared compaction lock refuses a retrain
-      val lockF = new java.io.File(grown + "__compact_lock")
+      val lockF = new java.io.File(graft.state.LedgerState.lockPath(grown).toString)
       lockF.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         SimilarityOps.retrainIvfLedger(spark, grown)

@@ -137,7 +137,7 @@ class BloomDedupSpec extends AnyFunSuite with Matchers {
     // the committed filter would miss the loser's hashes (false
     // negatives = wrong answers), hence the exclusive-create lock
     val path = freshState()
-    val lock = new java.io.File(path + "__refresh_lock")
+    val lock = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
     lock.getParentFile.mkdirs()
     lock.createNewFile() shouldBe true
     an[IllegalArgumentException] should be thrownBy runD16()

@@ -116,7 +116,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       new java.io.File(path, s"_takedown_staging_$somePfx")
         .exists() shouldBe false
       // single-writer: a held lock refuses (wedge, not corrupt)
-      val lock = new java.io.File(path + "__takedown_lock")
+      val lock = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
       lock.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         DedupOps.removeFromHashLedger(spark, path,
@@ -221,7 +221,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       DedupOps.removeFromBandLedger(spark, path, Seq(1L).toDF("doc_id"))
       // a held writer lock REFUSES every band-ledger mutator (the r19
       // double-swap/lost-append race is closed by serialization)
-      val lock = new java.io.File(path + "__takedown_lock")
+      val lock = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
       lock.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         DedupOps.removeFromBandLedger(spark, path, Seq(2L).toDF("doc_id"))

@@ -132,7 +132,8 @@ class TextPipelineSpec extends AnyFunSuite with Matchers {
     // a driver pool (guide §2.6). The pool must only change WHEN work
     // runs, never what any stage computes: the serialized A/B arm and
     // the shipped parallel default must agree row-for-row.
-    for (name <- Seq("p2_training_corpus_v2", "p4_training_corpus_v4")) {
+    for (name <- Seq("p2_training_corpus_v2", "p3_training_corpus_v3",
+        "p4_training_corpus_v4")) {
       val par = run(name).collect().toSeq
       sys.props("graft.pchain.par") = "0"
       val ser =
@@ -140,6 +141,23 @@ class TextPipelineSpec extends AnyFunSuite with Matchers {
         finally sys.props.remove("graft.pchain.par")
       withClue(name) { ser should contain theSameElementsAs par }
     }
+  }
+
+  test("settleAll reports every failed stage: the first failure is " +
+    "rethrown once all settle, the others ride on it as suppressed") {
+    import scala.concurrent.{ExecutionContext, Future, Promise}
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val slow = Promise[Unit]()
+    val stages = Seq(
+      Future(throw new IllegalStateException("stage A failed")),
+      Future(throw new IllegalArgumentException("stage B failed")),
+      slow.future.map(_ => 1))
+    Future { Thread.sleep(200); slow.success(()) }
+    val e = the[IllegalStateException] thrownBy PipelineOps.settleAll(stages)
+    slow.isCompleted shouldBe true // rethrown only after every stage settled
+    e.getMessage shouldBe "stage A failed"
+    e.getSuppressed.map(_.getMessage).toSeq shouldBe Seq("stage B failed")
+    noException should be thrownBy PipelineOps.settleAll(Seq(Future(1)))
   }
 
   test("p2: composed modern pipeline keeps stage contracts — eval holdout " +
