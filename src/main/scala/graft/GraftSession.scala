@@ -71,7 +71,7 @@ object GraftSession {
     extra.foldLeft(base) { case (bb, (k, v)) => bb.config(k, v) }
   }
 
-  /** Local session with the profile applied (used by Bench/Verify). */
+  /** Local session with the profile applied (Bench, Verify, Smoke). */
   def local(cores: Int, appName: String = "graft"): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$cores]")
       .appName(appName), shufflePartitions = cores)

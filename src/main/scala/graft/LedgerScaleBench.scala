@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.DedupOps
@@ -17,8 +18,22 @@ import graft.sources.Tables
   * Run after `graft.ScaleUp /root/testdata/sf0.1 /tmp/graft_sf1 10`:
   *   sbt "runMain graft.LedgerScaleBench"
   * Prints `[ledger] label seconds`; recorded in BASELINE.md §sf1.
+  * Each timed region is one [[Bench.timed]] run.
   */
 object LedgerScaleBench {
+  private def time(spark: SparkSession, label: String)(body: => Unit): Unit =
+    println(f"[ledger] $label ${Bench.timed(spark)(body)}%.2f s")
+
+  /** A fixed input staged to throwaway parquet: unlike a
+    * localCheckpoint (a persistent RDD) it survives the [[Bench.clear]]
+    * each timed run starts with.
+    */
+  private def staged(df: DataFrame): DataFrame = {
+    val p = java.nio.file.Files.createTempDirectory("graft_ledger_in")
+    df.write.parquet(s"$p/in")
+    df.sparkSession.read.parquet(s"$p/in")
+  }
+
   private def rm(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
   }
@@ -38,34 +53,21 @@ object LedgerScaleBench {
 
   def main(args: Array[String]): Unit = {
     val small = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (args.headOption.contains("compact")) { compactScenario(small); return }
-    if (args.headOption.contains("s8")) {
-      s8Scenario(small, args.lift(1).getOrElse("/tmp/graft_sf1")); return
+    val big = args.lift(1).getOrElse("/tmp/graft_sf1")
+    args.headOption match {
+      case Some("compact") => compactScenario(small)
+      case Some("s8") => s8Scenario(small, big)
+      case Some("s10") => s10Scenario(small, big)
+      case Some("retrain") => retrainScenario(small, big)
+      case Some("retrainKnn") => retrainKnnScenario(small, big)
+      case Some("s14repair") => s14RepairScenario(small, big)
+      case Some("bandTakedown") => bandTakedownScenario(small, big)
+      case _ => dedupScenario(small, args.headOption.getOrElse(big))
     }
-    if (args.headOption.contains("s10")) {
-      s10Scenario(small, args.lift(1).getOrElse("/tmp/graft_sf1")); return
-    }
-    if (args.headOption.contains("retrain")) {
-      retrainScenario(small, args.lift(1).getOrElse("/tmp/graft_sf1"))
-      return
-    }
-    if (args.headOption.contains("retrainKnn")) {
-      retrainKnnScenario(small, args.lift(1).getOrElse("/tmp/graft_sf1"))
-      return
-    }
-    if (args.headOption.contains("s14repair")) {
-      s14RepairScenario(small, args.lift(1).getOrElse("/tmp/graft_sf1"))
-      return
-    }
-    if (args.headOption.contains("bandTakedown")) {
-      bandTakedownScenario(small, args.lift(1).getOrElse("/tmp/graft_sf1"))
-      return
-    }
-    if (args.headOption.contains("d15")) {
-      d15Scenario(sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-        "/tmp/graft_sf1")); return
-    }
-    val big = args.headOption.getOrElse("/tmp/graft_sf1")
+  }
+
+  /** d9 and d13's ingest against a 1× and a 10× standing ledger. */
+  private def dedupScenario(small: String, big: String): Unit = {
     val spark = GraftSession.local(32, "graft-ledger-scale")
 
     def ledgerOf(dir: String): String = {
@@ -79,13 +81,8 @@ object LedgerScaleBench {
     val batch = Tables.load(spark, small, "documents")
       .filter(col("source") === "src0")
 
-    def timeDedup(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      DedupOps.incrementalDedup(batch, spark.read.parquet(path))
-        .write.format("noop").mode("overwrite").save()
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    def timeDedup(path: String, label: String): Unit = time(spark, label)(
+      Bench.noop(DedupOps.incrementalDedup(batch, spark.read.parquet(path))))
 
     // bootstrap both ledgers untimed; the timed region is the INGEST
     // dedup plan a daily run executes (ledger anti-join + batch agg).
@@ -111,15 +108,11 @@ object LedgerScaleBench {
       DedupOps.refreshNearDupLedger(spark, path, prior)
       path
     }
-    val batchIdx = DedupOps.minhashIndex(
-      batch.select("doc_id", "text")).localCheckpoint()
-    def timeNearDup(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      DedupOps.nearDupProbe(batchIdx, DedupOps.readBandLedger(spark, path))
-        .write.format("noop").mode("overwrite").save()
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    val batchIdx = staged(DedupOps.minhashIndex(
+      batch.select("doc_id", "text")))
+    def timeNearDup(path: String, label: String): Unit = time(spark, label)(
+      Bench.noop(DedupOps.nearDupProbe(batchIdx,
+        DedupOps.readBandLedger(spark, path))))
     val n1x = ndLedgerOf(small)
     val n10x = ndLedgerOf(big)
     timeNearDup(n1x, "neardup_warmup_1x")
@@ -164,16 +157,10 @@ object LedgerScaleBench {
     val p10x = ledgerOf(big)
     // the fixed daily QUERY batch: the small dir's 8 query vectors
     // (s8's NQ rule), present in both corpora
-    val q = Tables.load(spark, small, "embeddings")
-      .select("vec_id", "embedding").filter(col("vec_id") < 8)
-      .localCheckpoint()
-    def timeQuery(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SimilarityOps.s8Probe(spark, path, q)
-        .write.format("noop").mode("overwrite").save()
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    val q = staged(Tables.load(spark, small, "embeddings")
+      .select("vec_id", "embedding").filter(col("vec_id") < 8))
+    def timeQuery(path: String, label: String): Unit =
+      time(spark, label)(Bench.noop(SimilarityOps.s8Probe(spark, path, q)))
     timeQuery(p1x, "s8_query_warmup_1x")
     timeQuery(p1x, "s8_query_vs_1x_index")
     timeQuery(p10x, "s8_query_warmup_10x")
@@ -181,14 +168,9 @@ object LedgerScaleBench {
     // the fixed MAINTENANCE batch: the small corpus's embeddings
     val batch = Tables.load(spark, small, "embeddings")
       .select("vec_id", "embedding")
-    def timeMaint(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      batch.join(SimilarityOps.s8Ids(spark, path),
-          Seq("vec_id"), "left_anti")
-        .write.format("noop").mode("overwrite").save()
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    def timeMaint(path: String, label: String): Unit = time(spark, label)(
+      Bench.noop(batch.join(SimilarityOps.s8Ids(spark, path),
+        Seq("vec_id"), "left_anti")))
     timeMaint(p1x, "s8_maint_warmup_1x")
     timeMaint(p1x, "s8_maint_batch_vs_1x_index")
     timeMaint(p10x, "s8_maint_warmup_10x")
@@ -216,12 +198,8 @@ object LedgerScaleBench {
       SimilarityOps.refreshIvfLedger(spark, path, e)
       path
     }
-    def timeRetrain(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SimilarityOps.retrainIvfLedger(spark, path)
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    def timeRetrain(path: String, label: String): Unit =
+      time(spark, label)(SimilarityOps.retrainIvfLedger(spark, path))
     val p1x = ledgerOf(small)
     timeRetrain(p1x, "retrain_1x_index")
     timeRetrain(p1x, "retrain_1x_index_rep2")
@@ -238,7 +216,7 @@ object LedgerScaleBench {
     * The retrain IS a bootstrap-sized rebuild by design (re-keyed
     * cells + fresh edges), so the honest claim is "one s9 build + one
     * swap", not flatness — the rows pin that the migration wall tracks
-    * the REBUILD cost (compare the same round's s9 BenchSlice row),
+    * the REBUILD cost (compare the same round's s9 `Bench slice` row),
     * with no super-linear term hiding in the staged-swap machinery.
     * Run after ScaleUp: `sbt "runMain graft.LedgerScaleBench
     * retrainKnn"`; recorded in BASELINE §sf1.
@@ -257,12 +235,8 @@ object LedgerScaleBench {
       SimilarityOps.refreshKnnLedger(spark, path, e)
       path
     }
-    def timeRetrain(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SimilarityOps.retrainKnnLedger(spark, path)
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    def timeRetrain(path: String, label: String): Unit =
+      time(spark, label)(SimilarityOps.retrainKnnLedger(spark, path))
     val p1x = ledgerOf(small, "1x")
     timeRetrain(p1x, "retrainKnn_1x_graph")
     timeRetrain(p1x, "retrainKnn_1x_graph_rep2")
@@ -301,12 +275,8 @@ object LedgerScaleBench {
         SimilarityOps.refreshKnnLedger(spark, path, e)
         path
       }
-      def timeCompact(path: String, label: String): Unit = {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        SimilarityOps.compactKnnLedger(spark, path)
-        println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
+      def timeCompact(path: String, label: String): Unit =
+        time(spark, label)(SimilarityOps.compactKnnLedger(spark, path))
       // untimed warmup compaction on a throwaway ledger: the codegen/
       // planning constants of the compaction path must not land on
       // whichever timed arm happens to run first
@@ -345,28 +315,20 @@ object LedgerScaleBench {
       DedupOps.refreshNearDupLedger(spark, path, prior)
       path
     }
-    val batchIdx = DedupOps.minhashIndex(
+    val batchIdx = staged(DedupOps.minhashIndex(
       Tables.load(spark, small, "documents")
-        .filter(col("source") === "src0").select("doc_id", "text"))
-      .localCheckpoint()
-    def timeProbe(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      DedupOps.nearDupProbe(batchIdx, DedupOps.readBandLedger(spark, path))
-        .write.format("noop").mode("overwrite").save()
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+        .filter(col("source") === "src0").select("doc_id", "text")))
+    def timeProbe(path: String, label: String): Unit = time(spark, label)(
+      Bench.noop(DedupOps.nearDupProbe(batchIdx,
+        DedupOps.readBandLedger(spark, path))))
     val ids = Tables.load(spark, small, "documents")
       .filter(col("source") =!= "src0")
       .select("doc_id").filter(pmod(col("doc_id"), lit(97L)) === 13L)
     Seq(ledgerOf(small, "1x") -> "1x", ledgerOf(big, "10x") -> "10x")
       .foreach { case (path, tag) =>
         timeProbe(path, s"band_probe_${tag}_pre")
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        DedupOps.removeFromBandLedger(spark, path, ids)
-        println(f"[ledger] band_takedown_$tag " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+        time(spark, s"band_takedown_$tag")(
+          DedupOps.removeFromBandLedger(spark, path, ids))
         timeProbe(path, s"band_probe_${tag}_post")
       }
     spark.stop()
@@ -377,7 +339,7 @@ object LedgerScaleBench {
     * to the kNN-graph ledger of a 1× and a 10× standing corpus, plus
     * the merged-graph read on each. O(batch·occupancy) maintenance
     * keeps the append near-flat while the standing graph grows 10× —
-    * against s9's from-scratch rebuild (the same round's BenchSlice
+    * against s9's from-scratch rebuild (the same round's `Bench slice`
     * row) as the alternative a daily cadence would otherwise pay.
     * Run after ScaleUp: `sbt "runMain graft.LedgerScaleBench s10"`;
     * recorded in BASELINE §sf1.
@@ -413,38 +375,24 @@ object LedgerScaleBench {
     println(s"[ledger] probes_bytes fat_1x=${du(p1x)} slim_1x=${du(p1xS)} " +
       s"fat_10x=${du(p10x)} slim_10x=${du(p10xS)}")
     // the fixed daily batch: novel ids against BOTH corpora
-    val batch = Tables.load(spark, small, "embeddings")
+    val batch = staged(Tables.load(spark, small, "embeddings")
       .filter(pmod(col("vec_id"), lit(8)) === 5)
-      .select((col("vec_id") + 100000000L).as("vec_id"), col("embedding"))
-      .localCheckpoint()
+      .select((col("vec_id") + 100000000L).as("vec_id"), col("embedding")))
     // appends mutate the ledger (idempotent replays would measure the
     // novelty no-op), so each is timed ONCE after a JVM/page-cache
     // warmup on the read path
-    def timeRead(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SimilarityOps.s10Graph(spark, path, None)
-        .write.format("noop").mode("overwrite").save()
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    def timeAppend(path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SimilarityOps.refreshKnnLedger(spark, path, batch)
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    def timeRead(path: String, label: String): Unit = time(spark, label)(
+      Bench.noop(SimilarityOps.s10Graph(spark, path, None)))
+    def timeAppend(path: String, label: String): Unit =
+      time(spark, label)(SimilarityOps.refreshKnnLedger(spark, path, batch))
     // the REFINED production read (F18 through the ledger — r17
     // verdict #8): maintained graph + 2 NN-descent rounds at workK =
     // 2·KG, the config that clears the 0.828 recall floor without the
     // n^1.5 seed rebuild (AnnRecallSpec ledger-path floor). Timed on
     // the clean full-corpus ledger, before the phantom-batch appends.
-    def timeRefined(dir: String, path: String, label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SimilarityOps.knnGraphRefinedLedger(spark, dir, path)
-        .write.format("noop").mode("overwrite").save()
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
+    def timeRefined(dir: String, path: String, label: String): Unit =
+      time(spark, label)(Bench.noop(
+        SimilarityOps.knnGraphRefinedLedger(spark, dir, path)))
     timeRead(p1x, "s10_read_warmup_1x")
     timeRefined(small, p1x, "s10_refined_read_vs_1x_graph")
     timeAppend(p1x, "s10_append_batch_vs_1x_graph")
@@ -461,44 +409,6 @@ object LedgerScaleBench {
     timeRead(p10xS, "s10slim_read_warmup_10x")
     timeAppend(p10xS, "s10slim_append_batch_vs_10x_graph")
     timeRead(p10xS, "s10slim_read_vs_10x_graph")
-    spark.stop()
-  }
-
-  /** d15 stage breakdown: where the semantic keep-rule's time goes at
-    * a given SF — the kNN-graph build (s9's machinery, no tap), the
-    * thresholded edge set's size/shape, and the connected-components
-    * pass alone. Run: `SPARK_GRAFT_SF_DIR=... sbt "runMain
-    * graft.LedgerScaleBench d15"`.
-    */
-  private def d15Scenario(dir: String): Unit = {
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-d15-scale")
-    import graft.queries.SimilarityOps
-    def edges0 = SimilarityOps.knnGraphEdges(spark, dir, None)
-      .filter(col("cosine") >= 0.4)
-      .select(col("qid").as("src"), col("neighbor_id").as("dst"))
-    // A/B the edge materialization path in one JVM (suspect second)
-    var t0 = System.nanoTime()
-    val warm = edges0.write.format("noop").mode("overwrite")
-    warm.save()
-    println(f"[d15] build_noop_warmup ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    t0 = System.nanoTime()
-    warm.save()
-    println(f"[d15] build_noop ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    t0 = System.nanoTime()
-    val edges = edges0.localCheckpoint()
-    val ne = edges.count()
-    println(f"[d15] build_localCheckpoint ${(System.nanoTime() - t0) / 1e9}%.2f s (edges=$ne)")
-    t0 = System.nanoTime()
-    val touched = edges.select(col("src").as("id"))
-      .unionByName(edges.select(col("dst").as("id")))
-      .distinct().localCheckpoint()
-    val nt = touched.count()
-    println(f"[d15] touched ${(System.nanoTime() - t0) / 1e9}%.2f s (nodes=$nt)")
-    t0 = System.nanoTime()
-    val cc = graft.operators.ConnectedComponents.run(touched, edges)
-    val nk = cc.filter(col("id") === col("component")).count()
-    println(f"[d15] cc ${(System.nanoTime() - t0) / 1e9}%.2f s (keepers_in_cc=$nk)")
     spark.stop()
   }
 
@@ -532,18 +442,13 @@ object LedgerScaleBench {
     val batch = Tables.load(spark, sfDir, "documents")
       .filter(col("source") === "src0")
     def timeDedup(label: String): Unit = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      DedupOps.incrementalDedup(batch, spark.read.parquet(path))
-        .write.format("noop").mode("overwrite").save()
-      println(f"[ledger] $label ${(System.nanoTime() - t0) / 1e9}%.2f s" +
-        s" (${files()} files)")
+      val sec = Bench.timed(spark)(Bench.noop(
+        DedupOps.incrementalDedup(batch, spark.read.parquet(path))))
+      println(f"[ledger] $label $sec%.2f s (${files()} files)")
     }
     timeDedup("compact_warmup")
     timeDedup("ingest_vs_100_append_chain")
-    val t0 = System.nanoTime()
-    DedupOps.compactLedger(spark, path)
-    println(f"[ledger] compaction_itself ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    time(spark, "compaction_itself")(DedupOps.compactLedger(spark, path))
     timeDedup("ingest_vs_compacted_warmup")
     timeDedup("ingest_vs_compacted")
     spark.stop()

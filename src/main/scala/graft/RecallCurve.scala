@@ -12,7 +12,7 @@ import graft.sources.Tables
   * (sf0.01/sf0.1 — the recall statistic is a property of the
   * vectors/knobs, not of wall-clock); the COST side of the curve at
   * scale is the per-round timing printed here plus the s9/s11
-  * BenchSlice rows in BASELINE §sf10 (a descent round is ≤ 4·KG²·n
+  * `Bench slice` rows in BASELINE §sf10 (a descent round is ≤ 4·KG²·n
   * linear candidates vs the base build's n^1.5, so its relative price
   * FALLS as n grows).
   *

@@ -93,7 +93,7 @@ object ConnectedComponents {
     //
     // PRE-PARTITIONING sym by src before the checkpoint (so each
     // round's join could read it in place, guide §2.4) was measured
-    // and REJECTED (r22, interleaved AbBench, min-of-reps): d15
+    // and REJECTED (r22, interleaved `Bench ab`, min-of-reps): d15
     // 11.75 → 12.06 s and d6 4.55 → 4.29 at sf0.1 (noise-level), d15
     // 18.32 vs 16.79 s and d6 4.54 vs 4.15 at sf1 — consistently
     // SLOWER pinned. Locking the checkpoint at a fixed partition
@@ -162,8 +162,8 @@ object ConnectedComponents {
       // position-correlated ids: 8 → 5 rounds), but on the real edge
       // sets label values are uncorrelated with graph structure, so
       // label trees stay shallow and convergence is PULL-bound — the
-      // d15 edge set ran 10 rounds under both schemes (GRAFT_CC_DEBUG,
-      // same window), leaving the second self-join per round a pure
+      // d15 edge set ran 10 rounds under both schemes (per-round
+      // timing, same window), leaving the second self-join per round a pure
       // cost. Deeper min-propagation (two-hop pull) was rejected on
       // arithmetic: squared-edge joins grow per-round bytes ~2·KG×
       // to halve rounds.
@@ -180,8 +180,6 @@ object ConnectedComponents {
       releaseRound = release
       labels = jumped.select("id", "component")
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter done at ${System.nanoTime()}")
     }
     if (!converged)
       throw new IllegalStateException(

@@ -34,7 +34,7 @@ import graft.functions.HashFunctions.hamming64
   * identical in 3 of 4 blocks) is OUTPUT-compute skew: its d² candidate
   * evaluations land on the single task owning the key, while its
   * shuffle INPUT is d tiny rows — so AQE's bytes-based skew split never
-  * fires (measured identical with it on/off, SkewBench `hamming`), and
+  * fires (measured identical with it on/off, BASELINE §skew), and
   * dropping the key would break the pigeonhole guarantee (a pair whose
   * only ≤1-error block is the dropped one is lost). The measured armor
   * is an explicit probe-side SALT on detected hot keys
@@ -160,7 +160,7 @@ object HammingNearDup {
     * -dense even at 5k docs (arms tie, 1.4 s both) and the candidate
     * volume grows as n²·nBlocks·(width+1)/2^w past it (500k docs:
     * 13.3 s vs wide's 9.1 s; full 6-point table in BASELINE §skew).
-    * Kept as the measured reference arm (SkewBench `simhash`) and the
+    * Kept as the measured reference arm (BASELINE §skew) and the
     * d14 oracle twin that holds both candidate generators under the
     * driver hash gate.
     */
@@ -230,7 +230,7 @@ object HammingNearDup {
           col("v").bitwiseXOR(lit(1L << bit))): _*)).as("v"))
     val ham = hamming64(col("ha"), col("hb")) +
       hamming64(col("la"), col("lb"))
-    // hot-BLOCK salt (opt-in, SkewBench-measured): a low-entropy corpus
+    // hot-BLOCK salt (opt-in, BASELINE §skew): a low-entropy corpus
     // puts d unique signatures on ONE (block, v) key per constant
     // block; its d² candidate pairs are OUTPUT-compute skew — the
     // shuffle input for the key is d tiny rows, so AQE's bytes-based

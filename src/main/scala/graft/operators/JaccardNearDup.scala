@@ -34,11 +34,11 @@ object JaccardNearDup {
     * The armor is NOT free, so this is a measured trade, not a free
     * insurance policy. Against it: on a NATURAL (no hot-token) corpus
     * the df ordering's two extra shuffles measure 2.1–2.2× on d2/d7 at
-    * 50k docs (r7, BenchSlice on the ScaleUp corpus) — doubling every
+    * 50k docs (r7, `Bench slice` on the ScaleUp corpus) — doubling every
     * well-behaved run. For it: natural-language shingle corpora are
     * Zipfian, and under the plain token order one frequent token
     * sitting inside every prefix forms a single O(n²) candidate
-    * bucket — SkewBench measures the df-ordered prefix 1.8× faster on
+    * bucket — the df-ordered prefix measures 1.8× faster on
     * that adversarial worst case at 50k docs (42 → 23 s, BASELINE
     * §skew; only 1.2× at 5k, where the unique-set armor absorbs most
     * of it), and the gap grows quadratically in n while the armor's
@@ -129,8 +129,8 @@ object JaccardNearDup {
     * as the r7 df-ordered window arm — the Zipf head never enters a
     * prefix — at a fraction of its cost: one vocabulary-bounded
     * partial agg + a driver-sized collect instead of a corpus-exploded
-    * token join + per-doc window; measured head-to-head in SkewBench
-    * `jacc` and BASELINE §sf10 r14).
+    * token join + per-doc window; measured head-to-head in BASELINE
+    * §skew and §sf10 r14).
     */
   def pairsAuto(toks: DataFrame, idCol: String, toksCol: String,
       t: Double, nDocs: Long): DataFrame = {

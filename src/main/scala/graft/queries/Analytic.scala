@@ -509,7 +509,7 @@ object Analytic extends QueryGroup {
   //    source)` with ~10 sources would funnel each source's ENTIRE
   //    corpus through one reducer, while the ranked self-join
   //    range-partitions by (source, doc_id) and scales with the corpus.
-  // switch threshold MEASURED (SkewBench `pairs`, BASELINE §skew): on
+  // switch threshold MEASURED (`pairs` scenario, BASELINE §skew): on
   // local[32] the lag window still wins at 100k docs (rank's ~0.6 s
   // range-sample + zipWithIndex constant dominates), the rank arm wins
   // 1.9× at 500k and 1.5× at 1M; crossover ≈ 250k. On a many-core
@@ -520,8 +520,7 @@ object Analytic extends QueryGroup {
 
   /** (source, doc_id, text, prev_id, prev_text) for consecutive docs
     * of a source, under either pairing regime. Visible in-library so
-    * the spec can hash-compare the regimes / plan-gate the large arm
-    * and SkewBench's `pairs` scenario can time them head-to-head.
+    * the spec can hash-compare the regimes / plan-gate the large arm.
     */
   private[graft] def adjacentPairs(docsDf: DataFrame,
       large: Boolean): DataFrame =

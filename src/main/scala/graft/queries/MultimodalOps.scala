@@ -47,8 +47,8 @@ object MultimodalOps extends QueryGroup {
     * with the same designed recode/perturbation structure, which grows
     * LINEARLY with the factor (every 5th asset gets a re-encoded twin,
     * every 10th image a hamming-1 perturbation) — the media equivalent
-    * of ScaleUp's replica-perturbed documents. Used by MediaScaleBench
-    * for the mm3/mm4 scaling rows in BASELINE §sf1.
+    * of ScaleUp's replica-perturbed documents. The mm3/mm4 scaling rows
+    * over it are in BASELINE §media-scale.
     */
   private[graft] def scaleAssets(s: SparkSession,
       factor: Int): Dataset[MediaAsset] =

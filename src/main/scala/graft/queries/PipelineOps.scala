@@ -150,7 +150,7 @@ object PipelineOps extends QueryGroup {
       // keeper CC round loop, the fuzzy-decontam shingle index, and
       // the NB model fit all derive from the raw corpus, not from each
       // other — so they run CONCURRENTLY from a driver pool (guide
-      // §2.6, the p6 discipline: r22 JobProf read p2 as ~11.5 s of
+      // §2.6, the p6 discipline: r22 `Bench prof` read p2 as ~11.5 s of
       // SEQUENTIAL eager jobs, the CC loop alone ~45 jobs, each
       // underfilling 32 cores). Only the dependent tail (survivors
       // join, scoring, mixture) stays sequential.

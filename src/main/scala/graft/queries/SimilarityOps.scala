@@ -985,7 +985,7 @@ object SimilarityOps extends QueryGroup {
   //      IVF-graph trade, and the shuffle key is cid whose per-key
   //      payload (a cell's vectors) is BYTES-skewed when a region is
   //      dense, which AQE's skew split CAN see and divide (unlike the
-  //      hamming hot-block's compute skew — measured in SkewBench);
+  //      hamming hot-block's compute skew — BASELINE §skew);
   //  (4) exact cosine + bounded-heap top-KG per vector.
   // Multi-probe needs no pair dedup: assignment is unique per vector,
   // so (qid, vec_id) meets on exactly one cid.
@@ -1077,7 +1077,7 @@ object SimilarityOps extends QueryGroup {
   /** Below this corpus size a tapped build ROUTES THROUGH the scored
     * tap; at or above it the tap is a SIDE EFFECT and the join runs
     * twice. Measured, not guessed (the d4/q36 arm discipline —
-    * `graft.TapRouteBench`, BASELINE §sf10 r19): r18 shipped the
+    * BASELINE §sf10 r19): r18 shipped the
     * tap-route unconditionally on the argument that one execution +
     * a 24 B/row read-back must beat two executions — the r19 sf10
     * measurement FALSIFIED it (s9 249.6 vs 157.7 s, d15 333.3 vs

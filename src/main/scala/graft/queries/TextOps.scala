@@ -516,8 +516,7 @@ object TextOps extends QueryGroup {
   private val lmKeepNats = 6 // keep docs with avg NLL ≤ 6 nats (ppl ≤ e⁶)
 
   /** Per-position (doc_id, ctx, g) hashed (context-unigram, bigram)
-    * pairs of a (doc_id, text) frame — map-side only. Shared by t13 and
-    * SkewBench's `lm` scenario.
+    * pairs of a (doc_id, text) frame — map-side only (t13).
     */
   private[graft] def lmPositions(d: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftBridge.{column, expression}
@@ -542,8 +541,8 @@ object TextOps extends QueryGroup {
     * frame: the t13 pipeline below its corpus scan. `saltCtx` > 0 routes
     * the context probe join through [[graft.operators.SkewJoin]] — the
     * ctx key is Zipfian in natural text (one stopword can own a
-    * double-digit share of all positions), and SkewBench's `lm`
-    * scenario measures when the salt pays for itself.
+    * double-digit share of all positions); BASELINE §skew records
+    * when the salt pays for itself.
     */
   private[graft] def lmScoreFromPositions(pos: DataFrame, vocab: DataFrame,
       saltCtx: Int = 0): DataFrame = {
@@ -577,7 +576,7 @@ object TextOps extends QueryGroup {
     *
     * The ctx key is Zipfian in natural text — one stopword can own a
     * double-digit share of ALL bigram positions — and AQE's skew split
-    * does not fire on it (BASELINE §skew): SkewBench `lm` measures the
+    * does not fire on it (BASELINE §skew): the `lm` scenario measures the
     * salted probe winning at EVERY synthetic-hot size swept (1.5× at
     * 12.5k docs through 1.6× at 100k docs, 50%-hot corpus, broadcast
     * disabled). Below the threshold the driver corpus' model tables

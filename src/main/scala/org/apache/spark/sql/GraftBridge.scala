@@ -26,6 +26,12 @@ object GraftBridge {
       case _ => None
     }
 
+  /** Block until the async listener bus has delivered every posted
+    * event — a listener read before that can miss a job's end.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Rebase a frame onto its own execution output as a fresh
     * `LogicalRDD` leaf — fresh attribute ids (iterative self-join
     * safety, the ConnectedComponents rebase) WITHOUT the
@@ -79,8 +85,8 @@ object GraftBridge {
   private def perPartition[A: scala.reflect.ClassTag](
       rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
       agg: Iterator[catalyst.InternalRow] => A): Array[A] = {
-    // graft.rank.fullstage=1 is the AbBench arm toggle (dev-only) for
-    // the r22 stage-floor decision: it restores the pre-r22 behavior
+    // graft.rank.fullstage=1 is the `Bench ab` arm toggle (dev-only)
+    // for the r22 stage-floor decision: it restores the pre-r22 behavior
     // of running the offsets job over the full result stage
     val target =
       (if (sys.props.get("graft.rank.fullstage").contains("1")) rdd

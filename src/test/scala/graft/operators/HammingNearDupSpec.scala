@@ -90,7 +90,7 @@ class HammingNearDupSpec extends AnyFunSuite with Matchers {
     val rnd = new scala.util.Random(4177)
     // 60 hot sigs: constant in 3 of 4 pigeonhole blocks (hi and lo's
     // high half), random lo low-32 — three hot (block, v) keys of d=60,
-    // the boilerplate-corpus shape SkewBench `hamming` measures. Plus
+    // the boilerplate-corpus shape BASELINE §skew measures. Plus
     // 90 uniform background sigs. Floor lowered so detection engages.
     val sigs = (1L to 150L).map { i =>
       if (i <= 60L)

@@ -162,7 +162,7 @@ class JaccardNearDupSpec extends AnyFunSuite with Matchers {
   }
 
   test("Zipfian worst case (universal token): lossless, both orderings") {
-    // SkewBench's scenario at spec scale: every document carries token
+    // BASELINE §skew's scenario at spec scale: every document carries token
     // Long.MinValue — first in every sorted array, so under the plain
     // order it sits in EVERY prefix (one giant candidate bucket), while
     // the df ordering pushes it out of all prefixes. Both must still

@@ -824,7 +824,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
 
   test("S9 tap arms: the size-keyed tap-route and side-effect arms " +
       "produce identical edges and identical oracle candidate sets") {
-    // the r19 TapRouteBench decision (BASELINE §sf10 r19) keys the
+    // the r19 tap-arm decision (BASELINE §sf10 r19) keys the
     // oracle-tap arm on corpus size; whichever arm runs, the build's
     // output and the tap the oracle reads must be the same
     val a = SimilarityOps.knnGraphEdges(spark, TestSpark.sfDir,

@@ -75,7 +75,7 @@ class MultimodalOpsSpec extends AnyFunSuite with Matchers {
   }
 
   test("scale corpus: near-dup pairs grow linearly with the factor") {
-    // the media scale axis (MediaScaleBench) is only evidence if the
+    // the media scale axis (BASELINE §media-scale) is only evidence if the
     // corpus' pair structure is linear by construction: melodic audio
     // keeps spurious hash collisions negligible (the steady-tone
     // corpus's ~16-cell audio hash space holds 376 collision pairs at

@@ -435,7 +435,7 @@ class TextPipelineSpec extends AnyFunSuite with Matchers {
   }
 
   test("t13: salted ctx probe is result-equal to the plain join") {
-    // SkewBench's lm scenario shows the salt beating the naive probe
+    // BASELINE §skew's lm scenario shows the salt beating the naive probe
     // 1.6× on a 50%-hot-context corpus (AQE does not absorb it); the
     // switch must be plan-only
     val d = graft.sources.Tables.load(spark, TestSpark.sfDir, "documents")
