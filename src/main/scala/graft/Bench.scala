@@ -236,11 +236,14 @@ object Bench {
     * is disabled in bench sessions; this is the listener-level Jobs
     * page). `build` is query construction (eager sub-jobs, e.g. CC);
     * `jobs-covered` is the union of job intervals, so the rest of the
-    * wall is driver-side planning/codegen/commit between jobs.
+    * wall is driver-side planning/codegen/commit between jobs. One
+    * `stage` line per distinct job description rolls its jobs up the
+    * same way, so each pipeline stage's share of the wall (the
+    * `PipelineOps.stages` tags) reads off directly.
     */
   private def prof(spark: SparkSession, sfDir: String,
       names: Seq[String]): Unit = {
-    final class Job(val desc: String, val t0: Long) {
+    final class Job(val desc: String, val described: Boolean, val t0: Long) {
       var t1, input, shufRead, shufWrite = 0L
       var stages, tasks = 0
     }
@@ -248,11 +251,12 @@ object Bench {
     val stageToJob = mutable.HashMap[Int, Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
+        val described = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
+        val desc = described
           .getOrElse(e.stageInfos.map(_.name).lastOption.getOrElse(""))
         jobs.synchronized {
-          jobs(e.jobId) = new Job(desc, e.time)
+          jobs(e.jobId) = new Job(desc, described.isDefined, e.time)
           e.stageIds.foreach(stageToJob(_) = e.jobId)
         }
       }
@@ -293,20 +297,27 @@ object Bench {
           sc.removeSparkListener(listener)
         }
       val build = (tBuild - t0) / 1e9
-      jobs.synchronized {
-        val covered = jobs.values.map(j => (j.t0, j.t1)).toSeq.sorted
+      // seconds covered by the union of the jobs' intervals
+      def covered(js: Iterable[Job]): Double =
+        js.map(j => (j.t0, j.t1)).toSeq.sorted
           .foldLeft((0L, 0L)) { case ((sum, hi), (a, b)) =>
             (sum + math.max(0L, b - math.max(a, hi)), math.max(hi, b))
           }._1 / 1e3
+      jobs.synchronized {
         println(f"[prof] ===== $q total $sec%.2f s (build $build%.2f, " +
-          f"action ${sec - build}%.2f, jobs-covered $covered%.2f), " +
-          s"${jobs.size} jobs =====")
+          f"action ${sec - build}%.2f, " +
+          f"jobs-covered ${covered(jobs.values)}%.2f), ${jobs.size} jobs =====")
         jobs.foreach { case (id, j) =>
           println(f"[prof] job $id%3d ${(j.t1 - j.t0) / 1e3}%7.2f s " +
             f"stages=${j.stages}%2d tasks=${j.tasks}%4d " +
             f"in=${mb(j.input)}%8s MB sr=${mb(j.shufRead)}%8s MB " +
             f"sw=${mb(j.shufWrite)}%8s MB  ${j.desc.take(80)}")
         }
+        jobs.values.toSeq.filter(_.described).groupBy(_.desc).toSeq
+          .sortBy(_._2.head.t0).foreach { case (desc, js) =>
+            println(f"[prof] stage $desc jobs=${js.size} " +
+              f"covered=${covered(js)}%.2f")
+          }
       }
     }
   }

@@ -1,5 +1,10 @@
 package graft.queries
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -22,37 +27,64 @@ import graft.sources.Tables
   */
 object PipelineOps extends QueryGroup {
 
-  /** Await every future, rethrowing the FIRST failure only after ALL
-    * settle (the p6 rule, ADVICE r21: a failed stage must not leave
-    * sibling jobs running in the background where they race the caller
-    * — or the bench harness's `clear()` — mid-write), with every other
-    * failure attached to it as suppressed (ADVICE r22: no failed stage
-    * goes unreported). Values are read off the completed futures by
-    * the caller.
+  /** The one runner for a pipeline's INDEPENDENT eager stages: each
+    * stage's eager jobs (CC round loops, checkpoints, tap and ledger
+    * writes) underfill the cluster alone, and FIFO scheduling
+    * back-fills the gaps (guide §2.6). `stages(s, "p4")("decontam
+    * candidates" -> (() => …), …)` runs each named stage on its own
+    * pool thread under the job description `<query>: <stage>` (what
+    * `Bench prof` reports) and returns the typed results. No job group
+    * is set: a stage's jobs stay in the caller's group, under its
+    * cancellation. Every stage SETTLES before a failure propagates
+    * (ADVICE r21: no sibling is left writing behind the caller or the
+    * bench harness's `clear()`); the first failure in stage order is
+    * rethrown with the others attached as suppressed (ADVICE r22).
+    * `graft.pchain.par=0` runs the stages on one thread in order: the
+    * serial reference arm of TextPipelineSpec's equivalence test.
     */
-  private[graft] def settleAll(fs: Seq[scala.concurrent.Future[_]])(
-      implicit ec: scala.concurrent.ExecutionContext): Unit =
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(
-        fs.map(_.transform(scala.util.Success(_)))),
-      scala.concurrent.duration.Duration.Inf)
-      .collect { case scala.util.Failure(e) => e }.distinct match {
-        case first +: rest => rest.foreach(first.addSuppressed); throw first
-        case _ => ()
-      }
+  private[graft] def stages(s: SparkSession, query: String): Stages =
+    new Stages(s, query)
 
-  /** Driver pool for overlapping a chain's INDEPENDENT eager stages
-    * (guide §2.6 — the p6 discipline generalized to the composed
-    * pipelines): each stage's eager jobs (CC round loops, scratch/
-    * checkpoint materializations, tap writes) underfill the cluster,
-    * and FIFO scheduling back-fills the gaps. `parProp` set to "0"
-    * serializes the stages on one pool thread (dev A/B toggle;
-    * submission order preserved). Caller must shutdown() in finally.
+  private[graft] final class Stages(s: SparkSession, query: String) {
+    def apply[A, B](a: (String, () => A), b: (String, () => B)): (A, B) = {
+      val r = run(Seq(a, b))
+      (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
+    }
+
+    def apply[A, B, C](a: (String, () => A), b: (String, () => B),
+        c: (String, () => C)): (A, B, C) = {
+      val r = run(Seq(a, b, c))
+      (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
+    }
+
+    private def run(named: Seq[(String, () => Any)]): Seq[Any] = {
+      val sc = s.sparkContext
+      val tasks = named.map { case (stage, body) => (() => {
+        val prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"$query: $stage")
+        try body() finally sc.setJobDescription(prev)
+      }): Callable[Any] }
+      val pool = Executors.newFixedThreadPool(
+        if (sys.props.get("graft.pchain.par").contains("0")) 1 else tasks.size)
+      // invokeAll returns only once every stage has settled
+      val settled = try pool.invokeAll(tasks.asJava).asScala.toSeq
+        finally pool.shutdown()
+      settled.flatMap(f => try { f.get(); None } catch {
+        case e: ExecutionException => Some(e.getCause) }).distinct match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ => settled.map(_.get())
+      }
+    }
+  }
+
+  /** p2/p3's stage-5 model: t21's NB fit on the RAW corpus' %5 train
+    * split with t21's salt width, pinned (model-sized frames) so the
+    * fit runs inside its stage and the scoring tail reads checkpoints.
     */
-  private def overlapPool(n: Int, parProp: String)
-      : java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(
-      if (sys.props.get(parProp).contains("0")) 1 else n)
+  private def nbFit(s: SparkSession, dir: String, d: DataFrame)
+      : (TextOps.NbModel, Int) =
+    (TextOps.nbTrain(d.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)).pinned,
+      TextOps.saltWidth(s, dir))
 
   private val p1 = QueryDef(
     "p1_training_corpus",
@@ -149,53 +181,20 @@ object PipelineOps extends QueryGroup {
       // Stages 1/2/3's eager builds are mutually INDEPENDENT — the
       // keeper CC round loop, the fuzzy-decontam shingle index, and
       // the NB model fit all derive from the raw corpus, not from each
-      // other — so they run CONCURRENTLY from a driver pool (guide
-      // §2.6, the p6 discipline: r22 `Bench prof` read p2 as ~11.5 s of
-      // SEQUENTIAL eager jobs, the CC loop alone ~45 jobs, each
-      // underfilling 32 cores). Only the dependent tail (survivors
-      // join, scoring, mixture) stays sequential.
-      val pool = overlapPool(3, "graft.pchain.par")
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val (keep, contam, m, saltW) =
-        try {
-          // stage 1: near-dup collapse — one keeper per Jaccard cluster
-          val fKeep = Future {
-            s.sparkContext.setJobDescription("p2: near-dup keepers (CC)")
-            DedupOps.keeperIds(s, dir)
-          }
-          // stage 2: fuzzy decontamination — any doc that near-
-          // duplicates an eval item goes; the eval holdout itself never
-          // trains. Checkpointed (output-sized: distinct contaminated
-          // ids) so the shingle index + prefix probe materialize HERE,
-          // overlapped with the CC loop, instead of serially inside
-          // survivors' checkpoint.
-          val fContam = Future {
-            s.sparkContext.setJobDescription("p2: fuzzy decontam set")
-            TextOps.fuzzyContamPairs(s, dir)
-              .select("doc_id").distinct().localCheckpoint()
-          }
-          // stage 3's model: t21's NB fit on the full-corpus %5 train
-          // split (the filter model is fit on raw data; only the SCORED
-          // set shrinks with the pipeline). Pinned — the model frames
-          // are vocabulary/class-bounded at any corpus size — so the
-          // fit's explode+agg runs here, under the CC wall, and the
-          // scoring tail reads model-sized checkpoints.
-          val fModel = Future {
-            s.sparkContext.setJobDescription("p2: NB model fit")
-            val saltW =
-              if (CorpusStats.nDocs(s, dir) >= TextOps.lmSaltMinDocs)
-                TextOps.lmSaltBuckets else 0
-            (TextOps.nbTrain(
-              d.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)).pinned, saltW)
-          }
-          settleAll(Seq(fKeep, fContam, fModel))
-          val (m, saltW) = Await.result(fModel, Duration.Inf)
-          (Await.result(fKeep, Duration.Inf),
-            Await.result(fContam, Duration.Inf), m, saltW)
-        } finally pool.shutdown()
+      // other — so they overlap on the stage runner (r22 `Bench prof`
+      // read p2 as ~11.5 s of SEQUENTIAL eager jobs, the CC loop alone
+      // ~45 jobs, each underfilling 32 cores). Only the dependent tail
+      // (survivors join, scoring, mixture) stays sequential.
+      val (keep, contam, (m, saltW)) = stages(s, "p2")(
+        // stage 1: near-dup collapse — one keeper per Jaccard cluster
+        "near-dup keepers (CC)" -> (() => DedupOps.keeperIds(s, dir)),
+        // stage 2: fuzzy decontamination — any doc that near-duplicates
+        // an eval item goes; the eval holdout never trains. Checkpointed
+        // (output-sized) so the shingle index + prefix probe run HERE,
+        // under the CC loop, not serially inside survivors' checkpoint.
+        "fuzzy decontam set" -> (() => TextOps.fuzzyContamPairs(s, dir)
+          .select("doc_id").distinct().localCheckpoint()),
+        "NB model fit" -> (() => nbFit(s, dir, d)))
       // pinned: nbClassify consumes its eval side THREE times (word
       // explode, in-vocab counts, the priors base frame) — without the
       // pin each consumption re-executes the whole keeper-CC + fuzzy-
@@ -345,51 +344,28 @@ object PipelineOps extends QueryGroup {
     (s, dir) => {
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
-      // Stages 1-3 (keepers → excision → scrub, a sequential chain
-      // ending in the `processed` pin) and stage 5's NB model fit are
-      // INDEPENDENT — the filter model fits on the RAW corpus — so the
-      // two eager builds overlap on a driver pool (guide §2.6; see p2).
-      // Stage 4 (decontamination of the PROCESSED text) depends on the
-      // chain and stays sequential.
-      val pool = overlapPool(2, "graft.pchain.par")
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val (processed, m, saltW) =
-        try {
-          val fProc = Future {
-            s.sparkContext.setJobDescription(
-              "p3: keepers + span excise + PII scrub")
-            // stage 1: near-dup collapse — one keeper per cluster
-            val kdocs = d.join(DedupOps.keeperIds(s, dir), "doc_id")
-            // stage 2: span-grain dedup over the keeper corpus
-            val excised = DedupOps.spanExciseOver(kdocs)
-              .select(col("doc_id"), col("clean_text"))
-            // stage 3: PII scrub over the rebuilt text (deterministic
-            // planting first — both engines plant identical strings)
-            val scrubbed = TextOps.redactPiiProjection(
-              excised.select(col("doc_id"),
-                TextOps.piiInjectCol(col("clean_text")).as("text")))
-            scrubbed
-              .select(col("doc_id"), col("clean_text").as("text"))
-              .join(d.select("doc_id", "source"), "doc_id")
-              .localCheckpoint()
-          }
-          // stage 5's model: NB fit on the raw %5 train split — pinned
-          // (model-sized frames) so the fit runs under the chain's wall
-          val fModel = Future {
-            s.sparkContext.setJobDescription("p3: NB model fit")
-            val saltW =
-              if (CorpusStats.nDocs(s, dir) >= TextOps.lmSaltMinDocs)
-                TextOps.lmSaltBuckets else 0
-            (TextOps.nbTrain(
-              d.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)).pinned, saltW)
-          }
-          settleAll(Seq(fProc, fModel))
-          val (m, saltW) = Await.result(fModel, Duration.Inf)
-          (Await.result(fProc, Duration.Inf), m, saltW)
-        } finally pool.shutdown()
+      // Stages 1-3 (keepers → excision → scrub, ending in the
+      // `processed` pin) and stage 5's NB fit (on the RAW corpus) are
+      // INDEPENDENT, so they overlap on the stage runner (see p2);
+      // stage 4 (decontaminating the PROCESSED text) waits for both.
+      val (processed, (m, saltW)) = stages(s, "p3")(
+        "keepers + span excise + PII scrub" -> (() => {
+          // stage 1: near-dup collapse — one keeper per cluster
+          val kdocs = d.join(DedupOps.keeperIds(s, dir), "doc_id")
+          // stage 2: span-grain dedup over the keeper corpus
+          val excised = DedupOps.spanExciseOver(kdocs)
+            .select(col("doc_id"), col("clean_text"))
+          // stage 3: PII scrub over the rebuilt text (deterministic
+          // planting first — both engines plant identical strings)
+          val scrubbed = TextOps.redactPiiProjection(
+            excised.select(col("doc_id"),
+              TextOps.piiInjectCol(col("clean_text")).as("text")))
+          scrubbed
+            .select(col("doc_id"), col("clean_text").as("text"))
+            .join(d.select("doc_id", "source"), "doc_id")
+            .localCheckpoint()
+        }),
+        "NB model fit" -> (() => nbFit(s, dir, d)))
       // stage 4: fuzzy decontamination on the PROCESSED text
       val contam = TextOps.fuzzyContamPairsOver(processed)
         .select("doc_id").distinct()
@@ -590,48 +566,25 @@ object PipelineOps extends QueryGroup {
     (s, dir) => {
       // The three ANN-shaped builds are INDEPENDENT and touch DISJOINT
       // state (s10 graph ledger + p4_graph tap / p4_dec tap / s8 IVF
-      // ledger + p4_cents tap), so they overlap on a driver pool —
-      // exactly p6's takedown shape (guide §2.6): the ledger-CC round
-      // loop, the LSH candidate tap write, and the centroid read each
-      // underfill the cluster alone.
-      val pool4 = overlapPool(3, "graft.pchain.par")
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool4)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val (keepers, flagged, cents) =
-        try {
-          // stage 1: SemDeDup keepers over the maintained s10 ledger
-          val fKeep = Future {
-            s.sparkContext.setJobDescription(
-              "p4: SemDeDup keepers (graph ledger)")
-            DedupOps.semanticKeepOver(s, dir,
-                SimilarityOps.LedgerGraph(SimilarityOps.s10LedgerPath(dir)),
-                "p4_graph")
-              .select(col("vec_id").as("doc_id"))
-          }
-          // stage 2: embedding decontamination candidates — every
-          // keeper within decontamR of an eval vector gets flagged
-          val fFlag = Future {
-            s.sparkContext.setJobDescription("p4: decontam candidates")
-            SimilarityOps.decontamPairs(s, dir, "p4_dec")
-          }
-          // stage 3's centroids: the STORED s8 quantizer (no per-run
-          // Lloyd training — the c1l/c2l shape)
-          val fCents = Future {
-            s.sparkContext.setJobDescription(
-              "p4: stored quantizer centroids")
-            graft.sources.VerifyTap(
-              SimilarityOps.quantizerCentroids(s, dir,
-                SimilarityOps.StoredQuantizer(
-                  SimilarityOps.s8LedgerPath(dir))),
-              "p4_cents")
-          }
-          settleAll(Seq(fKeep, fFlag, fCents))
-          (Await.result(fKeep, Duration.Inf),
-            Await.result(fFlag, Duration.Inf),
-            Await.result(fCents, Duration.Inf))
-        } finally pool4.shutdown()
+      // ledger + p4_cents tap), so they overlap on the stage runner —
+      // p6's takedown shape.
+      val (keepers, flagged, cents) = stages(s, "p4")(
+        // stage 1: SemDeDup keepers over the maintained s10 ledger
+        "SemDeDup keepers (graph ledger)" -> (() => DedupOps
+          .semanticKeepOver(s, dir,
+            SimilarityOps.LedgerGraph(SimilarityOps.s10LedgerPath(dir)),
+            "p4_graph")
+          .select(col("vec_id").as("doc_id"))),
+        // stage 2: embedding decontamination candidates — every keeper
+        // within decontamR of an eval vector gets flagged
+        "decontam candidates" -> (() =>
+          SimilarityOps.decontamPairs(s, dir, "p4_dec")),
+        // stage 3's centroids: the STORED s8 quantizer (no per-run
+        // Lloyd training — the c1l/c2l shape)
+        "stored quantizer centroids" -> (() => graft.sources.VerifyTap(
+          SimilarityOps.quantizerCentroids(s, dir,
+            SimilarityOps.StoredQuantizer(SimilarityOps.s8LedgerPath(dir))),
+          "p4_cents")))
       // the eval holdout leaves the corpus; flagged keepers anti-join
       val surv = TextOps.applyDecontam(
         keepers.filter(
@@ -862,50 +815,34 @@ object PipelineOps extends QueryGroup {
       val reclaimed = prior.filter(pmod(col("doc_id"), lit(13L)) === 4L)
       // stage 1: TAKEDOWNS on all three ledger families. The families
       // write DISJOINT state paths under their own writer locks, so
-      // the three chains run CONCURRENTLY from a small driver pool
-      // (guide §2.6: overlap independent jobs — each chain's stages
-      // leave most of the cluster idle, and FIFO scheduling back-fills
-      // the gaps; order WITHIN a family is preserved). Failures
-      // propagate: Await rethrows the first chain exception.
+      // the three chains overlap on the stage runner (order WITHIN a
+      // family is preserved; a failed chain is rethrown only once the
+      // others settle, so none keeps writing ledger state behind it).
       val hashPath = p6Path(dir, "hash")
       val bandPath = p6Path(dir, "band")
       val gPath = p6Path(dir, "graph")
       val e = Tables.load(s, dir, "embeddings")
         .select("vec_id", "embedding")
-      // pool size 1 serializes the chains — dev A/B toggle only
-      val pool = overlapPool(3, "graft.p6.par")
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.Future
-      // failures SETTLE before they propagate (ADVICE r21; settleAll):
-      // fail-fast would leave the surviving chains writing ledger state
-      // in the background while the caller (and the bench harness's
-      // clear()) races them
-      try {
-        settleAll(Seq(
-          Future {
-            s.sparkContext.setJobDescription("p6: hash-ledger takedown")
-            DedupOps.refreshLedger(s, hashPath,
-              prior.select(md5(col("text")).as("content_hash")).distinct())
-            DedupOps.removeFromHashLedger(s, hashPath,
-              reclaimed.select(md5(col("text")).as("content_hash")).distinct())
-          },
-          Future {
-            s.sparkContext.setJobDescription("p6: band-ledger takedown")
-            DedupOps.refreshNearDupLedger(s, bandPath,
-              prior.select("doc_id", "text"))
-            DedupOps.removeFromBandLedger(s, bandPath,
-              reclaimed.select("doc_id"))
-          },
-          Future {
-            s.sparkContext.setJobDescription("p6: graph-ledger takedown")
-            withLeaseRetry() { SimilarityOps.refreshKnnLedger(s, gPath,
-              e.filter(pmod(col("vec_id"), lit(8)) =!= 5)) }
-            withLeaseRetry() { SimilarityOps.refreshKnnLedger(s, gPath, e) }
-            withLeaseRetry() { SimilarityOps.tombstoneIds(s, gPath,
-              e.filter(pmod(col("vec_id"), lit(13L)) === 4L).select("vec_id")) }
-          }))
-      } finally { pool.shutdown() }
+      stages(s, "p6")(
+        "hash-ledger takedown" -> (() => {
+          DedupOps.refreshLedger(s, hashPath,
+            prior.select(md5(col("text")).as("content_hash")).distinct())
+          DedupOps.removeFromHashLedger(s, hashPath,
+            reclaimed.select(md5(col("text")).as("content_hash")).distinct())
+        }),
+        "band-ledger takedown" -> (() => {
+          DedupOps.refreshNearDupLedger(s, bandPath,
+            prior.select("doc_id", "text"))
+          DedupOps.removeFromBandLedger(s, bandPath,
+            reclaimed.select("doc_id"))
+        }),
+        "graph-ledger takedown" -> (() => {
+          withLeaseRetry() { SimilarityOps.refreshKnnLedger(s, gPath,
+            e.filter(pmod(col("vec_id"), lit(8)) =!= 5)) }
+          withLeaseRetry() { SimilarityOps.refreshKnnLedger(s, gPath, e) }
+          withLeaseRetry() { SimilarityOps.tombstoneIds(s, gPath,
+            e.filter(pmod(col("vec_id"), lit(13L)) === 4L).select("vec_id")) }
+        }))
       // stage 2: RE-INGEST against the shrunk hash ledger — reclaimed
       // content re-admits as novel (the d17 contract)
       val batch = d.filter(col("source") === "src2")

@@ -591,13 +591,19 @@ object TextOps extends QueryGroup {
   private[queries] val lmSaltMinDocs = 100000L
   private[queries] val lmSaltBuckets = 32
 
+  /** The salt width for a Zipfian ctx/word probe over the corpus in
+    * `dir`: [[lmSaltBuckets]] at or above [[lmSaltMinDocs]], else 0
+    * (the plain join).
+    */
+  private[queries] def saltWidth(s: org.apache.spark.sql.SparkSession,
+      dir: String): Int =
+    if (CorpusStats.nDocs(s, dir) >= lmSaltMinDocs) lmSaltBuckets else 0
+
   private val t13 = QueryDef(
     "t13_lm_score",
     (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val saltCtx =
-        if (CorpusStats.nDocs(s, dir) >= lmSaltMinDocs) lmSaltBuckets else 0
-      lmScoreFromPositions(lmPositions(d), lmVocab(d), saltCtx)
+      lmScoreFromPositions(lmPositions(d), lmVocab(d), saltWidth(s, dir))
     },
     Some(s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS words FROM documents),
        |pos AS (SELECT doc_id,
@@ -1287,10 +1293,9 @@ object TextOps extends QueryGroup {
     "t21_quality_classifier",
     (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("source"), col("text"))
-      val saltW =
-        if (CorpusStats.nDocs(s, dir) >= lmSaltMinDocs) lmSaltBuckets else 0
       nbClassify(d.filter(pmod(col("doc_id"), lit(5L)) === 0L),
-        nbTrain(d.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)), saltW)
+        nbTrain(d.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)),
+        saltWidth(s, dir))
         .orderBy("doc_id")
     },
     Some("""WITH d AS (

@@ -125,15 +125,16 @@ class TextPipelineSpec extends AnyFunSuite with Matchers {
     rows.unpersist()
   }
 
-  test("p2/p4: the overlapped stage builds are semantics-free — the " +
-    "serialized arm (graft.pchain.par=0) returns identical rows") {
-    // r22 runs each chain's independent eager stages (keeper CC, fuzzy
-    // decontam set, NB model fit / the three ANN taps) concurrently on
-    // a driver pool (guide §2.6). The pool must only change WHEN work
-    // runs, never what any stage computes: the serialized A/B arm and
-    // the shipped parallel default must agree row-for-row.
+  test("p2/p3/p4/p6: the overlapped stage builds are semantics-free — " +
+    "the serialized arm (graft.pchain.par=0) returns identical rows") {
+    // Each chain's independent eager stages (keeper CC, fuzzy decontam
+    // set, NB model fit / the three ANN taps / the three ledger
+    // takedowns) run concurrently on PipelineOps.stages (guide §2.6).
+    // The runner must only change WHEN work runs, never what any stage
+    // computes: the serialized arm and the shipped parallel default
+    // must agree row-for-row (p6 is idempotent across runs).
     for (name <- Seq("p2_training_corpus_v2", "p3_training_corpus_v3",
-        "p4_training_corpus_v4")) {
+        "p4_training_corpus_v4", "p6_takedown_refresh")) {
       val par = run(name).collect().toSeq
       sys.props("graft.pchain.par") = "0"
       val ser =
@@ -143,21 +144,55 @@ class TextPipelineSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("settleAll reports every failed stage: the first failure is " +
+  test("stages reports every failed stage: the first failure is " +
     "rethrown once all settle, the others ride on it as suppressed") {
-    import scala.concurrent.{ExecutionContext, Future, Promise}
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val slow = Promise[Unit]()
-    val stages = Seq(
-      Future(throw new IllegalStateException("stage A failed")),
-      Future(throw new IllegalArgumentException("stage B failed")),
-      slow.future.map(_ => 1))
-    Future { Thread.sleep(200); slow.success(()) }
-    val e = the[IllegalStateException] thrownBy PipelineOps.settleAll(stages)
-    slow.isCompleted shouldBe true // rethrown only after every stage settled
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = the[IllegalStateException] thrownBy PipelineOps.stages(spark, "q")(
+      "a" -> (() => throw new IllegalStateException("stage A failed")),
+      "b" -> (() => throw new IllegalArgumentException("stage B failed")),
+      "slow" -> (() => { Thread.sleep(200); slowDone.set(true) }))
+    slowDone.get shouldBe true // rethrown only after every stage settled
     e.getMessage shouldBe "stage A failed"
     e.getSuppressed.map(_.getMessage).toSeq shouldBe Seq("stage B failed")
-    noException should be thrownBy PipelineOps.settleAll(Seq(Future(1)))
+    PipelineOps.stages(spark, "q")("a" -> (() => 1), "b" -> (() => "x")) shouldBe
+      ((1, "x"))
+  }
+
+  test("stages runs every job under `<query>: <stage>` in both arms and " +
+    "leaves the caller's job description unchanged") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // (stage that started the job, the job's description)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("test.stage")).foreach(st =>
+          jobs.add(st -> e.properties.getProperty("spark.job.description")))
+    }
+    def stage(name: String): (String, () => Long) = name -> (() => {
+      sc.setLocalProperty("test.stage", name)
+      spark.range(10).count() + spark.range(5).count()
+    })
+    sc.setJobDescription("caller")
+    sc.addSparkListener(listener)
+    try for (arm <- Seq(None, Some("0"))) {
+      jobs.clear()
+      arm.foreach(sys.props("graft.pchain.par") = _)
+      try PipelineOps.stages(spark, "q")(stage("a"), stage("b"), stage("c"))
+        .shouldBe((15L, 15L, 15L))
+      finally sys.props.remove("graft.pchain.par")
+      sc.getLocalProperty("spark.job.description") shouldBe "caller"
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+      import scala.jdk.CollectionConverters._
+      val seen = jobs.asScala.toSeq
+      withClue(arm) {
+        seen.map(_._1).distinct.sorted shouldBe Seq("a", "b", "c")
+        seen.foreach { case (st, desc) => desc shouldBe s"q: $st" }
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
   }
 
   test("p2: composed modern pipeline keeps stage contracts — eval holdout " +
