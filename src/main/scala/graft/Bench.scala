@@ -210,7 +210,7 @@ object Bench {
     * same-code spreads of 1.5-2× across minutes) hits both arms equally
     * instead of poisoning a sequential compare. An arm is a `spark.*`
     * runtime conf or else a JVM system property read at query
-    * construction (e.g. graft.rank.fullstage). Prints min and median of
+    * construction (e.g. graft.pchain.par). Prints min and median of
     * 3 reps per arm.
     */
   private def ab(spark: SparkSession, sfDir: String, prop: String,

@@ -43,7 +43,7 @@ object GraftSession {
       // cluster the 100 TB profile sets it in the thousands; locally
       // it defaults to the steady-state count because the extra tasks'
       // fixed overhead measures +1-1.6 s per query on the sf0.1 bench
-      // corpus (and the RDD-side paths - zipWithIndex, CC rounds -
+      // corpus (and the RDD-side paths - GlobalOrder's prefix pass, CC rounds -
       // never coalesce). The sf1/sf10 scale runs set it via env.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS",

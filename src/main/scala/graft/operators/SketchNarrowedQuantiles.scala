@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * The bands frame is PINNED (`localCheckpoint`) before anything
   * consumes it. This is a correctness requirement, not a cache hint:
   * GK summary merge is shuffle-fetch-order dependent, and the final
-  * plan and [[GlobalOrder]]'s rank job (severed at `zipWithIndex`) are
+  * plan and [[GlobalOrder]]'s rank job (severed at its offsets job) are
   * separate executions — unpinned, each could see a DIFFERENT [lo, hi]
   * per band, so `below` would be counted against one boundary while
   * band membership is tagged against another, and the target row would

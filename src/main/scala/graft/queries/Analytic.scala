@@ -503,7 +503,7 @@ object Analytic extends QueryGroup {
   //  - small corpus: the lag window — one shuffle, no rank machinery;
   //    the per-source reducer is harmless when a source's rows fit one
   //    task, and the rank plan's ~0.6 s constant (range-partition
-  //    sampling + zipWithIndex barrier) dominates at driver SFs.
+  //    sampling + offsets-job barrier) dominates at driver SFs.
   //  - >= pairLargeMinDocs: grouped range rank (GlobalOrder, the t8/p1
   //    machinery) + a self-join on rank−1 — `LAG OVER (PARTITION BY
   //    source)` with ~10 sources would funnel each source's ENTIRE
@@ -511,7 +511,7 @@ object Analytic extends QueryGroup {
   //    range-partitions by (source, doc_id) and scales with the corpus.
   // switch threshold MEASURED (`pairs` scenario, BASELINE §skew): on
   // local[32] the lag window still wins at 100k docs (rank's ~0.6 s
-  // range-sample + zipWithIndex constant dominates), the rank arm wins
+  // range-sample + offsets-job constant dominates), the rank arm wins
   // 1.9× at 500k and 1.5× at 1M; crossover ≈ 250k. On a many-core
   // cluster the window arm caps at ~#sources tasks at ANY corpus size,
   // so the local measurement is an UPPER bound for the right threshold.

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.types.LongType
 
 import graft.sources.Tables
 
@@ -68,17 +68,9 @@ object CurationOps extends QueryGroup {
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val assign = SimilarityOps.assignCids(e, cents)
-    val stats = assign.groupBy("cid").agg(count(lit(1)).as("n_cid"))
-      .withColumn("sqrt_d",
-        sqrt(col("n_cid").cast("double")).cast(DecimalType(18, 9)))
-    val total = stats.agg(sum(col("sqrt_d")).as("total_d"))
-    val quotas = stats.crossJoin(broadcast(total))
-      .withColumn("weight",
-        col("sqrt_d").cast("double") / col("total_d").cast("double"))
-      .select(col("cid"), col("n_cid"), col("weight"),
-        greatest(lit(1L),
-          floor(lit(clusterMixT.toDouble) * col("weight"))
-            .cast(LongType)).as("quota"))
+    val quotas = TextOps.sqrtShares(assign, "cid", count(lit(1)), "n_cid")
+      .withColumn("quota", greatest(lit(1L),
+        floor(lit(clusterMixT.toDouble) * col("weight")).cast(LongType)))
     val ranked = graft.operators.GlobalOrder.withGroupedRank(
       assign, Seq("cid"), Seq(col("vec_id")), "rn")
     ranked.join(broadcast(quotas), "cid")

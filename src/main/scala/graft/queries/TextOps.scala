@@ -780,6 +780,25 @@ object TextOps extends QueryGroup {
   // the per-source stats table is ~|sources| rows and broadcasts.
   private[queries] val mixT = 100L // target sampled corpus size (driver SFs have 500-5000 docs)
 
+  /** The √-temperature share table shared by every temperature mixture
+    * (t16/p2, c1/c1l, t22/p3/p4/c2, t23, t24): one row per `key` with
+    * its `massCol` = `mass` (a row count or a token sum) and weight =
+    * √mass / Σ√mass. √mass is rounded to DECIMAL(18,9) so Σ√mass is
+    * exact and order-free; each caller folds its own target into a
+    * quota or budget left to right (`T * weight`), which keeps the
+    * doubles bit-identical to the oracle's.
+    */
+  private[queries] def sqrtShares(d: DataFrame, key: String,
+      mass: Column, massCol: String): DataFrame = {
+    val stats = d.groupBy(key).agg(mass.as(massCol))
+      .withColumn("sqrt_d",
+        sqrt(col(massCol).cast("double")).cast(DecimalType(18, 9)))
+    stats.crossJoin(broadcast(stats.agg(sum(col("sqrt_d")).as("total_d"))))
+      .select(col(key), col(massCol),
+        (col("sqrt_d").cast("double") / col("total_d").cast("double"))
+          .as("weight"))
+  }
+
   /** t16's body over an arbitrary (source, doc_id) frame — shared by
     * t16 (whole corpus) and the composed pipeline p2 (the kept set
     * after dedup/decontamination/classification). Output: the selected
@@ -787,18 +806,9 @@ object TextOps extends QueryGroup {
     */
   private[queries] def mixtureSelect(d0: DataFrame): DataFrame = {
       val d = d0.select(col("source"), col("doc_id"))
-      val stats = d.groupBy("source")
-        .agg(count(lit(1)).as("n_src"))
-        .withColumn("sqrt_d",
-          sqrt(col("n_src").cast("double")).cast(DecimalType(18, 9)))
-      val total = stats.agg(sum(col("sqrt_d")).as("total_d"))
-      val quotas = stats.crossJoin(broadcast(total))
-        .withColumn("weight",
-          col("sqrt_d").cast("double") / col("total_d").cast("double"))
-        .select(col("source"), col("n_src"), col("weight"),
-          greatest(lit(1L),
-            floor(lit(mixT.toDouble) * col("weight")).cast(LongType))
-            .as("quota"))
+      val quotas = sqrtShares(d, "source", count(lit(1)), "n_src")
+        .withColumn("quota", greatest(lit(1L),
+          floor(lit(mixT.toDouble) * col("weight")).cast(LongType)))
       val ranked = graft.operators.GlobalOrder.withGroupedRank(
         d, Seq("source"), Seq(col("doc_id")), "rn")
       ranked.join(broadcast(quotas), "source")
@@ -1369,14 +1379,13 @@ object TextOps extends QueryGroup {
   // its first document and the kept set is a per-source prefix.
   //
   // Scale shape: token counts are one narrow projection; the
-  // per-source running token count is GlobalOrder.withGlobalCumSum
+  // per-source running token count is GlobalOrder.withGroupedCumSum
   // over (source, doc_id) — the t9 distributed prefix sum, NOT a
-  // per-source window wall — converted to per-source sums by
-  // subtracting each source's exclusive prefix offset (a G-row
-  // broadcast, the withGroupedRank trick applied to sums). Σ√tok
-  // accumulates as DECIMAL(18,9) (the t16/t13 order-free exactness
-  // discipline), so weights, budgets, and the kept set are
-  // bit-identical cross-engine.
+  // per-source window wall — rebased per source by each source's
+  // exclusive prefix offset (a G-row broadcast, the same rebase as
+  // withGroupedRank). Σ√tok accumulates as DECIMAL(18,9) (the t16/t13
+  // order-free exactness discipline), so weights, budgets, and the
+  // kept set are bit-identical cross-engine.
   private[queries] val mixTokT = 1000L // token target (binds at driver SFs)
 
   /** t22's body over an arbitrary (`key`, doc_id, n_tok) frame —
@@ -1387,26 +1396,12 @@ object TextOps extends QueryGroup {
     */
   private[queries] def tokenBudgetSelect(d: DataFrame,
       key: String = "source"): DataFrame = {
-      val stats = d.groupBy(key)
-        .agg(sum(col("n_tok")).as("tok_src"))
-        .withColumn("sqrt_d",
-          sqrt(col("tok_src").cast("double")).cast(DecimalType(18, 9)))
-      val total = stats.agg(sum(col("sqrt_d")).as("total_d"))
-      val budgets = stats.crossJoin(broadcast(total))
-        .select(col(key),
-          greatest(lit(1L),
-            floor(lit(mixTokT.toDouble) *
-              (col("sqrt_d").cast("double") /
-                col("total_d").cast("double"))).cast(LongType))
-            .as("budget"))
-      val summed = graft.operators.GlobalOrder.withGlobalCumSum(
-        d, Seq(col(key), col("doc_id")), "n_tok", "cum")
-      // per-key exclusive prefix offset: cum − n_tok is the global
-      // sum BEFORE each row, minimized at the key's first row
-      val offs = summed.groupBy(key)
-        .agg(min(col("cum") - col("n_tok")).as("__off"))
-      summed.join(broadcast(offs), key)
-        .withColumn("cum_tok", col("cum") - col("__off"))
+      val budgets = sqrtShares(d, key, sum(col("n_tok")), "tok_src")
+        .select(col(key), greatest(lit(1L),
+          floor(lit(mixTokT.toDouble) * col("weight")).cast(LongType))
+          .as("budget"))
+      graft.operators.GlobalOrder.withGroupedCumSum(
+        d, Seq(key), Seq(col("doc_id")), "n_tok", "cum_tok")
         .join(broadcast(budgets), key)
         .filter(col("cum_tok") - col("n_tok") < col("budget"))
         .select(col(key), col("doc_id"), col("n_tok"),
@@ -1474,18 +1469,12 @@ object TextOps extends QueryGroup {
     (s, dir) => {
       val d = docs(s, dir).select(col("source"), col("doc_id"),
         size(words(col("text"))).cast(LongType).as("n_tok"))
-      val stats = d.groupBy("source")
-        .agg(sum(col("n_tok")).as("tok_src"))
-        .withColumn("sqrt_d",
-          sqrt(col("tok_src").cast("double")).cast(DecimalType(18, 9)))
-      val total = stats.agg(sum(col("sqrt_d")).as("total_d"),
-        sum(col("tok_src")).as("tot_all"))
-      val eb = stats.crossJoin(broadcast(total))
+      val shares = sqrtShares(d, "source", sum(col("n_tok")), "tok_src")
+      val eb = shares
+        .crossJoin(broadcast(shares.agg(sum(col("tok_src")).as("tot_all"))))
         .withColumn("budget",
           greatest(lit(1L), floor(lit(epochAlpha) *
-            col("tot_all").cast("double") *
-            (col("sqrt_d").cast("double") / col("total_d").cast("double")))
-            .cast(LongType)))
+            col("tot_all").cast("double") * col("weight")).cast(LongType)))
         .withColumn("e_full",
           least(lit(epochMaxRep), expr("budget div tok_src")))
         .withColumn("rem",
@@ -1497,12 +1486,8 @@ object TextOps extends QueryGroup {
         .select(col("source"), col("doc_id"),
           explode(sequence(lit(1L), col("e_full"))).as("epoch"),
           col("n_tok"))
-      val summed = graft.operators.GlobalOrder.withGlobalCumSum(
-        d, Seq(col("source"), col("doc_id")), "n_tok", "cum")
-      val offs = summed.groupBy("source")
-        .agg(min(col("cum") - col("n_tok")).as("__off"))
-      val partial = summed.join(broadcast(offs), "source")
-        .withColumn("cum_tok", col("cum") - col("__off"))
+      val partial = graft.operators.GlobalOrder.withGroupedCumSum(
+        d, Seq("source"), Seq(col("doc_id")), "n_tok", "cum_tok")
         .join(broadcast(eb), "source")
         .filter(col("cum_tok") - col("n_tok") < col("rem"))
         .select(col("source"), col("doc_id"),
@@ -1561,12 +1546,11 @@ object TextOps extends QueryGroup {
   // highest-quality prefix that fits the budget. Reuses t2's scoring
   // columns (cross-engine-exact ratio arithmetic, so the DESC ordering
   // agrees bit-for-bit; doc_id breaks ties) and the t22 machinery: the
-  // per-source running token count is the t9 distributed prefix sum
+  // per-source running token count is GlobalOrder.withGroupedCumSum
   // over the (source, score desc, doc_id) range order — a source's
   // first row in the global order is its best document, so the same
-  // min(cum − n_tok) exclusive-offset trick applies — and the G-row
-  // budget/offset tables broadcast. No per-source window (plan-gated
-  // with t22's).
+  // per-source rebase applies — and the G-row budget/offset tables
+  // broadcast. No per-source window (plan-gated with t22's).
   private val t24 = QueryDef(
     "t24_quality_budget_fill",
     (s, dir) => {
@@ -1574,25 +1558,12 @@ object TextOps extends QueryGroup {
         .select(col("source") +: col("doc_id") +: qualityColumns("text"): _*)
         .select(col("source"), col("doc_id"), col("quality_score"),
           col("n_words").cast(LongType).as("n_tok"))
-      val stats = d.groupBy("source")
-        .agg(sum(col("n_tok")).as("tok_src"))
-        .withColumn("sqrt_d",
-          sqrt(col("tok_src").cast("double")).cast(DecimalType(18, 9)))
-      val total = stats.agg(sum(col("sqrt_d")).as("total_d"))
-      val budgets = stats.crossJoin(broadcast(total))
-        .select(col("source"),
-          greatest(lit(1L),
-            floor(lit(mixTokT.toDouble) *
-              (col("sqrt_d").cast("double") /
-                col("total_d").cast("double"))).cast(LongType))
-            .as("budget"))
-      val summed = graft.operators.GlobalOrder.withGlobalCumSum(
-        d, Seq(col("source"), col("quality_score").desc, col("doc_id")),
-        "n_tok", "cum")
-      val offs = summed.groupBy("source")
-        .agg(min(col("cum") - col("n_tok")).as("__off"))
-      summed.join(broadcast(offs), "source")
-        .withColumn("cum_tok", col("cum") - col("__off"))
+      val budgets = sqrtShares(d, "source", sum(col("n_tok")), "tok_src")
+        .select(col("source"), greatest(lit(1L),
+          floor(lit(mixTokT.toDouble) * col("weight")).cast(LongType))
+          .as("budget"))
+      graft.operators.GlobalOrder.withGroupedCumSum(d, Seq("source"),
+        Seq(col("quality_score").desc, col("doc_id")), "n_tok", "cum_tok")
         .join(broadcast(budgets), "source")
         .filter(col("cum_tok") - col("n_tok") < col("budget"))
         .select(col("source"), col("doc_id"), col("quality_score"),
@@ -1795,8 +1766,8 @@ object TextOps extends QueryGroup {
     "t27_dsir_select",
     (s, dir) => {
       // pin the doc-sized (24 B/row) scores frame: withGlobalRank
-      // traverses its input three times (range sampling, zipWithIndex
-      // count job, final action) and would re-run the whole
+      // traverses its input three times (range sampling, the offsets
+      // job, final action) and would re-run the whole
       // explode+agg scoring pipeline each time (measured 12.4 → 4.5 s
       // at sf1)
       val scores = graft.operators.ScratchCache.scratch(dsirScores(s, dir))

@@ -68,6 +68,69 @@ class GlobalOrderSpec extends AnyFunSuite with Matchers {
       viaWindow.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
+  test("withGroupedCumSum equals the per-group window running sum") {
+    val df = spark.range(0, 3000).select(
+      concat(lit("src"), (col("id") % 7).cast("string")).as("g"), col("id"),
+      (col("id") * 2654435761L % 89 + 1).as("v"))
+    val viaOp = GlobalOrder
+      .withGroupedCumSum(df, Seq("g"), Seq(col("id")), "v", "cs")
+      .select("g", "id", "v", "cs")
+    val w = Window.partitionBy(col("g")).orderBy(col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val viaWindow = df.select(col("g"), col("id"), col("v"),
+      sum("v").over(w).as("cs"))
+    viaOp.collect().map(_.toSeq).toSet shouldBe
+      viaWindow.collect().map(_.toSeq).toSet
+  }
+
+  test("withGlobalCumSum fails fast: a non-LONG value column at build, a null value at run") {
+    val ints = spark.range(0, 100).select(col("id"), col("id").cast("int").as("v"))
+    val typed = intercept[IllegalArgumentException] {
+      GlobalOrder.withGlobalCumSum(ints, Seq(col("id")), "v", "cs")
+    }
+    typed.getMessage should include("value column 'v' must be LONG")
+    val nulls = spark.range(0, 100).select(col("id"),
+      when(col("id") =!= 37, col("id")).as("v"))
+    // the offsets job may already see the null while the frame is built,
+    // so the build and the action are one failing unit
+    val failed = intercept[Exception] {
+      GlobalOrder.withGlobalCumSum(nulls, Seq(col("id")), "v", "cs").collect()
+    }
+    Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage))
+      .exists(_.contains("null in value column 'v'")) shouldBe true
+  }
+
+  test("the offsets job reads the shuffle output, not the sorted stage") {
+    // the r22 stage floor: the offsets job's result stage must hold only
+    // the shuffle-reading RDD, so the within-partition sort runs once
+    val sc = spark.sparkContext
+    val tag = "globalorder.spec.offsets"
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) == "1"))
+          stages.add(e.stageInfos.maxBy(_.stageId).rddInfos.map(_.name))
+    }
+    val df = spark.range(0, 2000).select(
+      (col("id") * 2654435761L % 2000).as("key"), col("id"))
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    val ranked =
+      try GlobalOrder.withGlobalRank(df, Seq(col("key"), col("id")), "r")
+      finally {
+        sc.setLocalProperty(tag, null)
+        org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    val offsetsJob = stages.asScala.toSeq.lastOption
+    offsetsJob shouldBe Some(Seq("ShuffledRowRDD"))
+    ranked.agg(min("r"), max("r"), countDistinct("r")).collect()(0)
+      .toSeq shouldBe Seq(1L, 2000L, 2000L)
+  }
+
   test("q23 formula matches window ntile on the real table") {
     val dir = TestSpark.sfDir
     val viaQuery = graft.SparkEntry.queries("q23_percentiles")(spark, dir)
