@@ -15,7 +15,8 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   *
   *  - `slice <q…>`: [[benchOne]] per query, one `[slice]` line each;
   *  - `ab <prop> <a> <b> <q…>`: two arms interleaved rep by rep;
-  *  - `prof <q…>`: every Spark job of one timed run;
+  *  - `prof <q…>`: every Spark job of one timed run, and how many of
+  *    them started before the frame was built (`build-jobs`);
   *  - `plans <outDir> <tag> <q…>`: the formatted explain to files.
   *
   * Only the full mode writes `BENCH_FULL.json`.
@@ -283,12 +284,13 @@ object Bench {
         System.err.println(s"[prof] $q warmup FAILED: $e") }
       jobs.synchronized { jobs.clear(); stageToJob.clear() }
       sc.addSparkListener(listener)
-      var t0, tBuild = 0L
+      var t0, tBuild, builtAtMs = 0L
       val sec =
         try timed(spark) {
           t0 = System.nanoTime()
           val df = fn(spark, sfDir)
           tBuild = System.nanoTime()
+          builtAtMs = System.currentTimeMillis() // the job-event clock
           noop(df)
         } finally {
           // deliver every posted event before detaching, else a job can
@@ -306,7 +308,8 @@ object Bench {
       jobs.synchronized {
         println(f"[prof] ===== $q total $sec%.2f s (build $build%.2f, " +
           f"action ${sec - build}%.2f, " +
-          f"jobs-covered ${covered(jobs.values)}%.2f), ${jobs.size} jobs =====")
+          f"jobs-covered ${covered(jobs.values)}%.2f), ${jobs.size} jobs, " +
+          s"build-jobs=${jobs.values.count(_.t0 <= builtAtMs)} =====")
         jobs.foreach { case (id, j) =>
           println(f"[prof] job $id%3d ${(j.t1 - j.t0) / 1e3}%7.2f s " +
             f"stages=${j.stages}%2d tasks=${j.tasks}%4d " +

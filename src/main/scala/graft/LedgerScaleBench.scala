@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.DedupOps
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** Dev benchmark: evidence that d9's ingest cost is O(batch), not
   * O(corpus). The SAME fixed batch (sf0.1's `src0` slice) is deduped
@@ -31,7 +31,7 @@ object LedgerScaleBench {
   private def staged(df: DataFrame): DataFrame = {
     val p = java.nio.file.Files.createTempDirectory("graft_ledger_in")
     df.write.parquet(s"$p/in")
-    df.sparkSession.read.parquet(s"$p/in")
+    Parquet.read(df.sparkSession, s"$p/in")
   }
 
   private def rm(f: java.io.File): Unit = {
@@ -82,7 +82,7 @@ object LedgerScaleBench {
       .filter(col("source") === "src0")
 
     def timeDedup(path: String, label: String): Unit = time(spark, label)(
-      Bench.noop(DedupOps.incrementalDedup(batch, spark.read.parquet(path))))
+      Bench.noop(DedupOps.incrementalDedup(batch, Parquet.read(spark, path))))
 
     // bootstrap both ledgers untimed; the timed region is the INGEST
     // dedup plan a daily run executes (ledger anti-join + batch agg).
@@ -443,7 +443,7 @@ object LedgerScaleBench {
       .filter(col("source") === "src0")
     def timeDedup(label: String): Unit = {
       val sec = Bench.timed(spark)(Bench.noop(
-        DedupOps.incrementalDedup(batch, spark.read.parquet(path))))
+        DedupOps.incrementalDedup(batch, Parquet.read(spark, path))))
       println(f"[ledger] $label $sec%.2f s (${files()} files)")
     }
     timeDedup("compact_warmup")

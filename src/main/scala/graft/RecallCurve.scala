@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.queries.SimilarityOps
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** Dev benchmark: the kNN-graph RECALL-vs-COST curve — what each
   * NN-descent round (s11's `nnDescentRound`) buys over the s9 IVF base
@@ -126,7 +126,7 @@ object RecallCurve {
       .select(col("vec_id"), col("embedding"))
     val path = SimilarityOps.s8LedgerPath(sfDir) + "_filteredcurve"
     SimilarityOps.refreshIvfLedger(spark, path, e)
-    val cells = spark.read.parquet(s"$path/centroids").count().toInt
+    val cells = Parquet.read(spark, s"$path/centroids").count().toInt
     val q = e.filter(col("vec_id") < 8).localCheckpoint()
     println(s"[curve] filtered-ANN sf=$sfDir cells=$cells " +
       s"n=${e.count()}")

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Synthesizes a larger scale factor from an existing one by disjoint
   * replication, so the bench can be run at 10× (sf1) on the same host:
   * `runMain graft.ScaleUp <inDir> <outDir> <factor>`.
@@ -78,7 +80,7 @@ object ScaleUp {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def src(name: String): DataFrame =
-      spark.read.parquet(s"$inDir/$name.parquet")
+      Parquet.read(spark, s"$inDir/$name.parquet")
 
     /** Output file count for a table: ~64 MB target files (the layout a
       * real table at this size would have), floored at the session's
@@ -148,8 +150,8 @@ object ScaleUp {
     def check(spark: SparkSession, inDir: String, outDir: String,
         factor: Int): Unit =
       graft.sources.Tables.names.foreach { n =>
-        val in = spark.read.parquet(s"$inDir/$n.parquet").count()
-        val out = spark.read.parquet(s"$outDir/$n.parquet").count()
+        val in = Parquet.read(spark, s"$inDir/$n.parquet").count()
+        val out = Parquet.read(spark, s"$outDir/$n.parquet").count()
         val want = if (n == "region" || n == "nation") in else in * factor
         require(out == want, s"$n: expected $want rows, got $out")
         println(s"[scaleup] $n: $in -> $out rows")

@@ -156,9 +156,11 @@ object Analytic extends QueryGroup {
   // --------------------------------------------------------------- Q23
   // Exact quartiles with exact NTILE semantics, but NOT via an
   // unpartitioned window (single-partition wall at scale): global rank
-  // from GlobalOrder (range partition + offset zip), then the NTILE
-  // bucket formula — the first N%k buckets get ⌈N/k⌉ rows, the rest
-  // ⌊N/k⌋. The count() feeding N is a parquet-metadata read.
+  // from GlobalOrder (range partition + one offsets job), then the
+  // NTILE bucket formula — the first N%k buckets get ⌈N/k⌉ rows, the
+  // rest ⌊N/k⌋. The count() feeding N is not a metadata read: it runs
+  // as 2 jobs (scan stage, then final aggregate) while the frame is
+  // being built.
   private val q23 = QueryDef(
     "q23_percentiles",
     (s, dir) => {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.functions.HashFunctions._
 import graft.functions.VectorFunctions
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import graft.state.LedgerState
 
 /** Deduplication operators over `documents`/`embeddings` (SURVEY §2.3
@@ -943,7 +943,7 @@ object DedupOps extends QueryGroup {
   private def novelHashes(s: SparkSession, path: String,
       prior: DataFrame): DataFrame =
     prior
-      .join(s.read.parquet(path).select("content_hash"),
+      .join(Parquet.read(s, path).select("content_hash"),
         Seq("content_hash"), "left_anti")
       .localCheckpoint()
 
@@ -973,7 +973,7 @@ object DedupOps extends QueryGroup {
       refreshLedger(s, path, prior)
       // today's batch: the returned plan scans ledger + batch only
       incrementalDedup(all.filter(col("source") === "src0"),
-        s.read.parquet(path))
+        Parquet.read(s, path))
         .orderBy("content_hash")
     },
     Some("""WITH ledger AS (
@@ -1274,7 +1274,7 @@ object DedupOps extends QueryGroup {
         minhashIndex(prior).write.mode("overwrite").parquet(path)
       else {
         val tomb = readBandTombstones(s, path)
-        val ledgerIds = s.read.parquet(path).select("doc_id")
+        val ledgerIds = Parquet.read(s, path).select("doc_id")
         val liveIds = tomb.fold(ledgerIds)(t =>
           ledgerIds.join(broadcast(t), Seq("doc_id"), "left_anti"))
         val novel = prior.join(liveIds, Seq("doc_id"), "left_anti")
@@ -1356,8 +1356,8 @@ object DedupOps extends QueryGroup {
       // old dir and dies with the backup — takedowns stay O(takedown)
       // at request time and the ledger pays one rewrite per compaction
       // cycle it was already paying
-      val df = readBandTombstones(s, path).fold(s.read.parquet(path))(t =>
-        s.read.parquet(path).join(broadcast(t), Seq("doc_id"), "left_anti"))
+      val df = readBandTombstones(s, path).fold(Parquet.read(s, path))(t =>
+        Parquet.read(s, path).join(broadcast(t), Seq("doc_id"), "left_anti"))
       if (df.columns.contains("pfx"))
         // same write shape as refreshLedger's bootstrap: repartition ON
         // pfx so each of the 16 partition dirs gets exactly one task's
@@ -1381,7 +1381,7 @@ object DedupOps extends QueryGroup {
       s.catalog.refreshByPath(path) // raw renames: invalidate listings
       if (hadBloom)
         commitBloom(fs, path,
-          buildBloom(s.read.parquet(path).select("content_hash")))
+          buildBloom(Parquet.read(s, path).select("content_hash")))
     }
   }
 
@@ -1457,7 +1457,7 @@ object DedupOps extends QueryGroup {
       // a count job per candidate prefix — untouched slices keep
       // their files byte-identical and the driver loop below pays one
       // write job per AFFECTED prefix only
-      val affected = s.read.parquet(path)
+      val affected = Parquet.read(s, path)
         .filter(col("pfx").isin(pfxs: _*))
         .join(broadcast(dead), Seq("content_hash"))
         .select(col("pfx").cast("string"))
@@ -1473,7 +1473,7 @@ object DedupOps extends QueryGroup {
         // scan either way.
         val stagingAll = takedownStagingDir(p)
         fs.delete(stagingAll, true)
-        s.read.parquet(path)
+        Parquet.read(s, path)
           .filter(col("pfx").isin(affected: _*))
           .join(broadcast(dead), Seq("content_hash"), "left_anti")
           .repartition(col("pfx"))
@@ -1543,7 +1543,7 @@ object DedupOps extends QueryGroup {
       if (readable(bandTombDir(p))) Some(bandTombDir(p))
       else if (readable(bandTombBackup(p))) Some(bandTombBackup(p))
       else None
-    src.map(d => s.read.parquet(d.toString).select("doc_id").distinct())
+    src.map(d => Parquet.read(s, d.toString).select("doc_id").distinct())
   }
 
   /** THE read seam for the d13 band ledger — every consumer (the d13
@@ -1555,7 +1555,7 @@ object DedupOps extends QueryGroup {
     */
   private[graft] def readBandLedger(s: SparkSession,
       path: String): DataFrame = {
-    val ledger = s.read.parquet(path)
+    val ledger = Parquet.read(s, path)
     readBandTombstones(s, path).fold(ledger)(t =>
       ledger.join(broadcast(t), Seq("doc_id"), "left_anti"))
   }
@@ -1584,7 +1584,7 @@ object DedupOps extends QueryGroup {
       // the hash ledger's affected-prefix probe) and not already
       // tombstoned: preserves tombstones ⊆ ledger ids and makes the
       // removal idempotent at zero bytes
-      val present = s.read.parquet(path).select("doc_id")
+      val present = Parquet.read(s, path).select("doc_id")
         .join(broadcast(docIds.select("doc_id").distinct()),
           Seq("doc_id"), "left_semi")
         .distinct()
@@ -1956,7 +1956,7 @@ object DedupOps extends QueryGroup {
         // sketch from the just-written parquet (a column read — cheaper
         // than re-deriving the corpus-sized prior pipeline)
         commitBloom(fs, path,
-          buildBloom(s.read.parquet(path).select("content_hash")))
+          buildBloom(Parquet.read(s, path).select("content_hash")))
       } else {
         val novel = novelHashes(s, path, prior)
         if (!novel.isEmpty) {
@@ -1969,7 +1969,7 @@ object DedupOps extends QueryGroup {
               }
             case None => None // ledger without filter: rebuild, once
           }).getOrElse(buildBloom(
-            s.read.parquet(path).select("content_hash")
+            Parquet.read(s, path).select("content_hash")
               .unionByName(novel.select("content_hash"))))
           commitBloom(fs, path, merged) // flip BEFORE the append
           withPfx(novel).write.partitionBy("pfx").mode("append").parquet(path)
@@ -1977,7 +1977,7 @@ object DedupOps extends QueryGroup {
           // nothing novel but the filter is missing (manual deletion):
           // self-heal from the standing ledger
           commitBloom(fs, path,
-            buildBloom(s.read.parquet(path).select("content_hash")))
+            buildBloom(Parquet.read(s, path).select("content_hash")))
       }
     }
   }
@@ -2022,7 +2022,7 @@ object DedupOps extends QueryGroup {
       val path = d16LedgerPath(dir)
       refreshLedgerBloomed(s, path, prior)
       bloomGuardedDedup(all.filter(col("source") === "src1"),
-        s.read.parquet(path), readBloom(s, path))
+        Parquet.read(s, path), readBloom(s, path))
         .orderBy("content_hash")
     },
     Some("""WITH ledger AS (
@@ -2066,7 +2066,7 @@ object DedupOps extends QueryGroup {
         .select(md5(col("text")).as("content_hash")).distinct()
       removeFromHashLedger(s, path, reclaimed)
       incrementalDedup(all.filter(col("source") === "src2"),
-        s.read.parquet(path))
+        Parquet.read(s, path))
         .orderBy("content_hash")
     },
     Some("""WITH ledger AS (

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** The composed training-data pipeline (P1): what a user actually runs
   * before a training job — every stage is one of the already-verified
@@ -847,7 +847,7 @@ object PipelineOps extends QueryGroup {
       // content re-admits as novel (the d17 contract)
       val batch = d.filter(col("source") === "src2")
       val novel = DedupOps.incrementalDedup(batch,
-        s.read.parquet(hashPath)).localCheckpoint()
+        Parquet.read(s, hashPath)).localCheckpoint()
       // stage 3: NEAR-DUP GATE — each novel hash's keeper doc probed
       // against the LIVE band ledger (tombstones anti-joined by the
       // readBandLedger seam); a near-dup of standing content is not

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.functions.TopKAggregate
 import graft.functions.VectorFunctions._
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import graft.state.LedgerState
 
 /** Similarity-search operators over `embeddings` (SURVEY §2.3 S1–S3).
@@ -665,7 +665,7 @@ object SimilarityOps extends QueryGroup {
     val segs = s8CommittedSegs(s, path)
     require(segs.nonEmpty, s"no committed s8 ledger segments at $path")
     segs.map { k =>
-      val seg = s.read.parquet(s"$path/assign/seg-$k")
+      val seg = Parquet.read(s, s"$path/assign/seg-$k")
       val pruned = cids.fold(seg)(c => seg.filter(col("cid").isin(c: _*)))
       // partition-value inference may type cid INT; pin the schema
       // AFTER the prune so the isin stays a pure partition predicate
@@ -678,7 +678,7 @@ object SimilarityOps extends QueryGroup {
   private[graft] def s8Ids(s: SparkSession, path: String): DataFrame = {
     val segs = s8CommittedSegs(s, path)
     require(segs.nonEmpty, s"no committed s8 ledger segments at $path")
-    segs.map(k => s.read.parquet(s"$path/ids/seg-$k"))
+    segs.map(k => Parquet.read(s, s"$path/ids/seg-$k"))
       .reduce(_ unionByName _)
   }
 
@@ -697,7 +697,7 @@ object SimilarityOps extends QueryGroup {
     // sidecar ids come from the seg just written (a column-pruned
     // read of 8-byte ids), not from `rows` — consuming `rows` twice
     // would re-execute a corpus-sized assignment at bootstrap
-    s.read.parquet(s"$path/assign/seg-$k").select("vec_id")
+    Parquet.read(s, s"$path/assign/seg-$k").select("vec_id")
       .write.mode("overwrite").parquet(s"$path/ids/seg-$k")
     fs.mkdirs(hPath(s"$path/commits"))
     fs.create(hPath(s"$path/commits/seg-$k"), true).close()
@@ -721,7 +721,7 @@ object SimilarityOps extends QueryGroup {
       trainCentroids(prior, cells, n)
         .write.mode("overwrite").parquet(centDir)
       s8WriteSeg(s, path, 0,
-        assignNearest(prior, s.read.parquet(centDir))
+        assignNearest(prior, Parquet.read(s, centDir))
           .select("vec_id", "cid", "embedding"))
     } else {
       // novel ids only, decided against the COMMITTED slim sidecar;
@@ -733,7 +733,7 @@ object SimilarityOps extends QueryGroup {
       if (!novel.isEmpty) {
         val k = s8CommittedSegs(s, path).max + 1
         s8WriteSeg(s, path, k,
-          assignNearest(novel, s.read.parquet(centDir))
+          assignNearest(novel, Parquet.read(s, centDir))
             .select("vec_id", "cid", "embedding"))
       }
     }
@@ -763,7 +763,7 @@ object SimilarityOps extends QueryGroup {
         // them would resurrect every takedown (see S13).
         val all = s8Assign(s, path, None).select("vec_id", "cid", "embedding")
           .join(broadcast(s8Tombs(s, path)), Seq("vec_id"), "left_anti")
-        s.read.parquet(s"$path/centroids")
+        Parquet.read(s, s"$path/centroids")
           .write.mode("overwrite").parquet(s"$staging/centroids")
         s8WriteSeg(s, staging, 0, all)
         promoteStaging(s, path)
@@ -825,7 +825,7 @@ object SimilarityOps extends QueryGroup {
       val cells = LshTuning.ivfCellsFor(n, ivfCellsFloor)
       trainCentroids(corpus, cells, n)
         .write.mode("overwrite").parquet(s"$staging/centroids")
-      val cents = s.read.parquet(s"$staging/centroids")
+      val cents = Parquet.read(s, s"$staging/centroids")
       s8WriteSeg(s, staging, 0,
         assignNearest(corpus, cents).select("vec_id", "cid", "embedding"))
       promoteStaging(s, path)
@@ -867,7 +867,7 @@ object SimilarityOps extends QueryGroup {
     val segs = tombCommittedSegs(s, path)
     if (segs.isEmpty)
       s.range(0).select(col("id").as("vec_id"))
-    else segs.map(k => s.read.parquet(s"$path/tombs/seg-$k"))
+    else segs.map(k => Parquet.read(s, s"$path/tombs/seg-$k"))
       .reduce(_.unionByName(_)).select("vec_id").distinct()
   }
 
@@ -930,7 +930,7 @@ object SimilarityOps extends QueryGroup {
     */
   private[graft] def s8Probe(s: SparkSession, path: String,
       q: DataFrame, nprobeBoost: Int = 0): DataFrame = {
-    val cents = s.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(s, s"$path/centroids")
     val nprobe = LshTuning.nprobeFor(cents.count().toInt, nprobeFloor) +
       nprobeBoost
     val probeRows = probeNearest(q, cents, nprobe)
@@ -1244,7 +1244,7 @@ object SimilarityOps extends QueryGroup {
     case StoredQuantizer(path) =>
       if (s8CommittedSegs(s, path).isEmpty)
         withLeaseRetry() { refreshIvfLedger(s, path, emb(s, dir)) }
-      s.read.parquet(s"$path/centroids")
+      Parquet.read(s, s"$path/centroids")
   }
 
   /** The kNN-graph oracle's CTE block, shared by s9 (reported
@@ -1360,7 +1360,7 @@ object SimilarityOps extends QueryGroup {
       segs: Seq[Int]): DataFrame = {
     require(segs.nonEmpty, s"no committed s10 ledger segments at $path")
     segs.map { k =>
-      val seg = s.read.parquet(s"$path/$sub/seg-$k")
+      val seg = Parquet.read(s, s"$path/$sub/seg-$k")
       val pruned = cids.fold(seg)(c => seg.filter(col("cid").isin(c: _*)))
       pruned.select(keep: _*)
     }.reduce(_ unionByName _)
@@ -1446,10 +1446,10 @@ object SimilarityOps extends QueryGroup {
       probeRows.repartition(col("cid"))
         .write.partitionBy("cid").mode("overwrite")
         .parquet(s"$path/probes/seg-$k")
-      s.read.parquet(s"$path/assign/seg-$k").select("vec_id")
+      Parquet.read(s, s"$path/assign/seg-$k").select("vec_id")
         .write.mode("overwrite").parquet(s"$path/ids/seg-$k")
-      val a = s.read.parquet(s"$path/assign/seg-$k").select(s10AssignCols: _*)
-      val p = s.read.parquet(s"$path/probes/seg-$k")
+      val a = Parquet.read(s, s"$path/assign/seg-$k").select(s10AssignCols: _*)
+      val p = Parquet.read(s, s"$path/probes/seg-$k")
         .select(s10ProbeColsOf(slim): _*)
       edgesOf(a, p).write.mode("overwrite").parquet(s"$path/edges/seg-$k")
       fs.mkdirs(hPath(s"$path/commits"))
@@ -1462,7 +1462,7 @@ object SimilarityOps extends QueryGroup {
       val cells = LshTuning.ivfCellsFor(n, ivfCellsFloor)
       trainCentroids(prior, cells, n)
         .write.mode("overwrite").parquet(centDir)
-      val cents = s.read.parquet(centDir)
+      val cents = Parquet.read(s, centDir)
       // nprobe keys off the STORED centroid count, not the requested
       // cell count: trainCentroids' Lloyd step drops empty cells, and
       // a divergence across an nprobe rounding boundary would give
@@ -1488,7 +1488,7 @@ object SimilarityOps extends QueryGroup {
       if (!novel.isEmpty) {
         val oldSegs = s8CommittedSegs(s, path)
         val k = oldSegs.max + 1
-        val cents = s.read.parquet(centDir)
+        val cents = Parquet.read(s, centDir)
         val nprobe = LshTuning.nprobeFor(cents.count().toInt, nprobeFloor)
         writeSeg(k,
           assignNearest(novel, cents).select("vec_id", "cid", "embedding"),
@@ -1553,7 +1553,7 @@ object SimilarityOps extends QueryGroup {
       tap: Option[String]): DataFrame = {
     val segs = s8CommittedSegs(s, path)
     require(segs.nonEmpty, s"no committed s10 ledger segments at $path")
-    val all = segs.map(k => s.read.parquet(s"$path/edges/seg-$k"))
+    val all = segs.map(k => Parquet.read(s, s"$path/edges/seg-$k"))
       .reduce(_ unionByName _)
     tap.foreach(t => graft.sources.VerifyTap(
       all.select(col("qid"), col("vec_id")), t, coalesce = false))
@@ -1587,7 +1587,7 @@ object SimilarityOps extends QueryGroup {
         val tombs = s8Tombs(s, path).localCheckpoint()
         val staging = LedgerState.stagingPath(path).toString
         fs.delete(hPath(staging), true)
-        s.read.parquet(s"$path/centroids")
+        Parquet.read(s, s"$path/centroids")
           .write.mode("overwrite").parquet(s"$staging/centroids")
         // consumed once each, wholly before the swap. Committed
         // tombstones are APPLIED physically on every dir (the
@@ -1608,7 +1608,7 @@ object SimilarityOps extends QueryGroup {
         // ledger whose marker vanished would read probes as fat
         if (s10IsSlim(s, path))
           fs.create(hPath(s"$staging/__slim_probes"), true).close()
-        s.read.parquet(s"$staging/assign/seg-0").select("vec_id")
+        Parquet.read(s, s"$staging/assign/seg-0").select("vec_id")
           .write.mode("overwrite").parquet(s"$staging/ids/seg-0")
         // edge fold = the merge read itself (exact, idempotent; the
         // read already excludes tombstones on BOTH sides) — PLUS the
@@ -1661,7 +1661,7 @@ object SimilarityOps extends QueryGroup {
       def fresh(df: DataFrame): DataFrame =
         org.apache.spark.sql.GraftBridge.rebase(df)
       val affected = segs
-        .map(k => s.read.parquet(s"$path/edges/seg-$k"))
+        .map(k => Parquet.read(s, s"$path/edges/seg-$k"))
         .reduce(_ unionByName _)
         .join(broadcast(tombs), Seq("vec_id")) // lost-neighbor edges
         .select("qid").distinct()
@@ -1682,7 +1682,7 @@ object SimilarityOps extends QueryGroup {
         .join(purged.select("qid", "vec_id"), Seq("qid", "vec_id"),
           "left_anti")
         .join(broadcast(tombs), Seq("vec_id"), "left_anti")
-      val vecSrc = s.read.parquet(s"$staging/assign/seg-0")
+      val vecSrc = Parquet.read(s, s"$staging/assign/seg-0")
         .select(col("vec_id"), col("embedding"))
       val novel = fresh(novelPairs
         .join(vecSrc.select(col("vec_id").as("qid"),

@@ -9,6 +9,8 @@ import org.apache.spark.sql.types.StructType
   *  - Schemas are passed explicitly for text formats (CSV/JSON) —
   *    inference is a full extra pass over 100 TB and is never done here
   *    unless explicitly requested.
+  *  - Parquet schemas come from one footer read on the driver
+  *    ([[Parquet.read]]), never from Spark's per-read inference job.
   *  - Parquet/ORC readers keep Catalyst pushdown/pruning intact (assert
   *    via PlanSpec); writers support partitioning so downstream scans
   *    prune files.
@@ -18,7 +20,7 @@ object DataIO {
   // ------------------------------------------------------------- reads
 
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
 
   def orc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)

@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Registry/loaders for the graft star schema (see TESTDATA.md).
   *
   * At 100 TB the big tables (`lineitem`, `events`, `documents`) arrive as
-  * many-file partitioned parquet; `spark.read.parquet` on a directory
-  * scales transparently. Dimension tables stay broadcast-size.
+  * many-file partitioned parquet; a directory read through [[Parquet]]
+  * scales transparently, and its schema comes from one footer on the
+  * driver, so loading a table runs no job. Dimension tables stay
+  * broadcast-size.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -25,11 +27,11 @@ object Tables {
       // per-PAIR element null checks they'd otherwise need cost ~1.6×
       // on the n² similarity joins
       import org.apache.spark.sql.functions.col
-      spark.read.parquet(s"$dir/$name.parquet")
+      Parquet.read(spark, s"$dir/$name.parquet")
         .withColumn("embedding", org.apache.spark.sql.GraftBridge.column(
           graft.functions.KnownNonNullElements(
             org.apache.spark.sql.GraftBridge.expression(col("embedding")))))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Load the events table, tolerant of how its `ts` column was encoded.
     *
@@ -45,17 +47,16 @@ object Tables {
   def loadEvents(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
+    // the read resolves the schema, so a footer Spark cannot type fails
+    // here, not at the first action
     val raw =
-      try {
-        val df = spark.read.parquet(path)
-        df.schema // forces footer-based schema resolution
-        df
-      } catch {
+      try Parquet.read(spark, path)
+      catch {
         // TIMESTAMP(NANOS) footer: only readable as raw int64 nanos
         case e: Exception if e.getMessage != null &&
             e.getMessage.contains("NANOS") =>
           spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(path)
+          Parquet.read(spark, path)
       }
     val withMs = raw.schema("ts").dataType match {
       // integer `div`, NOT `/`: epoch-nanos overflow double's 53-bit

@@ -29,6 +29,6 @@ object VerifyTap {
     val path = s"$root/$name"
     (if (coalesce) df.coalesce(1) else df)
       .write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    Parquet.read(df.sparkSession, path)
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.Parquet
+
 /** Structured Streaming operators (SURVEY §2.5 ST1–ST6).
   *
   * All state here is keyed and watermark-bounded, which is what makes
@@ -388,8 +390,7 @@ object StreamOps {
     val pinned = {
       val files = ledger.inputFiles
       if (files.isEmpty || !bareScan(ledger.queryExecution.analyzed)) ledger
-      else ledger.sparkSession.read
-        .parquet(files.toIndexedSeq: _*)
+      else Parquet.read(ledger.sparkSession, files.toIndexedSeq: _*)
         .select(ledger.columns.map(col).toIndexedSeq: _*)
     }
     val novel = bloom match {
@@ -526,7 +527,7 @@ object StreamOps {
         // fresh listing per trigger (the takedown-pickup contract),
         // pruned to the batch's hash-prefix slices before the read
         val ledger = graft.queries.DedupOps.prunedByPrefix(
-          batch.sparkSession.read.parquet(ledgerPath), batch)
+          Parquet.read(batch.sparkSession, ledgerPath), batch)
           .select("content_hash")
         sink(batch.join(broadcast(ledger),
           Seq("content_hash"), "left_anti"), id)
