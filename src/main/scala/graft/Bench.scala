@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The one timing harness. With no args it is the full benchmark:
   * every registered query at SPARK_GRAFT_SF_DIR, full materialization
@@ -250,13 +251,24 @@ object Bench {
     }
     val jobs = mutable.LinkedHashMap[Int, Job]()
     val stageToJob = mutable.HashMap[Int, Int]()
+    // SQL execution id → its description (the call site of the action
+    // that started it): AQE runs each query stage as a job with no
+    // description of its own, under the execution's id
+    val sqlDesc = mutable.HashMap[String, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          jobs.synchronized { sqlDesc(x.executionId.toString) = x.description }
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val described = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-        val desc = described
-          .getOrElse(e.stageInfos.map(_.name).lastOption.getOrElse(""))
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val described = prop("spark.job.description")
         jobs.synchronized {
+          val desc = described
+            .orElse(prop("spark.sql.execution.id").flatMap(sqlDesc.get))
+            .getOrElse(e.stageInfos.map(_.name).lastOption.getOrElse(""))
           jobs(e.jobId) = new Job(desc, described.isDefined, e.time)
           e.stageIds.foreach(stageToJob(_) = e.jobId)
         }
@@ -282,7 +294,7 @@ object Bench {
       val fn = SparkEntry.queries(q)
       try noop(fn(spark, sfDir)) catch { case e: Throwable =>
         System.err.println(s"[prof] $q warmup FAILED: $e") }
-      jobs.synchronized { jobs.clear(); stageToJob.clear() }
+      jobs.synchronized { jobs.clear(); stageToJob.clear(); sqlDesc.clear() }
       sc.addSparkListener(listener)
       var t0, tBuild, builtAtMs = 0L
       val sec =

@@ -127,10 +127,10 @@ object LedgerScaleBench {
     * grows 10×?
     *
     *  - QUERY: a fixed NQ-query batch probed against the persisted IVF
-    *    index of a 1× (sf0.1) and a 10× (ScaleUp sf1) corpus. The _p2
-    *    layout reads only the probed cid partitions, so the bytes per
-    *    query grow at nprobe/cells (~√n) rate, not corpus rate — the
-    *    number at stake is how flat that holds.
+    *    index of a 1× (sf0.1) and a 10× (ScaleUp sf1) corpus. Only
+    *    the probed cid partitions of each segment are read, so the
+    *    bytes per query grow at nprobe/cells (~√n) rate, not corpus
+    *    rate — the number at stake is how flat that holds.
     *  - MAINTENANCE: the same fixed batch's novel-id anti-join against
     *    the slim id-only sidecar. Read-only by construction: ScaleUp
     *    replica 0 keeps original vec_ids, so the small batch is fully
@@ -298,9 +298,10 @@ object LedgerScaleBench {
   }
 
   /** The r20 band-ledger takedown's O(takedown) claim, measured at
-    * scale: tombstone-append a fixed takedown into the d13 band ledger
-    * of a 1× and a 10× corpus and time it (plus the probe read before
-    * and after, proving the anti-join seam costs nothing visible).
+    * scale: commit a fixed takedown to the d13 band ledger's tombstone
+    * log at a 1× and a 10× corpus and time it (plus the probe read
+    * before and after, proving the anti-join seam costs nothing
+    * visible).
     * The r19 staged-swap takedown paid a whole-ledger rewrite here —
     * the number this arm replaces. Run after ScaleUp: `sbt "runMain
     * graft.LedgerScaleBench bandTakedown"`; recorded in BASELINE §sf1.

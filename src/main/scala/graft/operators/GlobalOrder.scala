@@ -89,7 +89,7 @@ object GlobalOrder {
     * exactly as RDDScanExec's own projection expects.
     */
   private def prefix(sorted: DataFrame, outCol: String,
-      weight: Weight): DataFrame = {
+      weight: Weight): (DataFrame, Long) = {
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
     val rdd = sorted.queryExecution.toRdd
     val sc = rdd.sparkContext
@@ -109,8 +109,9 @@ object GlobalOrder {
         joined(r, extra): InternalRow
       }
     }
-    org.apache.spark.sql.GraftBridge.internalFrame(sorted.sparkSession,
-      summed, sorted.schema.add(outCol, LongType, nullable = false))
+    (org.apache.spark.sql.GraftBridge.internalFrame(sorted.sparkSession,
+      summed, sorted.schema.add(outCol, LongType, nullable = false)),
+      totals.sum)
   }
 
   /** Per-group form of a global prefix column `x` (over a frame whose
@@ -133,6 +134,14 @@ object GlobalOrder {
   /** Append 1-based global rank by `sortCols` as column `outCol`. */
   def withGlobalRank(df: DataFrame, sortCols: Seq[Column],
       outCol: String = "rank"): DataFrame =
+    withGlobalRankAndCount(df, sortCols, outCol)._1
+
+  /** [[withGlobalRank]] plus the row count, which its offsets job has
+    * already summed on the driver — a caller that needs N runs no count
+    * job of its own.
+    */
+  def withGlobalRankAndCount(df: DataFrame, sortCols: Seq[Column],
+      outCol: String = "rank"): (DataFrame, Long) =
     prefix(rangeSorted(df, sortCols), outCol, _ => 1L)
 
   /** Append a per-GROUP 1-based rank by `sortCols` within each distinct
@@ -194,7 +203,7 @@ object GlobalOrder {
       require(!r.isNullAt(vIdx),
         s"withGlobalCumSum: null in value column '$valueCol'")
       r.getLong(vIdx)
-    })
+    })._1
   }
 
   /** Per-GROUP form of [[withGlobalCumSum]]: the inclusive running sum

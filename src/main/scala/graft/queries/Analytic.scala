@@ -158,19 +158,17 @@ object Analytic extends QueryGroup {
   // unpartitioned window (single-partition wall at scale): global rank
   // from GlobalOrder (range partition + one offsets job), then the
   // NTILE bucket formula — the first N%k buckets get ⌈N/k⌉ rows, the
-  // rest ⌊N/k⌋. The count() feeding N is not a metadata read: it runs
-  // as 2 jobs (scan stage, then final aggregate) while the frame is
-  // being built.
+  // rest ⌊N/k⌋. N is the row count the rank's offsets job already sums
+  // on the driver, so counting runs no job of its own.
   private val q23 = QueryDef(
     "q23_percentiles",
     (s, dir) => {
       val o = t(s, dir, "orders").select("o_totalprice", "o_orderkey")
-      val n = o.count()
+      val (ranked, n) = graft.operators.GlobalOrder.withGlobalRankAndCount(
+        o, Seq(col("o_totalprice"), col("o_orderkey")), "r")
       val k = 4L
       val q = n / k
       val m = n % k
-      val ranked = graft.operators.GlobalOrder.withGlobalRank(
-        o, Seq(col("o_totalprice"), col("o_orderkey")), "r")
       val quartile =
         when(lit(m) > 0 && col("r") <= m * (q + 1),
           floor((col("r") - 1) / (q + 1)) + 1)

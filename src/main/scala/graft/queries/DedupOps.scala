@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.LongType
 import graft.functions.HashFunctions._
 import graft.functions.VectorFunctions
 import graft.sources.{Parquet, Tables}
-import graft.state.LedgerState
+import graft.state.{LedgerState, SegmentLedger}
 
 /** Deduplication operators over `documents`/`embeddings` (SURVEY §2.3
   * D1–D5). Scale design notes per operator:
@@ -1248,90 +1248,68 @@ object DedupOps extends QueryGroup {
         bandKeys(col("sig"), mhBands, mhRows).as("keys"))
   }
 
-  private[graft] def d13LedgerPath(dir: String): String = StatePath(dir, "d13_ledger")
+  // `_p1` = the segment-ledger layout (index segments + one tombstone
+  // log under one commit chain); the bare-append layout before it is
+  // stale state, never reinterpreted
+  private[graft] def d13LedgerPath(dir: String): String =
+    StatePath(dir, "d13_ledger", "_p1")
 
   /** Bootstrap-or-append the band-index ledger: only doc_ids absent
-    * from the LIVE ledger (physical rows minus tombstones) are
+    * from the LIVE ledger (committed index rows minus tombstones) are
     * (re)indexed — maintenance is O(novel docs), the corpus is never
-    * re-shingled. A tombstoned doc_id re-submitted is RESURRECTED by
-    * clearing its tombstone: its index rows are still physically in
-    * place (the tombstones ⊆ ledger-ids invariant) and keyed by the
-    * doc_id refresh never re-indexes, so un-shadowing them is exactly
-    * the append the doc would otherwise get — without ever creating
-    * duplicate rows for one id. One writer at a time
-    * ([[graft.state.LedgerState]]): an append landing inside a
-    * takedown's or compaction's staged swap would be discarded with the
-    * backup, and the tombstone-set rewrite below must not interleave
-    * with a takedown's tombstone append.
+    * re-shingled. A tombstoned doc_id re-submitted is RESURRECTED by an
+    * `untomb` record: its index rows are still physically in place
+    * (the tombstones ⊆ ledger-ids invariant) and keyed by the doc_id
+    * refresh never re-indexes, so un-shadowing them is exactly the
+    * append the doc would otherwise get — without ever creating
+    * duplicate rows for one id. The fresh docs' index rows and the
+    * untomb records are ONE segment under one commit marker
+    * ([[graft.state.SegmentLedger]]), so a crash leaves the ledger
+    * exactly pre- or post-refresh.
     */
   private[graft] def refreshNearDupLedger(s: SparkSession, path: String,
-      prior: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    LedgerState.withWriter(fs, path, "refreshNearDupLedger") {
-      healSubDirSwaps(fs, p)
-      if (!fs.exists(p))
-        minhashIndex(prior).write.mode("overwrite").parquet(path)
-      else {
-        val tomb = readBandTombstones(s, path)
-        val ledgerIds = Parquet.read(s, path).select("doc_id")
-        val liveIds = tomb.fold(ledgerIds)(t =>
-          ledgerIds.join(broadcast(t), Seq("doc_id"), "left_anti"))
-        val novel = prior.join(liveIds, Seq("doc_id"), "left_anti")
+      prior: DataFrame): Unit =
+    SegmentLedger.withWriter(s, path, "refreshNearDupLedger") {
+      val k = SegmentLedger.next(s, path)
+      if (SegmentLedger.segments(s, path, "index").isEmpty) {
+        SegmentLedger.write(minhashIndex(prior), path, "index", k)
+        SegmentLedger.commit(s, path, k)
+      } else {
+        val novel = prior
+          .join(readBandLedger(s, path).select("doc_id"), Seq("doc_id"),
+            "left_anti")
           .localCheckpoint()
         if (!novel.isEmpty) {
           // resurrect = novel ∩ tombstones (takedown-sized): physical
-          // rows exist — clear the tombstone instead of re-indexing
-          val resurrect = tomb
+          // rows exist — untomb instead of re-indexing
+          val resurrect = readBandTombstones(s, path)
             .map(t => novel.select("doc_id")
               .join(broadcast(t), Seq("doc_id"), "left_semi")
-              .distinct().localCheckpoint())
+              .localCheckpoint())
             .filter(!_.isEmpty)
           val fresh = resurrect.fold(novel)(r =>
             novel.join(broadcast(r), Seq("doc_id"), "left_anti"))
           if (!fresh.isEmpty)
-            minhashIndex(fresh).write.mode("append").parquet(path)
-          resurrect.foreach { r =>
-            // tombstone-set rewrite (tombstone-sized), staged and
-            // swapped in; a torn swap heals at the next writer entry
-            // ([[healSubDirSwaps]]), and a crash BEFORE this point
-            // (after the append above) just leaves the resurrected ids
-            // shadowed until the next refresh retries (novelty still
-            // sees them as absent-from-live — self-healing)
-            val remaining = tomb.get
-              .join(broadcast(r), Seq("doc_id"), "left_anti")
-              .localCheckpoint()
-            if (remaining.isEmpty)
-              // every outstanding takedown was resurrected: an empty
-              // dir and no dir mean the same thing — take the simpler
-              // (and atomically observable) state
-              fs.delete(bandTombDir(p), true)
-            else {
-              val stg = bandTombStaging(p)
-              fs.delete(stg, true)
-              remaining.coalesce(1).write.mode("overwrite")
-                .parquet(stg.toString)
-              LedgerState.swapIn(fs, bandTombDir(p), stg, bandTombBackup(p))
-            }
-          }
+            SegmentLedger.write(minhashIndex(fresh), path, "index", k)
+          resurrect.foreach(
+            SegmentLedger.writeTombs(_, path, k, SegmentLedger.Untomb))
+          SegmentLedger.commit(s, path, k)
         }
       }
       s.catalog.refreshByPath(path)
     }
-  }
 
-  /** Bin-pack an append-only ledger (d9's or d13's) back to ~one file
-    * per partition. The append-only maintenance discipline is right for
-    * ingest cost — nothing corpus-sized is ever rewritten — but each
-    * batch leaves one file fragment per partition it touches, and
+  /** Bin-pack an append-only d9/d16 hash ledger back to one file per
+    * `pfx` partition. The append-only maintenance discipline is right
+    * for ingest cost — nothing corpus-sized is ever rewritten — but
+    * each batch leaves one file fragment per partition it touches, and
     * after a year of daily runs every ledger read pays a listing +
     * parquet-footer tax of ~365 fragments per partition (measured in
     * LedgerScaleBench `compact`). Compaction is the periodic
     * counterpart: ONE scan + one write (the floor for a physical
     * re-layout, the F14 rebucket economics), preserving the layout the
-    * readers depend on — a `pfx`-partitioned ledger keeps its 16
-    * partition dirs and therefore its pruned-scan PartitionFilters, an
-    * unpartitioned ledger packs to ⌈bytes/128 MB⌉ files.
+    * readers depend on — the 16 partition dirs and therefore the
+    * pruned-scan PartitionFilters.
     *
     * Crash-safe by [[graft.state.LedgerState]]'s staged rename-aside
     * swap. Content is untouched — read-equivalence is spec-gated.
@@ -1350,26 +1328,11 @@ object DedupOps extends QueryGroup {
       val hadBloom = fs.exists(bloomMarker(path))
       val staging = LedgerState.stagingPath(path)
       fs.delete(staging, true)
-      // band-ledger tombstones are PURGED here (the d17 physical-removal
-      // rider): the compacted copy is built with the tombstoned doc_ids
-      // anti-joined out, and the `_tombstones` dir rides aside with the
-      // old dir and dies with the backup — takedowns stay O(takedown)
-      // at request time and the ledger pays one rewrite per compaction
-      // cycle it was already paying
-      val df = readBandTombstones(s, path).fold(Parquet.read(s, path))(t =>
-        Parquet.read(s, path).join(broadcast(t), Seq("doc_id"), "left_anti"))
-      if (df.columns.contains("pfx"))
-        // same write shape as refreshLedger's bootstrap: repartition ON
-        // pfx so each of the 16 partition dirs gets exactly one task's
-        // single file, keeping the pruned-read layout bit-compatible
-        df.repartition(col("pfx")).write.partitionBy("pfx")
-          .mode("overwrite").parquet(staging.toString)
-      else {
-        val bytes = fs.getContentSummary(p).getLength
-        val nFiles = math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20))
-        df.repartition(nFiles.toInt).write
-          .mode("overwrite").parquet(staging.toString)
-      }
+      // same write shape as refreshLedger's bootstrap: repartition ON
+      // pfx so each of the 16 partition dirs gets exactly one task's
+      // single file, keeping the pruned-read layout bit-compatible
+      Parquet.read(s, path).repartition(col("pfx")).write.partitionBy("pfx")
+        .mode("overwrite").parquet(staging.toString)
       LedgerState.swapIn(fs, p, staging, LedgerState.backupPath(path))
       // d16 interplay (r19): the swap moved any `_bloom/` sidecar aside
       // with the old dir and dropped it with the backup — readers would
@@ -1385,22 +1348,21 @@ object DedupOps extends QueryGroup {
     }
   }
 
-  // takedown and tombstone scratch dirs live INSIDE the ledger dir
-  // under leading underscores (the `_bloom` trick): invisible to the
-  // parquet scan's partition discovery, so a crash window can never
-  // surface removed rows under a garbage partition value
+  // takedown scratch dirs live INSIDE the ledger dir under leading
+  // underscores (the `_bloom` trick): invisible to the parquet scan's
+  // partition discovery, so a crash window can never surface removed
+  // rows under a garbage partition value
   private def takedownStagingDir(p: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(p, "_takedown_staging_all")
   private def takedownBackupDir(p: org.apache.hadoop.fs.Path,
       pf: String) = new org.apache.hadoop.fs.Path(p, s"_takedown_backup_$pf")
 
-  /** Heal the sub-dir swaps writers run INSIDE a hash or band ledger —
-    * a takedown's prefix group (`pfx=X` ↔ `_takedown_backup_X`, rolled
-    * back whole while its staging dir shows it uncommitted) and the
-    * band tombstone rewrite (`_tombstones` ↔ `_tombstones_backup`) —
-    * then drop their staging dirs. Called at every writer entry, so a
-    * torn swap self-heals instead of serving a ledger missing a prefix
-    * slice or an outstanding takedown. One listing.
+  /** Heal the sub-dir swap a hash-ledger takedown runs INSIDE the
+    * ledger — its prefix group (`pfx=X` ↔ `_takedown_backup_X`, rolled
+    * back whole while its staging dir shows it uncommitted) — then drop
+    * the staging dir. Called at every writer entry, so a torn swap
+    * self-heals instead of serving a ledger missing a prefix slice.
+    * One listing.
     */
   private def healSubDirSwaps(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Unit =
@@ -1413,8 +1375,6 @@ object DedupOps extends QueryGroup {
           rollBack = staged.nonEmpty)
       }
       staged.foreach(fs.delete(_, true))
-      LedgerState.heal(fs, bandTombDir(p), bandTombBackup(p))
-      fs.delete(bandTombStaging(p), true)
     }
 
   /** TAKEDOWN for the d9/d16 content-hash ledger (r19): remove
@@ -1498,106 +1458,90 @@ object DedupOps extends QueryGroup {
 
   // ---- d13 band-ledger TOMBSTONES (r20) -----------------------------
   // The band ledger stores each doc's FULL shingle set — at 100 TB it
-  // is the largest state in the system, so the r19 whole-ledger staged
-  // swap made a single DMCA request rewrite orders more bytes than the
-  // ~32 GB hash ledger's pruned p/16 slice. r20 adopts the s13 IVF
-  // pattern instead: a takedown APPENDS the doc_ids to a
-  // takedown-sized `_tombstones/` parquet INSIDE the ledger dir
-  // (leading underscore — invisible to the ledger's own scan, the
-  // `_bloom` trick), every read goes through [[readBandLedger]] which
-  // anti-joins the broadcast tombstone set, and the physical purge
-  // rides [[compactLedger]] (one rewrite per compaction cycle the
-  // ledger was already paying). Invariant maintained by the writers:
-  // tombstones ⊆ ledger doc_ids — so a tombstone always shadows real
-  // rows and re-admission (refresh) can resurrect by CLEARING the
-  // tombstone instead of re-indexing (the rows are still in place,
-  // keyed by the same doc_id the refresh would never re-index anyway).
-  private def bandTombDir(p: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(p, "_tombstones")
-  private def bandTombBackup(p: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(p, "_tombstones_backup")
-  private def bandTombStaging(p: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(p, "_tombstones_staging")
+  // is the largest state in the system, so a takedown must not rewrite
+  // it. A takedown appends `tomb` records to the segment ledger's
+  // tombstone log (takedown-sized, committed by the same marker chain
+  // as the index segments), every read goes through [[readBandLedger]]
+  // which anti-joins the broadcast live tombstone set, and the
+  // physical purge rides [[compactBandLedger]]. Invariant maintained
+  // by the writers: tombstones ⊆ ledger doc_ids — so a tombstone
+  // always shadows real rows and re-admission (refresh) can resurrect
+  // with an `untomb` record instead of re-indexing (the rows are still
+  // in place, keyed by the same doc_id the refresh would never
+  // re-index anyway).
 
-  /** The standing tombstone set (distinct doc_ids), or None when no
+  /** The live tombstone set (distinct doc_ids), or None when no
     * takedown is outstanding. Takedown-sized by the append-∩-ledger
-    * discipline — always broadcastable. FAILS CLOSED across a torn
-    * tombstone-set rewrite (r20 review): between the rewrite's two
-    * renames the live `_tombstones` dir is absent, and serving "no
-    * tombstones" there would re-expose every outstanding takedown
-    * until a writer heals the swap — so a reader whose live dir is
-    * missing falls back to `_tombstones_backup`, the PRE-rewrite set.
-    * The backup is a SUPERSET of the new set (a rewrite only removes
-    * resurrected ids), so the fallback can only over-remove — a
-    * resurrected doc stays hidden for one crash window, never the
-    * reverse. Read-only: healing stays a writer-entry action.
+    * discipline — always broadcastable.
     */
   private[graft] def readBandTombstones(s: SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def readable(d: org.apache.hadoop.fs.Path) =
-      fs.exists(d) &&
-        fs.listStatus(d).exists(_.getPath.getName.startsWith("part-"))
-    val src =
-      if (readable(bandTombDir(p))) Some(bandTombDir(p))
-      else if (readable(bandTombBackup(p))) Some(bandTombBackup(p))
-      else None
-    src.map(d => Parquet.read(s, d.toString).select("doc_id").distinct())
-  }
+      path: String): Option[DataFrame] =
+    if (SegmentLedger.segments(s, path, "tombs").isEmpty) None
+    else Some(SegmentLedger.tombs(s, path, "doc_id")).filter(!_.isEmpty)
 
   /** THE read seam for the d13 band ledger — every consumer (the d13
     * probe, ST10's static side, the scale bench) reads through here so
     * outstanding takedowns are invisible everywhere at once: the
-    * broadcast anti-join costs one map-side probe per ledger row and
-    * nothing when no takedown is outstanding (the frame is the bare
-    * scan). Physical rows linger until [[compactLedger]] purges them.
+    * broadcast anti-join costs one map-side probe per ledger row, and
+    * before any takedown the frame is the bare scan. Physical rows
+    * linger until [[compactBandLedger]] purges them.
     */
   private[graft] def readBandLedger(s: SparkSession,
       path: String): DataFrame = {
-    val ledger = Parquet.read(s, path)
-    readBandTombstones(s, path).fold(ledger)(t =>
-      ledger.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    val ledger = SegmentLedger.read(s, path, "index")
+    if (SegmentLedger.segments(s, path, "tombs").isEmpty) ledger
+    else ledger.join(broadcast(SegmentLedger.tombs(s, path, "doc_id")),
+      Seq("doc_id"), "left_anti")
   }
 
-  /** TAKEDOWN for the d13 band-index ledger (r19; r20 rewrite): shadow
-    * the removed documents' index rows — their band keys stop routing
-    * candidates and their shingle sets stop serving as verify payload
-    * through [[readBandLedger]], so reclaimed content re-evaluates as
-    * novel. O(takedown + one column-pruned id scan) per request, NEVER
-    * O(ledger): the request writes one takedown-sized tombstone file;
-    * the ledger's own files are untouched (IO-gated in
-    * LedgerTakedownSpec). Idempotent — already-tombstoned or absent
-    * ids append nothing. One writer at a time (LedgerState)
-    * (a racing refresh/compaction could otherwise clear or purge
-    * tombstones out from under the append's snapshot).
+  /** TAKEDOWN for the d13 band-index ledger: shadow the removed
+    * documents' index rows — their band keys stop routing candidates
+    * and their shingle sets stop serving as verify payload through
+    * [[readBandLedger]], so reclaimed content re-evaluates as novel.
+    * O(takedown + one column-pruned id scan) per request, NEVER
+    * O(ledger): the request commits one takedown-sized tombstone
+    * segment; the index files are untouched (IO-gated in
+    * LedgerTakedownSpec). Idempotent — already-tombstoned or absent ids
+    * append nothing.
     */
   private[graft] def removeFromBandLedger(s: SparkSession, path: String,
-      docIds: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    LedgerState.withWriter(fs, path, "removeFromBandLedger") {
-      require(fs.exists(p), s"no band ledger at $path")
-      healSubDirSwaps(fs, p)
-      // tombstone only ids PRESENT in the ledger (broadcast semi over
-      // the id column — pruned to one column, the same cost class as
-      // the hash ledger's affected-prefix probe) and not already
-      // tombstoned: preserves tombstones ⊆ ledger ids and makes the
-      // removal idempotent at zero bytes
-      val present = Parquet.read(s, path).select("doc_id")
+      docIds: DataFrame): Unit =
+    SegmentLedger.withWriter(s, path, "removeFromBandLedger") {
+      require(SegmentLedger.segments(s, path, "index").nonEmpty,
+        s"no band ledger at $path")
+      // tombstone only LIVE ledger ids (broadcast semi over the id
+      // column — pruned to one column, the same cost class as the hash
+      // ledger's affected-prefix probe): preserves tombstones ⊆ ledger
+      // ids and makes the removal idempotent at zero bytes
+      val novel = readBandLedger(s, path).select("doc_id")
         .join(broadcast(docIds.select("doc_id").distinct()),
           Seq("doc_id"), "left_semi")
         .distinct()
-      val novel = readBandTombstones(s, path)
-        .fold(present)(t =>
-          present.join(broadcast(t), Seq("doc_id"), "left_anti"))
         .localCheckpoint()
-      if (!novel.isEmpty)
-        novel.coalesce(1).write.mode("append")
-          .parquet(bandTombDir(p).toString)
+      if (!novel.isEmpty) {
+        val k = SegmentLedger.next(s, path)
+        SegmentLedger.writeTombs(novel, path, k, SegmentLedger.Tomb)
+        SegmentLedger.commit(s, path, k)
+      }
       s.catalog.refreshByPath(path)
     }
-  }
+
+  /** Compaction for the d13 band ledger: the live rows (tombstones
+    * applied — the physical purge) packed into one seg-0 of
+    * ⌈bytes/128 MB⌉ files, staged and swapped in
+    * ([[graft.state.SegmentLedger.compact]]). The compacted ledger
+    * carries no tombstone log; its live read is unchanged.
+    */
+  private[graft] def compactBandLedger(s: SparkSession,
+      path: String): Unit =
+    SegmentLedger.compact(s, path, "compactBandLedger") { staging =>
+      val index = new org.apache.hadoop.fs.Path(path, "index")
+      val bytes = index.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(index).getLength
+      val nFiles = math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20))
+      SegmentLedger.write(readBandLedger(s, path).repartition(nFiles.toInt),
+        staging, "index", 0)
+    }
 
   /** The d13 band probe: batch index rows against a ledger-index frame
     * (either side in the [[minhashIndex]] schema) — band equi-join +

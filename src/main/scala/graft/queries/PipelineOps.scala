@@ -804,7 +804,9 @@ object PipelineOps extends QueryGroup {
   // re-derives all three exclusions from scratch — EXCEPT for the
   // hash ledger, brute-force Jaccard for the band gate, tap re-rank
   // for the graph).
-  private def p6Path(dir: String, tag: String): String = StatePath(dir, s"p6_$tag")
+  // `_p1`: the band and graph ledgers' segment-ledger layout
+  private def p6Path(dir: String, tag: String): String =
+    StatePath(dir, s"p6_$tag", "_p1")
 
   private val p6 = QueryDef(
     "p6_takedown_refresh",

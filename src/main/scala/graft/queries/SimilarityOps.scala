@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.LongType
 import graft.functions.TopKAggregate
 import graft.functions.VectorFunctions._
 import graft.sources.{Parquet, Tables}
-import graft.state.LedgerState
+import graft.state.SegmentLedger
 
 /** Similarity-search operators over `embeddings` (SURVEY §2.3 S1–S3).
   *
@@ -568,9 +568,9 @@ object SimilarityOps extends QueryGroup {
   // similarity search, the op a daily embedding pipeline actually
   // runs: today's vectors join a PERSISTED IVF index without
   // retraining the quantizer or touching the standing corpus, and the
-  // daily queries probe the stored index. The ledger layout (the _p2
-  // revision — r13's _p1 wrote `assign` UNPARTITIONED, so every daily
-  // query scanned the whole corpus-sized index, IVF's one job undone):
+  // daily queries probe the stored index. The ledger is a
+  // [[graft.state.SegmentLedger]] (marker-committed segments, one
+  // tombstone log, staged compaction into seg-0) holding:
   //
   //   path/centroids/     (cid, cv) — trained ONCE at bootstrap over
   //                       the then-standing corpus (s3's seed+Lloyd
@@ -591,17 +591,13 @@ object SimilarityOps extends QueryGroup {
   //                       typical 256-dim float embedding), and never
   //                       pays the partitioned tree's per-cell
   //                       listing/footer tax
-  //   path/commits/seg-k  zero-byte marker, created LAST — the
-  //                       single-file COMMIT POINT for seg k
   //
-  // Crash atomicity: readers see only segments with a commit marker;
-  // a crash anywhere mid-write leaves marker-less assign/ids seg dirs
-  // that the next refresh deletes and re-derives (novelty is decided
+  // Crash atomicity is the segment ledger's: a torn append is
+  // invisible and deleted at the next writer entry (novelty is decided
   // against COMMITTED ids only, so a torn append cannot duplicate
-  // rows). Bootstrap keys on "no committed segments", not on the
+  // rows). Bootstrap keys on "no committed assign segment", not on the
   // centroids dir — centroids are written first and a half-bootstrap
-  // (centroids present, seg-0 uncommitted) re-runs cleanly with
-  // overwrite, the r13-advice hazard closed.
+  // re-runs cleanly with overwrite.
   //
   // Novel vec_ids are assigned to the STORED centroids — O(batch ·
   // cells) work; the corpus is never re-assigned, never rescanned
@@ -609,120 +605,72 @@ object SimilarityOps extends QueryGroup {
   // deterministic, so incremental ≡ from-scratch assignment row for
   // row (spec-gated). A long append chain (one seg per day) pays a
   // per-seg listing tax like d9's pre-F16 chain; compactIvfLedger
-  // below is its rename-aside bin-pack. Same two-stage oracle as
-  // s2/s3: candidates tap, DuckDB re-ranks.
+  // below is its bin-pack. Same two-stage oracle as s2/s3: candidates
+  // tap, DuckDB re-ranks.
   private[graft] def s8LedgerPath(dir: String): String =
-    // _p2 = the cid-partitioned committed-segment layout; _p1 (flat
-    // append-only assign) ledgers are stale state, never reinterpreted
-    StatePath(dir, "s8_ivf", "_p2")
+    // _p3 = the segment-ledger layout (one commit chain for data and
+    // tombstones); older layouts are stale state, never reinterpreted
+    StatePath(dir, "s8_ivf", "_p3")
 
   private def hPath(p: String) = new org.apache.hadoop.fs.Path(p)
   private def fsOf(s: SparkSession, p: String) =
     hPath(p).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Committed segment numbers, ascending — the marker files are the
-    * ledger's source of truth (metadata-sized listing, d9 class).
-    */
-  private[graft] def s8CommittedSegs(s: SparkSession,
-      path: String): Seq[Int] = {
-    val fs = fsOf(s, path)
-    val c = hPath(s"$path/commits")
-    if (!fs.exists(c)) Seq.empty
-    else fs.listStatus(c).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("seg-") => n.drop(4).toInt }
-      .sorted
-  }
+  /** Has the s8/s10 ledger at `path` a committed data segment? */
+  private[graft] def ledgerBootstrapped(s: SparkSession,
+      path: String): Boolean =
+    SegmentLedger.segments(s, path, "assign").nonEmpty
 
-  /** Delete marker-less (torn) seg dirs under each of `subdirs` — safe
-    * by construction: a seg without its commit marker was never
-    * visible to any reader. Shared by the s8 (assign/ids) and s10
-    * (assign/probes/edges/ids) ledger layouts.
-    */
-  private def cleanTorn(s: SparkSession, path: String,
-      subdirs: Seq[String]): Unit = {
-    val fs = fsOf(s, path)
-    val committed = s8CommittedSegs(s, path).map(k => s"seg-$k").toSet
-    subdirs.foreach { sub =>
-      val dp = hPath(s"$path/$sub")
-      if (fs.exists(dp))
-        fs.listStatus(dp).foreach { st =>
-          if (!committed.contains(st.getPath.getName))
-            fs.delete(st.getPath, true)
-        }
-    }
-  }
-
-  private def s8CleanTorn(s: SparkSession, path: String): Unit =
-    cleanTorn(s, path, Seq("assign", "ids"))
-
-  /** The index's assignment rows (vec_id, embedding, cid) as a union
-    * of per-segment scans, each pruned to `cids` when given — the
-    * prune lands as PartitionFilters on every segment scan because cid
-    * is the segment's partition column.
+  /** The index's assignment rows (vec_id, embedding, cid) over every
+    * committed segment, each scan pruned to `cids` when given; cid is
+    * pinned LONG after the prune (partition-value inference may type it
+    * INT) so the isin stays a pure partition predicate.
     */
   private[graft] def s8Assign(s: SparkSession, path: String,
-      cids: Option[Seq[Long]]): DataFrame = {
-    val segs = s8CommittedSegs(s, path)
-    require(segs.nonEmpty, s"no committed s8 ledger segments at $path")
-    segs.map { k =>
-      val seg = Parquet.read(s, s"$path/assign/seg-$k")
-      val pruned = cids.fold(seg)(c => seg.filter(col("cid").isin(c: _*)))
-      // partition-value inference may type cid INT; pin the schema
-      // AFTER the prune so the isin stays a pure partition predicate
-      pruned.select(col("vec_id"), col("embedding"),
-        col("cid").cast(LongType).as("cid"))
-    }.reduce(_ unionByName _)
-  }
+      cids: Option[Seq[Long]]): DataFrame =
+    SegmentLedger.read(s, path, "assign", Seq(col("vec_id"),
+      col("embedding"), col("cid").cast(LongType).as("cid")), cids)
 
   /** The slim maintenance view: every indexed vec_id. */
-  private[graft] def s8Ids(s: SparkSession, path: String): DataFrame = {
-    val segs = s8CommittedSegs(s, path)
-    require(segs.nonEmpty, s"no committed s8 ledger segments at $path")
-    segs.map(k => Parquet.read(s, s"$path/ids/seg-$k"))
-      .reduce(_ unionByName _)
-  }
+  private[graft] def s8Ids(s: SparkSession, path: String): DataFrame =
+    SegmentLedger.read(s, path, "ids")
 
-  /** Write batch `rows` (vec_id, cid, embedding) as segment `k` and
-    * commit it. Repartition ON cid before the partitioned write (the
-    * d9 file-count discipline): clustered, each cell dir gets the one
-    * file of the one task that hashes to it, not a file per
-    * (task × cell).
+  /** Write batch `rows` (vec_id, cid, embedding) as the assign and ids
+    * sub-tables of uncommitted segment `k`. The sidecar ids come from
+    * the seg just written (a column-pruned read of 8-byte ids), not
+    * from `rows` — consuming `rows` twice would re-execute a
+    * corpus-sized assignment at bootstrap.
     */
-  private def s8WriteSeg(s: SparkSession, path: String, k: Int,
+  private def writeAssign(s: SparkSession, path: String, k: Int,
       rows: DataFrame): Unit = {
-    val fs = fsOf(s, path)
-    rows.repartition(col("cid"))
-      .write.partitionBy("cid").mode("overwrite")
-      .parquet(s"$path/assign/seg-$k")
-    // sidecar ids come from the seg just written (a column-pruned
-    // read of 8-byte ids), not from `rows` — consuming `rows` twice
-    // would re-execute a corpus-sized assignment at bootstrap
-    Parquet.read(s, s"$path/assign/seg-$k").select("vec_id")
-      .write.mode("overwrite").parquet(s"$path/ids/seg-$k")
-    fs.mkdirs(hPath(s"$path/commits"))
-    fs.create(hPath(s"$path/commits/seg-$k"), true).close()
+    SegmentLedger.write(rows, path, "assign", k, Some("cid"))
+    SegmentLedger.write(Parquet.read(s, s"$path/assign/seg-$k")
+      .select("vec_id"), path, "ids", k)
   }
 
   /** Bootstrap-or-append the IVF index ledger from `prior`. Bootstrap
     * trains the quantizer (cells keyed to the bootstrap corpus size)
-    * and assigns everything as segment 0; append assigns only NOVEL
-    * vec_ids to the stored centroids — maintenance is O(batch·cells)
-    * compute against a slim id-only read, the corpus is never
-    * re-assigned.
+    * and assigns everything as the first segment; append assigns only
+    * NOVEL vec_ids to the stored centroids — maintenance is
+    * O(batch·cells) compute against a slim id-only read, the corpus is
+    * never re-assigned.
     */
   private[graft] def refreshIvfLedger(s: SparkSession, path: String,
       prior: DataFrame): Unit =
-      LedgerState.withWriter(fsOf(s, path), path, "refreshIvfLedger") {
-    s8CleanTorn(s, path)
+      SegmentLedger.withWriter(s, path, "refreshIvfLedger") {
     val centDir = s"$path/centroids"
-    if (s8CommittedSegs(s, path).isEmpty) {
+    def append(rows: DataFrame): Unit = {
+      val k = SegmentLedger.next(s, path)
+      writeAssign(s, path, k, assignNearest(rows, Parquet.read(s, centDir))
+        .select("vec_id", "cid", "embedding"))
+      SegmentLedger.commit(s, path, k)
+    }
+    if (!ledgerBootstrapped(s, path)) {
       val n = prior.count()
       val cells = LshTuning.ivfCellsFor(n, ivfCellsFloor)
       trainCentroids(prior, cells, n)
         .write.mode("overwrite").parquet(centDir)
-      s8WriteSeg(s, path, 0,
-        assignNearest(prior, Parquet.read(s, centDir))
-          .select("vec_id", "cid", "embedding"))
+      append(prior)
     } else {
       // novel ids only, decided against the COMMITTED slim sidecar;
       // materialized (batch-sized) before the write so the write
@@ -730,56 +678,30 @@ object SimilarityOps extends QueryGroup {
       val novel = prior
         .join(s8Ids(s, path), Seq("vec_id"), "left_anti")
         .localCheckpoint()
-      if (!novel.isEmpty) {
-        val k = s8CommittedSegs(s, path).max + 1
-        s8WriteSeg(s, path, k,
-          assignNearest(novel, Parquet.read(s, centDir))
-            .select("vec_id", "cid", "embedding"))
-      }
+      if (!novel.isEmpty) append(novel)
     }
   }
 
   /** F16's compaction for the s8 segment chain: merge every committed
-    * segment into a single seg-0 under a staging ledger, then swap the
-    * whole ledger dir in ([[graft.state.LedgerState]]'s writer lock and
-    * rename-aside swap). Layout-preserving: the compacted seg is
-    * written by the same [[s8WriteSeg]] commit protocol, so the
+    * segment into a single seg-0 of a staged ledger and swap it in
+    * ([[graft.state.SegmentLedger.compact]]). Layout-preserving: the
+    * compacted seg is written by the same [[writeAssign]], so the
     * pruned-read plan is bit-identical; content equality is
-    * spec-gated.
+    * spec-gated. Committed tombstones are APPLIED here (physical
+    * delete) and the staging carries no tombstone log — promoting
+    * without applying them would resurrect every takedown (see S13).
     */
   private[graft] def compactIvfLedger(s: SparkSession,
-      path: String): Unit = {
-    val fs = fsOf(s, path)
-    LedgerState.withWriter(fs, path, "compactIvfLedger") {
-      require(fs.exists(hPath(path)), s"no s8 ledger at $path")
-      if (s8CommittedSegs(s, path).size > 1 ||
-          tombCommittedSegs(s, path).nonEmpty) {
-        val staging = LedgerState.stagingPath(path).toString
-        fs.delete(hPath(staging), true)
-        // consumed once, wholly before the swap — the live source stays
-        // valid for the duration of the staging write. Committed
-        // tombstones are APPLIED here (physical delete) and the
-        // staging carries no tombs dir — promoting without applying
-        // them would resurrect every takedown (see S13).
-        val all = s8Assign(s, path, None).select("vec_id", "cid", "embedding")
-          .join(broadcast(s8Tombs(s, path)), Seq("vec_id"), "left_anti")
-        Parquet.read(s, s"$path/centroids")
-          .write.mode("overwrite").parquet(s"$staging/centroids")
-        s8WriteSeg(s, staging, 0, all)
-        promoteStaging(s, path)
-      }
+      path: String): Unit =
+    SegmentLedger.compact(s, path, "compactIvfLedger",
+        SegmentLedger.segments(s, path, "assign").size > 1 ||
+          SegmentLedger.segments(s, path, "tombs").nonEmpty) { staging =>
+      val all = s8Assign(s, path, None).select("vec_id", "cid", "embedding")
+        .join(broadcast(s8Tombs(s, path)), Seq("vec_id"), "left_anti")
+      Parquet.read(s, s"$path/centroids")
+        .write.mode("overwrite").parquet(s"$staging/centroids")
+      writeAssign(s, staging, 0, all)
     }
-  }
-
-  /** Swap a writer's fully written `__compact_staging` ledger in for
-    * the live one ([[LedgerState.swapIn]]); raw renames, so cached
-    * file listings of the path are invalidated.
-    */
-  private def promoteStaging(s: SparkSession, path: String): Unit = {
-    LedgerState.swapIn(fsOf(s, path), hPath(path),
-      LedgerState.stagingPath(path), LedgerState.backupPath(path))
-    s.catalog.refreshByPath(path)
-  }
 
   /** QUANTIZER RETRAIN MIGRATION (r19, the r18 verdict's #4): s8's
     * centroids are trained once at bootstrap and fixed forever — the
@@ -792,8 +714,8 @@ object SimilarityOps extends QueryGroup {
     * bootstrap gets √(100n) cells, not its stale √n) and re-assign
     * every committed row through a staged parallel build.
     *
-    * Atomicity is compaction's ([[graft.state.LedgerState]]): the
-    * staging ledger (new centroids + one re-assigned seg-0 + ids +
+    * Atomicity is compaction's ([[graft.state.SegmentLedger.compact]]):
+    * the staging ledger (new centroids + one re-assigned seg-0 + ids +
     * marker) is fully written while the live dir stays untouched, then
     * the rename-aside swap flips readers to the new quantizer in one
     * metadata operation — a reader mid-migration reads the OLD
@@ -808,12 +730,8 @@ object SimilarityOps extends QueryGroup {
     * next read simply probes the new cells.
     */
   private[graft] def retrainIvfLedger(s: SparkSession,
-      path: String): Unit = {
-    val fs = fsOf(s, path)
-    LedgerState.withWriter(fs, path, "retrainIvfLedger") {
-      require(fs.exists(hPath(path)), s"no s8 ledger at $path")
-      val staging = LedgerState.stagingPath(path).toString
-      fs.delete(hPath(staging), true)
+      path: String): Unit =
+    SegmentLedger.compact(s, path, "retrainIvfLedger") { staging =>
       // the standing corpus = committed assign rows minus committed
       // tombstones; a plain frame over the segment scans — each
       // consumer below (count, training sample, re-assign) is its own
@@ -826,72 +744,48 @@ object SimilarityOps extends QueryGroup {
       trainCentroids(corpus, cells, n)
         .write.mode("overwrite").parquet(s"$staging/centroids")
       val cents = Parquet.read(s, s"$staging/centroids")
-      s8WriteSeg(s, staging, 0,
+      writeAssign(s, staging, 0,
         assignNearest(corpus, cents).select("vec_id", "cid", "embedding"))
-      promoteStaging(s, path)
     }
-  }
 
   // --------------------------------------------------------------- S13
   // TOMBSTONES (deletes) for the persisted IVF ledger — the takedown
   // path every production index needs and append-only ledgers lack: a
   // document removed from the corpus (DMCA/GDPR/opt-out, a retracted
   // source) must stop surfacing in retrieval IMMEDIATELY, without
-  // rewriting a corpus-sized index. Design mirrors the segment chain
-  // it guards: tombstones are their own committed-segment chain
-  // (`tombs/seg-k` + marker-last `tombcommits/seg-k`), appended under
-  // the ledger's one writer lock (graft.state.LedgerState), idempotent
-  // on replay (novel ids only), takedown-sized (KBs against a TB
-  // index). Readers that honor deletes anti-join the broadcast
-  // tombstone set ABOVE the probe (s13); physical removal is deferred
-  // to [[compactIvfLedger]], which applies every committed tombstone
-  // while merging segments and leaves a tomb-free compacted ledger —
-  // the delete cost is folded into maintenance the chain already pays,
-  // never a per-takedown index rewrite (and compaction MUST apply
-  // them: promoting a staging without the tombs dir would otherwise
-  // resurrect every takedown).
-  private def tombCommittedSegs(s: SparkSession,
-      path: String): Seq[Int] = {
-    val dir = hPath(s"$path/tombcommits")
-    val fs = fsOf(s, path)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("seg-") => n.drop(4).toInt }
-      .toSeq.sorted
-  }
+  // rewriting a corpus-sized index. A takedown appends `tomb` records
+  // to the segment ledger's tombstone log, committed by the same
+  // marker chain as the data segments, under the ledger's one writer
+  // lock — idempotent on replay (novel ids only), takedown-sized (KBs
+  // against a TB index). Readers that honor deletes anti-join the
+  // broadcast tombstone set ABOVE the probe (s13); physical removal
+  // is deferred to [[compactIvfLedger]], which applies every live
+  // tombstone while merging segments and leaves a tomb-free compacted
+  // ledger — the delete cost is folded into maintenance the chain
+  // already pays, never a per-takedown index rewrite.
 
-  /** Every committed tombstoned id (one `vec_id` column; empty frame
-    * before any takedown).
+  /** Every live tombstoned id (one `vec_id` column; empty frame before
+    * any takedown).
     */
-  private[graft] def s8Tombs(s: SparkSession, path: String): DataFrame = {
-    val segs = tombCommittedSegs(s, path)
-    if (segs.isEmpty)
-      s.range(0).select(col("id").as("vec_id"))
-    else segs.map(k => Parquet.read(s, s"$path/tombs/seg-$k"))
-      .reduce(_.unionByName(_)).select("vec_id").distinct()
-  }
+  private[graft] def s8Tombs(s: SparkSession, path: String): DataFrame =
+    SegmentLedger.tombs(s, path, "vec_id")
 
-  /** Append a committed tombstone segment for `ids` (a `vec_id`
-    * frame). Under the ledger's writer lock, marker-last (a torn tomb
-    * seg is invisible and overwritten by the next call), idempotent
-    * (already-tombstoned ids append nothing).
+  /** Commit a tombstone segment for `ids` (a `vec_id` frame), under
+    * the ledger's writer lock; idempotent (already-tombstoned ids
+    * append nothing).
     */
   private[graft] def tombstoneIds(s: SparkSession, path: String,
-      ids: DataFrame): Unit = {
-    val fs = fsOf(s, path)
-    LedgerState.withWriter(fs, path, "tombstoneIds") {
+      ids: DataFrame): Unit =
+    SegmentLedger.withWriter(s, path, "tombstoneIds") {
       val novel = ids.select("vec_id").distinct()
         .join(s8Tombs(s, path), Seq("vec_id"), "left_anti")
         .localCheckpoint()
       if (!novel.isEmpty) {
-        val segs = tombCommittedSegs(s, path)
-        val k = if (segs.isEmpty) 0 else segs.max + 1
-        novel.write.mode("overwrite").parquet(s"$path/tombs/seg-$k")
-        fs.mkdirs(hPath(s"$path/tombcommits"))
-        fs.create(hPath(s"$path/tombcommits/seg-$k"), true).close()
+        val k = SegmentLedger.next(s, path)
+        SegmentLedger.writeTombs(novel, path, k, SegmentLedger.Tomb)
+        SegmentLedger.commit(s, path, k)
       }
     }
-  }
 
   /** s8's candidate stage BEFORE the oracle tap: runs the two ledger
     * refreshes (bootstrap-or-noop + batch append) and builds the
@@ -1242,7 +1136,7 @@ object SimilarityOps extends QueryGroup {
       val n = e.count()
       trainCentroids(e, LshTuning.ivfCellsFor(n, ivfCellsFloor), n)
     case StoredQuantizer(path) =>
-      if (s8CommittedSegs(s, path).isEmpty)
+      if (!ledgerBootstrapped(s, path))
         withLeaseRetry() { refreshIvfLedger(s, path, emb(s, dir)) }
       Parquet.read(s, s"$path/centroids")
   }
@@ -1337,10 +1231,11 @@ object SimilarityOps extends QueryGroup {
   // graph row-identical to the one-pass s9-style build against the
   // stored quantizer.
   //
-  // Crash atomicity, torn segments, idempotent replays: the s8 marker
-  // protocol verbatim (readers see only marker-committed segments;
-  // novelty keys on committed ids). Long chains pay the same per-seg
-  // listing tax as s8 — F16's compaction pattern applies unchanged.
+  // Crash atomicity, torn segments, idempotent replays: the s8
+  // segment ledger verbatim ([[graft.state.SegmentLedger]]: readers
+  // see only marker-committed segments; novelty keys on committed
+  // ids). Long chains pay the same per-seg listing tax as s8 — F16's
+  // compaction pattern applies unchanged.
   //
   // Oracle: the s9 two-stage discipline one level up — the tap carries
   // the UNION of every segment's edge ids (per-seg top-KG survivors,
@@ -1349,22 +1244,7 @@ object SimilarityOps extends QueryGroup {
   // merge, and the final ranks are all cross-checked. The per-seg
   // candidate generation sits below the tap, gated by the
   // incremental-≡-from-scratch spec (the s8 split).
-  private[graft] def s10LedgerPath(dir: String): String = StatePath(dir, "s10_knn", "_p2")
-
-  /** Union read of the committed segments' `sub` dir, each scan pruned
-    * to `cids` when given (a PartitionFilters prune — cid is every
-    * segment's partition column). `keep` pins the post-prune schema.
-    */
-  private[queries] def s10SegUnion(s: SparkSession, path: String, sub: String,
-      cids: Option[Seq[Long]], keep: Seq[Column],
-      segs: Seq[Int]): DataFrame = {
-    require(segs.nonEmpty, s"no committed s10 ledger segments at $path")
-    segs.map { k =>
-      val seg = Parquet.read(s, s"$path/$sub/seg-$k")
-      val pruned = cids.fold(seg)(c => seg.filter(col("cid").isin(c: _*)))
-      pruned.select(keep: _*)
-    }.reduce(_ unionByName _)
-  }
+  private[graft] def s10LedgerPath(dir: String): String = StatePath(dir, "s10_knn", "_p3")
 
   private def s10AssignCols = Seq(col("vec_id"), col("embedding"),
     col("cid").cast(LongType).as("cid"))
@@ -1384,9 +1264,7 @@ object SimilarityOps extends QueryGroup {
   // slim ships as the default; fat stays the documented twin
   // (slimProbes = false). Layout is fixed at bootstrap via a marker
   // file; appends and compaction follow the stored layout. Both arms'
-  // merged reads are row-identical (spec-gated twin). The default
-  // flip bumps the ledger path suffix to _p2 (a layout change never
-  // reinterprets old state).
+  // merged reads are row-identical (spec-gated twin).
   private def s10SlimMarker(path: String) = s"$path/__slim_probes"
   private[graft] def s10IsSlim(s: SparkSession, path: String): Boolean =
     fsOf(s, path).exists(hPath(s10SlimMarker(path)))
@@ -1412,51 +1290,45 @@ object SimilarityOps extends QueryGroup {
 
   /** Bootstrap-or-append the kNN-graph ledger from `prior` — s8's
     * refresh contract extended with probes + edges: bootstrap trains
-    * the quantizer and builds segment 0 (the s9 graph of the standing
-    * corpus); append computes only the NOVEL vectors' edges plus the
-    * affected standing vectors' additions (header steps 1–3).
+    * the quantizer and builds the first segment (the s9 graph of the
+    * standing corpus); append computes only the NOVEL vectors' edges
+    * plus the affected standing vectors' additions (header steps 1–3).
     */
   private[graft] def refreshKnnLedger(s: SparkSession, path: String,
       prior: DataFrame, slimProbes: Boolean = true): Unit =
-      LedgerState.withWriter(fsOf(s, path), path, "refreshKnnLedger") {
+      SegmentLedger.withWriter(s, path, "refreshKnnLedger") {
     val fs = fsOf(s, path)
-    cleanTorn(s, path, Seq("assign", "probes", "edges", "ids"))
     val centDir = s"$path/centroids"
+    val boot = !ledgerBootstrapped(s, path)
 
     // layout is fixed at bootstrap; appends follow the STORED layout
     // (an append's slimProbes arg is ignored once the ledger exists —
     // mixing layouts across segments would corrupt the probe reads).
-    // A marker left by a bootstrap that crashed before seg-0's commit
-    // is equally authoritative: the replay must keep the layout the
-    // torn attempt declared, whatever arg it now receives — otherwise
-    // the marker and the re-written probes could disagree.
-    val slim =
-      if (s8CommittedSegs(s, path).isEmpty)
-        s10IsSlim(s, path) || slimProbes
-      else s10IsSlim(s, path)
+    // A marker left by a bootstrap that crashed before its commit is
+    // equally authoritative: the replay must keep the layout the torn
+    // attempt declared, whatever arg it now receives — otherwise the
+    // marker and the re-written probes could disagree.
+    val slim = s10IsSlim(s, path) || (boot && slimProbes)
+    def probeSel(df: DataFrame): DataFrame =
+      df.select((if (slim) Seq(col("qid"), col("cid"))
+        else Seq(col("qid"), col("qe"), col("cid"))): _*)
 
-    // write one segment under the marker protocol: assign/probes land
-    // first (each consumed ONCE — edge joins read the written segs
-    // back, never re-execute a corpus- or batch-sized computed frame)
-    def writeSeg(k: Int, assignRows: DataFrame, probeRows: DataFrame)(
+    // write one segment and commit it: assign/probes land first (each
+    // consumed ONCE — edge joins read the written segs back, never
+    // re-execute a corpus- or batch-sized computed frame)
+    def writeSeg(assignRows: DataFrame, probeRows: DataFrame)(
         edgesOf: (DataFrame, DataFrame) => DataFrame): Unit = {
-      assignRows.repartition(col("cid"))
-        .write.partitionBy("cid").mode("overwrite")
-        .parquet(s"$path/assign/seg-$k")
-      probeRows.repartition(col("cid"))
-        .write.partitionBy("cid").mode("overwrite")
-        .parquet(s"$path/probes/seg-$k")
-      Parquet.read(s, s"$path/assign/seg-$k").select("vec_id")
-        .write.mode("overwrite").parquet(s"$path/ids/seg-$k")
+      val k = SegmentLedger.next(s, path)
+      writeAssign(s, path, k, assignRows)
+      SegmentLedger.write(probeSel(probeRows), path, "probes", k, Some("cid"))
       val a = Parquet.read(s, s"$path/assign/seg-$k").select(s10AssignCols: _*)
       val p = Parquet.read(s, s"$path/probes/seg-$k")
         .select(s10ProbeColsOf(slim): _*)
-      edgesOf(a, p).write.mode("overwrite").parquet(s"$path/edges/seg-$k")
-      fs.mkdirs(hPath(s"$path/commits"))
-      fs.create(hPath(s"$path/commits/seg-$k"), true).close()
+      SegmentLedger.write(edgesOf(a, p), path, "edges", k)
+      SegmentLedger.commit(s, path, k)
     }
 
-    if (s8CommittedSegs(s, path).isEmpty) {
+    if (boot) {
       if (slim) fs.create(hPath(s10SlimMarker(path)), true).close()
       val n = prior.count()
       val cells = LshTuning.ivfCellsFor(n, ivfCellsFloor)
@@ -1470,32 +1342,25 @@ object SimilarityOps extends QueryGroup {
       // segment and the from-scratch reference — silently breaking the
       // incremental-≡-from-scratch contract (r16 advisory)
       val nprobe = LshTuning.nprobeFor(cents.count().toInt, nprobeFloor)
-      writeSeg(0,
+      writeSeg(
         assignNearest(prior, cents).select("vec_id", "cid", "embedding"),
-        probeTopAgg(prior, cents, nprobe)
-          .select((if (slim) Seq(col("qid"), col("cid"))
-            else Seq(col("qid"), col("qe"), col("cid"))): _*)) {
-        // segment 0's edges = the s9 graph of the bootstrap corpus
-        // (slim: qe re-attaches from the segment's own assign rows)
+        probeTopAgg(prior, cents, nprobe)) {
+        // the first segment's edges = the s9 graph of the bootstrap
+        // corpus (slim: qe re-attaches from the segment's own assign
+        // rows)
         (a, p) =>
           s10SegEdges((if (slim) attachQe(p, a) else p).join(a, Seq("cid")))
       }
     } else {
       val novel = prior
-        .join(s10SegUnion(s, path, "ids", None, Seq(col("vec_id")),
-          s8CommittedSegs(s, path)), Seq("vec_id"), "left_anti")
+        .join(s8Ids(s, path), Seq("vec_id"), "left_anti")
         .localCheckpoint()
       if (!novel.isEmpty) {
-        val oldSegs = s8CommittedSegs(s, path)
-        val k = oldSegs.max + 1
         val cents = Parquet.read(s, centDir)
         val nprobe = LshTuning.nprobeFor(cents.count().toInt, nprobeFloor)
-        writeSeg(k,
+        writeSeg(
           assignNearest(novel, cents).select("vec_id", "cid", "embedding"),
-          probeTopAgg(novel, cents, nprobe)
-            .select((if (slim) Seq(col("qid"), col("cid"))
-              else Seq(col("qid"), col("qe"), col("cid"))): _*)) {
-            (bAssign, bProbes0) =>
+          probeTopAgg(novel, cents, nprobe)) { (bAssign, bProbes0) =>
           // slim: the batch probes' qe re-attaches from the batch's
           // own assign seg (batch-sized id join)
           val bProbes =
@@ -1507,21 +1372,23 @@ object SimilarityOps extends QueryGroup {
             .collect().map(_.getLong(0)).toSeq
           val batchCids = bAssign.select("cid").distinct()
             .collect().map(_.getLong(0)).toSeq
-          // (1) new vectors vs the whole index (pruned to their cells)
+          // (1) new vectors vs the whole index (pruned to their cells;
+          //     the batch's own segment is not committed yet, so the
+          //     committed read is exactly the standing index)
           val candNew = bProbes.join(
-            s10SegUnion(s, path, "assign", Some(probedCids),
-              s10AssignCols, oldSegs).unionByName(bAssign), Seq("cid"))
+            s8Assign(s, path, Some(probedCids)).unionByName(bAssign),
+            Seq("cid"))
           // (2) affected standing vectors vs the batch (pruned to the
           //     batch's home cells). Slim: the standing probes' qe
           //     re-attaches from the standing assign union — UNPRUNED
           //     by cid (a probe row's home cell isn't its probed cell)
           //     but column-pruned to (vec_id, embedding): the measured
           //     append-time price of not storing qe ×nprobe
-          val oldProbes0 = s10SegUnion(s, path, "probes",
-            Some(batchCids), s10ProbeColsOf(slim), oldSegs)
+          val oldProbes0 = SegmentLedger.read(s, path, "probes",
+            s10ProbeColsOf(slim), Some(batchCids))
           val candOld = (if (slim)
-              attachQe(oldProbes0, s10SegUnion(s, path, "assign", None,
-                Seq(col("vec_id"), col("embedding")), oldSegs))
+              attachQe(oldProbes0, SegmentLedger.read(s, path, "assign",
+                Seq(col("vec_id"), col("embedding"))))
             else oldProbes0)
             .select(s10ProbeCols: _*).join(bAssign, Seq("cid"))
           s10SegEdges(candNew.unionByName(candOld))
@@ -1535,7 +1402,7 @@ object SimilarityOps extends QueryGroup {
     * tap (ids only, s9's side-effect discipline) carries the union so
     * the oracle re-checks cosines, merge, and ranks.
     *
-    * HONORS COMMITTED TOMBSTONES (s14, r19): a taken-down vec_id must
+    * HONORS LIVE TOMBSTONES (s14, r19): a taken-down vec_id must
     * vanish from the graph TWICE — as a query vertex (its own
     * neighbor list) and as a NEIGHBOR inside other vectors' top-KG
     * lists — so the read anti-joins the broadcast tombstone set on
@@ -1544,17 +1411,13 @@ object SimilarityOps extends QueryGroup {
     * so a leaked tombstoned vertex hash-fails) and BELOW the heap
     * (exclusion before ranking lets lower-ranked alive candidates
     * backfill from the union — ranks are over the ALIVE candidate
-    * set). With no committed tombstone the set is an empty local
-    * relation and the anti-joins fold away. Every seam consumer
-    * (d15l/s11l/p4, [[knnGraphRefinedLedger]]) honors deletes through
-    * this one read — honoring deletes is the READER's contract.
+    * set). Every seam consumer (d15l/s11l/p4,
+    * [[knnGraphRefinedLedger]]) honors deletes through this one read —
+    * honoring deletes is the READER's contract.
     */
   private[graft] def s10Graph(s: SparkSession, path: String,
       tap: Option[String]): DataFrame = {
-    val segs = s8CommittedSegs(s, path)
-    require(segs.nonEmpty, s"no committed s10 ledger segments at $path")
-    val all = segs.map(k => Parquet.read(s, s"$path/edges/seg-$k"))
-      .reduce(_ unionByName _)
+    val all = SegmentLedger.read(s, path, "edges")
     tap.foreach(t => graft.sources.VerifyTap(
       all.select(col("qid"), col("vec_id")), t, coalesce = false))
     val tombs = s8Tombs(s, path)
@@ -1565,65 +1428,50 @@ object SimilarityOps extends QueryGroup {
     topKAgg(alive, KG, ordered = false)
   }
 
-  /** F16's rename-aside compaction for the s10 segment chain — the
-    * compactIvfLedger discipline over the graph ledger's four dirs:
-    * assign/probes/ids concatenate into a single seg-0 (written by the
-    * same cid-partitioned layout, so pruned reads stay bit-identical);
-    * EDGES compact to the per-qid top-KG of the union — the merge
-    * itself, exact and idempotent by the heap-merge property, so the
-    * merged-graph read is row-identical before and after (spec-gated).
-    * Same writer lock + whole-ledger swap
-    * ([[graft.state.LedgerState]]).
+  /** F16's compaction for the s10 segment chain — the
+    * compactIvfLedger discipline over the graph ledger's four
+    * sub-tables: assign/probes/ids concatenate into a single seg-0
+    * (written by the same cid-partitioned layout, so pruned reads stay
+    * bit-identical); EDGES compact to the per-qid top-KG of the union —
+    * the merge itself, exact and idempotent by the heap-merge property,
+    * so the merged-graph read is row-identical before and after
+    * (spec-gated).
     */
   private[graft] def compactKnnLedger(s: SparkSession,
-      path: String): Unit = {
-    val fs = fsOf(s, path)
-    LedgerState.withWriter(fs, path, "compactKnnLedger") {
-      require(fs.exists(hPath(path)), s"no s10 ledger at $path")
-      val segs = s8CommittedSegs(s, path)
-      val tombSegs = tombCommittedSegs(s, path)
-      if (segs.size > 1 || tombSegs.nonEmpty) {
-        // takedown-sized; consumed by several purge joins below
-        val tombs = s8Tombs(s, path).localCheckpoint()
-        val staging = LedgerState.stagingPath(path).toString
-        fs.delete(hPath(staging), true)
-        Parquet.read(s, s"$path/centroids")
-          .write.mode("overwrite").parquet(s"$staging/centroids")
-        // consumed once each, wholly before the swap. Committed
-        // tombstones are APPLIED physically on every dir (the
-        // compactIvfLedger contract — promoting without applying them
-        // would resurrect every takedown): assign/ids drop the
-        // tombstoned VECTORS, probes drop the tombstoned OWNERS
-        s10SegUnion(s, path, "assign", None, s10AssignCols, segs)
-          .join(broadcast(tombs), Seq("vec_id"), "left_anti")
-          .repartition(col("cid")).write.partitionBy("cid")
-          .mode("overwrite").parquet(s"$staging/assign/seg-0")
-        s10SegUnion(s, path, "probes", None,
-            s10ProbeColsOf(s10IsSlim(s, path)), segs)
-          .join(broadcast(tombs.select(col("vec_id").as("qid"))),
-            Seq("qid"), "left_anti")
-          .repartition(col("cid")).write.partitionBy("cid")
-          .mode("overwrite").parquet(s"$staging/probes/seg-0")
-        // the layout marker must survive the swap — a compacted slim
-        // ledger whose marker vanished would read probes as fat
-        if (s10IsSlim(s, path))
-          fs.create(hPath(s"$staging/__slim_probes"), true).close()
-        Parquet.read(s, s"$staging/assign/seg-0").select("vec_id")
-          .write.mode("overwrite").parquet(s"$staging/ids/seg-0")
-        // edge fold = the merge read itself (exact, idempotent; the
-        // read already excludes tombstones on BOTH sides) — PLUS the
-        // repair round when a takedown was applied: a vertex that
-        // lost neighbors to the exclusion can sit under KG edges
-        // (recall decay) until its list is refilled (s14 / r18
-        // verdict #2)
-        repairedEdges(s, path, segs, tombs, tombSegs.nonEmpty, staging)
-          .write.mode("overwrite").parquet(s"$staging/edges/seg-0")
-        fs.mkdirs(hPath(s"$staging/commits"))
-        fs.create(hPath(s"$staging/commits/seg-0"), true).close()
-        promoteStaging(s, path)
-      }
+      path: String): Unit =
+    SegmentLedger.compact(s, path, "compactKnnLedger",
+        SegmentLedger.segments(s, path, "assign").size > 1 ||
+          SegmentLedger.segments(s, path, "tombs").nonEmpty) { staging =>
+      val hasTombs = SegmentLedger.segments(s, path, "tombs").nonEmpty
+      // takedown-sized; consumed by several purge joins below
+      val tombs = s8Tombs(s, path).localCheckpoint()
+      val slim = s10IsSlim(s, path)
+      Parquet.read(s, s"$path/centroids")
+        .write.mode("overwrite").parquet(s"$staging/centroids")
+      // consumed once each, wholly before the swap. Live tombstones
+      // are APPLIED physically on every sub-table (the
+      // compactIvfLedger contract — promoting without applying them
+      // would resurrect every takedown): assign/ids drop the
+      // tombstoned VECTORS, probes drop the tombstoned OWNERS
+      writeAssign(s, staging, 0, s8Assign(s, path, None)
+        .join(broadcast(tombs), Seq("vec_id"), "left_anti"))
+      SegmentLedger.write(SegmentLedger.read(s, path, "probes",
+          s10ProbeColsOf(slim))
+        .join(broadcast(tombs.select(col("vec_id").as("qid"))),
+          Seq("qid"), "left_anti"), staging, "probes", 0, Some("cid"))
+      // the layout marker must survive the swap — a compacted slim
+      // ledger whose marker vanished would read probes as fat
+      if (slim)
+        fsOf(s, path).create(hPath(s10SlimMarker(staging)), true).close()
+      // edge fold = the merge read itself (exact, idempotent; the
+      // read already excludes tombstones on BOTH sides) — PLUS the
+      // repair round when a takedown was applied: a vertex that
+      // lost neighbors to the exclusion can sit under KG edges
+      // (recall decay) until its list is refilled (s14 / r18
+      // verdict #2)
+      SegmentLedger.write(repairedEdges(s, path, tombs, hasTombs, staging),
+        staging, "edges", 0)
     }
-  }
 
   /** Compaction's edge output: the excluding merged read, REPAIRED for
     * the vertices a takedown decayed (s14, r19). Every purge leaves
@@ -1643,8 +1491,7 @@ object SimilarityOps extends QueryGroup {
     * (spec-gated).
     */
   private def repairedEdges(s: SparkSession, path: String,
-      segs: Seq[Int], tombs: DataFrame, hasTombs: Boolean,
-      staging: String): DataFrame = {
+      tombs: DataFrame, hasTombs: Boolean, staging: String): DataFrame = {
     // the excluding merged read IS the purged graph (s10Graph honors
     // tombstones); output-sized (≤ n·KG), pinned — consumed by the
     // adjacency, the anti-join, and the final union
@@ -1660,9 +1507,7 @@ object SimilarityOps extends QueryGroup {
       // external-Row codec pass (r22)
       def fresh(df: DataFrame): DataFrame =
         org.apache.spark.sql.GraftBridge.rebase(df)
-      val affected = segs
-        .map(k => Parquet.read(s, s"$path/edges/seg-$k"))
-        .reduce(_ unionByName _)
+      val affected = SegmentLedger.read(s, path, "edges")
         .join(broadcast(tombs), Seq("vec_id")) // lost-neighbor edges
         .select("qid").distinct()
         .join(broadcast(tombs.select(col("vec_id").as("qid"))),
@@ -1699,7 +1544,7 @@ object SimilarityOps extends QueryGroup {
 
   /** [[retrainIvfLedger]]'s sibling for the kNN-GRAPH ledger (r19):
     * fresh quantizer + full graph rebuild of the standing corpus
-    * (committed assign rows minus committed tombstones) as a staged
+    * (committed assign rows minus live tombstones) as a staged
     * ledger, swapped in under the ledger's writer lock. The staging
     * build IS a from-scratch bootstrap — `refreshKnnLedger` on the
     * staging path trains cells re-keyed to the CURRENT corpus size and
@@ -1712,24 +1557,16 @@ object SimilarityOps extends QueryGroup {
     * O(batch) appends it re-anchors.
     */
   private[graft] def retrainKnnLedger(s: SparkSession,
-      path: String): Unit = {
-    val fs = fsOf(s, path)
-    LedgerState.withWriter(fs, path, "retrainKnnLedger") {
-      require(fs.exists(hPath(path)), s"no s10 ledger at $path")
-      val staging = LedgerState.stagingPath(path).toString
-      fs.delete(hPath(staging), true)
-      val segs = s8CommittedSegs(s, path)
-      val corpus = s10SegUnion(s, path, "assign", None,
-          Seq(col("vec_id"), col("embedding")), segs)
+      path: String): Unit =
+    SegmentLedger.compact(s, path, "retrainKnnLedger") { staging =>
+      val corpus = s8Assign(s, path, None).select("vec_id", "embedding")
         .join(broadcast(s8Tombs(s, path)), Seq("vec_id"), "left_anti")
       // the staging build is a plain bootstrap (its own writer lock on
       // the staging path — disjoint from the live ledger's); layout
       // follows the live marker
       refreshKnnLedger(s, staging, corpus,
         slimProbes = s10IsSlim(s, path))
-      promoteStaging(s, path)
     }
-  }
 
   private val s10 = QueryDef(
     "s10_knn_incremental",
@@ -2044,8 +1881,8 @@ object SimilarityOps extends QueryGroup {
   // inside other vectors' top-KG lists — and, unlike the retrieval
   // index, a graph purge DAMAGES the survivors: every vertex that held
   // the removed id now has < KG edges (recall decay) until repaired.
-  // Machinery: the tombstone chain is [[tombstoneIds]] verbatim (the
-  // s8/s10 ledgers share the committed-segment + writer-lock protocol, so
+  // Machinery: the tombstone log is [[tombstoneIds]] verbatim (the
+  // s8/s10 ledgers are one [[graft.state.SegmentLedger]] layout, so
   // the writer is path-generic); the merged read [[s10Graph]]
   // anti-joins the broadcast tombstone set on BOTH columns below the
   // heap — lower-ranked alive candidates backfill from the union
@@ -2055,7 +1892,7 @@ object SimilarityOps extends QueryGroup {
   // probes/ids purge their tombstoned rows, and the edge fold runs
   // ONE descent round restricted to the AFFECTED vertices
   // ([[repairedEdges]] — O(affected·(2KG)²), F21's machinery, never
-  // O(n)) so decayed neighborhoods refill before the tomb chain is
+  // O(n)) so decayed neighborhoods refill before the tombstone log is
   // cleared. Oracle: the s13 pre-exclusion tap pattern — the tap
   // carries the PRE-exclusion edge union and DuckDB re-derives the
   // takedown set (vec_id ≡ 3 mod [[s13Mod]]), the two-sided
@@ -2063,7 +1900,7 @@ object SimilarityOps extends QueryGroup {
   // hash-fails on either side. Own ledger path (tombstoning the
   // shared s10 ledger would change every other graph consumer's
   // driver-run output under their exclusion-blind oracles).
-  private[graft] def s14LedgerPath(dir: String): String = StatePath(dir, "s14_knn", "_p1")
+  private[graft] def s14LedgerPath(dir: String): String = StatePath(dir, "s14_knn", "_p2")
 
   private val s14 = QueryDef(
     "s14_knn_tombstoned",
@@ -2084,7 +1921,7 @@ object SimilarityOps extends QueryGroup {
        |SELECT qid, rank, vec_id AS neighbor_id, cosine
        |FROM granked ORDER BY qid, rank""".stripMargin))
 
-  private[graft] def s15LedgerPath(dir: String): String = StatePath(dir, "s15_knn", "_p1")
+  private[graft] def s15LedgerPath(dir: String): String = StatePath(dir, "s15_knn", "_p2")
 
   // --------------------------------------------------------------- S15q
   // The retrain migration DRIVER-ORACLED (r20, the r19 verdict #3
@@ -2131,7 +1968,7 @@ object SimilarityOps extends QueryGroup {
        |FROM granked ORDER BY qid, rank""".stripMargin))
 
   private[graft] def s15iLedgerPath(dir: String): String =
-    StatePath(dir, "s15i_ivf", "_p2")
+    StatePath(dir, "s15i_ivf", "_p3")
 
   // s15q's IVF sibling (r20): the retrieval index takes the same
   // takedown, retrains through `retrainIvfLedger` (cells re-keyed,

@@ -10,12 +10,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 class LedgerBusy(msg: String) extends IllegalArgumentException(msg)
 
 /** The ONE crash protocol of every persisted ledger (the d9/d16 hash
-  * ledger, the d13 band ledger, the s8 IVF ledger, the s10 kNN graph
-  * ledger): a ledger path has exactly one writer at a time, every
-  * writer heals a torn swap before it touches the path, and a whole-
-  * or partial-ledger rewrite is staged beside the live dir and swapped
-  * in rename-aside, so at every instant a full committed copy exists
-  * under the live name or its backup name.
+  * ledger, and the segmented d13 band, s8 IVF and s10 kNN-graph
+  * ledgers of [[SegmentLedger]]): a ledger path has exactly one writer
+  * at a time, every writer heals a torn swap before it touches the
+  * path, and a whole- or partial-ledger rewrite is staged beside the
+  * live dir and swapped in rename-aside, so at every instant a full
+  * committed copy exists under the live name or its backup name.
   *
   *  - [[withWriter]]: the per-path writer lock, a SIBLING of the ledger
   *    (`lockPath`) so the swap's renames never move it. Created with
@@ -25,9 +25,8 @@ class LedgerBusy(msg: String) extends IllegalArgumentException(msg)
   *    other through this one lock. Before the body runs it heals a torn
   *    whole-ledger swap (`backupPath` present, live dir gone).
   *  - [[heal]]: restore a backup whose live dir is missing, else drop
-  *    the leftover backup — for whole ledgers and for the sub-dir swaps
-  *    writers run inside a ledger (per-prefix takedowns, tombstone
-  *    rewrites).
+  *    the leftover backup — for whole ledgers and for the sub-dir swap
+  *    a hash-ledger takedown runs inside its ledger (per-prefix slices).
   *  - [[swapIn]]: move live aside, promote staged, restore on a failed
   *    promote, drop the backup; [[swapInAll]] commits several sibling
   *    dirs (a multi-prefix takedown) as one.

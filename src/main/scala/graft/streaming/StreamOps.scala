@@ -434,7 +434,7 @@ object StreamOps {
       org.apache.spark.sql.Row] = {
     require(
       graft.queries.SimilarityOps
-        .s8CommittedSegs(takedowns.sparkSession, path).nonEmpty,
+        .ledgerBootstrapped(takedowns.sparkSession, path),
       s"ANN ledger at $path has no committed segments — takedowns " +
         "apply to a bootstrapped index")
     takedowns.writeStream
@@ -747,7 +747,7 @@ object StreamOps {
     // quantizer on whatever the first micro-batch happens to hold
     require(
       graft.queries.SimilarityOps
-        .s8CommittedSegs(docs.sparkSession, path).nonEmpty,
+        .ledgerBootstrapped(docs.sparkSession, path),
       s"ANN ledger at $path has no committed segments — bootstrap it " +
         "from the standing corpus (refreshIvfLedger) before attaching " +
         "the stream; a cold-started stream would train centroids on " +
@@ -824,7 +824,7 @@ object StreamOps {
       org.apache.spark.sql.Row] = {
     require(
       graft.queries.SimilarityOps
-        .s8CommittedSegs(docs.sparkSession, path).nonEmpty,
+        .ledgerBootstrapped(docs.sparkSession, path),
       s"kNN-graph ledger at $path has no committed segments — " +
         "bootstrap it from the standing corpus (refreshKnnLedger) " +
         "before attaching the stream; a cold-started stream would " +

@@ -29,6 +29,18 @@ class BenchHarnessSpec extends AnyFunSuite with Matchers {
       include("== Physical Plan ==")
   }
 
+  test("prof names every job: a stage job with no description prints " +
+      "its SQL execution's call site") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out) {
+      Bench.mode(Seq("prof", "q1_agg"), TestSpark.sfDir)(spark)
+    }
+    val jobs = out.toString("UTF-8").linesIterator
+      .filter(_.startsWith("[prof] job")).toSeq
+    jobs should not be empty
+    jobs.foreach(_ should not include "withThreadLocalCaptured")
+  }
+
   test("an unknown mode fails with a usage message naming every mode") {
     val e = the[IllegalArgumentException] thrownBy
       Bench.mode(Seq("bogus"), TestSpark.sfDir)

@@ -5,6 +5,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.SparkEntry
 import graft.TestSpark
+import graft.state.SegmentLedger
 
 /** Quality gate for the approximate similarity operators: recall@k
   * against the exact brute-force baseline (s1) on sf0.001. LSH/IVF trade
@@ -108,7 +109,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
         SimilarityOps.refreshIvfLedger(spark, path,
           e.filter(pmod(col("vec_id"), lit(4)) <= i))
       }
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0, 1, 2, 3)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0, 1, 2, 3)
       def snapshot() = SimilarityOps.s8Assign(spark, path, None)
         .collect().map(_.toSeq).sortBy(_.toString)
       val before = snapshot()
@@ -120,7 +121,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       val torn = new java.io.File(s"$path/assign/seg-9/cid=0")
       torn.mkdirs()
       new java.io.File(torn, "part-torn.parquet").createNewFile()
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0, 1, 2, 3)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0, 1, 2, 3)
       SimilarityOps.refreshIvfLedger(spark, path, e) // steady-state
       new java.io.File(s"$path/assign/seg-9").exists() shouldBe false
       snapshot() shouldBe before
@@ -129,7 +130,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // (stale staging from a crashed predecessor must not break it)
       new java.io.File(path + "__compact_staging").mkdirs()
       SimilarityOps.compactIvfLedger(spark, path)
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0)
       snapshot() shouldBe before
       new java.io.File(path + "__compact_backup").exists() shouldBe false
       // appends keep working on the compacted ledger
@@ -180,7 +181,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       lock.delete() shouldBe true
       // released: compaction proceeds and removes its own lock
       SimilarityOps.compactIvfLedger(spark, path)
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0)
       lock.exists() shouldBe false
       // attaching a stream to an un-bootstrapped ledger is refused
       // (the quantizer would otherwise train on the first micro-batch)
@@ -227,7 +228,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       lease.delete() shouldBe true
       // append complete: compaction proceeds
       SimilarityOps.compactIvfLedger(spark, path)
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0)
       // appends release their lease on success and on refusal
       lease.exists() shouldBe false
     } finally {
@@ -253,7 +254,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       SimilarityOps.refreshKnnLedger(spark, path,
         e.filter(pmod(col("vec_id"), lit(4)) <= 1))
       SimilarityOps.refreshKnnLedger(spark, path, e)
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0, 1, 2)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0, 1, 2)
       // batch-sized appends: each segment holds exactly its batch
       def segIds(k: Int) = spark.read.parquet(s"$path/ids/seg-$k")
         .collect().map(_.getLong(0)).toSet
@@ -263,7 +264,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       segIds(2) shouldBe allIds.filter(i => i % 4 == 2 || i % 4 == 3)
       // idempotent: replaying the full corpus appends nothing
       SimilarityOps.refreshKnnLedger(spark, path, e)
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0, 1, 2)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0, 1, 2)
 
       // reference: the one-pass s9-style graph against the STORED
       // quantizer (the incremental-== -from-scratch contract; a full
@@ -286,12 +287,12 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // compaction: one segment, the merged graph row-identical, the
       // whole-ledger swap crash-recoverable, appends keep working
       SimilarityOps.compactKnnLedger(spark, path)
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0)
       SimilarityOps.s10Graph(spark, path, None)
         .orderBy("qid", "rank").collect().map(_.toSeq) shouldBe ref
       new java.io.File(path + "__compact_backup").exists() shouldBe false
       SimilarityOps.refreshKnnLedger(spark, path, e) // idempotent no-op
-      SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0)
+      SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0)
       // crash window between the two renames: live gone, backup
       // present — a refresh arriving first restores, never forks
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
@@ -758,10 +759,10 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     // replay idempotency on the shared ledger: same tombstone set →
     // no new tomb segment, identical output
     val path = SimilarityOps.s8LedgerPath(TestSpark.sfDir)
-    val segsBefore = new java.io.File(s"$path/tombcommits").list().sorted
+    val segsBefore = new java.io.File(s"$path/commits").list().sorted
     SparkEntry.queries("s13_ann_tombstoned")(spark, TestSpark.sfDir)
       .collect().map(_.toSeq).toSeq shouldBe out.map(_.toSeq).toSeq
-    new java.io.File(s"$path/tombcommits").list().sorted shouldBe
+    new java.io.File(s"$path/commits").list().sorted shouldBe
       segsBefore
 
     // dedicated temp ledger for the state-machine checks
@@ -812,7 +813,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       fs.rename(new org.apache.hadoop.fs.Path(tpath),
         new org.apache.hadoop.fs.Path(tpath + "__compact_backup"))
       SimilarityOps.tombstoneIds(spark, tpath, deadOne)
-      SimilarityOps.s8CommittedSegs(spark, tpath) should not be empty
+      SegmentLedger.segments(spark, tpath, "assign") should not be empty
       SimilarityOps.s8Tombs(spark, tpath).collect()
         .map(_.getLong(0)).toSet shouldBe Set(0L)
     } finally {
@@ -895,7 +896,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // retrained ids: everything known, nothing appended)
       SimilarityOps.refreshIvfLedger(spark, grown,
         e.filter(!col("vec_id").isin(deadIds.toSeq: _*)))
-      SimilarityOps.s8CommittedSegs(spark, grown) shouldBe Seq(0)
+      SegmentLedger.segments(spark, grown, "assign") shouldBe Seq(0)
       // crash window between the two renames: live gone, backup
       // present — the next retrain restores and completes
       val fs = new org.apache.hadoop.fs.Path(grown).getFileSystem(
@@ -958,7 +959,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // appends keep working (all alive ids known → no-op)
       SimilarityOps.refreshKnnLedger(spark, grown,
         e.filter(!col("vec_id").isin(deadIds.toSeq: _*)))
-      SimilarityOps.s8CommittedSegs(spark, grown) shouldBe Seq(0)
+      SegmentLedger.segments(spark, grown, "assign") shouldBe Seq(0)
       // crash window between the renames recovers on the next retrain
       val fs = new org.apache.hadoop.fs.Path(grown).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
@@ -989,10 +990,10 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     }
     // replay idempotency: same output, no new tomb segment
     val dpath = SimilarityOps.s14LedgerPath(TestSpark.sfDir)
-    val segsBefore = new java.io.File(s"$dpath/tombcommits").list().sorted
+    val segsBefore = new java.io.File(s"$dpath/commits").list().sorted
     SparkEntry.queries("s14_knn_tombstoned")(spark, TestSpark.sfDir)
       .collect().map(_.toSeq).toSeq shouldBe out.map(_.toSeq).toSeq
-    new java.io.File(s"$dpath/tombcommits").list().sorted shouldBe
+    new java.io.File(s"$dpath/commits").list().sorted shouldBe
       segsBefore
 
     // dedicated temp ledger: ONE bootstrap segment, so the stored
@@ -1092,7 +1093,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // post-compaction, a RE-SUBMISSION of reclaimed content is
       // novel again (the ids sidecar was purged): it re-indexes
       SimilarityOps.refreshKnnLedger(spark, tpath, e)
-      SimilarityOps.s8CommittedSegs(spark, tpath) shouldBe Seq(0, 1)
+      SegmentLedger.segments(spark, tpath, "assign") shouldBe Seq(0, 1)
       graphRows(tpath).map(_._1).toSet
         .intersect(deadIds) should not be empty
     } finally {

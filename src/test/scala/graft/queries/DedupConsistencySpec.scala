@@ -330,11 +330,11 @@ class DedupConsistencySpec extends AnyFunSuite with Matchers {
     }
     def ndFiles() = walk(new java.io.File(ndPath))
       .count(_.getName.startsWith("part-"))
-    val ndBefore = spark.read.parquet(ndPath)
+    val ndBefore = graft.state.SegmentLedger.read(spark, ndPath, "index")
       .collect().map(_.toSeq).sortBy(_.toString)
     ndFiles() should be > 1
-    DedupOps.compactLedger(spark, ndPath)
-    spark.read.parquet(ndPath)
+    DedupOps.compactBandLedger(spark, ndPath)
+    graft.state.SegmentLedger.read(spark, ndPath, "index")
       .collect().map(_.toSeq).sortBy(_.toString) shouldBe ndBefore
     ndFiles() shouldBe 1 // well under 128 MB → one packed file
   }

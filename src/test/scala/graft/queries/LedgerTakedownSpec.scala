@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.state.SegmentLedger
 
 /** Takedowns for the TEXT-side ledgers (r19): the d9/d16 content-hash
   * ledger and the d13 band index are append-only, so without a removal
@@ -160,7 +161,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
           if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
         walk(new java.io.File(path))
           .filter(f => f.getName.startsWith("part-") &&
-            !f.getPath.contains("_tombstones"))
+            !f.getPath.contains("/tombs/"))
           .map(f => (f.getPath, f.lastModified, f.length)).sortBy(_._1)
       }
       val before = dataFiles()
@@ -169,32 +170,29 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       dataFiles() shouldBe before
       matches() shouldBe Set(2L)
       // physical rows linger (shadowed) until compaction
-      spark.read.parquet(path).filter(col("doc_id") === 1L)
-        .count() shouldBe 1L
+      def index() = SegmentLedger.read(spark, path, "index")
+      index().filter(col("doc_id") === 1L).count() shouldBe 1L
       // idempotent + absent ids: zero new tombstone bytes
-      val tombFiles0 = new java.io.File(path, "_tombstones")
-        .listFiles().count(_.getName.startsWith("part-"))
+      def tombFiles() = new java.io.File(path, "tombs").listFiles()
+        .flatMap(_.listFiles()).count(_.getName.startsWith("part-"))
+      val tombFiles0 = tombFiles()
       DedupOps.removeFromBandLedger(spark, path,
         Seq(1L, 999L).toDF("doc_id"))
-      new java.io.File(path, "_tombstones")
-        .listFiles().count(_.getName.startsWith("part-")) shouldBe
-        tombFiles0
+      tombFiles() shouldBe tombFiles0
       matches() shouldBe Set(2L)
 
       // RESURRECTION: re-ingesting doc 1 clears its tombstone — the
       // standing rows un-shadow, and no duplicate row is created
       DedupOps.refreshNearDupLedger(spark, path, ledgerDocs)
       matches() shouldBe Set(1L, 2L)
-      spark.read.parquet(path).filter(col("doc_id") === 1L)
-        .count() shouldBe 1L
+      index().filter(col("doc_id") === 1L).count() shouldBe 1L
       DedupOps.readBandTombstones(spark, path) shouldBe None
 
       // PURGE rides compaction: tombstone doc 2, compact — physical
       // rows gone, tombstones cleared, live matches preserved
       DedupOps.removeFromBandLedger(spark, path, Seq(2L).toDF("doc_id"))
-      DedupOps.compactLedger(spark, path)
-      spark.read.parquet(path).filter(col("doc_id") === 2L)
-        .count() shouldBe 0L
+      DedupOps.compactBandLedger(spark, path)
+      index().filter(col("doc_id") === 2L).count() shouldBe 0L
       DedupOps.readBandTombstones(spark, path) shouldBe None
       matches() shouldBe Set(1L)
       // and doc 2 then re-ingests as genuinely novel (re-indexed)
@@ -209,8 +207,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
   }
 
   test("d13 band ledger: writers share one lock (takedown/refresh/" +
-      "compact refuse under a held lock) and a torn tombstone-rewrite " +
-      "swap heals at the next writer entry") {
+      "compact refuse under a held lock)") {
     val path = tmpPath("d13race")
     try {
       import spark.implicits._
@@ -228,20 +225,8 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       an[IllegalArgumentException] should be thrownBy
         DedupOps.refreshNearDupLedger(spark, path, docs)
       an[IllegalArgumentException] should be thrownBy
-        DedupOps.compactLedger(spark, path)
+        DedupOps.compactBandLedger(spark, path)
       lock.delete() shouldBe true
-      // torn tombstone rewrite: live `_tombstones` renamed aside,
-      // never promoted (crash between the two renames) — the next
-      // writer entry restores it, so the takedown stays in force
-      new java.io.File(path, "_tombstones").renameTo(
-        new java.io.File(path, "_tombstones_backup")) shouldBe true
-      new java.io.File(path, "_tombstones_staging").mkdirs()
-      DedupOps.removeFromBandLedger(spark, path, Seq(999L).toDF("doc_id"))
-      new java.io.File(path, "_tombstones").exists() shouldBe true
-      new java.io.File(path, "_tombstones_backup").exists() shouldBe false
-      new java.io.File(path, "_tombstones_staging").exists() shouldBe false
-      DedupOps.readBandTombstones(spark, path).get
-        .collect().map(_.getLong(0)).toSet shouldBe Set(1L)
     } finally {
       rm(new java.io.File(path))
       rm(new java.io.File(path + "__compact_backup"))
@@ -309,37 +294,6 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
     } finally {
       rm(new java.io.File(path))
       rm(new java.io.File(path + "__compact_backup"))
-    }
-  }
-
-  test("band tombstones FAIL CLOSED across a torn rewrite window: " +
-      "readers fall back to the backup set (over-remove, never " +
-      "re-expose)") {
-    val path = tmpPath("d13closed")
-    try {
-      import spark.implicits._
-      val base = "uno dos tres cuatro cinco seis siete ocho nueve diez " +
-        "once doce trece catorce quince dieciseis diecisiete"
-      val docs = batchOf(Seq((1L, base),
-        (2L, "unrelated second ledger doc with completely other words " +
-          "entirely")))
-      DedupOps.refreshNearDupLedger(spark, path, docs)
-      DedupOps.removeFromBandLedger(spark, path, Seq(1L).toDF("doc_id"))
-      // torn rewrite: live `_tombstones` renamed aside, promote never
-      // ran — a reader must see the PRE-rewrite (superset) set, not
-      // "no tombstones"
-      new java.io.File(path, "_tombstones").renameTo(
-        new java.io.File(path, "_tombstones_backup")) shouldBe true
-      DedupOps.readBandTombstones(spark, path).get
-        .collect().map(_.getLong(0)).toSet shouldBe Set(1L)
-      val probe = graft.operators.ScratchCache.scratch(
-        DedupOps.minhashIndex(batchOf(Seq(
-          (10L, base.replace("diecisiete", "cero"))))))
-      DedupOps.nearDupProbe(probe, DedupOps.readBandLedger(spark, path))
-        .count() shouldBe 0L // still excluded through the crash window
-    } finally {
-      rm(new java.io.File(path))
-      graft.operators.ScratchCache.releaseAll()
     }
   }
 

@@ -17,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
-import graft.queries.SimilarityOps
+import graft.queries.{DedupOps, SimilarityOps}
+import graft.state.SegmentLedger
 
 /** [[Parquet.read]] must resolve exactly the schema Spark's own inference
   * would, on every layout graft reads, and must do it with no Spark job:
@@ -162,29 +163,54 @@ class ParquetReadSpec extends AnyFunSuite with Matchers {
 
   test("building q1–q5 and q29 at sf0.01 launches no job") {
     val dir = s"${new java.io.File(TestSpark.sfDir).getParent}/sf0.01"
-    Seq("q1_agg", "q2_filter_project", "q3_join_broadcast", "q4_star_join",
-        "q5_window_rank", "q29_sessionize").foreach { q =>
+    // q23 keeps GlobalOrder's offsets job and the 2 jobs upstream of it;
+    // its row count comes from the offsets job
+    (Seq("q1_agg", "q2_filter_project", "q3_join_broadcast", "q4_star_join",
+        "q5_window_rank", "q29_sessionize").map(_ -> 0) :+
+        ("q23_percentiles" -> 3)).foreach { case (q, bound) =>
       withClue(s"$q: ") {
-        jobsDuring(spark)(graft.SparkEntry.queries(q)(spark, dir)) shouldBe 0
+        jobsDuring(spark)(graft.SparkEntry.queries(q)(spark, dir)) should
+          be <= bound
       }
     }
   }
 
   test("building s8Assign launches no job at 2 segments and at 6") {
-    val path = s"${tmp("s8")}/s8_ivf"
+    val root = tmp("seg")
+    val (s8, s10, d13) = (s"$root/s8_ivf", s"$root/s10_knn", s"$root/d13")
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
       .select("vec_id", "embedding")
-    def append(upTo: Int): Unit = SimilarityOps.refreshIvfLedger(spark,
-      path, emb.filter(col("vec_id") % 6 < upTo))
-    def assignJobs(): Int =
-      jobsDuring(spark)(SimilarityOps.s8Assign(spark, path, None))
+    val docs = Tables.load(spark, TestSpark.sfDir, "documents")
+      .select("doc_id", "text")
+    def append(upTo: Int): Unit = {
+      SimilarityOps.refreshIvfLedger(spark, s8,
+        emb.filter(col("vec_id") % 6 < upTo))
+      SimilarityOps.refreshKnnLedger(spark, s10,
+        emb.filter(col("vec_id") % 6 < upTo))
+      DedupOps.refreshNearDupLedger(spark, d13,
+        docs.filter(col("doc_id") % 6 < upTo))
+    }
+    def buildJobs(): Seq[Int] = Seq(
+      jobsDuring(spark)(SimilarityOps.s8Assign(spark, s8, None)),
+      jobsDuring(spark)(DedupOps.readBandLedger(spark, d13)),
+      jobsDuring(spark)(SimilarityOps.s10Graph(spark, s10, None)))
     (1 to 2).foreach(append)
-    SimilarityOps.s8CommittedSegs(spark, path) shouldBe Seq(0, 1)
-    val atTwo = assignJobs()
+    // d13's log: tomb docs 0 and 6, then untomb doc 0 (re-ingested)
+    DedupOps.removeFromBandLedger(spark, d13, Seq(0L, 6L).toDF("doc_id"))
+    DedupOps.refreshNearDupLedger(spark, d13, docs.filter(col("doc_id") === 0))
+    SegmentLedger.segments(spark, s8, "assign") shouldBe Seq(0, 1)
+    SegmentLedger.segments(spark, s10, "edges") shouldBe Seq(0, 1)
+    SegmentLedger.segments(spark, d13, "index") shouldBe Seq(0, 1)
+    SegmentLedger.segments(spark, d13, "tombs") shouldBe Seq(2, 3)
+    val atTwo = buildJobs()
+    DedupOps.readBandLedger(spark, d13).filter(col("doc_id").isin(0L, 6L))
+      .select("doc_id").as[Long].collect().toSeq shouldBe Seq(0L)
     (3 to 6).foreach(append)
-    SimilarityOps.s8CommittedSegs(spark, path) shouldBe (0 to 5)
-    val atSix = assignJobs()
-    (atTwo, atSix) shouldBe ((0, 0))
-    SimilarityOps.s8Assign(spark, path, None).count() shouldBe emb.count()
+    SegmentLedger.segments(spark, s8, "assign") shouldBe (0 to 5)
+    SegmentLedger.segments(spark, s10, "edges") shouldBe (0 to 5)
+    SegmentLedger.segments(spark, d13, "index").size shouldBe 6
+    val atSix = buildJobs()
+    (atTwo, atSix) shouldBe ((Seq(0, 0, 0), Seq(0, 0, 0)))
+    SimilarityOps.s8Assign(spark, s8, None).count() shouldBe emb.count()
   }
 }

@@ -114,10 +114,8 @@ object FaultFs {
   * [[FaultFs]] over sf0.001-sized ledgers: after the injected crash the
   * "dead" process's locks name a dead pid, and the next writer (one
   * with nothing to add) must reclaim the lock, heal and complete,
-  * leaving the ledger reading exactly its pre-call or post-call content
-  * — for d13's refresh also the one committed state between its append
-  * and its resurrection. A lock naming a live pid or another host must
-  * be refused by name.
+  * leaving the ledger reading exactly its pre-call or post-call content.
+  * A lock naming a live pid or another host must be refused by name.
   */
 class LedgerStateFaultSpec extends AnyFunSuite with Matchers
     with BeforeAndAfterAll {
@@ -175,12 +173,10 @@ class LedgerStateFaultSpec extends AnyFunSuite with Matchers
   /** One writer family: `setup` builds the pre-call ledger, `op` is the
     * writer under test, `noop` a writer of the same ledger with nothing
     * to add (it only takes the lock and heals), `read` the ledger's
-    * content through its read seam. `between` maps the post-call
-    * content to any other committed state the op may legally stop at.
+    * content through its read seam.
     */
   private case class Family(name: String, setup: String => Unit,
-      op: String => Unit, noop: String => Unit, read: String => Seq[String],
-      between: Seq[String] => Seq[Seq[String]] = _ => Nil)
+      op: String => Unit, noop: String => Unit, read: String => Seq[String])
 
   private def hashRead(path: String): Seq[String] =
     spark.read.parquet(path).select("content_hash").collect()
@@ -213,13 +209,6 @@ class LedgerStateFaultSpec extends AnyFunSuite with Matchers
   private val reclaimed = col("doc_id") % 167 === 2 // 3 hash prefixes
   private val seed = col("vec_id") % 4 === 0
   private val gone = col("vec_id") % 7 === 1
-  // d13 refresh commits its fresh-doc append and its resurrection
-  // (tombstone-set rewrite) separately: between the two the ledger
-  // holds the fresh docs with the resurrected ones — the tombstoned
-  // `% 5 = 1` docs of the `some` split it re-submits, `% 10 = 6` —
-  // still shadowed
-  private def resurrected(id: String): Boolean =
-    id.toLong % 10 == 6 && id.toLong % 3 != 0
 
   private lazy val families = Seq(
     Family("d9_refresh",
@@ -250,8 +239,7 @@ class LedgerStateFaultSpec extends AnyFunSuite with Matchers
       },
       p => DedupOps.refreshNearDupLedger(spark, p,
         docs.filter(col("doc_id") % 10 =!= 1)),
-      bandNoop, bandRead,
-      post => Seq(post.filterNot(resurrected))),
+      bandNoop, bandRead),
     Family("d13_takedown",
       p => DedupOps.refreshNearDupLedger(spark, p, docs),
       p => DedupOps.removeFromBandLedger(spark, p,
@@ -264,7 +252,7 @@ class LedgerStateFaultSpec extends AnyFunSuite with Matchers
         DedupOps.removeFromBandLedger(spark, p,
           ids(docs.filter(taken), "doc_id"))
       },
-      p => DedupOps.compactLedger(spark, p), bandNoop, bandRead),
+      p => DedupOps.compactBandLedger(spark, p), bandNoop, bandRead),
     Family("s8_append",
       p => SimilarityOps.refreshIvfLedger(spark, p, emb.filter(seed)),
       p => SimilarityOps.refreshIvfLedger(spark, p, emb),
@@ -380,9 +368,8 @@ class LedgerStateFaultSpec extends AnyFunSuite with Matchers
       healed should not be empty
       atWrite shouldBe defined
     }
-    val allowed = Seq(pre, post) ++ f.between(post)
     for ((at, read) <- healed :+ ("the data write" -> atWrite.get))
-      assert(allowed.contains(read), s"${f.name} crash at $at of " +
+      assert(read == pre || read == post, s"${f.name} crash at $at of " +
         s"${healed.size} ops reads ${read.size} rows: " +
         s"+${read.diff(pre).size}/-${pre.diff(read).size} against pre, " +
         s"+${read.diff(post).size}/-${post.diff(read).size} against post")

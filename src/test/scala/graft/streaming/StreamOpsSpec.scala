@@ -844,9 +844,9 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
         graft.queries.SimilarityOps.s8Tombs(spark, path)
           .collect().map(_.getLong(0)).toSet shouldBe dead.toSet
         // replaying already-applied takedowns appends NO new segment
-        val segs = new java.io.File(s"$path/tombcommits").list().sorted
+        val segs = new java.io.File(s"$path/commits").list().sorted
         in.addData(b1: _*); q.processAllAvailable()
-        new java.io.File(s"$path/tombcommits").list().sorted shouldBe segs
+        new java.io.File(s"$path/commits").list().sorted shouldBe segs
         // a reader that honors tombstones drops them immediately — no
         // compaction, no index rewrite (the raw probe still surfaces
         // them; exclusion is the reader's anti-join, s13's contract)
@@ -892,9 +892,9 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
         graft.queries.SimilarityOps.s8Tombs(spark, path)
           .collect().map(_.getLong(0)).toSet shouldBe dead.toSet
         // replay appends nothing (the batch writer's novelty contract)
-        val segs = new java.io.File(s"$path/tombcommits").list().sorted
+        val segs = new java.io.File(s"$path/commits").list().sorted
         in.addData(b2: _*); q.processAllAvailable()
-        new java.io.File(s"$path/tombcommits").list().sorted shouldBe segs
+        new java.io.File(s"$path/commits").list().sorted shouldBe segs
         // the merged graph read excludes on BOTH sides immediately
         val g = graft.queries.SimilarityOps.s10Graph(spark, path, None)
           .select("qid", "neighbor_id").collect()
