@@ -18,15 +18,21 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *  - `ab <prop> <a> <b> <q…>`: two arms interleaved rep by rep;
   *  - `prof <q…>`: every Spark job of one timed run, and how many of
   *    them started before the frame was built (`build-jobs`);
-  *  - `plans <outDir> <tag> <q…>`: the formatted explain to files.
+  *  - `plans <outDir> <tag> <q…>`: the formatted explain to files;
+  *  - `ledger <scenario> [small] [big]`, `ledger segments <N…>` and
+  *    `recall <rebuild|ledger|filtered> [args]`: the ledger scale and
+  *    ANN recall evidence ([[BenchScenarios]]), timed by [[row]].
   *
-  * Only the full mode writes `BENCH_FULL.json`.
+  * Every mode runs on one session of the host's cores
+  * ([[GraftSession.cpus]]). Only the full mode writes `BENCH_FULL.json`.
   */
 object Bench {
 
   private val usage = "usage: graft.Bench [mode]; modes: full (no args)" +
     " | slice <query...> | ab <prop> <a> <b> <query...> | prof <query...>" +
-    " | plans <outDir> <tag> <query...>"
+    " | plans <outDir> <tag> <query...> | ledger <scenario> [small] [big]" +
+    BenchScenarios.ledger.keys.toSeq.sorted.mkString(" (", "|", ")") +
+    " | ledger segments <N...> | recall rebuild|ledger|filtered [args]"
 
   /** Drop every cached/checkpointed block — queries must not interfere,
     * and a prior run's blocks otherwise pile into the next run's memory
@@ -55,6 +61,31 @@ object Bench {
     val t0 = System.nanoTime()
     body
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Timed reps of a [[row]] and of each `ab` arm. */
+  private val reps = 3
+
+  private def minMed(ts: Seq[Double]): String = {
+    val t = ts.sorted
+    f"min=${t.head}%.2f med=${t(t.size / 2)}%.2f"
+  }
+
+  /** One `[ledger]` row: an untimed warm (`setup`, then `body`), then
+    * [[reps]] reps, each an untimed `setup` and a [[timed]] `body`. Every
+    * rep prints its own line, so the reps of two checkouts' runs can be
+    * interleaved, and then the row's min and median.
+    */
+  private[graft] def row(spark: SparkSession, name: String,
+      setup: => Unit = ())(body: => Unit): Unit = {
+    setup; body
+    val ts = (1 to reps).map { i =>
+      setup
+      val sec = timed(spark)(body)
+      println(f"[ledger] $name rep=$i $sec%.2f")
+      sec
+    }
+    println(s"[ledger] $name ${minMed(ts)}")
   }
 
   private[graft] def noop(df: DataFrame): Unit =
@@ -161,14 +192,29 @@ object Bench {
     case "prof" +: qs if qs.nonEmpty => prof(_, sfDir, qs)
     case Seq("plans", outDir, tag, qs @ _*) if qs.nonEmpty =>
       plans(_, sfDir, outDir, tag, qs)
+    case Seq("ledger", "segments", ns @ _*)
+        if ns.nonEmpty && ns.forall(_.toIntOption.exists(_ > 0)) =>
+      cleared(BenchScenarios.segments(_, ns.map(_.toInt)))
+    case Seq("ledger", sc, dirs @ _*)
+        if BenchScenarios.ledger.contains(sc) && dirs.size <= 2 =>
+      cleared(BenchScenarios.ledger(sc)(_, dirs.headOption.getOrElse(sfDir),
+        dirs.lift(1).getOrElse("/tmp/graft_sf1")))
+    case Seq("recall", "filtered") => cleared(BenchScenarios.filtered(_, sfDir))
+    case Seq("recall", seed @ ("rebuild" | "ledger"), ns @ _*)
+        if ns.size <= (if (seed == "rebuild") 3 else 2) &&
+          ns.forall(_.toIntOption.exists(_ >= 0)) =>
+      cleared(BenchScenarios.curve(_, sfDir, seed, ns.map(_.toInt)))
     case _ => throw new IllegalArgumentException(usage)
   }
 
+  /** `body`, then [[clear]]: a mode leaves no pinned block behind. */
+  private def cleared(body: SparkSession => Unit): SparkSession => Unit =
+    s => try body(s) finally clear(s)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val body = mode(args.toSeq, sfDir)
-    val spark = GraftSession.local(cpus, "graft-bench")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-bench")
     warm(spark, sfDir)
     body(spark)
     spark.stop()
@@ -213,7 +259,7 @@ object Bench {
     * instead of poisoning a sequential compare. An arm is a `spark.*`
     * runtime conf or else a JVM system property read at query
     * construction (e.g. graft.pchain.par). Prints min and median of
-    * 3 reps per arm.
+    * [[reps]] reps per arm.
     */
   private def ab(spark: SparkSession, sfDir: String, prop: String,
       a: String, b: String, names: Seq[String]): Unit = names.foreach { q =>
@@ -224,11 +270,9 @@ object Bench {
       finally if (!prop.startsWith("spark.")) sys.props.remove(prop)
     }
     arm(a); arm(b) // warm both arms (codegen differs per arm)
-    val runs = Seq.fill(3)(Seq(a -> arm(a), b -> arm(b))).flatten
-    def stats(v: String): String = {
-      val t = runs.collect { case (`v`, s) => s }.sorted
-      f"$prop=$v min=${t.head}%.2f med=${t(t.size / 2)}%.2f"
-    }
+    val runs = Seq.fill(reps)(Seq(a -> arm(a), b -> arm(b))).flatten
+    def stats(v: String): String =
+      s"$prop=$v ${minMed(runs.collect { case (`v`, s) => s })}"
     println(s"[ab] $q ${stats(a)} | ${stats(b)}")
   }
 

@@ -71,6 +71,12 @@ object GraftSession {
     extra.foldLeft(base) { case (bb, (k, v)) => bb.config(k, v) }
   }
 
+  /** The cores a local main runs on (Bench, Verify, ScaleUp,
+    * MigratorCli): the env var read below, else every core of the host.
+    */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Local session with the profile applied (Bench, Verify, Smoke). */
   def local(cores: Int, appName: String = "graft"): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$cores]")

@@ -74,8 +74,7 @@ object ScaleUp {
     val Array(inDir, outDir, factorStr) = args.take(3)
     val factor = factorStr.toInt
     require(factor >= 1 && factor <= 1024, s"factor out of range: $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.local(cpus, "graft-scaleup")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-scaleup")
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

@@ -44,8 +44,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     // the profile Bench times is the profile the oracle gate checks
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-verify")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-verify")
     val failed = runQueries(spark,
       SparkEntry.queries.toSeq
         .filter { case (name, _) => only.forall(_.contains(name)) },

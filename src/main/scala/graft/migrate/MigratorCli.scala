@@ -91,8 +91,8 @@ object MigratorCli {
     * failure (Core.pm:140 createOrUpdate is the reference tool's verb).
     */
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-migrate")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus,
+      "graft-migrate")
     try build(spark, args.toIndexedSeq).createOrUpdate()
     catch {
       case e: IllegalArgumentException =>

@@ -1305,7 +1305,7 @@ object DedupOps extends QueryGroup {
     * each batch leaves one file fragment per partition it touches, and
     * after a year of daily runs every ledger read pays a listing +
     * parquet-footer tax of ~365 fragments per partition (measured in
-    * LedgerScaleBench `compact`). Compaction is the periodic
+    * `Bench ledger compact`). Compaction is the periodic
     * counterpart: ONE scan + one write (the floor for a physical
     * re-layout, the F14 rebucket economics), preserving the layout the
     * readers depend on — the 16 partition dirs and therefore the
@@ -1547,7 +1547,7 @@ object DedupOps extends QueryGroup {
     * (either side in the [[minhashIndex]] schema) — band equi-join +
     * first-collision filter + exact sorted-merge Jaccard at
     * [[jaccardT]]. One definition, shared by the d13 QueryDef and
-    * `LedgerScaleBench`'s flat-growth measurement, so the bench can
+    * `Bench ledger bandTakedown`'s flat-growth probe rows, so the bench can
     * never drift from the operator it claims to time.
     */
   private[graft] def nearDupProbe(batchIdx: DataFrame,

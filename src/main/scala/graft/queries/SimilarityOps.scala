@@ -810,7 +810,7 @@ object SimilarityOps extends QueryGroup {
 
   /** The daily query plan alone: probe the PERSISTED index with query
     * vectors `q` (request-sized). Factored from [[s8Candidates]] so
-    * `LedgerScaleBench` times exactly this plan against a grown index.
+    * `Bench ledger s8` times exactly this plan against a grown index.
     *
     * `nprobeBoost` widens the probe budget by that many extra cells —
     * the ESCALATION knob for predicate-filtered retrieval (s12): a
@@ -819,7 +819,7 @@ object SimilarityOps extends QueryGroup {
     * tanking recall; boosting trades a linearly larger index read for
     * coverage (nprobe ≥ cells degenerates to the exact filtered scan —
     * recall 1.0 by construction, spec-gated). The recall-vs-selectivity
-    * curve behind the knob's sizing is `graft.RecallCurve filtered`
+    * curve behind the knob's sizing is `graft.Bench recall filtered`
     * (BASELINE §recall-curve r19).
     */
   private[graft] def s8Probe(s: SparkSession, path: String,
@@ -1193,7 +1193,7 @@ object SimilarityOps extends QueryGroup {
   // the probe rows landing in the batch's home cells (a
   // partition-pruned read; linear BYTES in the worst case of a batch
   // hitting every cell, but never the from-scratch rebuild's n^1.5
-  // candidate COMPUTE — the LedgerScaleBench s10 scenario measures the
+  // candidate COMPUTE — the `Bench ledger s10` scenario measures the
   // flatness):
   //
   //   ledger = centroids (trained once at bootstrap, then FIXED — the
@@ -1258,7 +1258,7 @@ object SimilarityOps extends QueryGroup {
   // append time by an id-keyed join against the ledger's own assign
   // rows (standing side: an UNPRUNED but column-pruned scan of
   // assign — (vec_id, embedding) only; batch side: the batch's own
-  // assign seg). Measured same-window (LedgerScaleBench s10, BASELINE
+  // assign seg). Measured same-window (`Bench ledger s10`, BASELINE
   // §recall-curve): 60× less probe storage (90.2 → 1.5 MiB at the 10×
   // corpus) for +9% append wall (8.87 → 9.66 s) and identical reads —
   // slim ships as the default; fat stays the documented twin
@@ -1615,7 +1615,7 @@ object SimilarityOps extends QueryGroup {
   // dedup/anti-join disjointness, and the merge are all cross-checked.
   // Recall: AnnRecallSpec measures the round-0/1 lift vs the exact
   // graph; the recall-vs-cost curve (rounds 0/1/2) lives in BASELINE
-  // via graft.RecallCurve.
+  // via `graft.Bench recall`.
 
   /** One NN-descent round over an edge frame (qid, vec_id, cosine):
     * the refined top-KG graph, unordered. Iterable — round 2 is

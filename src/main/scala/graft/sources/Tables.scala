@@ -52,11 +52,16 @@ object Tables {
     val raw =
       try Parquet.read(spark, path)
       catch {
-        // TIMESTAMP(NANOS) footer: only readable as raw int64 nanos
+        // TIMESTAMP(NANOS) footer: only typed (as raw int64 nanos) with
+        // the flag set; the resolved LongType schema then reads right
+        // with it unset, so the caller's value comes back after the read
         case e: Exception if e.getMessage != null &&
             e.getMessage.contains("NANOS") =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          Parquet.read(spark, path)
+          val flag = "spark.sql.legacy.parquet.nanosAsLong"
+          val prev = spark.conf.getAll.get(flag) // None when unset
+          spark.conf.set(flag, "true")
+          try Parquet.read(spark, path)
+          finally prev.fold(spark.conf.unset(flag))(spark.conf.set(flag, _))
       }
     val withMs = raw.schema("ts").dataType match {
       // integer `div`, NOT `/`: epoch-nanos overflow double's 53-bit

@@ -420,7 +420,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     // expansion rebuilds the working width, so the daily cost is
     // O(batch) maintenance + linear descent rounds, never the n^1.5
     // seed rebuild. Measured 0.830 at the shipped defaults, curve
-    // 0.624 (ledger seed) → 0.680 → 0.830 (RecallCurve ledger arm,
+    // 0.624 (ledger seed) → 0.680 → 0.830 (`Bench recall ledger`,
     // r18 — BASELINE §recall-curve); floor shared with the rebuild
     // arm.
     val dir = "/root/testdata/sf0.1"

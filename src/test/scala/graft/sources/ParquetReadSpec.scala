@@ -151,14 +151,20 @@ class ParquetReadSpec extends AnyFunSuite with Matchers {
     try nanos.zipWithIndex.foreach { case (ns, i) =>
       w.write(rows.newGroup().append("event_id", i.toLong).append("ts", ns))
     } finally w.close()
-    // a fresh session: the fallback sets nanosAsLong on the session
-    val s = spark.newSession()
-    intercept[Exception](Parquet.read(s, path)).getClass shouldBe
-      intercept[Exception](s.read.parquet(path)).getClass
-    val loaded = Tables.loadEvents(s, path).orderBy("event_id")
+    val flag = "spark.sql.legacy.parquet.nanosAsLong"
+    def state = (spark.conf.getOption(flag), spark.conf.getAll.get(flag))
+    val before = state
+    intercept[Exception](Parquet.read(spark, path)).getClass shouldBe
+      intercept[Exception](spark.read.parquet(path)).getClass
+    val loaded = Tables.loadEvents(spark, path).orderBy("event_id")
     loaded.select("ts_ms").as[Long].collect().toSeq shouldBe
       nanos.map(_ / 1000000L)
-    Parquet.read(s, path).schema shouldBe s.read.parquet(path).schema
+    // the fallback leaves the caller's session as it found it
+    state shouldBe before
+    spark.conf.set(flag, "true")
+    try Parquet.read(spark, path).schema shouldBe
+      spark.read.parquet(path).schema
+    finally before._2.fold(spark.conf.unset(flag))(spark.conf.set(flag, _))
   }
 
   test("building q1–q5 and q29 at sf0.01 launches no job") {
