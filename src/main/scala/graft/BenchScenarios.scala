@@ -40,9 +40,8 @@ import graft.state.SegmentLedger
   *  - `bandTakedown`: a fixed takedown committed to the d13 band
   *    ledger's tombstone log, with the batch's near-dup probe before
   *    and after (§sf1 d13 rows, §sf10 r20, §r26);
-  *  - `s10`: a fixed novel batch appended to the kNN-graph ledger, fat
-  *    and slim probes, the merged read after it and the refined read
-  *    (§s10 growth, §r26);
+  *  - `s10`: a fixed novel batch appended to the kNN-graph ledger, the
+  *    merged read after it and the refined read (§s10 growth, §r26);
   *  - `compact` (small only): d9's ingest against a 100-append chain,
   *    its compaction, and the ingest after (§sf1, ledger compaction).
   *
@@ -88,15 +87,15 @@ object BenchScenarios {
       f: (String, String) => Unit): Unit =
     Seq(small -> "1x", big -> "10x").foreach(f.tupled)
 
-  /** The two-day shape of the s8 ledger, or with `slim` given of the s10
+  /** The two-day shape of the s8 ledger, or with `knn` of the s10
     * ledger: bootstrap on 7/8ths of `dir`'s embeddings, then append the
     * rest as a second segment.
     */
   private def twoDay(spark: SparkSession, dir: String, path: String,
-      slim: Option[Boolean] = None): String = {
-    def refresh(p: String, e: DataFrame): Unit = slim.fold(
-      SimilarityOps.refreshIvfLedger(spark, p, e))(
-      SimilarityOps.refreshKnnLedger(spark, p, e, _))
+      knn: Boolean = false): String = {
+    def refresh(p: String, e: DataFrame): Unit =
+      if (knn) SimilarityOps.refreshKnnLedger(spark, p, e)
+      else SimilarityOps.refreshIvfLedger(spark, p, e)
     val e = emb(spark, dir)
     refresh(freshPath(path), e.filter(pmod(col("vec_id"), lit(8)) =!= 5))
     refresh(path, e)
@@ -177,7 +176,7 @@ object BenchScenarios {
       r.onCopy(s"retrain_${tag}_index", twoDay(spark, dir,
         r.path(s"seed_ivf_$tag")))(SimilarityOps.retrainIvfLedger(spark, _))
       r.onCopy(s"retrainKnn_${tag}_graph", twoDay(spark, dir,
-        r.path(s"seed_knn_$tag"), Some(true)))(
+        r.path(s"seed_knn_$tag"), knn = true))(
         SimilarityOps.retrainKnnLedger(spark, _))
     }
   }
@@ -194,7 +193,7 @@ object BenchScenarios {
     val ids = emb(spark, small).select("vec_id")
       .filter(pmod(col("vec_id"), lit(97L)) === 13L)
     scales(small, big) { (dir, tag) =>
-      val base = twoDay(spark, dir, r.path(s"seed_$tag"), Some(true))
+      val base = twoDay(spark, dir, r.path(s"seed_$tag"), knn = true)
       val tombed = copy(spark, base, r.path(s"seed_tombed_$tag"))
       SimilarityOps.tombstoneIds(spark, tombed, ids)
       Seq(base -> "no_tombs", tombed -> "tombed").foreach { case (seed, arm) =>
@@ -237,24 +236,18 @@ object BenchScenarios {
       .filter(pmod(col("vec_id"), lit(8)) === 5)
       .select((col("vec_id") + 100000000L).as("vec_id"), col("embedding")),
       r.path("batch"))
-    def mib(path: String): String =
-      f"${FileUtil.getDU(new File(s"$path/probes")) / 1048576.0}%.1f MiB"
     scales(small, big) { (dir, tag) =>
-      val seeds = Seq(false -> "s10", true -> "s10slim").map { case (slim, arm) =>
-        arm -> twoDay(spark, dir, r.path(s"seed_${arm}_$tag"), Some(slim))
-      }
+      val seed = twoDay(spark, dir, r.path(s"seed_$tag"), knn = true)
       // the production read: the maintained graph plus 2 NN-descent
       // rounds at workK = 2·KG, on the standing ledger
       r.row(s"s10_refined_read_vs_${tag}_graph")(Bench.noop(
-        SimilarityOps.knnGraphRefinedLedger(spark, dir, seeds.head._2)))
-      seeds.foreach { case (arm, seed) =>
-        val grown = r.onCopy(s"${arm}_append_batch_vs_${tag}_graph", seed)(
-          SimilarityOps.refreshKnnLedger(spark, _, batch))
-        r.row(s"${arm}_read_vs_${tag}_graph")(
-          Bench.noop(SimilarityOps.s10Graph(spark, grown, None)))
-      }
+        SimilarityOps.knnGraphRefinedLedger(spark, dir, seed)))
+      val grown = r.onCopy(s"s10_append_batch_vs_${tag}_graph", seed)(
+        SimilarityOps.refreshKnnLedger(spark, _, batch))
+      r.row(s"s10_read_vs_${tag}_graph")(
+        Bench.noop(SimilarityOps.s10Graph(spark, grown, None)))
       println(s"[ledger] s10 probes_bytes_$tag " +
-        seeds.map { case (arm, seed) => s"$arm=${mib(seed)}" }.mkString(" "))
+        f"${FileUtil.getDU(new File(s"$seed/probes")) / 1048576.0}%.1f MiB")
     }
   }
 

@@ -24,14 +24,14 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale shape mirrors [[JaccardNearDup]]: unique-set armor (mass
   * duplicates verify once per SET pair, members recovered after),
-  * ScratchCache'd shingle tables, the df-ordered rare-token prefix +
-  * sort-merge hints engaged together above
-  * [[JaccardNearDup.dfOrderMinDocs]] (the r14 hot-demotion
-  * head-to-head kept df here — see [[pairsAuto]]), exact verification
-  * via the native sorted-merge intersect count. The container-side token list
-  * is corpus-sized by necessity — containment cannot prefix-restrict
-  * the side being searched — which is the same table d2's verify stage
-  * already materializes.
+  * ScratchCache'd shingle tables, exact verification via the native
+  * sorted-merge intersect count, and one arm per size regime
+  * ([[pairs]]' `large` flag, keyed to corpus size by [[pairsAuto]]):
+  * the tokens' own order below [[JaccardNearDup.largeCorpusMinDocs]],
+  * the df-ascending rare-token order + sort-merge hints at or above
+  * it. The container-side token list is corpus-sized by necessity —
+  * containment cannot prefix-restrict the side being searched — which
+  * is the same table d2's verify stage already materializes.
   *
   * @param toks (id, tokens) — tokens must be SORTED distinct longs
   *             (hash tokens first; see DedupOps.shingled)
@@ -40,34 +40,35 @@ import org.apache.spark.sql.types.LongType
   */
 object ContainmentNearDup {
 
-  /** [[pairs]] with the ordering + join-hint armor auto-selected from
-    * corpus size (same switch point as the Jaccard twin).
+  /** [[pairs]] with the arm auto-selected from corpus size (same
+    * switch point as the Jaccard twin).
+    *
+    * The large arm orders DF-ASCENDING, where Jaccard's demotes the
+    * hot head, for a structural reason: Jaccard's candidate join is
+    * prefix × prefix, so any hot-free order bounds both sides, while
+    * containment joins the contained prefix against the container
+    * side's FULL token lists — candidate volume is
+    * Σ_prefix-tokens df(tok), LINEARLY df-sensitive, and only the
+    * df-ascending prefix minimizes it. Measured, the two orders tie:
+    * d12 at sf10 read 24.5 s df vs 23.6 s hot-demoted in one window,
+    * arms interleaved (BASELINE §sf10 r14; the earlier 20.2 vs 26.0 s
+    * came from two different host windows), so the structural argument
+    * decides (BASELINE §r28).
     */
   def pairsAuto(toks: DataFrame, idCol: String, toksCol: String,
-      t: Double, nDocs: Long): DataFrame = {
-    val large = nDocs >= JaccardNearDup.dfOrderMinDocs
-    // Containment keeps the DF-ASCENDING ordering at scale — the r14
-    // hot-demotion head-to-head went the OPPOSITE way from Jaccard
-    // (sf10 20.2 s df vs 26.0 s hot-demoted; Jaccard: 24.1 → 12.7 the
-    // other direction), for a structural reason: Jaccard's candidate
-    // join is prefix × prefix, so any hot-free ordering bounds both
-    // sides, while containment joins the contained prefix against the
-    // container side's FULL token lists — candidate volume is
-    // Σ_prefix-tokens df(tok), LINEARLY df-sensitive, and only the
-    // df-ascending prefix minimizes it. The hot-demoted arm stays as
-    // the measured comparison (specs + BASELINE §sf10 r14).
-    pairs(toks, idCol, toksCol, t, dfOrdered = large, noBroadcast = large)
-  }
+      t: Double, nDocs: Long): DataFrame =
+    pairs(toks, idCol, toksCol, t,
+      large = nDocs >= JaccardNearDup.largeCorpusMinDocs)
 
+  /** `large = true` orders each set df-ascending and puts sort-merge
+    * hints on every corpus-derived join side (the Jaccard twin's
+    * broadcast-guard reason); result-identical either way.
+    */
   def pairs(toks: DataFrame, idCol: String, toksCol: String,
-      t: Double, dfOrdered: Boolean = false,
-      noBroadcast: Boolean = false,
-      hotDemoted: Boolean = false): DataFrame = {
+      t: Double, large: Boolean = false): DataFrame = {
     require(t > 0.0 && t <= 1.0, s"containment threshold in (0,1], got $t")
-    require(!(dfOrdered && hotDemoted),
-      "dfOrdered and hotDemoted are alternative orderings — pick one")
     def nb(df: DataFrame): DataFrame =
-      if (noBroadcast) df.hint("merge") else df
+      if (large) df.hint("merge") else df
     val members = ScratchCache.scratch(
       toks.select(col(idCol).as("doc_id"), col(toksCol).as("sh"))
         .withColumn("n", size(col("sh"))))
@@ -79,30 +80,14 @@ object ContainmentNearDup {
     val prefLen = (col("n") - ceil(col("n") * t) + 1).cast("int")
 
     // both sides carry each token's 1-based POSITION under a shared
-    // global token order (hash order by default, (df, tok) when
-    // df-ordered) — it feeds the PPJoin-style positional filter below.
-    // The df-ordered build is SHARED by both sides, so the container
-    // side reuses the one tok⋈df window pass instead of re-exploding
-    // (the per-doc window ranks a doc's own tokens — bounded by set
-    // size, never a corpus funnel).
+    // global token order (hash order, (df, tok) when large) — it feeds
+    // the PPJoin-style positional filter below. The df-ordered build
+    // is SHARED by both sides, so the container side reuses the one
+    // tok⋈df window pass instead of re-exploding (the per-doc window
+    // ranks a doc's own tokens — bounded by set size, never a corpus
+    // funnel).
     val posTok = ScratchCache.scratch(
-      if (hotDemoted) {
-        // r14: the Zipf head is demoted below every rare token by the
-        // shared native merge expression — no hot token can enter a
-        // contained-side prefix, the same skew kill as the df window
-        // arm below with NO corpus-exploded token⋈df join and NO
-        // per-doc window. (isHot, tok) is a total order shared by
-        // every row, which is all the one-sided prefix + positional
-        // bounds need; both join sides position under it (this ONE
-        // reordered posexplode feeds contained prefix AND container
-        // list). Identity spec-proven against brute force with
-        // demotion engaged (DedupConsistencySpec, 3-arm).
-        val reordered = JaccardNearDup.demotedByZipfHead(sets, "sh")
-        sets.select(col("doc_id"), col("n"),
-          posexplode(reordered).as(Seq("pos0", "tok")))
-          .select(col("doc_id"), col("n"), col("tok"),
-            (col("pos0") + 1).as("pos"))
-      } else if (!dfOrdered)
+      if (!large)
         sets.select(col("doc_id"), col("n"),
           posexplode(col("sh")).as(Seq("pos0", "tok")))
           .select(col("doc_id"), col("n"), col("tok"),

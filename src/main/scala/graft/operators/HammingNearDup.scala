@@ -36,14 +36,10 @@ import graft.functions.HashFunctions.hamming64
   * shuffle INPUT is d tiny rows — so AQE's bytes-based skew split never
   * fires (measured identical with it on/off, BASELINE §skew), and
   * dropping the key would break the pigeonhole guarantee (a pair whose
-  * only ≤1-error block is the dropped one is lost). The measured armor
-  * is an explicit probe-side SALT on detected hot keys
-  * (`saltHotBlocks`, [[pairsWide]]): 2.4–2.6× within-window at
-  * d = 60k of n = 150k (64.0 → 24.8 / 80.6 → 34.1 s across two
-  * windows; BASELINE §skew, full table incl. the pathological
-  * small-index broadcast shape at 106.7 s). Opt-in: a NATURAL
-  * corpus' hot set measured harmless, so the default pays neither
-  * the detection job nor the salt plumbing.
+  * only ≤1-error block is the dropped one is lost). A probe-side salt
+  * on detected hot keys measured 2.4–2.6× on a planted boilerplate
+  * corpus (d = 60k of n = 150k) but no stable separation on d4's
+  * natural corpus, so no arm salts (BASELINE §skew, §r28).
   * [[pairs]] (64-bit) backs MM3's binary pHash; d4's text simhash runs
   * the 128-bit [[pairsWide]] (measured fastest at every corpus size —
   * BASELINE §skew), with [[pairsWideNarrowBlocked]] as d14's oracled
@@ -138,10 +134,8 @@ object HammingNearDup {
     * @return (i, j, hamming) with i < j, hamming ≤ maxHam over all 128
     */
   def pairsWide(sigs: DataFrame, idCol: String, hiCol: String,
-      loCol: String, maxHam: Int, saltHotBlocks: Int = 0,
-      hotBlockFloor: Long = hotBlockMinSigs): DataFrame =
-    pairsWideImpl(sigs, idCol, hiCol, loCol, maxHam, blockSpan = 128,
-      saltHotBlocks = saltHotBlocks, hotBlockFloor = hotBlockFloor)
+      loCol: String, maxHam: Int): DataFrame =
+    pairsWideImpl(sigs, idCol, hiCol, loCol, maxHam, blockSpan = 128)
 
   /** [[pairsWide]]'s NARROW-BLOCKED comparison arm: same 128-bit
     * hamming semantics and exact verification, but pigeonhole blocks
@@ -168,22 +162,8 @@ object HammingNearDup {
       hiCol: String, loCol: String, maxHam: Int): DataFrame =
     pairsWideImpl(sigs, idCol, hiCol, loCol, maxHam, blockSpan = 64)
 
-  /** Hot-block keys are detected when their UNIQUE-signature count
-    * reaches this floor — below it a block key's d² candidate output
-    * (≤ 16M pairs) is cheaper than the salt's bookkeeping.
-    */
-  val hotBlockMinSigs: Long = 4096L
-
-  /** Driver-side cap on the collected hot-key set (top-count first);
-    * 3 constant blocks is the planted worst case, real boilerplate
-    * corpora have a handful — the cap only bounds the collect.
-    */
-  val hotBlockMaxKeys: Int = 1024
-
   private def pairsWideImpl(sigs: DataFrame, idCol: String, hiCol: String,
-      loCol: String, maxHam: Int, blockSpan: Int,
-      saltHotBlocks: Int = 0,
-      hotBlockFloor: Long = hotBlockMinSigs): DataFrame = {
+      loCol: String, maxHam: Int, blockSpan: Int): DataFrame = {
     require(maxHam >= 0 && maxHam < 128,
       s"maxHam must be in [0,128), got $maxHam")
     require(blockSpan == 64 || blockSpan == 128,
@@ -230,57 +210,8 @@ object HammingNearDup {
           col("v").bitwiseXOR(lit(1L << bit))): _*)).as("v"))
     val ham = hamming64(col("ha"), col("hb")) +
       hamming64(col("la"), col("lb"))
-    // hot-BLOCK salt (opt-in, BASELINE §skew): a low-entropy corpus
-    // puts d unique signatures on ONE (block, v) key per constant
-    // block; its d² candidate pairs are OUTPUT-compute skew — the
-    // shuffle input for the key is d tiny rows, so AQE's bytes-based
-    // skew split never fires and the key's whole quadratic lands on
-    // the single task owning it. Salting splits the PROBE side of each
-    // detected hot key by signature hash and replicates only the hot
-    // keys' build rows ×salt — d²/salt work per task, lossless (a pair
-    // meets at exactly the probe row's salt). Detection is one
-    // partial-agg count over the (4·uniq)-row block table, collected
-    // bounded (≤ hotBlockMaxKeys). The salt factor is PER KEY,
-    // proportional to its quadratic mass — s = min(saltHotBlocks,
-    // d/floor), keys under 2×floor skipped — so the replication bill
-    // (Σ d·s ≈ Σ d²/floor) scales with the hazard: a natural corpus'
-    // hundreds of mildly vote-correlated keys (none individually
-    // dangerous) must not each pay a flat ×32 build replication.
-    val (probeS, plainS, saltEq) =
-      if (saltHotBlocks <= 1) (probe, plain, lit(true))
-      else {
-        val hot = plain.groupBy("block", "v")
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2L * hotBlockFloor)
-          .orderBy(col("c").desc, col("block"), col("v"))
-          .limit(hotBlockMaxKeys)
-          .collect()
-        if (hot.isEmpty) (probe, plain, lit(true))
-        else {
-          val spark = sigs.sparkSession
-          import spark.implicits._
-          val hotDf = hot.map { r =>
-            val nsalt = math.min(saltHotBlocks.toLong,
-              r.getLong(2) / hotBlockFloor).toInt
-            (r.getInt(0), r.getLong(1), nsalt)
-          }.toSeq.toDF("block", "v", "nsalt")
-          val pS = probe
-            .join(broadcast(hotDf), Seq("block", "v"), "left")
-            .withColumn("salt",
-              pmod(xxhash64(col("hi"), col("lo")),
-                coalesce(col("nsalt"), lit(1)).cast("long")).cast("int"))
-            .drop("nsalt")
-          val bS = plain
-            .join(broadcast(hotDf), Seq("block", "v"), "left")
-            .select(col("hi"), col("lo"), col("block"), col("v"),
-              explode(sequence(lit(0),
-                coalesce(col("nsalt"), lit(1)) - 1)).as("salt"))
-          (pS, bS, col("a.salt") === col("b.salt"))
-        }
-      }
-    val sigPairs = probeS.as("a").join(plainS.as("b"),
+    val sigPairs = probe.as("a").join(plain.as("b"),
       col("a.block") === col("b.block") && col("a.v") === col("b.v") &&
-        saltEq &&
         (col("a.hi") < col("b.hi") ||
           (col("a.hi") === col("b.hi") && col("a.lo") < col("b.lo"))))
       .select(col("a.hi").as("ha"), col("a.lo").as("la"),

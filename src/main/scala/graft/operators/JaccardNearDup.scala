@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -14,14 +13,16 @@ import org.apache.spark.sql.types.LongType
   * `array_intersect` verification filters false positives, so the result
   * is EXACT for either ordering.
   *
-  * Two orderings:
-  *  - default: the tokens' own (numeric) order — zero extra shuffles,
+  * One arm per size regime ([[pairs]]' `large` flag, keyed to corpus
+  * size by [[pairsAuto]]):
+  *  - small: the tokens' own (numeric) order — zero extra shuffles,
   *    the prefix is a `slice` straight off the sorted token array.
-  *  - `dfOrdered = true`: ascending document frequency — two extra
-  *    shuffles (df count + per-doc re-rank), but prefix buckets hold the
-  *    RAREST tokens, which is the skew armor for Zipfian corpora where
-  *    a frequent token would otherwise form one giant join bucket. At
-  *    100 TB with natural-language shingles this is the ordering to run.
+  *  - large: the HOT-DEMOTED order — the corpus' Zipf head sits below
+  *    every rare token, so no frequent token can form one giant prefix
+  *    bucket — plus sort-merge hints on every corpus-derived join.
+  *    It is the same skew kill as a df-ascending prefix at about half
+  *    its cost: d2 at sf10 24.06 s df-ordered vs 12.71 s hot-demoted
+  *    (BASELINE §sf10 r14, §r28).
   *
   * @param toks (id, tokens) — tokens must be SORTED distinct longs
   *             (hash tokens first; see DedupOps.shingled)
@@ -29,28 +30,28 @@ import org.apache.spark.sql.types.LongType
   */
 object JaccardNearDup {
 
-  /** Corpus size at which [[pairsAuto]] flips to the df-ordered prefix.
+  /** Corpus size at which [[pairsAuto]] (and its containment twin,
+    * [[ContainmentNearDup.pairsAuto]], and d3's join hints) switch to
+    * the large-corpus arm.
     *
     * The armor is NOT free, so this is a measured trade, not a free
     * insurance policy. Against it: on a NATURAL (no hot-token) corpus
-    * the df ordering's two extra shuffles measure 2.1–2.2× on d2/d7 at
-    * 50k docs (r7, `Bench slice` on the ScaleUp corpus) — doubling every
-    * well-behaved run. For it: natural-language shingle corpora are
-    * Zipfian, and under the plain token order one frequent token
-    * sitting inside every prefix forms a single O(n²) candidate
-    * bucket — the df-ordered prefix measures 1.8× faster on
-    * that adversarial worst case at 50k docs (42 → 23 s, BASELINE
-    * §skew; only 1.2× at 5k, where the unique-set armor absorbs most
-    * of it), and the gap grows quadratically in n while the armor's
-    * cost grows linearly. The crossover regime is O(100k) docs: below,
-    * the bounded worst case costs less than doubling every normal run;
-    * above, the quadratic risk dominates and the armor engages. Every
-    * driver SF (and the sf1 bench corpus) stays on the
-    * zero-extra-shuffle plan. Both orderings are result-identical
-    * (spec-proven), so the switch can never change output — only the
-    * plan.
+    * the first armor (the df-window order, r7) measured 2.1–2.2× on
+    * d2/d7 at 50k docs (`Bench slice` on the ScaleUp corpus) —
+    * doubling every well-behaved run. For it: natural-language shingle
+    * corpora are Zipfian, and under the plain token order one frequent
+    * token sitting inside every prefix forms a single O(n²) candidate
+    * bucket — 34.27 s plain vs 5.92 s hot-demoted on that adversarial
+    * worst case at 50k docs (BASELINE §skew, r14) — and the gap grows
+    * quadratically in n while the armor's cost grows linearly. The
+    * crossover regime is O(100k) docs: below, the bounded worst case
+    * costs less than taxing every normal run; above, the quadratic
+    * risk dominates and the armor engages. Every driver SF (and the
+    * sf1 bench corpus) stays on the zero-extra-shuffle plan. Both arms
+    * are result-identical (spec-proven), so the switch can never
+    * change output — only the plan.
     */
-  val dfOrderMinDocs: Long = 100000L
+  val largeCorpusMinDocs: Long = 100000L
 
   /** Hot-token demotion thresholds (the r14 armor — see `pairs`):
     * tokens with document frequency ≥ [[hotDfMin]] are demotion
@@ -63,29 +64,28 @@ object JaccardNearDup {
   val hotDfMin: Long = 64L
   val hotMaxSet: Int = 65536
 
-  /** The hot-demotion ordering's build step, shared by the Jaccard and
-    * containment ([[ContainmentNearDup]]) hot arms: collect the Zipf
-    * head of `setsDf`'s token vocabulary (df ≥ [[hotDfMin]], top
+  /** Per-frame memo for [[demotedByZipfHead]]'s Zipf-head collect: the
+    * head build is an EAGER corpus-scale job (explode + groupBy +
+    * driver collect) that would otherwise run at PLAN-CONSTRUCTION time
+    * on every `pairsAuto` call over the same corpus — including
+    * explain-only paths and repeated `pairs()` calls in one session.
+    * Keyed by the frame's semantic hash + column; a hash collision
+    * could only swap in a different demotion ORDER, which is
+    * result-identical by the `pairs` contract (orderings change the
+    * plan, never the output). Bounded: cleared past 64 entries
+    * (sessions see a handful of corpora; the test suite cycles more).
+    */
+  private val hotHeadCache =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int, String), Array[Long]]()
+
+  /** The hot-demoted order's build step: collect the Zipf head of
+    * `setsDf`'s token vocabulary (df ≥ [[hotDfMin]], top
     * [[hotMaxSet]] — a bounded, driver-safe collect at any corpus
     * size) and return `toksCol` reordered so hot tokens sit below
     * every rare token ((isHot, tok) — a total order shared by every
     * row). Empty head (a natural corpus) returns the column unchanged.
     */
-  /** Per-frame memo for the Zipf-head collect below: the head build is
-    * an EAGER corpus-scale job (explode + groupBy + driver collect)
-    * that would otherwise run at PLAN-CONSTRUCTION time on every
-    * `pairsAuto` call over the same corpus — including explain-only
-    * paths and repeated `pairs()` calls in one session. Keyed by the
-    * frame's semantic hash + column; a hash collision could only swap
-    * in a different demotion ORDER, which is result-identical by the
-    * `pairs` contract (orderings change the plan, never the output).
-    * Bounded: cleared past 64 entries (sessions see a handful of
-    * corpora; the test suite cycles more).
-    */
-  private val hotHeadCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, String), Array[Long]]()
-
-  private[operators] def demotedByZipfHead(setsDf: DataFrame,
+  private def demotedByZipfHead(setsDf: DataFrame,
       toksCol: String): org.apache.spark.sql.Column = {
     if (hotHeadCache.size > 64) hotHeadCache.clear()
     // key widened past the 32-bit semanticHash (CANONICALIZED
@@ -123,42 +123,40 @@ object JaccardNearDup {
         new graft.functions.LongArrayParam(hot)))
   }
 
-  /** [[pairs]] with the ordering auto-selected from the corpus size
-    * (`nDocs` — a parquet metadata count upstream, no data scan).
-    * Large corpora get the r14 HOT-DEMOTED prefix (the same skew kill
-    * as the r7 df-ordered window arm — the Zipf head never enters a
-    * prefix — at a fraction of its cost: one vocabulary-bounded
-    * partial agg + a driver-sized collect instead of a corpus-exploded
-    * token join + per-doc window; measured head-to-head in BASELINE
-    * §skew and §sf10 r14).
+  /** [[pairs]] with the arm auto-selected from the corpus size
+    * (`nDocs` — a parquet metadata count upstream, no data scan):
+    * `large` at or above [[largeCorpusMinDocs]].
     */
   def pairsAuto(toks: DataFrame, idCol: String, toksCol: String,
-      t: Double, nDocs: Long): DataFrame = {
-    val large = nDocs >= dfOrderMinDocs
-    pairs(toks, idCol, toksCol, t, hotDemoted = large, noBroadcast = large)
-  }
+      t: Double, nDocs: Long): DataFrame =
+    pairs(toks, idCol, toksCol, t, large = nDocs >= largeCorpusMinDocs)
 
-  /** `noBroadcast = true` puts explicit sort-merge hints on every
-    * corpus-derived join side (the d3/d8 discipline). Catalyst's
-    * size-only estimates undervalue computed shingle tables
-    * (unknown-width array projections under Generate) enough to plan
-    * corpus-sized BROADCASTS: at 500k docs (sf10 probe) the static
-    * plan tried to broadcast the prefix and set tables and died on the
-    * driver's broadcast-build guard, while at driver SFs those same
-    * broadcasts are genuinely optimal (KB-sized sides; forcing merge
-    * everywhere measured 3-4x on d2/d6/d7/p1 at sf0.1). Size-keyed by
-    * [[pairsAuto]] alongside dfOrdered: both armor arms engage
-    * together at >= [[dfOrderMinDocs]]. Result-identical either way
-    * (the hint changes join STRATEGY, never join semantics).
+  /** `large = true` selects the large-corpus arm, whose two halves
+    * always engage together:
+    *  - the HOT-DEMOTED prefix order (r14 skew armor): the Zipf head
+    *    sits below every rare token, so no hot token can enter a
+    *    prefix — a d²-pair bucket needs its token in d prefixes. Cost:
+    *    one vocabulary-bounded partial-agg scan + a ≤ hotMaxSet driver
+    *    collect (the d9 prefix-set class, 512 KB ceiling) + a per-row
+    *    two-pointer merge ([[graft.functions.DemoteHotTokens]]).
+    *    (isHot, tok) is a total order shared by every doc, so the
+    *    PPJoin prefix and positional bounds hold unchanged.
+    *  - explicit sort-merge hints on every corpus-derived join side
+    *    (the d3/d8 discipline). Catalyst's size-only estimates
+    *    undervalue computed shingle tables (unknown-width array
+    *    projections under Generate) enough to plan corpus-sized
+    *    BROADCASTS: at 500k docs (sf10 probe) the static plan tried to
+    *    broadcast the prefix and set tables and died on the driver's
+    *    broadcast-build guard, while at driver SFs those same
+    *    broadcasts are genuinely optimal (KB-sized sides; forcing
+    *    merge everywhere measured 3-4x on d2/d6/d7/p1 at sf0.1).
+    * Result-identical either way (spec-proven): the order changes the
+    * candidate buckets, the hint the join STRATEGY, never the output.
     */
   def pairs(toks: DataFrame, idCol: String, toksCol: String,
-      t: Double, dfOrdered: Boolean = false,
-      noBroadcast: Boolean = false,
-      hotDemoted: Boolean = false): DataFrame = {
-    require(!(dfOrdered && hotDemoted),
-      "dfOrdered and hotDemoted are alternative orderings — pick one")
+      t: Double, large: Boolean = false): DataFrame = {
     def nb(df: DataFrame): DataFrame =
-      if (noBroadcast) df.hint("merge") else df
+      if (large) df.hint("merge") else df
     // corpus-sized scratch: explicit level + releasable, see ScratchCache
     val members = ScratchCache.scratch(
       toks.select(col(idCol).as("doc_id"), col(toksCol).as("sh"))
@@ -175,48 +173,13 @@ object JaccardNearDup {
     val prefLen = (col("n") - ceil(col("n") * t) + 1).cast("int")
 
     // each prefix token carries its 1-based POSITION under the global
-    // token order (the array's own sort by default; (isHot, tok) when
-    // hot-demoted; (df, tok) when df-ordered) — it feeds the PPJoin+
-    // positional filter below
-    val prefix =
-      if (hotDemoted) {
-        // r14 skew armor: the Zipf head is DEMOTED below every rare
-        // token, so no hot token can enter a prefix (same kill as the
-        // df-ordered window arm — a d²-pair bucket needs its token in
-        // d prefixes) without the corpus-exploded df JOIN + per-doc
-        // window that arm pays. Cost: one vocabulary-bounded
-        // partial-agg scan + a ≤ hotMaxSet driver collect (the d9
-        // prefix-set class, 512 KB ceiling) + a per-row two-pointer
-        // merge ([[graft.functions.DemoteHotTokens]]). (isHot, tok) is
-        // a total order shared by every doc, so the PPJoin prefix and
-        // positional bounds hold unchanged; results are
-        // order-invariant (spec-proven across all three arms).
-        val reordered = demotedByZipfHead(sh, "sh")
-        sh.select(col("doc_id"), col("n"),
-          posexplode(slice(reordered, lit(1), prefLen))
-            .as(Seq("pos0", "tok")))
-          .select(col("doc_id"), col("n"), col("tok"),
-            (col("pos0") + 1).as("pos"))
-      } else if (!dfOrdered)
-        sh.select(col("doc_id"), col("n"),
-          posexplode(slice(col("sh"), lit(1), prefLen))
-            .as(Seq("pos0", "tok")))
-          .select(col("doc_id"), col("n"), col("tok"),
-            (col("pos0") + 1).as("pos"))
-      else {
-        // re-rank each doc's tokens by (global df asc, tok) and keep the
-        // prefix of RAREST tokens — same lossless bound, smallest buckets
-        val tok = sh.select(col("doc_id"), col("n"),
-          explode(col("sh")).as("tok"))
-        val df = tok.groupBy("tok").agg(count(lit(1)).as("df"))
-        val w = Window.partitionBy(col("doc_id"))
-          .orderBy(col("df"), col("tok"))
-        // df is vocabulary-sized — same no-broadcast discipline
-        tok.join(nb(df), "tok")
-          .withColumn("pos", row_number().over(w))
-          .filter(col("pos") <= col("n") - ceil(col("n") * t) + 1)
-          .select("doc_id", "n", "tok", "pos")
-      }
+    // token order (the array's own sort; (isHot, tok) when large) — it
+    // feeds the PPJoin+ positional filter below
+    val ordered = if (large) demotedByZipfHead(sh, "sh") else col("sh")
+    val prefix = sh.select(col("doc_id"), col("n"),
+        posexplode(slice(ordered, lit(1), prefLen)).as(Seq("pos0", "tok")))
+      .select(col("doc_id"), col("n"), col("tok"),
+        (col("pos0") + 1).as("pos"))
 
     // POSITIONAL filter (PPJoin+'s bound, symmetric form — Xiao et al.
     // 2008 §3.2, the same bound d12 carries one-sided): a shared token

@@ -80,10 +80,9 @@ object DedupOps extends QueryGroup {
     * Delegates to [[graft.operators.JaccardNearDup]] with the prefix
     * ordering AUTO-SELECTED from corpus size: driver SFs keep the
     * zero-extra-shuffle token order; a corpus-scale run gets the
-    * df-ordered prefix — the skew armor for Zipfian shingle
-    * distributions (measured 1.8× at 50k docs and widening with n,
-    * BASELINE §skew). Identical results either way
-    * (spec-proven), so the switch affects the plan only.
+    * hot-demoted prefix — the skew armor for Zipfian shingle
+    * distributions (BASELINE §skew, §sf10 r14). Identical results
+    * either way (spec-proven), so the switch affects the plan only.
     */
   private[queries] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     graft.operators.JaccardNearDup.pairsAuto(
@@ -148,7 +147,7 @@ object DedupOps extends QueryGroup {
       // so the hints are size-keyed exactly like the d2 armor.
       def nb(df: DataFrame): DataFrame =
         if (CorpusStats.nDocs(s, dir) >=
-          graft.operators.JaccardNearDup.dfOrderMinDocs) df.hint("merge")
+          graft.operators.JaccardNearDup.largeCorpusMinDocs) df.hint("merge")
         else df
       val members = graft.operators.ScratchCache.scratch(shingled(s, dir))
       // signature build, banding and verification run over UNIQUE
@@ -352,13 +351,6 @@ object DedupOps extends QueryGroup {
     (s, dir) => {
       val sig = graft.sources.VerifyTap(simhashSigs128(s, dir), "d4_sigs")
       graft.operators.HammingNearDup
-        // saltHotBlocks stays OFF here, by measurement: on this
-        // NATURAL corpus the salted and unsalted arms are within
-        // window noise at sf10 (no win to buy), while the hazard the
-        // salt kills needs a boilerplate/template corpus — where it
-        // measures 2.4-10x (BASELINE §skew hamming). The knob is the
-        // user-facing answer for low-entropy corpora, not a default
-        // tax plus detection job on every natural one.
         .pairsWide(sig, "doc_id", "hi", "lo", shWideMaxHam)
         .orderBy("i", "j")
     },
@@ -1170,8 +1162,8 @@ object DedupOps extends QueryGroup {
   // generation an equi-join (contained side's rare prefix × container's
   // full token list — the container side admits no prefix or length
   // restriction, by design); exact verification via the native
-  // sorted-merge intersect; same unique-set / df-ordered / merge-hint
-  // armor as d2, auto-keyed by corpus size. See
+  // sorted-merge intersect; the same unique-set armor and size-keyed
+  // merge hints as d2, with a df-ordered prefix at scale. See
   // operators/ContainmentNearDup.
   private val containT = 0.9
   private val d12 = QueryDef(

@@ -1199,8 +1199,8 @@ object SimilarityOps extends QueryGroup {
   //   ledger = centroids (trained once at bootstrap, then FIXED — the
   //   s8 contract that makes incremental ≡ from-scratch provable) +
   //   per-segment assign (vec_id, embedding, cid; cid-partitioned),
-  //   probes (qid, qe, cid; partitioned BY THE PROBED cid — each
-  //   vector's nprobe probe cells WITH its vector riding), edges
+  //   probes (qid, cid; partitioned BY THE PROBED cid — each
+  //   vector's nprobe probe cells, its vector NOT riding), edges
   //   (qid, vec_id, cosine: the segment's per-qid top-KG additions),
   //   and the slim ids sidecar (novelty decisions never read vectors).
   //
@@ -1212,11 +1212,10 @@ object SimilarityOps extends QueryGroup {
   //   (2) standing vectors whose PROBE SET the batch lands in get
   //       their new candidates: committed probes pruned to B's HOME
   //       cells ⋈ B's assign — the probes partitioning makes "who is
-  //       affected" a PartitionFilters read, never a corpus scan, and
-  //       the probed-side qe rides the row so no corpus-wide vector
-  //       fetch follows (the ×nprobe vector storage is the price of
-  //       O(batch) maintenance — the alternative re-scans the corpus'
-  //       vectors every batch);
+  //       affected" a PartitionFilters read, never a corpus scan; the
+  //       affected rows' qe re-attaches by an id join against a
+  //       column-pruned scan of the committed assign rows (the probes
+  //       layout below);
   //   (3) both candidate sets score exact cosine and per-qid top-KG
   //       (bounded heap) into the segment's edges file.
   //
@@ -1248,32 +1247,22 @@ object SimilarityOps extends QueryGroup {
 
   private def s10AssignCols = Seq(col("vec_id"), col("embedding"),
     col("cid").cast(LongType).as("cid"))
-  private def s10ProbeCols = Seq(col("qid"), col("qe"),
+  // PROBES LAYOUT: probes store (qid, cid) only — the query vector
+  // does NOT ride ×nprobe. At 100 TB storing it would multiply the
+  // corpus' vector bytes by the probe budget; instead qe re-derives at
+  // append time by an id-keyed join against the ledger's own assign
+  // rows (standing side: an UNPRUNED but column-pruned scan of assign
+  // — (vec_id, embedding) only; batch side: the batch's own assign
+  // seg). Measured against storing qe (`Bench ledger s10`, BASELINE
+  // §r17 probes-storage, §r27, §r28): 60× less probe storage (90.2 →
+  // 1.5 MiB at the 10× corpus) and identical reads, for +25–26% append
+  // wall. A probes segment that also stores qe (the deleted fat
+  // layout) reads the same: the read projects it to (qid, cid).
+  private def s10ProbeCols = Seq(col("qid"),
     col("cid").cast(LongType).as("cid"))
 
-  // SLIM-probes layout — the SHIPPED default (r17, measured): probes
-  // store (qid, cid) only — the query vector does NOT ride ×nprobe.
-  // At 100 TB the fat layout multiplies the corpus' vector bytes by
-  // the probe budget; the slim arm trades that for re-deriving qe at
-  // append time by an id-keyed join against the ledger's own assign
-  // rows (standing side: an UNPRUNED but column-pruned scan of
-  // assign — (vec_id, embedding) only; batch side: the batch's own
-  // assign seg). Measured same-window (`Bench ledger s10`, BASELINE
-  // §recall-curve): 60× less probe storage (90.2 → 1.5 MiB at the 10×
-  // corpus) for +9% append wall (8.87 → 9.66 s) and identical reads —
-  // slim ships as the default; fat stays the documented twin
-  // (slimProbes = false). Layout is fixed at bootstrap via a marker
-  // file; appends and compaction follow the stored layout. Both arms'
-  // merged reads are row-identical (spec-gated twin).
-  private def s10SlimMarker(path: String) = s"$path/__slim_probes"
-  private[graft] def s10IsSlim(s: SparkSession, path: String): Boolean =
-    fsOf(s, path).exists(hPath(s10SlimMarker(path)))
-  private def s10ProbeColsOf(slim: Boolean): Seq[Column] =
-    if (slim) Seq(col("qid"), col("cid").cast(LongType).as("cid"))
-    else s10ProbeCols
-
   /** Re-attach the probe rows' query vectors from an assign-side
-    * (vec_id, embedding) source — the slim arm's read-time join.
+    * (vec_id, embedding) source.
     */
   private def attachQe(probes: DataFrame, assignSrc: DataFrame)
       : DataFrame =
@@ -1295,23 +1284,10 @@ object SimilarityOps extends QueryGroup {
     * plus the affected standing vectors' additions (header steps 1–3).
     */
   private[graft] def refreshKnnLedger(s: SparkSession, path: String,
-      prior: DataFrame, slimProbes: Boolean = true): Unit =
+      prior: DataFrame): Unit =
       SegmentLedger.withWriter(s, path, "refreshKnnLedger") {
-    val fs = fsOf(s, path)
     val centDir = s"$path/centroids"
     val boot = !ledgerBootstrapped(s, path)
-
-    // layout is fixed at bootstrap; appends follow the STORED layout
-    // (an append's slimProbes arg is ignored once the ledger exists —
-    // mixing layouts across segments would corrupt the probe reads).
-    // A marker left by a bootstrap that crashed before its commit is
-    // equally authoritative: the replay must keep the layout the torn
-    // attempt declared, whatever arg it now receives — otherwise the
-    // marker and the re-written probes could disagree.
-    val slim = s10IsSlim(s, path) || (boot && slimProbes)
-    def probeSel(df: DataFrame): DataFrame =
-      df.select((if (slim) Seq(col("qid"), col("cid"))
-        else Seq(col("qid"), col("qe"), col("cid"))): _*)
 
     // write one segment and commit it: assign/probes land first (each
     // consumed ONCE — edge joins read the written segs back, never
@@ -1320,16 +1296,15 @@ object SimilarityOps extends QueryGroup {
         edgesOf: (DataFrame, DataFrame) => DataFrame): Unit = {
       val k = SegmentLedger.next(s, path)
       writeAssign(s, path, k, assignRows)
-      SegmentLedger.write(probeSel(probeRows), path, "probes", k, Some("cid"))
+      SegmentLedger.write(probeRows.select("qid", "cid"), path, "probes", k,
+        Some("cid"))
       val a = Parquet.read(s, s"$path/assign/seg-$k").select(s10AssignCols: _*)
-      val p = Parquet.read(s, s"$path/probes/seg-$k")
-        .select(s10ProbeColsOf(slim): _*)
+      val p = Parquet.read(s, s"$path/probes/seg-$k").select(s10ProbeCols: _*)
       SegmentLedger.write(edgesOf(a, p), path, "edges", k)
       SegmentLedger.commit(s, path, k)
     }
 
     if (boot) {
-      if (slim) fs.create(hPath(s10SlimMarker(path)), true).close()
       val n = prior.count()
       val cells = LshTuning.ivfCellsFor(n, ivfCellsFloor)
       trainCentroids(prior, cells, n)
@@ -1346,10 +1321,8 @@ object SimilarityOps extends QueryGroup {
         assignNearest(prior, cents).select("vec_id", "cid", "embedding"),
         probeTopAgg(prior, cents, nprobe)) {
         // the first segment's edges = the s9 graph of the bootstrap
-        // corpus (slim: qe re-attaches from the segment's own assign
-        // rows)
-        (a, p) =>
-          s10SegEdges((if (slim) attachQe(p, a) else p).join(a, Seq("cid")))
+        // corpus (qe re-attaches from the segment's own assign rows)
+        (a, p) => s10SegEdges(attachQe(p, a).join(a, Seq("cid")))
       }
     } else {
       val novel = prior
@@ -1361,10 +1334,9 @@ object SimilarityOps extends QueryGroup {
         writeSeg(
           assignNearest(novel, cents).select("vec_id", "cid", "embedding"),
           probeTopAgg(novel, cents, nprobe)) { (bAssign, bProbes0) =>
-          // slim: the batch probes' qe re-attaches from the batch's
-          // own assign seg (batch-sized id join)
-          val bProbes =
-            if (slim) attachQe(bProbes0, bAssign) else bProbes0
+          // the batch probes' qe re-attaches from the batch's own
+          // assign seg (batch-sized id join)
+          val bProbes = attachQe(bProbes0, bAssign)
           // both cid lists are ≤ cells longs (the s8 probedCids class
           // of driver-sized collect — bounded by the centroid count at
           // ANY batch size)
@@ -1379,18 +1351,17 @@ object SimilarityOps extends QueryGroup {
             s8Assign(s, path, Some(probedCids)).unionByName(bAssign),
             Seq("cid"))
           // (2) affected standing vectors vs the batch (pruned to the
-          //     batch's home cells). Slim: the standing probes' qe
+          //     batch's home cells). The standing probes' qe
           //     re-attaches from the standing assign union — UNPRUNED
           //     by cid (a probe row's home cell isn't its probed cell)
           //     but column-pruned to (vec_id, embedding): the measured
           //     append-time price of not storing qe ×nprobe
-          val oldProbes0 = SegmentLedger.read(s, path, "probes",
-            s10ProbeColsOf(slim), Some(batchCids))
-          val candOld = (if (slim)
-              attachQe(oldProbes0, SegmentLedger.read(s, path, "assign",
+          val candOld = attachQe(
+              SegmentLedger.read(s, path, "probes", s10ProbeCols,
+                Some(batchCids)),
+              SegmentLedger.read(s, path, "assign",
                 Seq(col("vec_id"), col("embedding"))))
-            else oldProbes0)
-            .select(s10ProbeCols: _*).join(bAssign, Seq("cid"))
+            .join(bAssign, Seq("cid"))
           s10SegEdges(candNew.unionByName(candOld))
         }
       }
@@ -1445,7 +1416,6 @@ object SimilarityOps extends QueryGroup {
       val hasTombs = SegmentLedger.segments(s, path, "tombs").nonEmpty
       // takedown-sized; consumed by several purge joins below
       val tombs = s8Tombs(s, path).localCheckpoint()
-      val slim = s10IsSlim(s, path)
       Parquet.read(s, s"$path/centroids")
         .write.mode("overwrite").parquet(s"$staging/centroids")
       // consumed once each, wholly before the swap. Live tombstones
@@ -1456,13 +1426,9 @@ object SimilarityOps extends QueryGroup {
       writeAssign(s, staging, 0, s8Assign(s, path, None)
         .join(broadcast(tombs), Seq("vec_id"), "left_anti"))
       SegmentLedger.write(SegmentLedger.read(s, path, "probes",
-          s10ProbeColsOf(slim))
+          s10ProbeCols)
         .join(broadcast(tombs.select(col("vec_id").as("qid"))),
           Seq("qid"), "left_anti"), staging, "probes", 0, Some("cid"))
-      // the layout marker must survive the swap — a compacted slim
-      // ledger whose marker vanished would read probes as fat
-      if (slim)
-        fsOf(s, path).create(hPath(s10SlimMarker(staging)), true).close()
       // edge fold = the merge read itself (exact, idempotent; the
       // read already excludes tombstones on BOTH sides) — PLUS the
       // repair round when a takedown was applied: a vertex that
@@ -1562,10 +1528,8 @@ object SimilarityOps extends QueryGroup {
       val corpus = s8Assign(s, path, None).select("vec_id", "embedding")
         .join(broadcast(s8Tombs(s, path)), Seq("vec_id"), "left_anti")
       // the staging build is a plain bootstrap (its own writer lock on
-      // the staging path — disjoint from the live ledger's); layout
-      // follows the live marker
-      refreshKnnLedger(s, staging, corpus,
-        slimProbes = s10IsSlim(s, path))
+      // the staging path — disjoint from the live ledger's)
+      refreshKnnLedger(s, staging, corpus)
     }
 
   private val s10 = QueryDef(

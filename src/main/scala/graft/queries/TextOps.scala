@@ -584,7 +584,7 @@ object TextOps extends QueryGroup {
     * the big-side row hash + ×buckets model replication; above it, a
     * web-scale vocabulary outgrows broadcast and the hot context
     * becomes a straggler wall. Threshold sits at the same O(100k)
-    * regime as [[graft.operators.JaccardNearDup.dfOrderMinDocs]]: the
+    * regime as [[graft.operators.JaccardNearDup.largeCorpusMinDocs]]: the
     * point where corpus-scale skew armor stops being insurance and
     * starts being the plan you'd want on every natural corpus.
     */

@@ -84,14 +84,14 @@ class HammingNearDupSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("hot-block salt is lossless: planted low-entropy corpus, salted " +
-      "pairs == unsalted == brute force") {
+  test("hot blocks are lossless: planted low-entropy corpus, wide and " +
+      "narrow-blocked pairs == brute force") {
     import spark.implicits._
     val rnd = new scala.util.Random(4177)
     // 60 hot sigs: constant in 3 of 4 pigeonhole blocks (hi and lo's
     // high half), random lo low-32 — three hot (block, v) keys of d=60,
     // the boilerplate-corpus shape BASELINE §skew measures. Plus
-    // 90 uniform background sigs. Floor lowered so detection engages.
+    // 90 uniform background sigs.
     val sigs = (1L to 150L).map { i =>
       if (i <= 60L)
         (i, 0x5A5A5A5A5A5A5A5AL,
@@ -107,9 +107,9 @@ class HammingNearDupSpec extends AnyFunSuite with Matchers {
     brute should not be empty // the planted group must produce pairs
     def got(f: org.apache.spark.sql.DataFrame) = f.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    got(HammingNearDup.pairsWide(df, "id", "hi", "lo", 7,
-      saltHotBlocks = 8, hotBlockFloor = 10L)) shouldBe brute
     got(HammingNearDup.pairsWide(df, "id", "hi", "lo", 7)) shouldBe brute
+    got(HammingNearDup
+      .pairsWideNarrowBlocked(df, "id", "hi", "lo", 7)) shouldBe brute
   }
 
   test("narrow blocking rejects thresholds the lo-half pigeonhole " +

@@ -30,28 +30,23 @@ class JaccardNearDupSpec extends AnyFunSuite with Matchers {
     loose shouldBe Set((1L, 2L), (1L, 3L), (2L, 3L))
   }
 
-  test("df-ordered prefix returns IDENTICAL pairs to token-ordered " +
-    "on the real corpus") {
+  test("large-corpus arm returns IDENTICAL pairs to the token-ordered " +
+    "arm on the real corpus") {
     val sh = graft.sources.Tables
       .load(spark, TestSpark.sfDir, "documents")
       .select(col("doc_id"),
         array_sort(transform(
           graft.functions.HashFunctions.shingles(split(col("text"), " "), 3),
           t => xxhash64(t))).as("sh"))
-    def collectPairs(dfOrdered: Boolean) =
-      JaccardNearDup.pairs(sh, "doc_id", "sh", 0.8, dfOrdered)
+    def collectPairs(large: Boolean) =
+      JaccardNearDup.pairs(sh, "doc_id", "sh", 0.8, large)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val plain = collectPairs(dfOrdered = false)
-    val byDf = collectPairs(dfOrdered = true)
-    byDf shouldBe plain
+    val plain = collectPairs(large = false)
     plain should not be empty
-    // r14 third arm: hot-demoted ordering (hot set empty at this
-    // corpus' dfs — the pass-through path must still be identical)
-    val byHot = JaccardNearDup.pairs(sh, "doc_id", "sh", 0.8,
-        hotDemoted = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    byHot shouldBe plain
+    // hot-demoted order + merge hints (hot set empty at this corpus'
+    // dfs — the pass-through path must still be identical)
+    collectPairs(large = true) shouldBe plain
   }
 
   test("hot-demoted prefix: identical to brute force on an adversarial " +
@@ -78,7 +73,7 @@ class JaccardNearDupSpec extends AnyFunSuite with Matchers {
     } yield (i, j, inter.toLong)).toSet
     brute should not be empty
     val got = JaccardNearDup.pairs(toks(corpus: _*), "id", "toks", 0.8,
-        hotDemoted = true)
+        large = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     got shouldBe brute
 
@@ -131,7 +126,7 @@ class JaccardNearDupSpec extends AnyFunSuite with Matchers {
     for (t <- Seq(0.5, 0.8); ord <- Seq(false, true)) {
       val got = JaccardNearDup.pairs(df, "id", "toks", t, ord)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      withClue(s"t=$t dfOrdered=$ord: ") { got shouldBe brute(t) }
+      withClue(s"t=$t large=$ord: ") { got shouldBe brute(t) }
     }
   }
 
@@ -165,7 +160,7 @@ class JaccardNearDupSpec extends AnyFunSuite with Matchers {
     // BASELINE §skew's scenario at spec scale: every document carries token
     // Long.MinValue — first in every sorted array, so under the plain
     // order it sits in EVERY prefix (one giant candidate bucket), while
-    // the df ordering pushes it out of all prefixes. Both must still
+    // the hot-demoted order pushes it out of all prefixes. Both must still
     // return exactly the brute-force truth.
     val rnd = new scala.util.Random(13)
     val rows = (1L to 150L).map { i =>
@@ -187,22 +182,22 @@ class JaccardNearDupSpec extends AnyFunSuite with Matchers {
     Seq(false, true).foreach { ord =>
       val got = JaccardNearDup.pairs(df, "id", "toks", 0.8, ord)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      withClue(s"dfOrdered=$ord: ") { got shouldBe brute }
+      withClue(s"large=$ord: ") { got shouldBe brute }
     }
   }
 
   test("pairsAuto keys the ordering to corpus size") {
     // below the threshold: the zero-extra-shuffle token order; at or
-    // above: the hot-demoted prefix (r14 — NO df window either: the
-    // armor is a vocabulary agg + driver-collected hot set, so neither
-    // arm may plan a Window; the merge hints are the visible switch)
+    // above: the hot-demoted prefix (a vocabulary agg + driver-collected
+    // hot set, so neither arm may plan a Window; the merge hints are
+    // the visible switch)
     val df = toks(1L -> Seq(1L, 2L, 3L), 2L -> Seq(1L, 2L, 4L))
     val small = JaccardNearDup.pairsAuto(df, "id", "toks", 0.8, nDocs = 2)
       .queryExecution.executedPlan.toString
     small should not include "Window"
     small should not include "SortMergeJoin"
     val large = JaccardNearDup.pairsAuto(df, "id", "toks", 0.8,
-      nDocs = JaccardNearDup.dfOrderMinDocs)
+      nDocs = JaccardNearDup.largeCorpusMinDocs)
       .queryExecution.executedPlan.toString
     large should not include "Window"
     large should include("SortMergeJoin")

@@ -1145,61 +1145,60 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     kept shouldBe (all -- flagged)
   }
 
-  test("S10 slim-probes layout: bootstrap + append + compaction reads " +
-      "row-identical to the fat layout; marker survives the swap") {
-    // the measured storage arm (BASELINE §recall-curve s10 growth):
-    // probes store (qid, cid) only — qe re-derives at append time from
-    // the ledger's own assign rows. The twin contract: identical
-    // quantizer (deterministic training), identical candidate sets,
-    // identical merged reads, under appends AND compaction.
+  test("S10 probes layout: bootstrap + append + compaction store " +
+      "(qid, cid) probes; a probes segment that also stores qe reads " +
+      "row-identical") {
+    // the probes layout (BASELINE §r17 probes-storage, §r28): probes
+    // store (qid, cid) only — qe re-derives at append time from the
+    // ledger's own assign rows. A probes segment that also stores qe
+    // (the layout of ledgers written before it) must append and
+    // compact to the same merged graph: every read projects probes
+    // to (qid, cid).
     import org.apache.spark.sql.functions._
     val suffix = java.util.UUID.randomUUID().toString.take(8)
-    val fat = s"/tmp/graft_state/graft_s10_spec_fat_$suffix"
     val slim = s"/tmp/graft_state/graft_s10_spec_slim_$suffix"
+    val fat = s"/tmp/graft_state/graft_s10_spec_fat_$suffix"
+    val tmp = s"/tmp/graft_state/graft_s10_spec_tmp_$suffix"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
+    def cols(p: String, seg: Int) =
+      spark.read.parquet(s"$p/probes/seg-$seg").columns.toSeq
     try {
       val e = graft.sources.Tables.load(spark, TestSpark.sfDir,
           "embeddings").select("vec_id", "embedding")
       val boot = e.filter(pmod(col("vec_id"), lit(3)) =!= 0)
-      SimilarityOps.refreshKnnLedger(spark, fat, boot,
-        slimProbes = false)
-      SimilarityOps.refreshKnnLedger(spark, slim, boot) // slim default
-      SimilarityOps.s10IsSlim(spark, slim) shouldBe true
-      SimilarityOps.s10IsSlim(spark, fat) shouldBe false
-      // the slim probes really drop the riding vector
-      spark.read.parquet(s"$slim/probes/seg-0")
-        .columns shouldNot contain("qe")
-      spark.read.parquet(s"$fat/probes/seg-0")
-        .columns should contain("qe")
-      // same daily batch appended to both arms
-      SimilarityOps.refreshKnnLedger(spark, fat, e)
+      SimilarityOps.refreshKnnLedger(spark, slim, boot)
+      cols(slim, 0) shouldNot contain("qe")
+      // the twin: the same bootstrap with qe stored on its probes
+      val fs = new org.apache.hadoop.fs.Path(slim)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(
+        slim), fs, new org.apache.hadoop.fs.Path(fat), false, fs.getConf)
+      graft.state.SegmentLedger.write(
+        spark.read.parquet(s"$fat/probes/seg-0").join(
+          spark.read.parquet(s"$fat/assign/seg-0")
+            .select(col("vec_id").as("qid"), col("embedding").as("qe")),
+          Seq("qid")), tmp, "probes", 0, Some("cid"))
+      rm(new java.io.File(s"$fat/probes/seg-0"))
+      new java.io.File(s"$tmp/probes/seg-0")
+        .renameTo(new java.io.File(s"$fat/probes/seg-0")) shouldBe true
+      cols(fat, 0) should contain("qe")
+      // same daily batch appended to both
       SimilarityOps.refreshKnnLedger(spark, slim, e)
+      SimilarityOps.refreshKnnLedger(spark, fat, e)
+      cols(slim, 1) shouldNot contain("qe")
+      cols(fat, 1) shouldNot contain("qe")
       def graphOf(p: String) = SimilarityOps.s10Graph(spark, p, None)
         .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
-      val ref = graphOf(fat)
+      val ref = graphOf(slim)
       ref.size should be > 0
-      graphOf(slim) shouldBe ref
-      // compaction preserves the layout marker and the merged rows
-      SimilarityOps.compactKnnLedger(spark, slim)
-      SimilarityOps.s10IsSlim(spark, slim) shouldBe true
-      spark.read.parquet(s"$slim/probes/seg-0")
-        .columns shouldNot contain("qe")
-      graphOf(slim) shouldBe ref
-      // torn-bootstrap replay: a marker left by a bootstrap that
-      // crashed before seg-0's commit is authoritative — a replay
-      // requesting the OTHER layout must keep the declared one, so
-      // marker and probe files can never disagree
-      val torn = s"/tmp/graft_state/graft_s10_spec_torn_$suffix"
-      try {
-        new java.io.File(torn).mkdirs()
-        new java.io.File(s"$torn/__slim_probes").createNewFile()
-        SimilarityOps.refreshKnnLedger(spark, torn, boot,
-          slimProbes = false)
-        SimilarityOps.s10IsSlim(spark, torn) shouldBe true
-        spark.read.parquet(s"$torn/probes/seg-0")
-          .columns shouldNot contain("qe")
-      } finally rm(new java.io.File(torn))
-    } finally { rm(new java.io.File(fat)); rm(new java.io.File(slim)) }
+      graphOf(fat) shouldBe ref
+      // compaction folds both into (qid, cid) probes and the same rows
+      Seq(slim, fat).foreach { p =>
+        SimilarityOps.compactKnnLedger(spark, p)
+        cols(p, 0) shouldNot contain("qe")
+        graphOf(p) shouldBe ref
+      }
+    } finally Seq(slim, fat, tmp).foreach(p => rm(new java.io.File(p)))
   }
 }

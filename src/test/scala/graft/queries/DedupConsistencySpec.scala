@@ -510,28 +510,24 @@ class DedupConsistencySpec extends AnyFunSuite with Matchers {
       inter = (si & sj).size
       if inter.toDouble / si.size >= t
     } yield (i, j) -> inter.toLong).toMap
-    for ((dfOrdered, hotDemoted) <- Seq((false, false), (true, false),
-        (false, true))) {
+    for (large <- Seq(false, true)) {
       val got = graft.operators.ContainmentNearDup
-        .pairs(toks, "doc_id", "sh", t, dfOrdered = dfOrdered,
-          noBroadcast = dfOrdered, hotDemoted = hotDemoted)
+        .pairs(toks, "doc_id", "sh", t, large)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
         .toMap
-      withClue(s"dfOrdered=$dfOrdered hotDemoted=$hotDemoted: ") {
-        got shouldBe ref
-      }
+      withClue(s"large=$large: ") { got shouldBe ref }
     }
     ref.nonEmpty shouldBe true
   }
 
-  test("containment hot-demoted arm: identical to brute force with " +
-      "demotion ENGAGED (universal boilerplate tokens, subset pairs " +
-      "riding on them)") {
-    // every doc opens with the same 3-token boilerplate (df = 150 ≥
-    // hotDfMin → all three go hot); each even doc gets a strict-subset
-    // twin KEEPING the boilerplate, so every planted containment pair
-    // depends on demoted tokens and the contained side's prefix must
-    // still find a shared rare token
+  test("containment under BOTH token orders: identical to brute force " +
+      "on universal boilerplate tokens (subset pairs riding on them)") {
+    // every doc opens with the same 3-token boilerplate (df = 150, the
+    // corpus' hottest tokens); each even doc gets a strict-subset twin
+    // KEEPING the boilerplate, so every planted containment pair
+    // depends on the hot tokens: the hash order puts them in every
+    // prefix, the df order pushes them past it, and the contained
+    // side's prefix must still find a shared rare token
     import spark.implicits._
     val rnd = new scala.util.Random(9241)
     val boiler = Seq(11L, 22L, 33L)
@@ -551,12 +547,13 @@ class DedupConsistencySpec extends AnyFunSuite with Matchers {
       if inter.toDouble / si.size >= 0.9
     } yield (i, j) -> inter.toLong).toMap
     ref.nonEmpty shouldBe true
-    val got = graft.operators.ContainmentNearDup
-      .pairs(corpus.toDF("doc_id", "sh"), "doc_id", "sh", 0.9,
-        hotDemoted = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    got shouldBe ref
+    for (large <- Seq(false, true)) {
+      val got = graft.operators.ContainmentNearDup
+        .pairs(corpus.toDF("doc_id", "sh"), "doc_id", "sh", 0.9, large)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+        .toMap
+      withClue(s"large=$large: ") { got shouldBe ref }
+    }
   }
 
   test("containment: documents with empty shingle sets are never " +
