@@ -67,9 +67,8 @@ object BenchScenarios {
     * run on the lock's refusal.
     */
   private def freshPath(path: String): String = {
-    import graft.state.LedgerState._
-    (path +: Seq(lockPath(path), stagingPath(path), backupPath(path))
-      .map(_.toUri.getPath)).foreach(p => FileUtil.fullyDelete(new File(p)))
+    (path +: SegmentLedger.siblings(path).map(_.toUri.getPath))
+      .foreach(p => FileUtil.fullyDelete(new File(p)))
     path
   }
 
@@ -147,7 +146,7 @@ object BenchScenarios {
       DedupOps.refreshLedger(spark, d9, docs(spark, dir, src0 = false)
         .select(md5(col("text")).as("content_hash")).distinct())
       r.row(s"batch_vs_${tag}_corpus_ledger")(Bench.noop(
-        DedupOps.incrementalDedup(batch, Parquet.read(spark, d9))))
+        DedupOps.incrementalDedup(batch, DedupOps.readHashLedger(spark, d9))))
     }
   }
 
@@ -251,7 +250,7 @@ object BenchScenarios {
     }
   }
 
-  /** The same hashes behind 100 daily-append fragments, then bin-packed
+  /** The same hashes behind 100 daily-append segments, then bin-packed
     * by `DedupOps.compactLedger`, each timed on d9's ingest plan.
     */
   private def compact(spark: SparkSession, dir: String): Unit = {
@@ -268,7 +267,7 @@ object BenchScenarios {
     }
     val batch = docs(spark, dir, src0 = true)
     def ingest(path: String): Unit = Bench.noop(
-      DedupOps.incrementalDedup(batch, Parquet.read(spark, path)))
+      DedupOps.incrementalDedup(batch, DedupOps.readHashLedger(spark, path)))
     def files(path: String): Int = FileUtils.listFiles(new File(path), null,
       true).asScala.count(_.getName.startsWith("part-"))
     r.row("ingest_vs_100_append_chain")(ingest(chain))

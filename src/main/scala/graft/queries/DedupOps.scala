@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.LongType
 
 import graft.functions.HashFunctions._
 import graft.functions.VectorFunctions
-import graft.sources.{Parquet, Tables}
-import graft.state.{LedgerState, SegmentLedger}
+import graft.sources.Tables
+import graft.state.SegmentLedger
 
 /** Deduplication operators over `documents`/`embeddings` (SURVEY §2.3
   * D1–D5). Scale design notes per operator:
@@ -812,9 +812,10 @@ object DedupOps extends QueryGroup {
   // Incremental ingestion dedup — the daily-batch shape of d1: today's
   // batch (one source) is deduplicated (a) against the PERSISTED
   // content-hash ledger of the already-ingested corpus via a left-anti
-  // join, then (b) within itself. The ledger is plain parquet at an
-  // EXPLICIT path keyed by the sf dir: persistence must not ride the
-  // session catalog — a fresh session forgets managed tables while
+  // join, then (b) within itself. The ledger is a segment ledger
+  // ([[readHashLedger]]) at an EXPLICIT path keyed by the sf dir:
+  // persistence must not ride the session catalog — a fresh session
+  // forgets managed tables while
   // their warehouse dirs survive on disk, so a catalog exists-check +
   // saveAsTable bootstrap dies with LOCATION_ALREADY_EXISTS on every
   // cold start (the r5 driver failure), and a GLOBAL ledger name would
@@ -823,7 +824,7 @@ object DedupOps extends QueryGroup {
   // run either bootstraps or idempotently APPENDS the novel hashes
   // (anti-join against the ledger, append the remainder — O(batch)
   // maintenance; see [[refreshLedger]]). The dedup plan then reads
-  // ONLY the ledger parquet and the
+  // ONLY the ledger's committed segments and the
   // batch rows (source = 'src0' is pushed to the documents scan;
   // PlanSpec asserts both properties). At 100 TB the ledger join is a
   // shuffle hash join on 32-char hashes (broadcast when the ledger
@@ -840,14 +841,15 @@ object DedupOps extends QueryGroup {
     // the shared state root would silently merge two corpora's
     // ledgers — the exact cross-SF contamination
     // DedupConsistencySpec guards against)
-    // `_p1` suffix = the 16-way prefix-partitioned layout (r12); older
+    // `_p2` suffix = the segment-ledger layout (16-way prefix-
+    // partitioned `hashes` segments + one tombstone log); older
     // layouts' dirs are orphaned, not migrated in place — a layout
     // change must never reinterpret existing state
-    StatePath(dir, "d9_ledger", "_p1")
+    StatePath(dir, "d9_ledger", "_p2")
   }
 
-  /** Hash-prefix runtime pruning for the ledger scan: the ledger is
-    * laid out as parquet PARTITIONED by the first hex char of the
+  /** Hash-prefix runtime pruning for the ledger scan: each ledger
+    * segment is parquet PARTITIONED by the first hex char of the
     * content hash (16 balanced partitions — md5 is uniform), and each
     * consumer filters it by the DISTINCT prefixes present in its own
     * batch. The prefix set is ≤ 16 driver-side strings (a
@@ -875,73 +877,53 @@ object DedupOps extends QueryGroup {
       ledger.filter(col("pfx").isin(pfxs: _*))
     }
 
+  /** THE read seam of the d9/d16/d17 content-hash ledger (d9, d16,
+    * d17, p6, ST18 and the ledger bench all read through here): the
+    * committed `hashes` segments as one relation minus the live
+    * tombstones, `pfx` kept so [[prunedByPrefix]] still prunes the scan.
+    */
+  private[graft] def readHashLedger(s: SparkSession,
+      path: String): DataFrame =
+    SegmentLedger.live(s, path, "hashes", "content_hash")
+
+  /** `hashes` as sub-table `hashes` of segment `k` of the ledger at
+    * `path`, partitioned on the hash's first hex char.
+    */
+  private def writeHashes(path: String)(hashes: DataFrame, k: Int): Unit =
+    SegmentLedger.write(hashes.select("content_hash")
+        .withColumn("pfx", substring(col("content_hash"), 1, 1)),
+      path, "hashes", k, Some("pfx"))
+
   /** Bootstrap-or-append the ledger at `path` from this run's derived
     * prior-corpus hashes. Maintenance is O(batch), not O(corpus): after
-    * the bootstrap write, each run anti-joins the incoming hashes
-    * against the ledger and APPENDS only the novel remainder — the
-    * standing corpus ledger is never rewritten (rewriting it made every
-    * daily ingest pay an O(corpus) write at 100 TB, and was the real
-    * cost behind d9's r6 bench jump). Idempotent: re-ingesting known
-    * hashes appends nothing, so the ledger always equals the
-    * from-scratch derivation — which is what the oracle checks. IO goes
-    * through the Hadoop FileSystem API, so the ledger can live on
-    * shared storage (HDFS/S3A) on a real cluster, not just local disk.
+    * the bootstrap segment, each run anti-joins the incoming hashes
+    * against the live ledger and commits only the novel remainder as
+    * one segment — the standing corpus ledger is never rewritten
+    * (rewriting it made every daily ingest pay an O(corpus) write at
+    * 100 TB, and was the real cost behind d9's r6 bench jump). A
+    * taken-down hash re-submitted is resurrected by an `untomb` record
+    * (its row is still in place), so a hash never gets a second
+    * physical row. Idempotent: re-ingesting known hashes commits
+    * nothing, so the ledger always equals the from-scratch derivation
+    * — which is what the oracle checks. IO goes through the Hadoop
+    * FileSystem API, so the ledger can live on shared storage
+    * (HDFS/S3A) on a real cluster, not just local disk. Maintenance
+    * reads the FULL live ledger: pruning it by the prior side's
+    * prefixes would re-execute the corpus-sized prior pipeline a
+    * second time (driver collect) to derive a set that a full prior
+    * covers anyway — the prune belongs on the QUERY path
+    * (incrementalDedup), where the batch is small and built.
     */
-  /** Hash data present at `path`? The DIR existing is not enough: the
-    * d16 Bloom sidecar (`_bloom/`, written before the bootstrap by the
-    * crash-ordering contract) creates the parent dir first — data
-    * means at least one `pfx=` partition.
-    */
-  private def ledgerDataExists(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("pfx="))
-
-  // repartition ON pfx before the partitioned write: without it every
-  // writing task holds rows of ~all 256 prefixes and emits a file per
-  // (task × prefix) — 32 tasks × 256 dirs = 8k files from one
-  // bootstrap, and the steady-state scan pays the listing/footers.
-  // Clustered, each prefix dir gets as many files as tasks that hash
-  // to it (~1): ≤256 files total, ~125 MB each at the 32 GB ledger a
-  // 100 TB corpus implies.
-  private def withPfx(df: DataFrame): DataFrame =
-    df.withColumn("pfx", substring(col("content_hash"), 1, 1))
-      .repartition(col("pfx"))
-
   private[graft] def refreshLedger(s: SparkSession, path: String,
-      prior: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    LedgerState.withWriter(fs, path, "refreshLedger") {
-      healSubDirSwaps(fs, p)
-      if (!ledgerDataExists(fs, p))
-        withPfx(prior).write.partitionBy("pfx").mode("overwrite").parquet(path)
-      else {
-        // maintenance reads the FULL ledger: pruning it by the prior
-        // side's prefixes would re-execute the corpus-sized prior
-        // pipeline a second time (driver collect) to derive a set that
-        // a full prior covers anyway — the prune belongs on the QUERY
-        // path (incrementalDedup), where the batch is small and built
-        val novel = novelHashes(s, path, prior)
-        if (!novel.isEmpty)
-          withPfx(novel).write.partitionBy("pfx").mode("append").parquet(path)
-      }
+      prior: DataFrame): Unit =
+    SegmentLedger.withWriter(s, path, "refreshLedger") {
+      SegmentLedger.appendNovel(s, path, "hashes", "content_hash", prior)(
+        writeHashes(path))
     }
-  }
-
-  /** `prior` hashes absent from the ledger, materialized (batch-sized)
-    * before any append so the write never scans its own destination.
-    */
-  private def novelHashes(s: SparkSession, path: String,
-      prior: DataFrame): DataFrame =
-    prior
-      .join(Parquet.read(s, path).select("content_hash"),
-        Seq("content_hash"), "left_anti")
-      .localCheckpoint()
 
   /** The dedup step itself — the plan a daily ingest run executes:
     * ledger anti-join + within-batch collapse. Touches the ledger
-    * parquet and the batch rows only.
+    * segments and the batch rows only.
     */
   private[graft] def incrementalDedup(batch: DataFrame,
       ledger: DataFrame): DataFrame = {
@@ -965,7 +947,7 @@ object DedupOps extends QueryGroup {
       refreshLedger(s, path, prior)
       // today's batch: the returned plan scans ledger + batch only
       incrementalDedup(all.filter(col("source") === "src0"),
-        Parquet.read(s, path))
+        readHashLedger(s, path))
         .orderBy("content_hash")
     },
     Some("""WITH ledger AS (
@@ -1240,11 +1222,11 @@ object DedupOps extends QueryGroup {
         bandKeys(col("sig"), mhBands, mhRows).as("keys"))
   }
 
-  // `_p1` = the segment-ledger layout (index segments + one tombstone
-  // log under one commit chain); the bare-append layout before it is
-  // stale state, never reinterpreted
+  // `_p2` = the one-relation segment-ledger layout (`seg=k` index
+  // segments + one tombstone log under one commit chain); the layouts
+  // before it are stale state, never reinterpreted
   private[graft] def d13LedgerPath(dir: String): String =
-    StatePath(dir, "d13_ledger", "_p1")
+    StatePath(dir, "d13_ledger", "_p2")
 
   /** Bootstrap-or-append the band-index ledger: only doc_ids absent
     * from the LIVE ledger (committed index rows minus tombstones) are
@@ -1262,111 +1244,39 @@ object DedupOps extends QueryGroup {
   private[graft] def refreshNearDupLedger(s: SparkSession, path: String,
       prior: DataFrame): Unit =
     SegmentLedger.withWriter(s, path, "refreshNearDupLedger") {
-      val k = SegmentLedger.next(s, path)
-      if (SegmentLedger.segments(s, path, "index").isEmpty) {
-        SegmentLedger.write(minhashIndex(prior), path, "index", k)
-        SegmentLedger.commit(s, path, k)
-      } else {
-        val novel = prior
-          .join(readBandLedger(s, path).select("doc_id"), Seq("doc_id"),
-            "left_anti")
-          .localCheckpoint()
-        if (!novel.isEmpty) {
-          // resurrect = novel ∩ tombstones (takedown-sized): physical
-          // rows exist — untomb instead of re-indexing
-          val resurrect = readBandTombstones(s, path)
-            .map(t => novel.select("doc_id")
-              .join(broadcast(t), Seq("doc_id"), "left_semi")
-              .localCheckpoint())
-            .filter(!_.isEmpty)
-          val fresh = resurrect.fold(novel)(r =>
-            novel.join(broadcast(r), Seq("doc_id"), "left_anti"))
-          if (!fresh.isEmpty)
-            SegmentLedger.write(minhashIndex(fresh), path, "index", k)
-          resurrect.foreach(
-            SegmentLedger.writeTombs(_, path, k, SegmentLedger.Untomb))
-          SegmentLedger.commit(s, path, k)
-        }
-      }
+      SegmentLedger.appendNovel(s, path, "index", "doc_id", prior)(
+        (rows, k) => SegmentLedger.write(minhashIndex(rows), path, "index", k))
       s.catalog.refreshByPath(path)
     }
 
-  /** Bin-pack an append-only d9/d16 hash ledger back to one file per
-    * `pfx` partition. The append-only maintenance discipline is right
+  /** Compaction for the d9/d16/d17 hash ledger
+    * ([[graft.state.SegmentLedger.compact]]): the live hashes
+    * (tombstones applied — the physical purge) packed into one seg=0 of
+    * one file per `pfx` partition. The append-only discipline is right
     * for ingest cost — nothing corpus-sized is ever rewritten — but
-    * each batch leaves one file fragment per partition it touches, and
-    * after a year of daily runs every ledger read pays a listing +
-    * parquet-footer tax of ~365 fragments per partition (measured in
-    * `Bench ledger compact`). Compaction is the periodic
-    * counterpart: ONE scan + one write (the floor for a physical
-    * re-layout, the F14 rebucket economics), preserving the layout the
-    * readers depend on — the 16 partition dirs and therefore the
-    * pruned-scan PartitionFilters.
+    * every batch adds a segment, and after a year of daily runs every
+    * ledger read pays a listing + parquet-footer tax of ~365 segments
+    * (measured in `Bench ledger compact`). Compaction is the periodic
+    * counterpart: ONE scan + one write, preserving the 16 partition
+    * dirs and therefore the pruned-scan PartitionFilters. Content is
+    * untouched — read-equivalence is spec-gated.
     *
-    * Crash-safe by [[graft.state.LedgerState]]'s staged rename-aside
-    * swap. Content is untouched — read-equivalence is spec-gated.
+    * d16 interplay: compaction is also the fp-creep BOUND for takedowns
+    * (a tombstone shadows a hash but the filter keeps it — safe, only
+    * over-approximate), so when the ledger carries a filter it is
+    * REBUILT from the compacted rows inside the staging dir: the swap
+    * flips ledger and filter together.
     */
-  private[graft] def compactLedger(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    LedgerState.withWriter(fs, path, "compactLedger") {
-      require(fs.exists(p), s"no ledger at $path")
-      // heal torn sub-dir swaps BEFORE snapshotting (r19-advice high):
-      // the parquet scan below skips the underscore-prefixed
-      // `_takedown_backup_X` dir, so an unhealed torn swap would compact
-      // a copy MISSING that whole prefix slice and then destroy the
-      // slice's only surviving copy with the backup
-      healSubDirSwaps(fs, p)
-      val hadBloom = fs.exists(bloomMarker(path))
-      val staging = LedgerState.stagingPath(path)
-      fs.delete(staging, true)
-      // same write shape as refreshLedger's bootstrap: repartition ON
-      // pfx so each of the 16 partition dirs gets exactly one task's
-      // single file, keeping the pruned-read layout bit-compatible
-      Parquet.read(s, path).repartition(col("pfx")).write.partitionBy("pfx")
-        .mode("overwrite").parquet(staging.toString)
-      LedgerState.swapIn(fs, p, staging, LedgerState.backupPath(path))
-      // d16 interplay (r19): the swap moved any `_bloom/` sidecar aside
-      // with the old dir and dropped it with the backup — readers would
-      // degrade to the full join until the next refresh self-heals.
-      // Better: compaction is also the fp-creep BOUND for takedowns
-      // (removeFromHashLedger shrinks the ledger but not the filter —
-      // safe, only over-approximate), so REBUILD the filter from the
-      // compacted rows whenever the pre-swap ledger carried one.
-      s.catalog.refreshByPath(path) // raw renames: invalidate listings
-      if (hadBloom)
-        commitBloom(fs, path,
-          buildBloom(Parquet.read(s, path).select("content_hash")))
-    }
-  }
-
-  // takedown scratch dirs live INSIDE the ledger dir under leading
-  // underscores (the `_bloom` trick): invisible to the parquet scan's
-  // partition discovery, so a crash window can never surface removed
-  // rows under a garbage partition value
-  private def takedownStagingDir(p: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(p, "_takedown_staging_all")
-  private def takedownBackupDir(p: org.apache.hadoop.fs.Path,
-      pf: String) = new org.apache.hadoop.fs.Path(p, s"_takedown_backup_$pf")
-
-  /** Heal the sub-dir swap a hash-ledger takedown runs INSIDE the
-    * ledger — its prefix group (`pfx=X` ↔ `_takedown_backup_X`, rolled
-    * back whole while its staging dir shows it uncommitted) — then drop
-    * the staging dir. Called at every writer entry, so a torn swap
-    * self-heals instead of serving a ledger missing a prefix slice.
-    * One listing.
-    */
-  private def healSubDirSwaps(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(p)) {
-      val entries = fs.listStatus(p).map(_.getPath)
-      val staged = entries.filter(_.getName.startsWith("_takedown_staging_"))
-      entries.filter(_.getName.startsWith("_takedown_backup_")).foreach { b =>
-        LedgerState.heal(fs, new org.apache.hadoop.fs.Path(p,
-            s"pfx=${b.getName.stripPrefix("_takedown_backup_")}"), b,
-          rollBack = staged.nonEmpty)
-      }
-      staged.foreach(fs.delete(_, true))
+  private[graft] def compactLedger(s: SparkSession, path: String): Unit =
+    SegmentLedger.compact(s, path, "compactLedger",
+        SegmentLedger.segments(s, path, "hashes").size > 1 ||
+          SegmentLedger.segments(s, path, "tombs").nonEmpty) { staging =>
+      writeHashes(staging)(readHashLedger(s, path), 0)
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(bloomMarker(path)))
+        commitBloom(fs, staging, buildBloom(SegmentLedger
+          .readSegment(s, staging, "hashes", 0).select("content_hash")))
     }
 
   /** TAKEDOWN for the d9/d16 content-hash ledger (r19): remove
@@ -1375,17 +1285,17 @@ object DedupOps extends QueryGroup {
     * re-evaluates as NOVEL instead of being silently swallowed as a
     * duplicate — the gap an append-only hash ledger structurally has.
     *
-    * PREFIX-PRUNED staged rewrite (the F16 swap at partition grain):
-    * only the ≤16 `pfx=` partitions actually containing a removed hash
-    * are rewritten — a takedown touches p/16 of the ledger's bytes,
-    * never O(ledger). The affected partitions are rewritten under a
-    * staging dir (rows anti-joined against the broadcast takedown set)
-    * and swapped in as one group ([[graft.state.LedgerState]]): a crash
-    * leaves the whole takedown applied or none of it once the next
-    * writer heals. Idempotent — removing absent hashes rewrites
-    * nothing.
+    * One committed tombstone segment of takedown-sized `tomb` records,
+    * never a ledger rewrite: the live hashes among `hashes` are found
+    * by one prefix-pruned scan (the prune lands as PartitionFilters)
+    * semi-joined to the broadcast request, and every data file stays
+    * byte-identical (IO-gated in LedgerTakedownSpec). Every reader goes
+    * through [[readHashLedger]], so the shadowed hashes vanish from all
+    * of them at the commit marker. Idempotent — removing absent or
+    * already-removed hashes commits nothing. The physical purge rides
+    * [[compactLedger]].
     *
-    * d16's Bloom sidecar is delete-friendly BY CONSTRUCTION: removing
+    * d16's Bloom sidecar is delete-friendly BY CONSTRUCTION: shadowing
     * ledger rows PRESERVES bloom ⊇ ledger (the filter only
     * over-approximates — a removed hash tests positive, pays the exact
     * join, finds nothing, and is correctly NOVEL), so the filter is
@@ -1393,60 +1303,15 @@ object DedupOps extends QueryGroup {
     * [[compactLedger]]'s rebuild-on-compact rule (spec-gated).
     */
   private[graft] def removeFromHashLedger(s: SparkSession, path: String,
-      hashes: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    LedgerState.withWriter(fs, path, "removeFromHashLedger") {
-      require(ledgerDataExists(fs, p), s"no hash ledger at $path")
-      healSubDirSwaps(fs, p)
-      // takedown-sized; consumed per affected prefix below
-      val dead = hashes.select("content_hash").distinct().localCheckpoint()
-      val pfxs = dead
-        .select(substring(col("content_hash"), 1, 1).as("pfx"))
-        .distinct().collect().map(_.getString(0)).toSeq.sorted
-      // ONE pruned scan decides which partitions actually hold a
-      // removed hash (the prune lands as PartitionFilters), instead of
-      // a count job per candidate prefix — untouched slices keep
-      // their files byte-identical and the driver loop below pays one
-      // write job per AFFECTED prefix only
-      val affected = Parquet.read(s, path)
-        .filter(col("pfx").isin(pfxs: _*))
-        .join(broadcast(dead), Seq("content_hash"))
-        .select(col("pfx").cast("string"))
-        .distinct().collect().map(_.getString(0)).toSeq.sorted
-      if (affected.nonEmpty) {
-        // ONE parallel job rewrites every affected slice into a shared
-        // staging dir (partitionBy recreates the live pfx layout;
-        // repartition ON pfx keeps one file per slice — the
-        // refreshLedger write discipline), then the slices swap in as
-        // one group (LedgerState.swapInAll). Sequential
-        // per-prefix write jobs measured 16 × ~0.3 s of pure driver
-        // scheduling on a 16-prefix takedown; the work is one pruned
-        // scan either way.
-        val stagingAll = takedownStagingDir(p)
-        fs.delete(stagingAll, true)
-        Parquet.read(s, path)
-          .filter(col("pfx").isin(affected: _*))
-          .join(broadcast(dead), Seq("content_hash"), "left_anti")
-          .repartition(col("pfx"))
-          .write.partitionBy("pfx").mode("overwrite")
-          .parquet(stagingAll.toString)
-        // a slice whose every row was removed writes no staged dir:
-        // swap in an empty one (the prefix may refill on re-ingest)
-        affected.foreach(pf => fs.mkdirs(
-          new org.apache.hadoop.fs.Path(stagingAll, s"pfx=$pf")))
-        LedgerState.swapInAll(fs, stagingAll, affected.map(pf =>
-          (new org.apache.hadoop.fs.Path(p, s"pfx=$pf"),
-            takedownBackupDir(p, pf))))
-      }
-      // the swap went through raw FS renames, which Spark's cached
-      // file indexes don't see (Spark only invalidates paths IT
-      // writes): refresh so standing frames — including a stream's
-      // per-trigger replanned static side — re-list instead of
-      // failing on the replaced files
-      s.catalog.refreshByPath(path)
+      hashes: DataFrame): Unit =
+    SegmentLedger.withWriter(s, path, "removeFromHashLedger") {
+      require(SegmentLedger.segments(s, path, "hashes").nonEmpty,
+        s"no hash ledger at $path")
+      val dead = hashes.select("content_hash").distinct()
+      SegmentLedger.tomb(s, path,
+        prunedByPrefix(readHashLedger(s, path), dead).select("content_hash")
+          .join(broadcast(dead), Seq("content_hash"), "left_semi"))
     }
-  }
 
   // ---- d13 band-ledger TOMBSTONES (r20) -----------------------------
   // The band ledger stores each doc's FULL shingle set — at 100 TB it
@@ -1479,12 +1344,8 @@ object DedupOps extends QueryGroup {
     * linger until [[compactBandLedger]] purges them.
     */
   private[graft] def readBandLedger(s: SparkSession,
-      path: String): DataFrame = {
-    val ledger = SegmentLedger.read(s, path, "index")
-    if (SegmentLedger.segments(s, path, "tombs").isEmpty) ledger
-    else ledger.join(broadcast(SegmentLedger.tombs(s, path, "doc_id")),
-      Seq("doc_id"), "left_anti")
-  }
+      path: String): DataFrame =
+    SegmentLedger.live(s, path, "index", "doc_id")
 
   /** TAKEDOWN for the d13 band-index ledger: shadow the removed
     * documents' index rows — their band keys stop routing candidates
@@ -1503,23 +1364,17 @@ object DedupOps extends QueryGroup {
         s"no band ledger at $path")
       // tombstone only LIVE ledger ids (broadcast semi over the id
       // column — pruned to one column, the same cost class as the hash
-      // ledger's affected-prefix probe): preserves tombstones ⊆ ledger
+      // ledger's prefix-pruned probe): preserves tombstones ⊆ ledger
       // ids and makes the removal idempotent at zero bytes
-      val novel = readBandLedger(s, path).select("doc_id")
+      SegmentLedger.tomb(s, path, readBandLedger(s, path).select("doc_id")
         .join(broadcast(docIds.select("doc_id").distinct()),
           Seq("doc_id"), "left_semi")
-        .distinct()
-        .localCheckpoint()
-      if (!novel.isEmpty) {
-        val k = SegmentLedger.next(s, path)
-        SegmentLedger.writeTombs(novel, path, k, SegmentLedger.Tomb)
-        SegmentLedger.commit(s, path, k)
-      }
+        .distinct())
       s.catalog.refreshByPath(path)
     }
 
   /** Compaction for the d13 band ledger: the live rows (tombstones
-    * applied — the physical purge) packed into one seg-0 of
+    * applied — the physical purge) packed into one seg=0 of
     * ⌈bytes/128 MB⌉ files, staged and swapped in
     * ([[graft.state.SegmentLedger.compact]]). The compacted ledger
     * carries no tombstone log; its live read is unchanged.
@@ -1731,12 +1586,12 @@ object DedupOps extends QueryGroup {
   // derivation as d9's.
   //
   // State protocol (the marker-last discipline): the filter lives
-  // under `_bloom/` INSIDE the ledger dir (underscore-prefixed ⇒
-  // invisible to the parquet scan) as immutable `v{N}.bloom` versions
+  // under `_bloom/` INSIDE the ledger dir (beside the segment
+  // sub-tables, never read as one) as immutable `v{N}.bloom` versions
   // plus a `_CURRENT` marker. Every APPEND refresh writes the NEW
   // filter (stored ∪ this run's hashes — one partial-agg pass,
   // bitwise-OR mergeable, never an item collect) and flips the marker
-  // BEFORE appending novel hashes to the ledger, so any crash point
+  // BEFORE committing the novel hashes' segment, so any crash point
   // leaves either bloom ⊇ ledger or NO committed filter — the two
   // states correctness rides on: an over-approximate filter only sends
   // extra rows to the exact check, and an absent one degrades to the
@@ -1748,7 +1603,7 @@ object DedupOps extends QueryGroup {
   // hashes — one torrent broadcast, or 16 prefix shards) replaces the
   // per-batch ledger shuffle, and filter + ledger maintenance are both
   // O(novel).
-  private[graft] def d16LedgerPath(dir: String): String = StatePath(dir, "d16_ledger", "_p1")
+  private[graft] def d16LedgerPath(dir: String): String = StatePath(dir, "d16_ledger", "_p2")
 
   private def bloomMarker(path: String) =
     new org.apache.hadoop.fs.Path(s"$path/_bloom/_CURRENT")
@@ -1855,21 +1710,21 @@ object DedupOps extends QueryGroup {
   }
 
   /** d9's [[refreshLedger]] with the Bloom sidecar maintained under
-    * the crash ordering the d16 header argues: on APPEND the filter
-    * flips BEFORE the ledger grows (a stale filter over a grown ledger
+    * the crash ordering the d16 header argues: the filter flips BEFORE
+    * the segment's commit marker (a stale filter over a grown ledger
     * would yield false negatives = wrong answers; the reverse is only
-    * over-approximate). On BOOTSTRAP the parquet is written first —
-    * the overwrite-mode bootstrap clears the directory, and a crash
-    * before the filter lands just leaves `readBloom = None`, which the
-    * query path degrades to the full exact join and the next refresh
-    * heals by rebuilding from the standing ledger.
+    * over-approximate). The bootstrap sketches the just-written segment
+    * (a column read — cheaper than re-deriving the corpus-sized prior
+    * pipeline); a crash before its marker leaves no ledger, and one
+    * between the two leaves a filter over a ledger that does not exist
+    * yet — over-approximate, and replaced at the next bootstrap.
     *
     * Filter maintenance is O(novel), matching the ledger's own
     * contract: the stored filter already covers every ledgered hash
     * (superset invariant), so only the novel remainder — computed once,
     * shared with the append — is sketched and OR'd in. The steady
-    * state (all hashes known) touches NEITHER file: the ledger stays
-    * append-only and the filter keeps its committed version, so the
+    * state (all hashes known) touches NEITHER file: no segment is
+    * committed and the filter keeps its committed version, so the
     * whole refresh is one anti-join, exactly d9's.
     */
   private[graft] def refreshLedgerBloomed(s: SparkSession, path: String,
@@ -1881,40 +1736,32 @@ object DedupOps extends QueryGroup {
     // stored ∪ own-novel (commitBloom's read-increment-write clobbers
     // the other's version) while BOTH append, leaving the committed
     // filter missing the loser's hashes — false negatives, i.e. wrong
-    // answers. The writer's entry heal also runs BEFORE the branch
-    // below, so a torn compaction is restored first and takes the
-    // append path (flip BEFORE append), never a bootstrap over it.
-    LedgerState.withWriter(fs, path, "refreshLedgerBloomed") {
-      healSubDirSwaps(fs, p)
-      if (!ledgerDataExists(fs, p)) {
-        // overwrite bootstrap clears the dir
-        withPfx(prior).write.partitionBy("pfx").mode("overwrite").parquet(path)
-        // sketch from the just-written parquet (a column read — cheaper
-        // than re-deriving the corpus-sized prior pipeline)
-        commitBloom(fs, path,
-          buildBloom(Parquet.read(s, path).select("content_hash")))
-      } else {
-        val novel = novelHashes(s, path, prior)
-        if (!novel.isEmpty) {
-          val merged: Array[Byte] = (readBloom(s, path) match {
-            case Some(stored) =>
-              try Some(BloomMembership.merge(stored, buildBloom(novel)))
-              catch { // sizing changed: rebuild from ledger ∪ novel, once
-                case _: org.apache.spark.util.sketch
-                    .IncompatibleMergeException => None
-              }
-            case None => None // ledger without filter: rebuild, once
-          }).getOrElse(buildBloom(
-            Parquet.read(s, path).select("content_hash")
-              .unionByName(novel.select("content_hash"))))
-          commitBloom(fs, path, merged) // flip BEFORE the append
-          withPfx(novel).write.partitionBy("pfx").mode("append").parquet(path)
-        } else if (readBloom(s, path).isEmpty)
-          // nothing novel but the filter is missing (manual deletion):
-          // self-heal from the standing ledger
-          commitBloom(fs, path,
-            buildBloom(Parquet.read(s, path).select("content_hash")))
-      }
+    // answers. The writer's entry heal also runs BEFORE the refresh, so
+    // a torn compaction is restored first and takes the append path
+    // (flip BEFORE commit), never a bootstrap over it.
+    SegmentLedger.withWriter(s, path, "refreshLedgerBloomed") {
+      SegmentLedger.appendNovel(s, path, "hashes", "content_hash", prior)(
+        writeHashes(path), {
+          case (k, None) => commitBloom(fs, path, buildBloom(SegmentLedger
+            .readSegment(s, path, "hashes", k).select("content_hash")))
+          case (_, Some(novel)) =>
+            val merged: Array[Byte] = (readBloom(s, path) match {
+              case Some(stored) =>
+                try Some(BloomMembership.merge(stored, buildBloom(novel)))
+                catch { // sizing changed: rebuild from ledger ∪ novel, once
+                  case _: org.apache.spark.util.sketch
+                      .IncompatibleMergeException => None
+                }
+              case None => None // ledger without filter: rebuild, once
+            }).getOrElse(buildBloom(
+              readHashLedger(s, path).select("content_hash")
+                .unionByName(novel.select("content_hash"))))
+            commitBloom(fs, path, merged) // flip BEFORE the commit
+        })
+      // nothing novel but the filter is missing (manual deletion):
+      // self-heal from the standing ledger
+      if (readBloom(s, path).isEmpty) commitBloom(fs, path,
+        buildBloom(readHashLedger(s, path).select("content_hash")))
     }
   }
 
@@ -1958,7 +1805,7 @@ object DedupOps extends QueryGroup {
       val path = d16LedgerPath(dir)
       refreshLedgerBloomed(s, path, prior)
       bloomGuardedDedup(all.filter(col("source") === "src1"),
-        Parquet.read(s, path), readBloom(s, path))
+        readHashLedger(s, path), readBloom(s, path))
         .orderBy("content_hash")
     },
     Some("""WITH ledger AS (
@@ -1977,8 +1824,8 @@ object DedupOps extends QueryGroup {
   // --------------------------------------------------------------- D17
   // Reclaimed-content re-ingest — the takedown path DRIVEN through the
   // oracle gate: a deterministic slice of the standing corpus'
-  // ledgered hashes is taken down (removeFromHashLedger's prefix-
-  // pruned staged rewrite), and today's batch then dedups against the
+  // ledgered hashes is taken down (removeFromHashLedger's one
+  // tombstone segment), and today's batch then dedups against the
   // SHRUNK ledger, so re-submissions of reclaimed content come back
   // NOVEL while still-standing hashes keep deduping. The oracle
   // re-derives the post-takedown ledger from scratch (full set EXCEPT
@@ -1987,7 +1834,7 @@ object DedupOps extends QueryGroup {
   // takedown), so the persisted removal's end state is hash-verified,
   // not just spec'd. Own ledger path; takedown rule doc_id % 7 = 2
   // over the prior corpus (the s13/q42 deterministic-split shape).
-  private[graft] def d17LedgerPath(dir: String): String = StatePath(dir, "d17_ledger", "_p1")
+  private[graft] def d17LedgerPath(dir: String): String = StatePath(dir, "d17_ledger", "_p2")
 
   private val d17 = QueryDef(
     "d17_reclaimed_reingest",
@@ -2002,7 +1849,7 @@ object DedupOps extends QueryGroup {
         .select(md5(col("text")).as("content_hash")).distinct()
       removeFromHashLedger(s, path, reclaimed)
       incrementalDedup(all.filter(col("source") === "src2"),
-        Parquet.read(s, path))
+        readHashLedger(s, path))
         .orderBy("content_hash")
     },
     Some("""WITH ledger AS (

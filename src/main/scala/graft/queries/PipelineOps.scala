@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Parquet, Tables}
+import graft.sources.Tables
 
 /** The composed training-data pipeline (P1): what a user actually runs
   * before a training job — every stage is one of the already-verified
@@ -786,9 +786,8 @@ object PipelineOps extends QueryGroup {
   // order deletions must compose:
   //
   //   takedowns across ALL THREE ledger families — the d9/d17 content-
-  //   hash ledger (prefix-pruned slice swap), the d13 band index
-  //   (tombstone append, r20), the s10/s14 kNN graph (tombstone
-  //   segment) → re-ingest of a fresh batch against the SHRUNK state:
+  //   hash ledger, the d13 band index and the s10/s14 kNN graph, each
+  //   one committed tombstone segment → re-ingest of a fresh batch against the SHRUNK state:
   //   exact-novel admission (reclaimed content re-admits), near-dup
   //   gate against the LIVE band ledger, and a retrieval-readiness
   //   column from the tombstoned graph.
@@ -804,9 +803,9 @@ object PipelineOps extends QueryGroup {
   // re-derives all three exclusions from scratch — EXCEPT for the
   // hash ledger, brute-force Jaccard for the band gate, tap re-rank
   // for the graph).
-  // `_p1`: the band and graph ledgers' segment-ledger layout
+  // `_p2`: the one-relation segment-ledger layout of all three
   private def p6Path(dir: String, tag: String): String =
-    StatePath(dir, s"p6_$tag", "_p1")
+    StatePath(dir, s"p6_$tag", "_p2")
 
   private val p6 = QueryDef(
     "p6_takedown_refresh",
@@ -849,7 +848,7 @@ object PipelineOps extends QueryGroup {
       // content re-admits as novel (the d17 contract)
       val batch = d.filter(col("source") === "src2")
       val novel = DedupOps.incrementalDedup(batch,
-        Parquet.read(s, hashPath)).localCheckpoint()
+        DedupOps.readHashLedger(s, hashPath)).localCheckpoint()
       // stage 3: NEAR-DUP GATE — each novel hash's keeper doc probed
       // against the LIVE band ledger (tombstones anti-joined by the
       // readBandLedger seam); a near-dup of standing content is not

@@ -570,13 +570,13 @@ object SimilarityOps extends QueryGroup {
   // retraining the quantizer or touching the standing corpus, and the
   // daily queries probe the stored index. The ledger is a
   // [[graft.state.SegmentLedger]] (marker-committed segments, one
-  // tombstone log, staged compaction into seg-0) holding:
+  // tombstone log, staged compaction into seg=0) holding:
   //
   //   path/centroids/     (cid, cv) — trained ONCE at bootstrap over
   //                       the then-standing corpus (s3's seed+Lloyd
   //                       machinery); retraining is a scheduled
   //                       offline job, the production trade
-  //   path/assign/seg-k/  one dir per committed ingest batch,
+  //   path/assign/seg=k/  one dir per committed ingest batch,
   //                       partitionBy("cid"): (vec_id, embedding)
   //                       under cid=* partition dirs, so the daily
   //                       query reads ONLY the ≤ NQ·nprobe probed
@@ -584,7 +584,7 @@ object SimilarityOps extends QueryGroup {
   //                       PartitionFilters — plan-gated) — nprobe/
   //                       cells of the index's bytes, which is the
   //                       point of IVF
-  //   path/ids/seg-k/     the slim id-only sidecar: (vec_id) alone,
+  //   path/ids/seg=k/     the slim id-only sidecar: (vec_id) alone,
   //                       so maintenance's novel-id anti-join reads
   //                       8-byte ids, never the embedding bytes that
   //                       dominate the index (~100× the IO at a
@@ -608,9 +608,10 @@ object SimilarityOps extends QueryGroup {
   // below is its bin-pack. Same two-stage oracle as s2/s3: candidates
   // tap, DuckDB re-ranks.
   private[graft] def s8LedgerPath(dir: String): String =
-    // _p3 = the segment-ledger layout (one commit chain for data and
-    // tombstones); older layouts are stale state, never reinterpreted
-    StatePath(dir, "s8_ivf", "_p3")
+    // _p4 = the one-relation segment-ledger layout (`seg=k` segments,
+    // one commit chain for data and tombstones); older layouts are
+    // stale state, never reinterpreted
+    StatePath(dir, "s8_ivf", "_p4")
 
   private def hPath(p: String) = new org.apache.hadoop.fs.Path(p)
   private def fsOf(s: SparkSession, p: String) =
@@ -644,7 +645,7 @@ object SimilarityOps extends QueryGroup {
   private def writeAssign(s: SparkSession, path: String, k: Int,
       rows: DataFrame): Unit = {
     SegmentLedger.write(rows, path, "assign", k, Some("cid"))
-    SegmentLedger.write(Parquet.read(s, s"$path/assign/seg-$k")
+    SegmentLedger.write(SegmentLedger.readSegment(s, path, "assign", k)
       .select("vec_id"), path, "ids", k)
   }
 
@@ -683,7 +684,7 @@ object SimilarityOps extends QueryGroup {
   }
 
   /** F16's compaction for the s8 segment chain: merge every committed
-    * segment into a single seg-0 of a staged ledger and swap it in
+    * segment into a single seg=0 of a staged ledger and swap it in
     * ([[graft.state.SegmentLedger.compact]]). Layout-preserving: the
     * compacted seg is written by the same [[writeAssign]], so the
     * pruned-read plan is bit-identical; content equality is
@@ -715,7 +716,7 @@ object SimilarityOps extends QueryGroup {
     * every committed row through a staged parallel build.
     *
     * Atomicity is compaction's ([[graft.state.SegmentLedger.compact]]):
-    * the staging ledger (new centroids + one re-assigned seg-0 + ids +
+    * the staging ledger (new centroids + one re-assigned seg=0 + ids +
     * marker) is fully written while the live dir stays untouched, then
     * the rename-aside swap flips readers to the new quantizer in one
     * metadata operation — a reader mid-migration reads the OLD
@@ -777,14 +778,8 @@ object SimilarityOps extends QueryGroup {
   private[graft] def tombstoneIds(s: SparkSession, path: String,
       ids: DataFrame): Unit =
     SegmentLedger.withWriter(s, path, "tombstoneIds") {
-      val novel = ids.select("vec_id").distinct()
-        .join(s8Tombs(s, path), Seq("vec_id"), "left_anti")
-        .localCheckpoint()
-      if (!novel.isEmpty) {
-        val k = SegmentLedger.next(s, path)
-        SegmentLedger.writeTombs(novel, path, k, SegmentLedger.Tomb)
-        SegmentLedger.commit(s, path, k)
-      }
+      SegmentLedger.tomb(s, path, ids.select("vec_id").distinct()
+        .join(s8Tombs(s, path), Seq("vec_id"), "left_anti"))
     }
 
   /** s8's candidate stage BEFORE the oracle tap: runs the two ledger
@@ -1243,7 +1238,7 @@ object SimilarityOps extends QueryGroup {
   // merge, and the final ranks are all cross-checked. The per-seg
   // candidate generation sits below the tap, gated by the
   // incremental-≡-from-scratch spec (the s8 split).
-  private[graft] def s10LedgerPath(dir: String): String = StatePath(dir, "s10_knn", "_p3")
+  private[graft] def s10LedgerPath(dir: String): String = StatePath(dir, "s10_knn", "_p4")
 
   private def s10AssignCols = Seq(col("vec_id"), col("embedding"),
     col("cid").cast(LongType).as("cid"))
@@ -1298,8 +1293,10 @@ object SimilarityOps extends QueryGroup {
       writeAssign(s, path, k, assignRows)
       SegmentLedger.write(probeRows.select("qid", "cid"), path, "probes", k,
         Some("cid"))
-      val a = Parquet.read(s, s"$path/assign/seg-$k").select(s10AssignCols: _*)
-      val p = Parquet.read(s, s"$path/probes/seg-$k").select(s10ProbeCols: _*)
+      val a = SegmentLedger.readSegment(s, path, "assign", k)
+        .select(s10AssignCols: _*)
+      val p = SegmentLedger.readSegment(s, path, "probes", k)
+        .select(s10ProbeCols: _*)
       SegmentLedger.write(edgesOf(a, p), path, "edges", k)
       SegmentLedger.commit(s, path, k)
     }
@@ -1313,7 +1310,7 @@ object SimilarityOps extends QueryGroup {
       // nprobe keys off the STORED centroid count, not the requested
       // cell count: trainCentroids' Lloyd step drops empty cells, and
       // a divergence across an nprobe rounding boundary would give
-      // seg-0's persisted probes a different budget than every later
+      // seg=0's persisted probes a different budget than every later
       // segment and the from-scratch reference — silently breaking the
       // incremental-≡-from-scratch contract (r16 advisory)
       val nprobe = LshTuning.nprobeFor(cents.count().toInt, nprobeFloor)
@@ -1401,7 +1398,7 @@ object SimilarityOps extends QueryGroup {
 
   /** F16's compaction for the s10 segment chain — the
     * compactIvfLedger discipline over the graph ledger's four
-    * sub-tables: assign/probes/ids concatenate into a single seg-0
+    * sub-tables: assign/probes/ids concatenate into a single seg=0
     * (written by the same cid-partitioned layout, so pruned reads stay
     * bit-identical); EDGES compact to the per-qid top-KG of the union —
     * the merge itself, exact and idempotent by the heap-merge property,
@@ -1459,13 +1456,14 @@ object SimilarityOps extends QueryGroup {
   private def repairedEdges(s: SparkSession, path: String,
       tombs: DataFrame, hasTombs: Boolean, staging: String): DataFrame = {
     // the excluding merged read IS the purged graph (s10Graph honors
-    // tombstones); output-sized (≤ n·KG), pinned — consumed by the
-    // adjacency, the anti-join, and the final union
-    val purged = s10Graph(s, path, None)
+    // tombstones); with no takedown the one write consumes it as is
+    val merged = s10Graph(s, path, None)
       .select(col("qid"), col("neighbor_id").as("vec_id"), col("cosine"))
-      .localCheckpoint()
-    if (!hasTombs) purged
+    if (!hasTombs) merged
     else {
+      // output-sized (≤ n·KG), pinned — consumed by the adjacency, the
+      // anti-join, and the final union
+      val purged = merged.localCheckpoint()
       // rebase derivatives on materialized RDDs before re-meeting
       // `purged` in joins/unions (the nnDescentRound discipline —
       // duplicate-attribute arms trip Catalyst's constraint rewrite);
@@ -1493,7 +1491,7 @@ object SimilarityOps extends QueryGroup {
         .join(purged.select("qid", "vec_id"), Seq("qid", "vec_id"),
           "left_anti")
         .join(broadcast(tombs), Seq("vec_id"), "left_anti")
-      val vecSrc = Parquet.read(s, s"$staging/assign/seg-0")
+      val vecSrc = SegmentLedger.readSegment(s, staging, "assign", 0)
         .select(col("vec_id"), col("embedding"))
       val novel = fresh(novelPairs
         .join(vecSrc.select(col("vec_id").as("qid"),
@@ -1514,7 +1512,7 @@ object SimilarityOps extends QueryGroup {
     * ledger, swapped in under the ledger's writer lock. The staging
     * build IS a from-scratch bootstrap — `refreshKnnLedger` on the
     * staging path trains cells re-keyed to the CURRENT corpus size and
-    * writes seg-0's s9 graph — so retrained ≡ from-scratch holds by
+    * writes seg=0's s9 graph — so retrained ≡ from-scratch holds by
     * construction (and is spec-asserted against an independent fresh
     * path); readers (s10Graph, the d15l/s11l/p4 seam, F21's refined
     * read) stay on the old ledger's committed state until the one-
@@ -1864,7 +1862,7 @@ object SimilarityOps extends QueryGroup {
   // hash-fails on either side. Own ledger path (tombstoning the
   // shared s10 ledger would change every other graph consumer's
   // driver-run output under their exclusion-blind oracles).
-  private[graft] def s14LedgerPath(dir: String): String = StatePath(dir, "s14_knn", "_p2")
+  private[graft] def s14LedgerPath(dir: String): String = StatePath(dir, "s14_knn", "_p3")
 
   private val s14 = QueryDef(
     "s14_knn_tombstoned",
@@ -1885,7 +1883,7 @@ object SimilarityOps extends QueryGroup {
        |SELECT qid, rank, vec_id AS neighbor_id, cosine
        |FROM granked ORDER BY qid, rank""".stripMargin))
 
-  private[graft] def s15LedgerPath(dir: String): String = StatePath(dir, "s15_knn", "_p2")
+  private[graft] def s15LedgerPath(dir: String): String = StatePath(dir, "s15_knn", "_p3")
 
   // --------------------------------------------------------------- S15q
   // The retrain migration DRIVER-ORACLED (r20, the r19 verdict #3
@@ -1932,7 +1930,7 @@ object SimilarityOps extends QueryGroup {
        |FROM granked ORDER BY qid, rank""".stripMargin))
 
   private[graft] def s15iLedgerPath(dir: String): String =
-    StatePath(dir, "s15i_ivf", "_p3")
+    StatePath(dir, "s15i_ivf", "_p4")
 
   // s15q's IVF sibling (r20): the retrieval index takes the same
   // takedown, retrains through `retrainIvfLedger` (cells re-keyed,

@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileWriter.{
   PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.types.StructType
 
@@ -32,9 +32,26 @@ import org.apache.spark.sql.types.StructType
 object Parquet {
 
   def read(spark: SparkSession, paths: String*): DataFrame =
-    footerSchema(spark, paths) match {
-      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
+    via(spark.read, spark, paths, paths)
+
+  /** [[read]] of several `roots` as ONE relation under `basePath`: the
+    * `k=v` dirs between the base and each root (a segment ledger's
+    * `seg=k`) become partition columns, discovered by Spark as for any
+    * partitioned table. The roots are one table's parts written alike,
+    * so the schema comes from the first root in path order alone: the
+    * driver lists one root, not all of them (Spark lists them all
+    * again to plan the scan).
+    */
+  def readUnder(spark: SparkSession, basePath: String,
+      roots: Seq[String]): DataFrame =
+    via(spark.read.option("basePath", basePath), spark, roots,
+      roots.sorted.take(1))
+
+  private def via(reader: DataFrameReader, spark: SparkSession,
+      paths: Seq[String], footerFrom: Seq[String]): DataFrame =
+    footerSchema(spark, footerFrom) match {
+      case Some(schema) => reader.schema(schema).parquet(paths: _*)
+      case None => reader.parquet(paths: _*)
     }
 
   private val summaries =

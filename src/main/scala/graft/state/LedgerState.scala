@@ -9,13 +9,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 class LedgerBusy(msg: String) extends IllegalArgumentException(msg)
 
-/** The ONE crash protocol of every persisted ledger (the d9/d16 hash
-  * ledger, and the segmented d13 band, s8 IVF and s10 kNN-graph
-  * ledgers of [[SegmentLedger]]): a ledger path has exactly one writer
-  * at a time, every writer heals a torn swap before it touches the
-  * path, and a whole- or partial-ledger rewrite is staged beside the
-  * live dir and swapped in rename-aside, so at every instant a full
-  * committed copy exists under the live name or its backup name.
+/** The ONE crash protocol under every persisted ledger, all of them
+  * [[SegmentLedger]]s (the d9/d16/d17 hash, d13 band, s8 IVF and s10
+  * kNN-graph ledgers): a ledger path has exactly one writer at a time,
+  * every writer heals a torn swap before it touches the path, and a
+  * whole-ledger rewrite is staged beside the live dir and swapped in
+  * rename-aside, so at every instant a full committed copy exists
+  * under the live name or its backup name. Private to `graft.state`:
+  * callers go through [[SegmentLedger]].
   *
   *  - [[withWriter]]: the per-path writer lock, a SIBLING of the ledger
   *    (`lockPath`) so the swap's renames never move it. Created with
@@ -23,13 +24,11 @@ class LedgerBusy(msg: String) extends IllegalArgumentException(msg)
   *    [[LedgerBusy]] (wedge, not corrupt) — appends, tombstones,
   *    compactions, retrains and takedowns of one path all exclude each
   *    other through this one lock. Before the body runs it heals a torn
-  *    whole-ledger swap (`backupPath` present, live dir gone).
+  *    swap (`backupPath` present, live dir gone).
   *  - [[heal]]: restore a backup whose live dir is missing, else drop
-  *    the leftover backup — for whole ledgers and for the sub-dir swap
-  *    a hash-ledger takedown runs inside its ledger (per-prefix slices).
+  *    the leftover backup.
   *  - [[swapIn]]: move live aside, promote staged, restore on a failed
-  *    promote, drop the backup; [[swapInAll]] commits several sibling
-  *    dirs (a multi-prefix takedown) as one.
+  *    promote, drop the backup.
   *
   * Stale locks: a lock whose holder is PROVABLY dead — it names THIS
   * host, procfs exists, and the pid is gone — is reclaimed (read →
@@ -38,12 +37,14 @@ class LedgerBusy(msg: String) extends IllegalArgumentException(msg)
   * unprovable (another NFS client, no procfs, an empty lock) is not
   * dead: the refusal names the holder and an operator deletes the lock
   * after confirming no writer is live. The read-verify-delete runs
-  * under an exclusive cross-process FileLock on a `__reclaim_mutex`
-  * sibling of the lock: without it a stalled reclaimer could delete a
-  * lock a faster reclaimer had meanwhile re-created, letting two
-  * writers in.
+  * under an exclusive cross-process FileLock on the ONE `__reclaim_mutex`
+  * of the lock's parent dir: without it a stalled reclaimer could
+  * delete a lock a faster reclaimer had meanwhile re-created, letting
+  * two writers in. The mutex file is never deleted (deleting a file
+  * another process may hold locked is racy), so each state root keeps
+  * one, not one per ledger.
   */
-object LedgerState {
+private[state] object LedgerState {
 
   def lockPath(path: String): Path = new Path(path + "__writer_lock")
   def backupPath(path: String): Path = new Path(path + "__compact_backup")
@@ -65,13 +66,8 @@ object LedgerState {
     } finally fs.delete(lock, false)
   }
 
-  /** `rollBack` restores the backup even over a present live dir: an
-    * uncommitted [[swapInAll]] group.
-    */
-  def heal(fs: FileSystem, live: Path, backup: Path,
-      rollBack: Boolean = false): Unit =
+  def heal(fs: FileSystem, live: Path, backup: Path): Unit =
     if (fs.exists(backup)) {
-      if (rollBack) fs.delete(live, true)
       if (!fs.exists(live))
         require(fs.rename(backup, live), s"could not restore $backup")
       else fs.delete(backup, true) // the swap completed; drop the relic
@@ -90,25 +86,7 @@ object LedgerState {
     fs.delete(backup, true)
   }
 
-  /** [[swapIn]] for sibling dirs committed as ONE: each `live` moves
-    * aside to its `backup` and `staged/<live name>` is promoted; then
-    * `staged` is deleted — the commit point — and only then the
-    * backups. A crash before the commit leaves `staged` behind, and
-    * [[heal]] with `rollBack = fs.exists(staged)` restores every
-    * backup, so the group lands whole or not at all.
-    */
-  def swapInAll(fs: FileSystem, staged: Path,
-      swaps: Seq[(Path, Path)]): Unit = {
-    swaps.foreach { case (live, backup) =>
-      require(fs.rename(live, backup), s"could not move $live aside")
-      require(fs.rename(new Path(staged, live.getName), live),
-        s"could not promote ${live.getName} from $staged")
-    }
-    fs.delete(staged, true)
-    swaps.foreach { case (_, backup) => fs.delete(backup, true) }
-  }
-
-  private[graft] def localHost: String =
+  def localHost: String =
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: java.io.IOException => "unknown-host" }
 
@@ -164,13 +142,16 @@ object LedgerState {
   }
 
   /** Delete `lock` iff its holder is provably dead (local FS only),
-    * under the reclaim mutex (header). True when the lock was removed.
+    * under its dir's reclaim mutex (header). True when the lock was
+    * removed. A FileLock is held per JVM, so reclaims in this JVM also
+    * serialize on this object (a second thread's `lock()` on the same
+    * file would throw, not wait).
     */
   private def reclaimIfDead(lock: Path): Boolean =
     localPathOf(lock).exists { lp =>
-      try {
+      try synchronized {
         val ch = java.nio.channels.FileChannel.open(
-          java.nio.file.Paths.get(lp.toString + "__reclaim_mutex"),
+          lp.resolveSibling("__reclaim_mutex"),
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.WRITE)
         try {

@@ -462,13 +462,11 @@ object StreamOps {
     * dedup (watermark-bounded key state) stays IN the streaming plan,
     * where Spark manages its state; the LEDGER anti-join — the
     * takedown-sensitive stage — moves into `foreachBatch`, where each
-    * micro-batch is a batch frame and the ledger read is CONSTRUCTED
-    * fresh (new file listing) per trigger: a prefix slice swapped by a
-    * takedown, or rows appended by a refresh, are visible to the very
-    * next batch. (The remover also `refreshByPath`es, keeping the
-    * session's shared file-status cache coherent; a cross-JVM deploy
-    * points that cache off ledger paths or calls refreshByPath on its
-    * reader session.)
+    * micro-batch is a batch frame and the ledger read
+    * ([[graft.queries.DedupOps]] `readHashLedger`) is CONSTRUCTED fresh
+    * per trigger from the committed segments: a takedown's tombstone
+    * segment, or a refresh's appended one, is visible to the very next
+    * batch once its commit marker lands.
     *
     * Staleness bound, documented and spec-gated: a takedown is honored
     * by the NEXT micro-batch — except for a hash that already entered
@@ -485,18 +483,10 @@ object StreamOps {
     * horizon, not just ledger-novel ones — at a high duplicate rate
     * that is a state-size regression vs ST6 by the duplicate fraction;
     * an ST16-style Bloom prefilter ahead of the state is the bound if
-    * it bites. (2) the per-trigger read is unsynchronized with a LIVE
-    * takedown's per-prefix swap: a listing landing inside one swap's
-    * two-rename window can miss that prefix slice for ONE trigger
-    * (duplicates of that slice emit as novel once), and a takedown
-    * that CRASHES between its renames leaves the slice missing until
-    * the next writer entry heals it — takedowns are rare,
-    * single-writer-locked operations, so the exposure is the crash
-    * window itself; an operator runbook pairs a crashed takedown with
-    * an immediate heal (any writer entry, e.g. a no-op refresh).
-    * (3) the freshness contract re-reads the ledger EVERY micro-batch
-    * (vs ST6's pinned broadcast built once at start) — but the read is
-    * PREFIX-PRUNED (r22, the d9 batch-path treatment): the ledger is
+    * it bites. (2) the freshness contract re-reads the ledger EVERY
+    * micro-batch (vs ST6's pinned broadcast built once at start) — but
+    * the read is
+    * PREFIX-PRUNED (r22, the d9 batch-path treatment): every segment is
     * parquet-partitioned by the hash's first hex char, the batch's
     * distinct prefixes (≤ 16 driver-side strings per trigger) land in
     * the scan's PartitionFilters, and only those slices are read and
@@ -524,10 +514,11 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("content_hash")
       .writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // fresh listing per trigger (the takedown-pickup contract),
-        // pruned to the batch's hash-prefix slices before the read
+        // fresh committed segments per trigger (the takedown-pickup
+        // contract), pruned to the batch's hash-prefix slices
         val ledger = graft.queries.DedupOps.prunedByPrefix(
-          Parquet.read(batch.sparkSession, ledgerPath), batch)
+          graft.queries.DedupOps.readHashLedger(batch.sparkSession,
+            ledgerPath), batch)
           .select("content_hash")
         sink(batch.join(broadcast(ledger),
           Seq("content_hash"), "left_anti"), id)

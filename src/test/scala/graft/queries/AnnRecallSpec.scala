@@ -118,12 +118,12 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // a TORN append (assign seg written, commit marker never
       // created — the mid-crash state): invisible to readers, deleted
       // and re-derived by the next refresh without duplicating rows
-      val torn = new java.io.File(s"$path/assign/seg-9/cid=0")
+      val torn = new java.io.File(s"$path/assign/seg=9/cid=0")
       torn.mkdirs()
       new java.io.File(torn, "part-torn.parquet").createNewFile()
       SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0, 1, 2, 3)
       SimilarityOps.refreshIvfLedger(spark, path, e) // steady-state
-      new java.io.File(s"$path/assign/seg-9").exists() shouldBe false
+      new java.io.File(s"$path/assign/seg=9").exists() shouldBe false
       snapshot() shouldBe before
 
       // compaction: one segment, same rows, same pruned-read layout
@@ -172,7 +172,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       SimilarityOps.refreshIvfLedger(spark, path, e) // 2-segment chain
       // a live compactor holds the lock: a second compactor and an
       // append both refuse loudly instead of racing the swap window
-      val lock = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
+      val lock = new java.io.File(graft.state.SegmentLedger.lockPath(path).toString)
       lock.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         SimilarityOps.compactIvfLedger(spark, path)
@@ -193,7 +193,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
           in.toDF.toDF("vec_id", "embedding"), path + "_cold")
     } finally {
       rm(new java.io.File(path))
-      rm(new java.io.File(graft.state.LedgerState.lockPath(path).toString))
+      rm(new java.io.File(graft.state.SegmentLedger.lockPath(path).toString))
     }
   }
 
@@ -215,7 +215,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // DURING the append snapshot the segs and swap the live dir
       // aside, deleting the in-flight segment with the backup — the
       // lease closes that window end-to-end (r16 advisory)
-      val lease = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
+      val lease = new java.io.File(graft.state.SegmentLedger.lockPath(path).toString)
       lease.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         SimilarityOps.compactIvfLedger(spark, path)
@@ -233,7 +233,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       lease.exists() shouldBe false
     } finally {
       rm(new java.io.File(path))
-      rm(new java.io.File(graft.state.LedgerState.lockPath(path).toString))
+      rm(new java.io.File(graft.state.SegmentLedger.lockPath(path).toString))
     }
   }
 
@@ -256,7 +256,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       SimilarityOps.refreshKnnLedger(spark, path, e)
       SegmentLedger.segments(spark, path, "assign") shouldBe Seq(0, 1, 2)
       // batch-sized appends: each segment holds exactly its batch
-      def segIds(k: Int) = spark.read.parquet(s"$path/ids/seg-$k")
+      def segIds(k: Int) = spark.read.parquet(s"$path/ids/seg=$k")
         .collect().map(_.getLong(0)).toSet
       val allIds = e.select("vec_id").collect().map(_.getLong(0)).toSet
       segIds(0) shouldBe allIds.filter(_ % 4 == 0)
@@ -779,7 +779,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       val nDead = dead.count()
       SimilarityOps.s8Tombs(spark, tpath).count() shouldBe nDead
       // a TORN tombstone segment (dir, no marker) is invisible
-      new java.io.File(s"$tpath/tombs/seg-9").mkdirs()
+      new java.io.File(s"$tpath/tombs/seg=9").mkdirs()
       SimilarityOps.s8Tombs(spark, tpath).count() shouldBe nDead
       // the excluded read before compaction
       val q = e.filter(col("vec_id") < 8)
@@ -800,7 +800,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // writer guards: a takedown REFUSES while a compaction holds its
       // lock (a tombstone committed into the rename-aside window would
       // be deleted un-applied — a lost takedown)...
-      val lockF = new java.io.File(graft.state.LedgerState.lockPath(tpath).toString)
+      val lockF = new java.io.File(graft.state.SegmentLedger.lockPath(tpath).toString)
       lockF.createNewFile() shouldBe true
       val deadOne = e.filter(col("vec_id") === 0).select("vec_id")
       an[IllegalArgumentException] should be thrownBy
@@ -906,7 +906,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       SimilarityOps.retrainIvfLedger(spark, grown)
       assigns(grown) shouldBe assigns(fresh)
       // single-writer: the shared compaction lock refuses a retrain
-      val lockF = new java.io.File(graft.state.LedgerState.lockPath(grown).toString)
+      val lockF = new java.io.File(graft.state.SegmentLedger.lockPath(grown).toString)
       lockF.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         SimilarityOps.retrainIvfLedger(spark, grown)
@@ -1060,13 +1060,13 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       // compaction purges physically on EVERY dir and repairs
       SimilarityOps.compactKnnLedger(spark, tpath)
       SimilarityOps.s8Tombs(spark, tpath).count() shouldBe 0L
-      spark.read.parquet(s"$tpath/assign/seg-0")
+      spark.read.parquet(s"$tpath/assign/seg=0")
         .filter(col("vec_id").isin(deadIds.toSeq: _*))
         .count() shouldBe 0L
-      spark.read.parquet(s"$tpath/ids/seg-0")
+      spark.read.parquet(s"$tpath/ids/seg=0")
         .filter(col("vec_id").isin(deadIds.toSeq: _*))
         .count() shouldBe 0L
-      spark.read.parquet(s"$tpath/probes/seg-0")
+      spark.read.parquet(s"$tpath/probes/seg=0")
         .filter(col("qid").isin(deadIds.toSeq: _*))
         .count() shouldBe 0L
       val repaired = graphRows(tpath)
@@ -1162,7 +1162,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
     def cols(p: String, seg: Int) =
-      spark.read.parquet(s"$p/probes/seg-$seg").columns.toSeq
+      spark.read.parquet(s"$p/probes/seg=$seg").columns.toSeq
     try {
       val e = graft.sources.Tables.load(spark, TestSpark.sfDir,
           "embeddings").select("vec_id", "embedding")
@@ -1175,13 +1175,13 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(
         slim), fs, new org.apache.hadoop.fs.Path(fat), false, fs.getConf)
       graft.state.SegmentLedger.write(
-        spark.read.parquet(s"$fat/probes/seg-0").join(
-          spark.read.parquet(s"$fat/assign/seg-0")
+        spark.read.parquet(s"$fat/probes/seg=0").join(
+          spark.read.parquet(s"$fat/assign/seg=0")
             .select(col("vec_id").as("qid"), col("embedding").as("qe")),
           Seq("qid")), tmp, "probes", 0, Some("cid"))
-      rm(new java.io.File(s"$fat/probes/seg-0"))
-      new java.io.File(s"$tmp/probes/seg-0")
-        .renameTo(new java.io.File(s"$fat/probes/seg-0")) shouldBe true
+      rm(new java.io.File(s"$fat/probes/seg=0"))
+      new java.io.File(s"$tmp/probes/seg=0")
+        .renameTo(new java.io.File(s"$fat/probes/seg=0")) shouldBe true
       cols(fat, 0) should contain("qe")
       // same daily batch appended to both
       SimilarityOps.refreshKnnLedger(spark, slim, e)

@@ -59,7 +59,7 @@ class BloomDedupSpec extends AnyFunSuite with Matchers {
     // compatibility rides on every version sharing it)
     graft.functions.BloomMembership.bitSize(bloom.get) shouldBe
       graft.functions.BloomMembership.defaultNumBits
-    val misses = spark.read.parquet(path)
+    val misses = DedupOps.readHashLedger(spark, path)
       .filter(!graft.functions.BloomMembership
         .mightContain(bloom.get, xxhash64(col("content_hash"))))
       .count()
@@ -77,7 +77,7 @@ class BloomDedupSpec extends AnyFunSuite with Matchers {
     val n = hashed.count()
     val nPos = hashed.filter(mc).count()
     val trueDups = hashed.join(
-      spark.read.parquet(path).select("content_hash"),
+      DedupOps.readHashLedger(spark, path).select("content_hash"),
       Seq("content_hash"), "left_semi").count()
     nPos should be >= trueDups // no false negatives
     // ~2% design fpp, 10x slack: the join input is a small fraction
@@ -92,7 +92,7 @@ class BloomDedupSpec extends AnyFunSuite with Matchers {
     rm(new java.io.File(s"$path/_bloom"))
     DedupOps.readBloom(spark, path) shouldBe None
     // query path with no filter: plain anti-join, same answer
-    DedupOps.bloomGuardedDedup(batch, spark.read.parquet(path), None)
+    DedupOps.bloomGuardedDedup(batch, DedupOps.readHashLedger(spark, path), None)
       .orderBy("content_hash").collect().map(_.toSeq).toSeq shouldBe expected
     // full run rebuilds the sidecar from the standing ledger
     runD16() shouldBe expected
@@ -107,7 +107,7 @@ class BloomDedupSpec extends AnyFunSuite with Matchers {
     // a batch with guaranteed positives (every prior doc is ledgered):
     // the exact join survives, once, on the candidate branch only
     val plan = DedupOps.bloomGuardedDedup(docs,
-        spark.read.parquet(path), bloom)
+        DedupOps.readHashLedger(spark, path), bloom)
       .queryExecution.executedPlan.toString
     plan should include("bloom_guard")
     plan.split("LeftAnti").length shouldBe 2
@@ -125,7 +125,7 @@ class BloomDedupSpec extends AnyFunSuite with Matchers {
     val nPos = hashed.filter(graft.functions.BloomMembership
       .mightContain(bloom.get, xxhash64(col("content_hash")))).count()
     val planBatch = DedupOps.bloomGuardedDedup(batch,
-        spark.read.parquet(path), bloom)
+        DedupOps.readHashLedger(spark, path), bloom)
       .queryExecution.executedPlan.toString
     if (nPos == 0L) planBatch should not include "LeftAnti"
     else planBatch.split("LeftAnti").length shouldBe 2
@@ -137,7 +137,7 @@ class BloomDedupSpec extends AnyFunSuite with Matchers {
     // the committed filter would miss the loser's hashes (false
     // negatives = wrong answers), hence the exclusive-create lock
     val path = freshState()
-    val lock = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
+    val lock = new java.io.File(graft.state.SegmentLedger.lockPath(path).toString)
     lock.getParentFile.mkdirs()
     lock.createNewFile() shouldBe true
     an[IllegalArgumentException] should be thrownBy runD16()
@@ -174,11 +174,11 @@ class BloomDedupSpec extends AnyFunSuite with Matchers {
     val withNull = batch.select("doc_id", "text").unionByName(
       Seq((-1L, null.asInstanceOf[String])).toDF("doc_id", "text"))
     val guarded = DedupOps.bloomGuardedDedup(withNull,
-        spark.read.parquet(path), bloom)
+        DedupOps.readHashLedger(spark, path), bloom)
       .orderBy(col("content_hash").asc_nulls_first)
       .collect().map(_.toSeq).toSeq
     val plain = DedupOps.bloomGuardedDedup(withNull,
-        spark.read.parquet(path), None)
+        DedupOps.readHashLedger(spark, path), None)
       .orderBy(col("content_hash").asc_nulls_first)
       .collect().map(_.toSeq).toSeq
     guarded shouldBe plain

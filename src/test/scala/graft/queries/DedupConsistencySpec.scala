@@ -259,7 +259,8 @@ class DedupConsistencySpec extends AnyFunSuite with Matchers {
       spark, TestSpark.sfDir).collect()
     runD9() // bootstrap (or steady-state, if an earlier test ledgered)
     val dir = new java.io.File(DedupOps.d9LedgerPath(TestSpark.sfDir))
-    // the ledger is hash-prefix partitioned (pfx=XX subdirs) — walk it
+    // the ledger's segments are hash-prefix partitioned (pfx=X
+    // subdirs) — walk them
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
     def snapshot() = walk(dir)
@@ -278,7 +279,7 @@ class DedupConsistencySpec extends AnyFunSuite with Matchers {
       .createTempDirectory("graft_compact").toString
     val path = s"$root/ledger_p1"
     // 12 disjoint hash batches appended one by one — the d9 shape
-    // (pfx-partitioned), each append leaving file fragments behind
+    // (pfx-partitioned segments), each append leaving file fragments
     val docs = graft.sources.Tables.load(spark, TestSpark.sfDir,
         "documents")
       .select(md5(col("text")).as("content_hash")).distinct()
@@ -296,7 +297,7 @@ class DedupConsistencySpec extends AnyFunSuite with Matchers {
         d -> fs.size }
     filesPerPfx().keys.foreach(_ should startWith ("pfx="))
     filesPerPfx().values.max should be > 1 // the append-chain tax
-    def snapshot() = spark.read.parquet(path)
+    def snapshot() = DedupOps.readHashLedger(spark, path)
       .collect().map(_.toSeq).sortBy(_.toString)
     val before = snapshot()
     before.length should be > 0

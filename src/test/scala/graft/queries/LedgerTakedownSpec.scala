@@ -53,78 +53,79 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
           Seq((200L, keepTexts.head), (201L, "genuinely new doc")))
       // pre-takedown: reclaimed content is swallowed as duplicate
       val pre = DedupOps.incrementalDedup(batch,
-        spark.read.parquet(path)).collect()
+        DedupOps.readHashLedger(spark, path)).collect()
       pre.map(_.getLong(1)).toSet shouldBe Set(201L)
 
-      // untouched prefix slices stay byte-identical
-      val deadPfx = hashesOf(deadTexts)
-        .select(substring(col("content_hash"), 1, 1)).distinct()
-        .collect().map(_.getString(0)).toSet
-      def snapshot() = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(path))
-          .filter(_.getName.startsWith("part-"))
-          .map(f => (f.getPath, f.lastModified, f.length)).sortBy(_._1)
-      }
-      val before = snapshot()
+      // a takedown is one tombstone segment: every hash data file
+      // stays byte-identical
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      def snapshot() = walk(new java.io.File(path))
+        .filter(_.getName.startsWith("part-"))
+        .map(f => (f.getPath, f.lastModified, f.length)).sortBy(_._1)
+      def dataFiles() = snapshot().filterNot(_._1.contains("/tombs/"))
+      val before = dataFiles()
       DedupOps.removeFromHashLedger(spark, path, hashesOf(deadTexts))
-      val after = snapshot()
-      val untouchedBefore = before.filterNot(r =>
-        deadPfx.exists(pf => r._1.contains(s"pfx=$pf/")))
-      val untouchedAfter = after.filterNot(r =>
-        deadPfx.exists(pf => r._1.contains(s"pfx=$pf/")))
-      untouchedAfter shouldBe untouchedBefore
+      dataFiles() shouldBe before
+      SegmentLedger.segments(spark, path, "tombs").size shouldBe 1
 
       // post-takedown: the same content re-evaluates as novel; the
       // standing hashes still dedup
       val post = DedupOps.incrementalDedup(batch,
-        spark.read.parquet(path)).collect()
+        DedupOps.readHashLedger(spark, path)).collect()
       post.map(_.getLong(1)).toSet shouldBe
         (Set(201L) ++ (100L until 110L))
-      // idempotent: removing the same hashes again rewrites nothing
+      // idempotent: removing the same hashes again writes nothing
       val s1 = snapshot()
       DedupOps.removeFromHashLedger(spark, path, hashesOf(deadTexts))
       snapshot() shouldBe s1
+      // single-writer: a held lock refuses (wedge, not corrupt), and
+      // once released the removal lands and reads back
+      val total = DedupOps.readHashLedger(spark, path).count()
+      val lock = new java.io.File(SegmentLedger.lockPath(path).toString)
+      lock.createNewFile() shouldBe true
+      an[IllegalArgumentException] should be thrownBy
+        DedupOps.removeFromHashLedger(spark, path,
+          hashesOf(Seq(keepTexts.last)))
+      lock.delete() shouldBe true
+      DedupOps.readHashLedger(spark, path).count() shouldBe total
+      DedupOps.removeFromHashLedger(spark, path,
+        hashesOf(Seq(keepTexts.last)))
+      DedupOps.readHashLedger(spark, path).count() shouldBe total - 1
       // and a refresh re-ledgers the reclaimed content as novel
-      DedupOps.refreshLedger(spark, path, hashesOf(deadTexts))
-      DedupOps.incrementalDedup(batch, spark.read.parquet(path))
+      DedupOps.refreshLedger(spark, path,
+        hashesOf(deadTexts :+ keepTexts.last))
+      DedupOps.incrementalDedup(batch, DedupOps.readHashLedger(spark, path))
         .collect().map(_.getLong(1)).toSet shouldBe Set(201L)
     } finally rm(new java.io.File(path))
   }
 
-  test("d9 hash ledger: takedown crash points self-heal (torn swap " +
-      "restored, stale staging discarded, held lock refuses)") {
-    val path = tmpPath("d9crash")
+  test("hash ledger: refresh/takedown cycles resurrect with untomb " +
+      "records — one physical row per content_hash, exact live reads") {
+    val path = tmpPath("d9cycle")
     try {
-      val texts = (0 until 30).map(i => s"crash case doc $i")
-      DedupOps.refreshLedger(spark, path, hashesOf(texts))
-      val total = spark.read.parquet(path).count()
-      // simulate a crash BETWEEN the two renames: live slice moved to
-      // its backup name, never promoted
-      val dir = new java.io.File(path)
-      val somePfx = dir.listFiles().map(_.getName)
-        .filter(_.startsWith("pfx=")).head.stripPrefix("pfx=")
-      new java.io.File(path, s"pfx=$somePfx")
-        .renameTo(new java.io.File(path, s"_takedown_backup_$somePfx")) shouldBe true
-      // a stale staging dir from a crash mid-write
-      new java.io.File(path, s"_takedown_staging_$somePfx").mkdirs()
-      // the next writer entry heals both
-      DedupOps.refreshLedger(spark, path, hashesOf(texts))
-      spark.read.parquet(path).count() shouldBe total
-      new java.io.File(path, s"_takedown_backup_$somePfx")
-        .exists() shouldBe false
-      new java.io.File(path, s"_takedown_staging_$somePfx")
-        .exists() shouldBe false
-      // single-writer: a held lock refuses (wedge, not corrupt)
-      val lock = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
-      lock.createNewFile() shouldBe true
-      an[IllegalArgumentException] should be thrownBy
-        DedupOps.removeFromHashLedger(spark, path,
-          hashesOf(Seq(texts.head)))
-      lock.delete() shouldBe true
-      DedupOps.removeFromHashLedger(spark, path, hashesOf(Seq(texts.head)))
-      spark.read.parquet(path).count() shouldBe total - 1
+      val keep = (0 until 20).map(i => s"cycle standing doc $i")
+      val dead = (0 until 6).map(i => s"cycle reclaimed doc $i")
+      val all = keep ++ dead
+      def hashSet(texts: Seq[String]) = hashesOf(texts).collect()
+        .map(_.getString(0)).toSet
+      def physical() = SegmentLedger.read(spark, path, "hashes")
+        .groupBy("content_hash").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      def check(live: Set[String]): Unit = {
+        DedupOps.readHashLedger(spark, path).collect()
+          .map(_.getString(0)).toSet shouldBe live
+        physical().keySet shouldBe hashSet(all)
+        physical().values.toSet shouldBe Set(1L)
+      }
+      for (cycle <- 0 until 3) withClue(s"cycle $cycle: ") {
+        DedupOps.refreshLedger(spark, path, hashesOf(all))
+        check(hashSet(all))
+        if (cycle < 2) {
+          DedupOps.removeFromHashLedger(spark, path, hashesOf(dead))
+          check(hashSet(keep))
+        }
+      }
     } finally rm(new java.io.File(path))
   }
 
@@ -218,7 +219,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       DedupOps.removeFromBandLedger(spark, path, Seq(1L).toDF("doc_id"))
       // a held writer lock REFUSES every band-ledger mutator (the r19
       // double-swap/lost-append race is closed by serialization)
-      val lock = new java.io.File(graft.state.LedgerState.lockPath(path).toString)
+      val lock = new java.io.File(graft.state.SegmentLedger.lockPath(path).toString)
       lock.createNewFile() shouldBe true
       an[IllegalArgumentException] should be thrownBy
         DedupOps.removeFromBandLedger(spark, path, Seq(2L).toDF("doc_id"))
@@ -245,7 +246,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
     try {
       val texts = (0 until 30).map(i => s"refresh heal doc $i")
       DedupOps.refreshLedger(spark, path, hashesOf(texts))
-      val total = spark.read.parquet(path).count()
+      val total = DedupOps.readHashLedger(spark, path).count()
       // simulate a compaction crash between its two renames
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
@@ -254,11 +255,11 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       // the daily refresh arrives with a SMALL prior — it must restore
       // the backup and append nothing, not bootstrap a 5-hash ledger
       DedupOps.refreshLedger(spark, path, hashesOf(texts.take(5)))
-      spark.read.parquet(path).count() shouldBe total
+      DedupOps.readHashLedger(spark, path).count() shouldBe total
       new java.io.File(path + "__compact_backup").exists() shouldBe false
       // and a following compaction preserves everything
       DedupOps.compactLedger(spark, path)
-      spark.read.parquet(path).count() shouldBe total
+      DedupOps.readHashLedger(spark, path).count() shouldBe total
     } finally {
       rm(new java.io.File(path))
       rm(new java.io.File(path + "__compact_backup"))
@@ -272,7 +273,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
     try {
       val texts = (0 until 25).map(i => s"bloom heal doc $i")
       DedupOps.refreshLedgerBloomed(spark, path, hashesOf(texts))
-      val total = spark.read.parquet(path).count()
+      val total = DedupOps.readHashLedger(spark, path).count()
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       fs.rename(new org.apache.hadoop.fs.Path(path),
@@ -282,12 +283,12 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       // append — the d16 crash ordering), not re-bootstrap from prior
       DedupOps.refreshLedgerBloomed(spark, path,
         hashesOf(texts.take(3) ++ Seq("bloom heal novel doc")))
-      spark.read.parquet(path).count() shouldBe total + 1
+      DedupOps.readHashLedger(spark, path).count() shouldBe total + 1
       new java.io.File(path + "__compact_backup").exists() shouldBe false
       // superset invariant over the restored+grown ledger
       val bloom = DedupOps.readBloom(spark, path)
       bloom shouldBe defined
-      spark.read.parquet(path)
+      DedupOps.readHashLedger(spark, path)
         .filter(!graft.functions.BloomMembership.mightContain(
           bloom.get, xxhash64(col("content_hash"))))
         .count() shouldBe 0L
@@ -295,29 +296,6 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       rm(new java.io.File(path))
       rm(new java.io.File(path + "__compact_backup"))
     }
-  }
-
-  test("compactLedger heals a torn hash takedown swap BEFORE " +
-      "snapshotting — the backed-up prefix slice survives compaction") {
-    // the r19-advice high: compaction's scan skips underscore dirs, so
-    // without the heal a torn takedown swap (live pfx=X renamed aside,
-    // never promoted) would compact a copy MISSING that slice and then
-    // destroy the slice's only copy with the backup
-    val path = tmpPath("compactheal")
-    try {
-      val texts = (0 until 30).map(i => s"compact heal doc $i")
-      DedupOps.refreshLedger(spark, path, hashesOf(texts))
-      val total = spark.read.parquet(path).count()
-      val dir = new java.io.File(path)
-      val somePfx = dir.listFiles().map(_.getName)
-        .filter(_.startsWith("pfx=")).head.stripPrefix("pfx=")
-      new java.io.File(path, s"pfx=$somePfx").renameTo(
-        new java.io.File(path, s"_takedown_backup_$somePfx")) shouldBe true
-      DedupOps.compactLedger(spark, path)
-      spark.read.parquet(path).count() shouldBe total
-      new java.io.File(path, s"_takedown_backup_$somePfx")
-        .exists() shouldBe false
-    } finally rm(new java.io.File(path))
   }
 
   test("d16: bloom superset invariant SURVIVES ledger shrinkage (the " +
@@ -336,7 +314,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       // ledger (no false negative is possible under deletion)
       DedupOps.readBloom(spark, path).get.toSeq shouldBe
         bloomBefore.get.toSeq
-      spark.read.parquet(path)
+      DedupOps.readHashLedger(spark, path)
         .filter(!graft.functions.BloomMembership.mightContain(
           bloomBefore.get, xxhash64(col("content_hash"))))
         .count() shouldBe 0L
@@ -346,10 +324,10 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
         deadTexts.zipWithIndex.map { case (t, i) => (300L + i, t) } ++
           Seq((400L, keepTexts.head)))
       val guarded = DedupOps.bloomGuardedDedup(batch,
-          spark.read.parquet(path), DedupOps.readBloom(spark, path))
+          DedupOps.readHashLedger(spark, path), DedupOps.readBloom(spark, path))
         .orderBy("content_hash").collect().map(_.toSeq).toSeq
       val exact = DedupOps.bloomGuardedDedup(batch,
-          spark.read.parquet(path), None)
+          DedupOps.readHashLedger(spark, path), None)
         .orderBy("content_hash").collect().map(_.toSeq).toSeq
       guarded shouldBe exact
       guarded.map(_(1).asInstanceOf[Long]).toSet shouldBe
@@ -364,11 +342,11 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       // starts a fresh sidecar lineage): fewer set bits than the
       // pre-takedown filter, not the same bitmap carried over
       rebuilt.get.toSeq should not equal bloomBefore.get.toSeq
-      spark.read.parquet(path)
+      DedupOps.readHashLedger(spark, path)
         .filter(!graft.functions.BloomMembership.mightContain(
           rebuilt.get, xxhash64(col("content_hash"))))
         .count() shouldBe 0L
-      DedupOps.bloomGuardedDedup(batch, spark.read.parquet(path),
+      DedupOps.bloomGuardedDedup(batch, DedupOps.readHashLedger(spark, path),
           rebuilt)
         .orderBy("content_hash").collect().map(_.toSeq).toSeq shouldBe
         guarded
@@ -427,14 +405,14 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       // enough ledger docs to populate many of the 16 prefix slices
       val texts = (0 until 64).map(i => s"st18 prune ledger doc $i")
       DedupOps.refreshLedger(spark, path, hashesOf(texts))
-      val nSlices = new java.io.File(path).listFiles()
+      val nSlices = new java.io.File(s"$path/hashes/seg=0").listFiles()
         .count(_.getName.startsWith("pfx=")) // sanity: partitioned layout
       nSlices should be > 4
       // a two-doc batch touches at most two prefix slices
       val batch = batchOf(Seq((1L, texts.head), (2L, "st18 prune novel")))
         .withColumn("content_hash", md5(col("text")))
       val pruned = DedupOps.prunedByPrefix(
-        spark.read.parquet(path), batch)
+        DedupOps.readHashLedger(spark, path), batch)
       // the prune is a PARTITION filter on the scan (the d9 plan-gate
       // pattern): listing and bytes are bounded by the batch's
       // prefixes, not the ledger's size
@@ -452,7 +430,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
           Seq("content_hash"), "left_anti")
           .select("doc_id").collect().map(_.getLong(0)).toSet
       novel(pruned) shouldBe
-        novel(spark.read.parquet(path))
+        novel(DedupOps.readHashLedger(spark, path))
       novel(pruned) shouldBe Set(2L)
     } finally rm(new java.io.File(path))
   }
@@ -505,11 +483,10 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
   test("ST6-shape streaming dedup over a taken-down ledger: the shrunk " +
       "state is honored on RESTART (the static-side snapshot contract) " +
       "and reclaimed content is then kept") {
-    // A running stream's path-based static relation PINS its file
-    // listing (a V1 relation's InMemoryFileIndex) — a takedown REWRITE
-    // of a prefix dir is therefore not visible to an in-flight query
-    // (unlike appends, a shrink replaces files), and picking it up is
-    // a query restart: the same contract ST16 documents for its filter
+    // A running stream's static ledger side PINS the committed
+    // segments it was built over (its roots and its tombstone set) —
+    // a takedown's new tombstone segment is therefore not visible to
+    // an in-flight query, and picking it up is a query restart: the same contract ST16 documents for its filter
     // snapshot, and the same one any broadcast-model refresh has.
     // This test proves the restart path end-to-end: drop → takedown →
     // restart with a re-read ledger → the reclaimed content is NOVEL.
@@ -526,7 +503,7 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
       def startQuery(name: String) = graft.streaming.StreamOps
         .incrementalDedup(
           in.toDF.toDF("doc_id", "text", "ts"),
-          spark.read.parquet(path).select("content_hash"),
+          DedupOps.readHashLedger(spark, path).select("content_hash"),
           textCol = "text", tsCol = "ts", watermarkDelay = "10 seconds")
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()

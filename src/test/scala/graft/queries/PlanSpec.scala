@@ -144,8 +144,10 @@ class PlanSpec extends AnyFunSuite with Matchers {
     // nprobe/cells of the index's bytes, never the whole corpus-sized
     // index — the r13 `weak`)
     val segScans = scans.filter(
-      scanRoots(_).exists(_.contains("/assign/seg-")))
-    segScans.size should be >= 2 // bootstrap seg + day-2 append seg
+      scanRoots(_).exists(_.contains("/assign/seg=")))
+    // bootstrap seg + day-2 append seg, read as one relation
+    segScans.flatMap(scanRoots)
+      .count(_.contains("/assign/seg=")) should be >= 2
     segScans.foreach { f =>
       withClue(f.toString) {
         f.partitionFilters.flatMap(_.references.toSeq.map(_.name))
@@ -173,9 +175,9 @@ class PlanSpec extends AnyFunSuite with Matchers {
       graft.queries.SimilarityOps.s8Ids(spark, path),
       Seq("vec_id"), "left_anti")
     val roots = fileScans(novel).flatMap(scanRoots)
-    roots.count(_.contains("/ids/seg-")) should be >= 2
+    roots.count(_.contains("/ids/seg=")) should be >= 2
     roots.filter(_.contains("graft_s8_ivf"))
-      .foreach(r => withClue(r) { r should include("/ids/seg-") })
+      .foreach(r => withClue(r) { r should include("/ids/seg=") })
   }
 
   test("s9: corpus-sided probe selection is heap-agg'd with the " +

@@ -184,6 +184,9 @@ class ParquetReadSpec extends AnyFunSuite with Matchers {
   test("building s8Assign launches no job at 2 segments and at 6") {
     val root = tmp("seg")
     val (s8, s10, d13) = (s"$root/s8_ivf", s"$root/s10_knn", s"$root/d13")
+    val d9 = s"$root/d9"
+    def hashes(d: org.apache.spark.sql.DataFrame) =
+      d.select(md5(col("text")).as("content_hash"))
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
       .select("vec_id", "embedding")
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
@@ -195,12 +198,18 @@ class ParquetReadSpec extends AnyFunSuite with Matchers {
         emb.filter(col("vec_id") % 6 < upTo))
       DedupOps.refreshNearDupLedger(spark, d13,
         docs.filter(col("doc_id") % 6 < upTo))
+      DedupOps.refreshLedger(spark, d9,
+        hashes(docs.filter(col("doc_id") % 6 === upTo - 1)))
     }
     def buildJobs(): Seq[Int] = Seq(
       jobsDuring(spark)(SimilarityOps.s8Assign(spark, s8, None)),
       jobsDuring(spark)(DedupOps.readBandLedger(spark, d13)),
-      jobsDuring(spark)(SimilarityOps.s10Graph(spark, s10, None)))
+      jobsDuring(spark)(SimilarityOps.s10Graph(spark, s10, None)),
+      jobsDuring(spark)(DedupOps.readHashLedger(spark, d9)))
     (1 to 2).foreach(append)
+    // d9's log: one tomb segment
+    DedupOps.removeFromHashLedger(spark, d9,
+      hashes(docs.filter(col("doc_id") === 0)))
     // d13's log: tomb docs 0 and 6, then untomb doc 0 (re-ingested)
     DedupOps.removeFromBandLedger(spark, d13, Seq(0L, 6L).toDF("doc_id"))
     DedupOps.refreshNearDupLedger(spark, d13, docs.filter(col("doc_id") === 0))
@@ -208,6 +217,8 @@ class ParquetReadSpec extends AnyFunSuite with Matchers {
     SegmentLedger.segments(spark, s10, "edges") shouldBe Seq(0, 1)
     SegmentLedger.segments(spark, d13, "index") shouldBe Seq(0, 1)
     SegmentLedger.segments(spark, d13, "tombs") shouldBe Seq(2, 3)
+    SegmentLedger.segments(spark, d9, "hashes") shouldBe Seq(0, 1)
+    SegmentLedger.segments(spark, d9, "tombs") shouldBe Seq(2)
     val atTwo = buildJobs()
     DedupOps.readBandLedger(spark, d13).filter(col("doc_id").isin(0L, 6L))
       .select("doc_id").as[Long].collect().toSeq shouldBe Seq(0L)
@@ -215,8 +226,9 @@ class ParquetReadSpec extends AnyFunSuite with Matchers {
     SegmentLedger.segments(spark, s8, "assign") shouldBe (0 to 5)
     SegmentLedger.segments(spark, s10, "edges") shouldBe (0 to 5)
     SegmentLedger.segments(spark, d13, "index").size shouldBe 6
+    SegmentLedger.segments(spark, d9, "hashes").size shouldBe 6
     val atSix = buildJobs()
-    (atTwo, atSix) shouldBe ((Seq(0, 0, 0), Seq(0, 0, 0)))
+    (atTwo, atSix) shouldBe ((Seq(0, 0, 0, 0), Seq(0, 0, 0, 0)))
     SimilarityOps.s8Assign(spark, s8, None).count() shouldBe emb.count()
   }
 }

@@ -179,7 +179,7 @@ class LedgerStateFaultSpec extends AnyFunSuite with Matchers
       op: String => Unit, noop: String => Unit, read: String => Seq[String])
 
   private def hashRead(path: String): Seq[String] =
-    spark.read.parquet(path).select("content_hash").collect()
+    DedupOps.readHashLedger(spark, path).select("content_hash").collect()
       .map(_.getString(0)).toSeq.sorted
 
   private def bandRead(path: String): Seq[String] =

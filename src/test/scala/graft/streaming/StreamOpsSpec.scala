@@ -943,11 +943,11 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
         in.addData(b1: _*); q.processAllAvailable()
         // a torn (marker-less) segment appearing mid-stream — the
         // crash shape — is cleaned by the next micro-batch's refresh
-        val torn = new java.io.File(s"$path/assign/seg-99/cid=0")
+        val torn = new java.io.File(s"$path/assign/seg=99/cid=0")
         torn.mkdirs()
         new java.io.File(torn, "part-torn.parquet").createNewFile()
         in.addData(b2: _*); q.processAllAvailable()
-        new java.io.File(s"$path/assign/seg-99").exists() shouldBe false
+        new java.io.File(s"$path/assign/seg=99").exists() shouldBe false
         in.addData(b3: _*); q.processAllAvailable()
         // at-least-once delivery: the same rows arriving again append
         // NOTHING (novelty keys on committed ids) — ledger files
