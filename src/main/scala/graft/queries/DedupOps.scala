@@ -458,9 +458,10 @@ object DedupOps extends QueryGroup {
   // component (singletons label themselves) — the "pick one per group"
   // step a dedup pipeline runs after pair generation.
   //
-  // Delegates to [[graft.operators.ConnectedComponents]] (min-label
-  // propagation + pointer jumping, O(log diameter) rounds, checkpointed
-  // lineage) — see that operator for the scale analysis.
+  // Delegates to [[graft.operators.ConnectedComponents]] (union-find on
+  // the driver below its edge-count gate; above it min-label propagation
+  // + pointer jumping, O(log diameter) rounds, checkpointed lineage) —
+  // see that operator for the scale analysis.
   private val d6 = QueryDef(
     "d6_dedup_clusters",
     (s, dir) => {

@@ -125,9 +125,9 @@ object MultimodalOps extends QueryGroup {
        |ORDER BY i, j""".stripMargin))
 
   // --------------------------------------------------------------- MM4
-  // Media near-dup CLUSTERS: mm3's pairs fed through the distributed
-  // ConnectedComponents (the d6 machinery — large-star/small-star
-  // label propagation, never a driver-side union-find), so a re-encode
+  // Media near-dup CLUSTERS: mm3's pairs fed through ConnectedComponents
+  // (the d6 machinery — a driver-side union-find below its edge-count
+  // gate, large-star/small-star label propagation above it), so a re-encode
   // chain (base ↔ BMP twin ↔ perturbation) lands in ONE cluster with a
   // canonical min-id label — the keep-one-per-cluster step of media
   // dedup. The phash table rides its own tap; DuckDB re-derives the

@@ -521,14 +521,19 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
   // checkpoint recovery, so these collect through foreachBatch (which
   // supports it).
 
-  private def checkpointDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+  /** A recovery test over a fresh checkpoint dir, deleted afterwards. */
+  private def recoveryTest(name: String)(body: String => Any): Unit =
+    test(name) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
+      try body(ckpt.toString)
+      finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+    }
 
-  test("ST2 recovery: sessions survive a kill + restart from checkpoint") {
+  recoveryTest("ST2 recovery: sessions survive a kill + restart from " +
+      "checkpoint") { ckpt =>
     import spark.implicits._
     val in = MemoryStream[Event](spark)
     val out = StreamOps.sessionize(in.toDS(), gapMs = 10000)
-    val ckpt = checkpointDir()
     val buf = scala.collection.mutable.Buffer.empty[(Long, Long, Double)]
     def start() = out.writeStream
       .outputMode("append")
@@ -567,12 +572,12 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
     buf.synchronized(buf.size) shouldBe buf.synchronized(buf.toSet.size)
   }
 
-  test("ST8 recovery: pack fill state survives a kill + restart") {
+  recoveryTest("ST8 recovery: pack fill state survives a kill + " +
+      "restart") { ckpt =>
     import spark.implicits._
     import StreamOps.{PackDoc, PackedDoc}
     val in = MemoryStream[PackDoc](spark)
     val out = StreamOps.packStream(in.toDS(), budget = 100L)
-    val ckpt = checkpointDir()
     val buf = scala.collection.mutable.Buffer.empty[PackedDoc]
     def start() = out.writeStream
       .outputMode("append")
@@ -644,8 +649,8 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
     } finally q.stop()
   }
 
-  test("ST15 recovery: spent-budget state survives a kill + restart " +
-      "and the resumed stream still equals batch t22") {
+  recoveryTest("ST15 recovery: spent-budget state survives a kill + restart " +
+      "and the resumed stream still equals batch t22") { ckpt =>
     import spark.implicits._
     import StreamOps.{FilledDoc, PackDoc}
     val batch = graft.SparkEntry.queries("t22_token_budget_mixture")(
@@ -666,7 +671,6 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
 
     val in = MemoryStream[PackDoc](spark)
     val out = StreamOps.budgetFillStream(in.toDS(), budgets)
-    val ckpt = checkpointDir()
     val buf = scala.collection.mutable.Buffer.empty[FilledDoc]
     def start() = out.writeStream
       .outputMode("append")
@@ -697,7 +701,8 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
       batch.toSeq.sortBy(r => (r._1, r._2))
   }
 
-  test("ST9 recovery: streaming ANN equals batch results across a restart") {
+  recoveryTest("ST9 recovery: streaming ANN equals batch results across " +
+      "a restart") { ckpt =>
     import spark.implicits._
     val emb = graft.sources.Tables.load(spark, TestSpark.sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -726,7 +731,6 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
     val in = MemoryStream[(Long, Seq[Float])](spark)
     val out = StreamOps.annScoreStream(
       in.toDF.toDF("qid", "qemb"), codes, codebook, topK = 5)
-    val ckpt = checkpointDir()
     // update mode re-emits a qid's row when its aggregate changes: keep
     // the LATEST row per qid (what an upsert sink would hold)
     val latest = scala.collection.mutable
@@ -763,7 +767,8 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("ST5 recovery: buffered join state survives a kill + restart") {
+  recoveryTest("ST5 recovery: buffered join state survives a kill + " +
+      "restart") { ckpt =>
     // The interval join's state is the BUFFERED unmatched rows of both
     // sides; the property a production attribution pipeline leans on is
     // that a right event arriving AFTER a crash still joins a left
@@ -777,7 +782,6 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
       views.toDF.toDF("user", "vts"), "vts", "5 seconds",
       buys.toDF.toDF("user", "bts"), "bts", "5 seconds",
       key = "user", within = "10 seconds")
-    val ckpt = checkpointDir()
     val buf = scala.collection.mutable.Buffer.empty[(Long, Long, Long)]
     def start() = out.writeStream
       .outputMode("append")
