@@ -212,7 +212,7 @@ object BenchScenarios {
       docs(spark, small, src0 = true).select("doc_id", "text")),
       r.path("batch_index"))
     def probe(path: String): Unit = Bench.noop(DedupOps.nearDupProbe(
-      batchIdx, DedupOps.readBandLedger(spark, path)))
+      batchIdx, DedupOps.readBandLedger(spark, path), DedupOps.jaccardT))
     val ids = docs(spark, small, src0 = false).select("doc_id")
       .filter(pmod(col("doc_id"), lit(97L)) === 13L)
     scales(small, big) { (dir, tag) =>

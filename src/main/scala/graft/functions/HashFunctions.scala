@@ -15,28 +15,15 @@ import org.apache.spark.sql.functions._
   */
 object HashFunctions {
 
-  /** Word n-gram shingles of an array-of-words column (distinct). */
-  def shingles(words: Column, n: Int): Column = {
-    val raw = when(size(words) >= n,
-      transform(sequence(lit(1), size(words) - (n - 1)),
-        i => concat_ws(" ", slice(words, i, lit(n)))))
-      .otherwise(array())
-    array_distinct(raw)
-  }
-
-  /** MinHash signature: k independent min-hashes over a shingle array.
-    * The shingle STRING is hashed once (`xxhash64(s)`); each of the k
-    * "permutations" re-hashes that 8-byte long (`xxhash64(i, h)`), which
-    * is ~an order of magnitude cheaper than re-hashing the string k
-    * times. Map-side projection, no shuffle; at 100 TB this runs at scan
-    * speed.
+  /** Per-row MinHash signature over an array of hashed long shingle
+    * keys: slot i is min over keys h of `xxhash64(i, h)`, bit-identical
+    * to the aggregate signature `DedupOps.minhashSigs` builds. For
+    * frames that cannot aggregate (a stream); map-side, no shuffle.
     */
-  def minhashSignature(shingleArr: Column, k: Int): Column = {
-    val base = transform(shingleArr, s => xxhash64(s))
+  def minhashSignature(keys: Column, k: Int): Column =
     array((0 until k).map { i =>
-      array_min(transform(base, h => xxhash64(lit(i), h)))
+      array_min(transform(keys, h => xxhash64(lit(i), h)))
     }: _*)
-  }
 
   /** LSH band keys: hash each band of `rows` consecutive signature slots.
     * Equal band key ⇒ candidate pair. Returns array[bands] of longs.
@@ -47,29 +34,7 @@ object HashFunctions {
       xxhash64((lit(b) +: slots): _*)
     }: _*)
 
-  /** 64-bit SimHash over the distinct words of a document: bit b is the
-    * sign of sum(±1) of word-hash bit b. Single pass over the word array
-    * per bit — no explode, no shuffle.
-    */
-  def simhash64(words: Column): Column = {
-    val hs = transform(array_distinct(words), w => xxhash64(w))
-    val bits = (0 until 64).map { b =>
-      val vote = aggregate(hs, lit(0),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1)
-          .otherwise(-1))
-      when(vote > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_.bitwiseOR(_))
-  }
-
   /** Hamming distance between two packed-64-bit signatures. */
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b)).cast("long")
-
-  /** Content fingerprint: md5 over the sorted distinct word set —
-    * word-order-insensitive 64-bit-hex fingerprint.
-    */
-  def contentFingerprint(text: Column): Column =
-    substring(md5(concat_ws(" ",
-      array_sort(array_distinct(split(text, " ")))).cast("binary")), 1, 16)
 }

@@ -139,7 +139,7 @@ final class Migrator(
         runSqlStep(file)
       } else if (Files.isExecutable(file)) {
         logger.debug(s" - running $base as a separate program")
-        if (!dryRun) runProgramStep(file)
+        if (!dryRun) runProcess(Seq(), file) // Core.pm:183-190
       } else {
         logger.debug(s" - running $base as scala code")
         val fn = ScalaEval.compile(Files.readString(file)) // compile even on dry runs
@@ -162,21 +162,17 @@ final class Migrator(
   private def runSqlStep(file: Path): Unit =
     if (dryRun) logger.info(s"Dry run - would run DDL in $file")
     else sqlCli match {
-      case Some(cmd) =>
-        val stderr = new StringBuilder
-        val exit = Process(cmd :+ file.toAbsolutePath.toString)
-          .!(ProcessLogger(_ => (), e => stderr.append(e).append('\n')))
-        if (exit != 0 || stderr.nonEmpty)
-          throw new RuntimeException(s"$file failed: $stderr")
+      case Some(cmd) => runProcess(cmd, file)
       case None => dbms.runDdl(database, Files.readString(file))
     }
 
-  /** External program: fails on nonzero exit OR nonempty stderr
-    * (Core.pm:183-190).
+  /** One process step — an external program (empty `cmd`) or the
+    * `sqlCli` client: runs `cmd` with `file`'s absolute path appended;
+    * fails on nonzero exit OR nonempty stderr.
     */
-  private def runProgramStep(file: Path): Unit = {
+  private def runProcess(cmd: Seq[String], file: Path): Unit = {
     val stderr = new StringBuilder
-    val exit = Process(Seq(file.toAbsolutePath.toString))
+    val exit = Process(cmd :+ file.toAbsolutePath.toString)
       .!(ProcessLogger(_ => (), e => stderr.append(e).append('\n')))
     if (exit != 0 || stderr.nonEmpty)
       throw new RuntimeException(s"$file failed: $stderr")

@@ -22,9 +22,10 @@ import org.apache.spark.sql.types.LongType
   * candidate occurrence whose token positions already cap the overlap
   * below ⌈t·|Sᵢ|⌉ — losslessness argument at the filter site.
   *
-  * Scale shape mirrors [[JaccardNearDup]]: unique-set armor (mass
-  * duplicates verify once per SET pair, members recovered after),
-  * ScratchCache'd shingle tables, exact verification via the native
+  * Scale shape mirrors [[JaccardNearDup]], whose unique-set step
+  * ([[JaccardNearDup.uniqueSets]]) it shares: mass duplicates verify
+  * once per SET pair, members recovered after, over ScratchCache'd
+  * shingle tables; exact verification via the native
   * sorted-merge intersect count, and one arm per size regime
   * ([[pairs]]' `large` flag, keyed to corpus size by [[pairsAuto]]):
   * the tokens' own order below [[JaccardNearDup.largeCorpusMinDocs]],
@@ -67,16 +68,9 @@ object ContainmentNearDup {
   def pairs(toks: DataFrame, idCol: String, toksCol: String,
       t: Double, large: Boolean = false): DataFrame = {
     require(t > 0.0 && t <= 1.0, s"containment threshold in (0,1], got $t")
-    def nb(df: DataFrame): DataFrame =
-      if (large) df.hint("merge") else df
-    val members = ScratchCache.scratch(
-      toks.select(col(idCol).as("doc_id"), col(toksCol).as("sh"))
-        .withColumn("n", size(col("sh"))))
-    // unique shingle sets (dup-heavy corpora would otherwise verify a
-    // mass-duplicate group m² times); row pairs recovered at the end
-    val sets = ScratchCache.scratch(members.groupBy("sh", "n")
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id", "sh", "n"))
+    def nb(df: DataFrame): DataFrame = JaccardNearDup.nb(df, large)
+    // unique shingle sets; row pairs recovered at the end
+    val (sets, gid) = JaccardNearDup.uniqueSets(toks, idCol, toksCol, large)
     val prefLen = (col("n") - ceil(col("n") * t) + 1).cast("int")
 
     // both sides carry each token's 1-based POSITION under a shared
@@ -147,9 +141,6 @@ object ContainmentNearDup {
     // of group i are the contained docs); identical-set groups of m ≥ 2
     // members additionally contribute all m·(m−1) ordered pairs at
     // containment exactly 1.0
-    val gid = members.join(
-        nb(sets.select(col("sh"), col("doc_id").as("gid"))), Seq("sh"))
-      .select(col("doc_id"), col("gid"), col("n"))
     val cross = setPairs
       .join(gid.select(col("gid").as("i"), col("doc_id").as("ia")), "i")
       .join(gid.select(col("gid").as("j"), col("doc_id").as("ib")), "j")

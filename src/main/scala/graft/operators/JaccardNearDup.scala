@@ -155,28 +155,14 @@ object JaccardNearDup {
     */
   def pairs(toks: DataFrame, idCol: String, toksCol: String,
       t: Double, large: Boolean = false): DataFrame = {
-    def nb(df: DataFrame): DataFrame =
-      if (large) df.hint("merge") else df
-    // corpus-sized scratch: explicit level + releasable, see ScratchCache
-    val members = ScratchCache.scratch(
-      toks.select(col(idCol).as("doc_id"), col(toksCol).as("sh"))
-        .withColumn("n", size(col("sh"))))
-    // prefix keys + verification run over UNIQUE shingle sets: a dedup
-    // corpus is dup-heavy by definition, and a mass-duplicate group of
-    // m rows sharing one set would otherwise push m copies of every
-    // prefix token through the candidate join and verify m²/2 times.
-    // Row pairs are recovered after verification (cross-group streams
-    // out of a join; within-group pairs are jaccard 1.0 by identity).
-    val sh = ScratchCache.scratch(members.groupBy("sh", "n")
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id", "sh", "n"))
+    val (sets, gid) = uniqueSets(toks, idCol, toksCol, large)
     val prefLen = (col("n") - ceil(col("n") * t) + 1).cast("int")
 
     // each prefix token carries its 1-based POSITION under the global
     // token order (the array's own sort; (isHot, tok) when large) — it
     // feeds the PPJoin+ positional filter below
-    val ordered = if (large) demotedByZipfHead(sh, "sh") else col("sh")
-    val prefix = sh.select(col("doc_id"), col("n"),
+    val ordered = if (large) demotedByZipfHead(sets, "sh") else col("sh")
+    val prefix = sets.select(col("doc_id"), col("n"),
         posexplode(slice(ordered, lit(1), prefLen)).as(Seq("pos0", "tok")))
       .select(col("doc_id"), col("n"), col("tok"),
         (col("pos0") + 1).as("pos"))
@@ -197,7 +183,7 @@ object JaccardNearDup {
     // a boundary candidate (exact verification kills it), never drop
     // one. Kills doomed candidates BEFORE the verify join fetches full
     // token arrays — at sf10 those rides were d2's dominant cost.
-    val cand = prefix.as("a").join(nb(prefix.as("b")).as("b"),
+    val cand = prefix.as("a").join(nb(prefix.as("b"), large).as("b"),
       col("a.tok") === col("b.tok") &&
         col("a.doc_id") < col("b.doc_id") &&
         // length filter: J ≥ t ⇒ t·|y| ≤ |x| (and symmetric)
@@ -209,36 +195,74 @@ object JaccardNearDup {
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
     // duplicate candidates (several shared prefix tokens) are verified
     // redundantly and deduped AFTER the ≥t filter, where rows are few
-    val setPairs = cand
-      .join(nb(sh.select(col("doc_id").as("i"), col("sh").as("sha"),
-        col("n").as("na"))), "i")
-      .join(nb(sh.select(col("doc_id").as("j"), col("sh").as("shb"),
-        col("n").as("nb"))), "j")
-      // native merge-count (inputs are sorted distinct per the contract
-      // above); == size(array_intersect(…)), spec-asserted
-      .withColumn("shared", org.apache.spark.sql.GraftBridge.column(
-        graft.functions.SortedLongIntersectCount(
-          org.apache.spark.sql.GraftBridge.expression(col("sha")),
-          org.apache.spark.sql.GraftBridge.expression(col("shb")))))
-      .withColumn("jaccard",
-        col("shared").cast("double") /
-          (col("na") + col("nb") - col("shared")).cast("double"))
-      .filter(col("jaccard") >= t)
-      .select(col("i"), col("j"),
-        col("shared").cast(LongType).as("shared"), col("jaccard"))
-      .dropDuplicates("i", "j")
-    // expand verified SET pairs back to row pairs
+    expand(verify(cand, sets, t, large).dropDuplicates("i", "j"), gid)
+  }
+
+  /** `df` with a sort-merge hint when `large` (see [[pairs]]). */
+  private[graft] def nb(df: DataFrame, large: Boolean): DataFrame =
+    if (large) df.hint("merge") else df
+
+  /** The unique-set step of a set-pair self-join: `sets` holds one
+    * (doc_id, sh, n) row per distinct token set, its doc_id the least
+    * member id, and `gid` maps each input row to its set as
+    * (doc_id, gid, n). Prefix keys, signatures and verification run
+    * over `sets`: a dedup corpus is dup-heavy by definition, and a
+    * mass-duplicate group of m rows sharing one set would otherwise
+    * push m copies of every token through the candidate join and
+    * verify m²/2 times. Row pairs are recovered through `gid` after
+    * verification. Both scratch frames are corpus-sized, so they take
+    * an explicit level and are releasable (see ScratchCache).
+    */
+  private[graft] def uniqueSets(toks: DataFrame, idCol: String,
+      toksCol: String, large: Boolean): (DataFrame, DataFrame) = {
+    val members = ScratchCache.scratch(
+      toks.select(col(idCol).as("doc_id"), col(toksCol).as("sh"))
+        .withColumn("n", size(col("sh"))))
+    val sets = ScratchCache.scratch(members.groupBy("sh", "n")
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select("doc_id", "sh", "n"))
     val gid = members.join(
-        nb(sh.select(col("sh"), col("doc_id").as("gid"))), Seq("sh"))
+        nb(sets.select(col("sh"), col("doc_id").as("gid")), large), Seq("sh"))
       .select(col("doc_id"), col("gid"), col("n"))
+    (sets, gid)
+  }
+
+  /** Exact verification of candidate set pairs `cand` (i, j) against
+    * [[uniqueSets]]' `sets`: (i, j, shared, jaccard) for the pairs with
+    * jaccard ≥ t. A candidate listed twice is verified and kept twice.
+    */
+  private[graft] def verify(cand: DataFrame, sets: DataFrame, t: Double,
+      large: Boolean): DataFrame = cand
+    .join(nb(sets.select(col("doc_id").as("i"), col("sh").as("sha"),
+      col("n").as("na")), large), "i")
+    .join(nb(sets.select(col("doc_id").as("j"), col("sh").as("shb"),
+      col("n").as("nb")), large), "j")
+    // native merge-count (inputs are sorted distinct per the contract
+    // above); == size(array_intersect(…)), spec-asserted
+    .withColumn("shared", org.apache.spark.sql.GraftBridge.column(
+      graft.functions.SortedLongIntersectCount(
+        org.apache.spark.sql.GraftBridge.expression(col("sha")),
+        org.apache.spark.sql.GraftBridge.expression(col("shb")))))
+    .withColumn("jaccard",
+      col("shared").cast("double") /
+        (col("na") + col("nb") - col("shared")).cast("double"))
+    .filter(col("jaccard") >= t)
+    .select(col("i"), col("j"),
+      col("shared").cast(LongType).as("shared"), col("jaccard"))
+
+  /** Verified set pairs → row pairs (i < j, shared, jaccard): every
+    * member pair across two verified sets, and every member pair inside
+    * one non-empty set at jaccard 1.0 by identity (empty sets stay
+    * excluded, as they never form candidates). `gid` is
+    * [[uniqueSets]]'.
+    */
+  private[graft] def expand(setPairs: DataFrame, gid: DataFrame): DataFrame = {
     val cross = setPairs
       .join(gid.select(col("gid").as("i"), col("doc_id").as("ia")), "i")
       .join(gid.select(col("gid").as("j"), col("doc_id").as("ib")), "j")
       .select(least(col("ia"), col("ib")).as("i"),
         greatest(col("ia"), col("ib")).as("j"),
         col("shared"), col("jaccard"))
-    // identical non-empty sets are jaccard 1.0 by identity (empty sets
-    // stay excluded, exactly as they never form prefix candidates)
     val within = gid.as("x").join(gid.as("y"),
       col("x.gid") === col("y.gid") &&
         col("x.doc_id") < col("y.doc_id") && col("x.n") > 0)

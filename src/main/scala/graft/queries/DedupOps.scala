@@ -44,12 +44,16 @@ object DedupOps extends QueryGroup {
     * the driver-measured tolerance.
     */
   private def shingled(s: SparkSession, dir: String): DataFrame =
-    // native single-pass gram builder (one primitive loop per doc);
-    // the HOF twin lives in FunctionsSpec as the bit-exact reference
-    docs(s, dir)
-      .select(col("doc_id"), org.apache.spark.sql.GraftBridge.column(
+    shingleKeys(docs(s, dir), "text")
+
+  /** [[shingled]] over any frame with `doc_id` and `textCol`: the
+    * native single-pass gram builder (one primitive loop per doc); the
+    * HOF twin lives in FunctionsSpec as the bit-exact reference.
+    */
+  private[graft] def shingleKeys(d: DataFrame, textCol: String): DataFrame =
+    d.select(col("doc_id"), org.apache.spark.sql.GraftBridge.column(
         graft.functions.WordGramHashes(
-          org.apache.spark.sql.GraftBridge.expression(col("text")),
+          org.apache.spark.sql.GraftBridge.expression(col(textCol)),
           3, distinctSorted = true)).as("sh"))
       .withColumn("n", size(col("sh")))
 
@@ -73,7 +77,7 @@ object DedupOps extends QueryGroup {
   // under any global total order, J(x,y) ≥ t implies the first
   // |x|−⌈t|x|⌉+1 tokens of x and of y share an element. Ordering tokens
   // by ascending document frequency keeps prefix buckets tiny.
-  private[queries] val jaccardT = 0.8
+  private[graft] val jaccardT = 0.8
 
   /** Verified near-dup pairs (i < j, Jaccard ≥ [[jaccardT]]) — shared by
     * d2 (reported directly) and d6/d7 (edge set for clustering).
@@ -122,22 +126,18 @@ object DedupOps extends QueryGroup {
   // MinHash (k=64) + LSH banding (16 bands × 4 rows) for CANDIDATE
   // generation — one equi-join on (band, key), never all-pairs — then
   // EXACT Jaccard verification of the candidates against the shingle
-  // sets (the same verify stage as D2/JaccardNearDup). The output is
-  // therefore exact {(i,j,jaccard) : J ≥ t AND LSH surfaced the pair};
-  // with 16×4 banding the per-pair miss probability at J = 0.8 is
-  // 1−(1−0.8⁴)¹⁶ ≈ 2·10⁻⁴, so the result coincides with the all-pairs
-  // truth and the same DuckDB oracle as d2 hash-verifies it.
-  //
-  // The k min-hashes are computed by explode + 64 codegen'd min
-  // aggregates (the same trick as simhashSigs): partial-agg friendly
-  // and no boxed HOF folds — the per-row `array_min(transform(...))`
-  // formulation stays available as HashFunctions.minhashSignature.
+  // sets (the same verify and expand as D2, from JaccardNearDup). The
+  // output is therefore exact {(i,j,jaccard) : J ≥ t AND LSH surfaced
+  // the pair}; with 16×4 banding the per-pair miss probability at
+  // J = 0.8 is 1−(1−0.8⁴)¹⁶ ≈ 2·10⁻⁴, so the result coincides with the
+  // all-pairs truth and the same DuckDB oracle as d2 hash-verifies it.
   private[graft] val mhK = 64
-  private[graft] val mhBands = 16
-  private[graft] val mhRows = 4
+  private val mhBands = 16
+  private val mhRows = 4
   private val d3 = QueryDef(
     "d3_dedup_minhash_lsh",
     (s, dir) => {
+      import graft.operators.JaccardNearDup
       // no-broadcast discipline above the armor threshold (the
       // JaccardNearDup.pairsAuto size key): Catalyst's size-only
       // estimates undervalue the computed set/gid tables enough to
@@ -145,27 +145,15 @@ object DedupOps extends QueryGroup {
       // on the driver's broadcast-build guard in the verification
       // joins. At driver SFs those broadcasts are genuinely optimal,
       // so the hints are size-keyed exactly like the d2 armor.
-      def nb(df: DataFrame): DataFrame =
-        if (CorpusStats.nDocs(s, dir) >=
-          graft.operators.JaccardNearDup.largeCorpusMinDocs) df.hint("merge")
-        else df
-      val members = graft.operators.ScratchCache.scratch(shingled(s, dir))
+      val large =
+        CorpusStats.nDocs(s, dir) >= JaccardNearDup.largeCorpusMinDocs
       // signature build, banding and verification run over UNIQUE
       // shingle sets (identical sets ⇒ identical signatures ⇒ they
       // collide in EVERY band, so within-group pairs are LSH-surfaced
-      // by construction) — the same dup-heavy armor as d2/d4: a
-      // mass-duplicate group would otherwise go quadratic inside the
-      // band join. Row pairs are recovered after verification.
-      val sets = graft.operators.ScratchCache.scratch(
-        members.groupBy("sh", "n").agg(min(col("doc_id")).as("doc_id")))
-      // shingles are already hashed longs; permutation i = xxhash64(i, h)
-      val tok = sets.select(col("doc_id"), explode(col("sh")).as("h"))
-      val sig = tok.groupBy("doc_id")
-        .agg(min(xxhash64(lit(0), col("h"))).as("m0"),
-          (1 until mhK).map(i =>
-            min(xxhash64(lit(i), col("h"))).as(s"m$i")): _*)
-        .select(col("doc_id"),
-          array((0 until mhK).map(i => col(s"m$i")): _*).as("sig"))
+      // by construction) — a mass-duplicate group would otherwise go
+      // quadratic inside the band join
+      val (sets, gid) =
+        JaccardNearDup.uniqueSets(shingled(s, dir), "doc_id", "sh", large)
       // multi-band dedup is the d8 first-collision filter, not a
       // distinct over the candidate-pair set: a pair colliding in k of
       // the bands leaves the self-join only at its first shared band
@@ -173,8 +161,8 @@ object DedupOps extends QueryGroup {
       // Sort-merge for the same reasons as d8: an n·bands-row
       // self-join side never fits a broadcast at corpus scale, and the
       // merge's sort spills where a hash build would OOM.
-      val bands = sig
-        .select(col("doc_id"), bandKeys(col("sig"), mhBands, mhRows).as("keys"))
+      val bands = minhashSigs(sets)
+        .select(col("doc_id"), mhKeys(col("sig")).as("keys"))
         .select(col("doc_id"), col("keys"), posexplode(col("keys")))
         .toDF("doc_id", "keys", "band", "key")
       val cand = bands.as("a").join(bands.as("b").hint("merge"),
@@ -183,40 +171,8 @@ object DedupOps extends QueryGroup {
           graft.functions.VectorFunctions.firstEqualIndex(
             col("a.keys"), col("b.keys")) === col("a.band"))
         .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      // exact verification: join candidates back to the shingle sets and
-      // keep true-Jaccard ≥ t only — no estimates ship
-      val setPairs = cand
-        .join(nb(sets.select(col("doc_id").as("i"), col("sh").as("sha"),
-          col("n").as("na"))), "i")
-        .join(nb(sets.select(col("doc_id").as("j"), col("sh").as("shb"),
-          col("n").as("nb"))), "j")
-        .withColumn("shared", org.apache.spark.sql.GraftBridge.column(
-          graft.functions.SortedLongIntersectCount(
-            org.apache.spark.sql.GraftBridge.expression(col("sha")),
-            org.apache.spark.sql.GraftBridge.expression(col("shb")))))
-        .withColumn("jaccard",
-          col("shared").cast("double") /
-            (col("na") + col("nb") - col("shared")).cast("double"))
-        .filter(col("jaccard") >= jaccardT)
-        .select(col("i"), col("j"), col("shared").cast(LongType).as("shared"),
-          col("jaccard"))
-      val gid = members.join(
-          nb(sets.select(col("sh"), col("doc_id").as("gid"))), Seq("sh"))
-        .select(col("doc_id"), col("gid"), col("n"))
-      val cross = setPairs
-        .join(gid.select(col("gid").as("i"), col("doc_id").as("ia")), "i")
-        .join(gid.select(col("gid").as("j"), col("doc_id").as("ib")), "j")
-        .select(least(col("ia"), col("ib")).as("i"),
-          greatest(col("ia"), col("ib")).as("j"),
-          col("shared"), col("jaccard"))
-      // identical non-empty sets: every band collides, jaccard 1.0 by
-      // identity; empty sets produce no tokens and never pair (as before)
-      val within = gid.as("x").join(gid.as("y"),
-        col("x.gid") === col("y.gid") &&
-          col("x.doc_id") < col("y.doc_id") && col("x.n") > 0)
-        .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
-          col("x.n").cast(LongType).as("shared"), lit(1.0).as("jaccard"))
-      cross.unionByName(within)
+      JaccardNearDup.expand(
+          JaccardNearDup.verify(cand, sets, jaccardT, large), gid)
         .orderBy("i", "j")
     },
     Some(s"""WITH $pairCtes
@@ -250,9 +206,9 @@ object DedupOps extends QueryGroup {
   // beyond) on real data, not just the property spec.
   //
   // The signature is computed by explode + packed codegen'd vote sums
-  // (partial-agg friendly) rather than HOF folds per row — identical
-  // bits to HashFunctions.simhash64 (same word hash, same vote rule),
-  // but the hot loop stays in whole-stage codegen. ~5× at sf0.1.
+  // over the shingle keys (partial-agg friendly) rather than HOF folds
+  // per row, so the hot loop stays in whole-stage codegen. ~5× at
+  // sf0.1.
 
   /** (doc_id, sig) via the distributed vote formulation, with PACKED
     * bit counters: 16 sum aggregates, each packing four 16-bit lanes
@@ -1205,23 +1161,33 @@ object DedupOps extends QueryGroup {
     // runs twice over the input (corpus-sized at the d13 ledger
     // bootstrap), the same re-evaluation gotcha every other shingle
     // consumer barriers against
-    val sh = graft.operators.ScratchCache.scratch(d
-      .select(col("doc_id"), org.apache.spark.sql.GraftBridge.column(
-        graft.functions.WordGramHashes(
-          org.apache.spark.sql.GraftBridge.expression(col("text")),
-          3, distinctSorted = true)).as("sh"))
-      .withColumn("n", size(col("sh"))))
-    val sig = sh.select(col("doc_id"), explode(col("sh")).as("h"))
-      .groupBy("doc_id")
-      .agg(min(xxhash64(lit(0), col("h"))).as("m0"),
-        (1 until mhK).map(i =>
-          min(xxhash64(lit(i), col("h"))).as(s"m$i")): _*)
+    val sh = graft.operators.ScratchCache.scratch(shingleKeys(d, "text"))
+    sh.join(minhashSigs(sh), "doc_id")
+      .select(col("doc_id"), col("sh"), col("n"),
+        mhKeys(col("sig")).as("keys"))
+  }
+
+  /** (doc_id, sig): the [[mhK]]-slot MinHash signature of each row of a
+    * (doc_id, sh, …) frame, slot i = min over its shingle keys h of
+    * xxhash64(i, h). Built by explode + one codegen'd min aggregate per
+    * slot — partial-agg friendly, no boxed HOF folds. A row with no
+    * keys has no signature. A stream cannot aggregate, so ST10 builds
+    * the same bits per row with HashFunctions.minhashSignature.
+    */
+  private[graft] def minhashSigs(sets: DataFrame): DataFrame = {
+    val mins = (0 until mhK).map(i =>
+      min(xxhash64(lit(i), col("h"))).as(s"m$i"))
+    sets.select(col("doc_id"), explode(col("sh")).as("h"))
+      .groupBy("doc_id").agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
         array((0 until mhK).map(i => col(s"m$i")): _*).as("sig"))
-    sh.join(sig, "doc_id")
-      .select(col("doc_id"), col("sh"), col("n"),
-        bandKeys(col("sig"), mhBands, mhRows).as("keys"))
   }
+
+  /** The 16×4 LSH band keys of a [[mhK]]-slot signature: the d3, d13
+    * and ST10 banding.
+    */
+  private[graft] def mhKeys(sig: Column): Column =
+    bandKeys(sig, mhBands, mhRows)
 
   // `_p2` = the one-relation segment-ledger layout (`seg=k` index
   // segments + one tombstone log under one commit chain); the layouts
@@ -1393,13 +1359,13 @@ object DedupOps extends QueryGroup {
 
   /** The d13 band probe: batch index rows against a ledger-index frame
     * (either side in the [[minhashIndex]] schema) — band equi-join +
-    * first-collision filter + exact sorted-merge Jaccard at
-    * [[jaccardT]]. One definition, shared by the d13 QueryDef and
-    * `Bench ledger bandTakedown`'s flat-growth probe rows, so the bench can
-    * never drift from the operator it claims to time.
+    * first-collision filter + exact sorted-merge Jaccard ≥ `t`. One
+    * definition, shared by the d13 QueryDef, p6, ST10's per-trigger
+    * probe and `Bench ledger bandTakedown`'s flat-growth probe rows, so
+    * the bench can never drift from the operator it claims to time.
     */
   private[graft] def nearDupProbe(batchIdx: DataFrame,
-      ledger: DataFrame): DataFrame = {
+      ledger: DataFrame, t: Double): DataFrame = {
     val bBands = batchIdx
       .select(col("doc_id").as("i"), col("sh").as("sha"),
         col("n").as("na"), col("keys").as("keysA"),
@@ -1424,7 +1390,7 @@ object DedupOps extends QueryGroup {
       .withColumn("shared", shared)
       .withColumn("jaccard", col("shared").cast("double") /
         (col("na") + col("nb") - col("shared")).cast("double"))
-      .filter(col("jaccard") >= jaccardT)
+      .filter(col("jaccard") >= t)
       .select(col("i"), col("j"),
         col("shared").cast(LongType).as("shared"), col("jaccard"))
   }
@@ -1442,7 +1408,8 @@ object DedupOps extends QueryGroup {
       val batchIdx = graft.operators.ScratchCache.scratch(
         minhashIndex(all.filter(col("source") === "src0")
           .select("doc_id", "text")))
-      nearDupProbe(batchIdx, readBandLedger(s, path)).orderBy("i", "j")
+      nearDupProbe(batchIdx, readBandLedger(s, path), jaccardT)
+        .orderBy("i", "j")
     },
     Some(s"""WITH sh2 AS (
        |  SELECT doc_id, source,

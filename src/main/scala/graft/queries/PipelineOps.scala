@@ -862,7 +862,8 @@ object PipelineOps extends QueryGroup {
       // gate — without the hint the probe-derived side has no size
       // estimate and plans as a sort-merge anti join
       val ndHit = broadcast(DedupOps
-        .nearDupProbe(bIdx, DedupOps.readBandLedger(s, bandPath))
+        .nearDupProbe(bIdx, DedupOps.readBandLedger(s, bandPath),
+          DedupOps.jaccardT)
         .select(col("i").as("nd_id")).distinct())
       val admitted = novel
         .join(ndHit, novel("keep_id") === ndHit("nd_id"), "left_anti")

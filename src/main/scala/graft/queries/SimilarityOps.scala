@@ -724,9 +724,10 @@ object SimilarityOps extends QueryGroup {
     * tombstones are applied during the rewrite (the physical-removal
     * hazard is the same as compaction's) and the retrained ledger
     * starts tomb-free. Determinism: trainCentroids' hash-sampled
-    * seeds + exact-decimal Lloyd means make the retrained ledger
-    * row-identical to a from-scratch bootstrap over the same corpus
-    * (spec-gated), so downstream readers (s8/s12/s13 probes, the
+    * seeds make the retrained ledger row-identical to a from-scratch
+    * bootstrap over the same corpus (spec-gated; its Lloyd means are
+    * double `avg`s, so that identity also rests on both builds summing
+    * in the same order), so downstream readers (s8/s12/s13 probes, the
     * c1l/c2l quantizer seam) migrate with no contract change — their
     * next read simply probes the new cells.
     */

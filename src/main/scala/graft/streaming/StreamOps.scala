@@ -613,13 +613,15 @@ object StreamOps {
     * against the standing corpus' persisted band-index ledger (d13's
     * schema: doc_id, sh, n, keys), emitting one row per (arriving doc,
     * matched prior doc). Everything stream-side is MAP-SIDE per row —
-    * the per-row minhash formulation (`array_min(transform(...))` over
-    * the same `xxhash64(i, h)` permutation chain as the batch index, so
-    * signatures agree bit-for-bit with d13's agg-built ones) needs no
-    * groupBy and therefore NO STREAMING STATE; the only join is the
-    * per-micro-batch stream-static band probe (static side re-planned
-    * each trigger, so a refreshed ledger is picked up live — the ST6
-    * discipline). Per-trigger cost is O(micro-batch); the corpus is
+    * the per-row minhash formulation
+    * (`HashFunctions.minhashSignature`, the same `xxhash64(i, h)`
+    * permutation chain as the batch index, so signatures agree
+    * bit-for-bit with d13's agg-built ones) needs no groupBy and
+    * therefore NO STREAMING STATE; the only join is d13's own band
+    * probe (`DedupOps.nearDupProbe` at threshold `t`), stream-static
+    * per micro-batch (static side re-planned each trigger, so a
+    * refreshed ledger is picked up live — the ST6 discipline).
+    * Per-trigger cost is O(micro-batch); the corpus is
     * only ever touched through its index. The 16×4 banding matches
     * d13, so the match set coincides with the exact cross-set truth at
     * the documented ~2·10⁻⁴ per-pair miss.
@@ -637,38 +639,12 @@ object StreamOps {
       ledger: DataFrame,
       textCol: String,
       t: Double): DataFrame = {
-    import org.apache.spark.sql.GraftBridge.{column, expression}
-    val mhK = graft.queries.DedupOps.mhK
-    val sh = column(graft.functions.WordGramHashes(
-      expression(col(textCol)), 3, distinctSorted = true))
-    val sig = array((0 until mhK).map(i =>
-      array_min(transform(col("sh"), h => xxhash64(lit(i), h)))): _*)
-    val withKeys = docs
-      .select(col("doc_id").as("i"), sh.as("sh"))
-      .withColumn("na", size(col("sh")))
-      .filter(col("na") > 0)
-      .withColumn("keysA", graft.functions.HashFunctions.bandKeys(
-        sig, graft.queries.DedupOps.mhBands, graft.queries.DedupOps.mhRows))
-    val bBands = withKeys
-      .select(col("i"), col("sh").as("sha"), col("na"), col("keysA"),
-        posexplode(col("keysA")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-    val lBands = ledger
-      .select(col("doc_id").as("j"), col("sh").as("shb"),
-        col("n").as("nb"), col("keys").as("keysB"),
-        posexplode(col("keys")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-    val shared = column(graft.functions.SortedLongIntersectCount(
-      expression(col("sha")), expression(col("shb"))))
-    bBands.as("a").join(lBands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          graft.functions.VectorFunctions.firstEqualIndex(
-            col("a.keysA"), col("b.keysB")) === col("a.band"))
-      .withColumn("shared", shared)
-      .withColumn("jaccard", col("shared").cast("double") /
-        (col("na") + col("nb") - col("shared")).cast("double"))
-      .filter(col("jaccard") >= t)
-      .select(col("i"), col("j"), col("jaccard"))
+    import graft.queries.DedupOps
+    val batchIdx = DedupOps.shingleKeys(docs, textCol)
+      .filter(col("n") > 0)
+      .withColumn("keys", DedupOps.mhKeys(graft.functions.HashFunctions
+        .minhashSignature(col("sh"), DedupOps.mhK)))
+    DedupOps.nearDupProbe(batchIdx, ledger, t).select("i", "j", "jaccard")
   }
 
   // --------------------------------------------------------------- ST11

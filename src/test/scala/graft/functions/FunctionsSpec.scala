@@ -15,50 +15,37 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   private def eval1(c: org.apache.spark.sql.Column): Any =
     spark.range(1).select(c).collect()(0).get(0)
 
-  test("shingles produce overlapping n-grams, distinct") {
-    val s = eval1(shingles(split(lit("a b c d a b c d"), " "), 3))
-      .asInstanceOf[scala.collection.Seq[String]]
-    s should contain allOf ("a b c", "b c d", "c d a", "d a b")
-    s.distinct shouldBe s
-    // shorter than n → empty
-    eval1(shingles(split(lit("a b"), " "), 3))
-      .asInstanceOf[scala.collection.Seq[String]] shouldBe Seq.empty
-  }
-
   test("minhash signature: k slots, deterministic, set-based") {
-    val sig1 = eval1(minhashSignature(shingles(split(lit("x y z w x y"), " "), 2), 16))
+    val keys = array(lit(11L), lit(-7L), lit(42L), lit(5L))
+    val sig1 = eval1(minhashSignature(keys, 16))
       .asInstanceOf[scala.collection.Seq[Long]]
     sig1.length shouldBe 16
-    val sig2 = eval1(minhashSignature(shingles(split(lit("x y z w x y"), " "), 2), 16))
-      .asInstanceOf[scala.collection.Seq[Long]]
-    sig2 shouldBe sig1
-    // identical sets → identical signatures regardless of word order
-    // (shingle SETS differ under reorder, so use a same-set pair)
-    val a = eval1(minhashSignature(array(lit("p"), lit("q"), lit("r")), 16))
-    val b = eval1(minhashSignature(array(lit("r"), lit("q"), lit("p")), 16))
-    a shouldBe b
+    eval1(minhashSignature(keys, 16)) shouldBe sig1
+    // a set function: key order and repeats do not change it
+    eval1(minhashSignature(
+      array(lit(5L), lit(42L), lit(11L), lit(-7L), lit(42L)), 16)) shouldBe sig1
+    // the per-row signature is bit-identical to the aggregate build
+    import spark.implicits._
+    val sets = Seq((1L, Seq(11L, -7L, 42L, 5L)), (2L, Seq(3L, 9L)))
+      .toDF("doc_id", "sh")
+    val agg = graft.queries.DedupOps.minhashSigs(sets).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val perRow = sets.select(col("doc_id"),
+        minhashSignature(col("sh"), graft.queries.DedupOps.mhK))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    perRow shouldBe agg
   }
 
   test("band keys: bands × rows partition of the signature") {
     val keys = eval1(bandKeys(minhashSignature(
-      array(lit("p"), lit("q")), 16), 4, 4)).asInstanceOf[scala.collection.Seq[Long]]
+      array(lit(1L), lit(2L)), 16), 4, 4)).asInstanceOf[scala.collection.Seq[Long]]
     keys.length shouldBe 4
   }
 
-  test("simhash: identical sets collide, hamming is xor popcount") {
-    val h1 = eval1(simhash64(split(lit("a b c d e f"), " ")))
-    val h2 = eval1(simhash64(split(lit("f e d c b a"), " ")))
-    h1 shouldBe h2 // order-insensitive (distinct word set)
+  test("hamming64 is xor popcount") {
     eval1(hamming64(lit(0L), lit(-1L))) shouldBe 64L
     eval1(hamming64(lit(5L), lit(6L))) shouldBe 2L
     eval1(hamming64(lit(7L), lit(7L))) shouldBe 0L
-  }
-
-  test("content fingerprint is word-order-insensitive") {
-    eval1(contentFingerprint(lit("the quick brown fox"))) shouldBe
-      eval1(contentFingerprint(lit("fox brown the quick")))
-    eval1(contentFingerprint(lit("the quick brown fox"))) should not be
-      eval1(contentFingerprint(lit("the quick brown cat")))
   }
 
   test("native pq_encode matches a plain-Scala reference, incl. ties") {

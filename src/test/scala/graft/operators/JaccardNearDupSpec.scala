@@ -34,10 +34,10 @@ class JaccardNearDupSpec extends AnyFunSuite with Matchers {
     "arm on the real corpus") {
     val sh = graft.sources.Tables
       .load(spark, TestSpark.sfDir, "documents")
-      .select(col("doc_id"),
-        array_sort(transform(
-          graft.functions.HashFunctions.shingles(split(col("text"), " "), 3),
-          t => xxhash64(t))).as("sh"))
+      .select(col("doc_id"), org.apache.spark.sql.GraftBridge.column(
+        graft.functions.WordGramHashes(
+          org.apache.spark.sql.GraftBridge.expression(col("text")),
+          3, distinctSorted = true)).as("sh"))
     def collectPairs(large: Boolean) =
       JaccardNearDup.pairs(sh, "doc_id", "sh", 0.8, large)
         .collect()

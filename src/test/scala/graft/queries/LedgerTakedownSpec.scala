@@ -150,7 +150,8 @@ class LedgerTakedownSpec extends AnyFunSuite with Matchers {
           (10L, base.replace("kappa2", "omega")),
           (20L, base2.replace("seventeen", "eighteen"))))))
       def matches() = DedupOps
-        .nearDupProbe(probe, DedupOps.readBandLedger(spark, path))
+        .nearDupProbe(probe, DedupOps.readBandLedger(spark, path),
+          DedupOps.jaccardT)
         .select("j").collect().map(_.getLong(0)).toSet
       matches() shouldBe Set(1L, 2L)
 

@@ -16,6 +16,13 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
 
   private def ts(sec: Long): Timestamp = new Timestamp(sec * 1000)
 
+  /** `body` over a fresh temp dir (its absolute path), deleted after. */
+  private def tempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.getAbsolutePath)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
   test("ST1 tumbling window with watermark emits closed windows once") {
     import spark.implicits._
     val in = MemoryStream[(Timestamp, String, Double)](spark)
@@ -53,32 +60,33 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
 
   test("ST1 file-source stream: parquet directory drives the same agg") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
-    val batch = Seq((ts(1), "a", 1.0), (ts(2), "a", 2.0), (ts(8), "b", 4.0))
-      .toDF("ts", "kind", "v")
-    batch.write.mode("overwrite").parquet(dir.toString)
+    tempDir("graft-stream") { dir =>
+      val batch = Seq((ts(1), "a", 1.0), (ts(2), "a", 2.0), (ts(8), "b", 4.0))
+        .toDF("ts", "kind", "v")
+      batch.write.mode("overwrite").parquet(dir)
 
-    val stream = spark.readStream.schema(batch.schema).parquet(dir.toString)
-    val out = StreamOps.tumblingAgg(stream, "ts", "10 seconds", "5 seconds",
-      keys = Seq(col("kind")),
-      aggs = Seq(count(lit(1)).as("n"), sum("v").as("total")))
-    val q = out.writeStream.format("memory").queryName("st1f")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // a late file advances the watermark and closes the first window
-      Seq((ts(60), "a", 0.0)).toDF("ts", "kind", "v")
-        .write.mode("append").parquet(dir.toString)
-      q.processAllAvailable()
-      Seq((ts(120), "a", 0.0)).toDF("ts", "kind", "v")
-        .write.mode("append").parquet(dir.toString)
-      q.processAllAvailable()
-      val rows = spark.table("st1f")
-        .select(col("kind"), col("n"), col("total")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-      rows should contain(("a", 2L, 3.0))
-      rows should contain(("b", 1L, 4.0))
-    } finally q.stop()
+      val stream = spark.readStream.schema(batch.schema).parquet(dir)
+      val out = StreamOps.tumblingAgg(stream, "ts", "10 seconds", "5 seconds",
+        keys = Seq(col("kind")),
+        aggs = Seq(count(lit(1)).as("n"), sum("v").as("total")))
+      val q = out.writeStream.format("memory").queryName("st1f")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        // a late file advances the watermark and closes the first window
+        Seq((ts(60), "a", 0.0)).toDF("ts", "kind", "v")
+          .write.mode("append").parquet(dir)
+        q.processAllAvailable()
+        Seq((ts(120), "a", 0.0)).toDF("ts", "kind", "v")
+          .write.mode("append").parquet(dir)
+        q.processAllAvailable()
+        val rows = spark.table("st1f")
+          .select(col("kind"), col("n"), col("total")).collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+        rows should contain(("a", 2L, 3.0))
+        rows should contain(("b", 1L, 4.0))
+      } finally q.stop()
+    }
   }
 
   test("ST2 stateful sessionization closes sessions on gap timeout") {
@@ -245,44 +253,44 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
   test("ST16 snapshot pin applies ONLY to bare file scans: a filtered " +
       "file-backed ledger is honored, not replaced by the full file set") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("st16pin").toFile.getAbsolutePath
-    Seq("keep this hash", "caller excluded this hash").toDF("text")
-      .select(md5(col("text")).as("content_hash"),
-        lit("live").as("status"))
-      .withColumn("status",
-        when(col("content_hash") === md5(lit("caller excluded this hash")),
-          lit("removed")).otherwise(col("status")))
-      .write.mode("overwrite").parquet(dir)
+    tempDir("st16pin") { dir =>
+      Seq("keep this hash", "caller excluded this hash").toDF("text")
+        .select(md5(col("text")).as("content_hash"),
+          lit("live").as("status"))
+        .withColumn("status",
+          when(col("content_hash") === md5(lit("caller excluded this hash")),
+            lit("removed")).otherwise(col("status")))
+        .write.mode("overwrite").parquet(dir)
 
-    def runWith(ledger: org.apache.spark.sql.DataFrame): Set[Long] = {
-      val in = MemoryStream[(Long, String, Timestamp)](spark)
-      val name = s"st16pin${System.nanoTime()}"
-      val out = StreamOps.bloomGuardedIngest(
-        in.toDF.toDF("doc_id", "text", "ts"), ledger, None,
-        textCol = "text", tsCol = "ts", watermarkDelay = "10 seconds")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        in.addData(
-          (1L, "keep this hash", ts(100)), // ledgered → dropped
-          (2L, "caller excluded this hash", ts(101)), // removed → NOVEL
-          (3L, "fresh doc", ts(102)))
-        q.processAllAvailable()
-        spark.table(name).select("doc_id").collect()
-          .map(_.getLong(0)).toSet
-      } finally q.stop()
+      def runWith(ledger: org.apache.spark.sql.DataFrame): Set[Long] = {
+        val in = MemoryStream[(Long, String, Timestamp)](spark)
+        val name = s"st16pin${System.nanoTime()}"
+        val out = StreamOps.bloomGuardedIngest(
+          in.toDF.toDF("doc_id", "text", "ts"), ledger, None,
+          textCol = "text", tsCol = "ts", watermarkDelay = "10 seconds")
+        val q = out.writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+        try {
+          in.addData(
+            (1L, "keep this hash", ts(100)), // ledgered → dropped
+            (2L, "caller excluded this hash", ts(101)), // removed → NOVEL
+            (3L, "fresh doc", ts(102)))
+          q.processAllAvailable()
+          spark.table(name).select("doc_id").collect()
+            .map(_.getLong(0)).toSet
+        } finally q.stop()
+      }
+      // row-filtered frame: the caller excluded the "removed" row — the
+      // pin must fall through (a column-name check would silently swap
+      // in the unfiltered files and wrongly drop doc 2)
+      runWith(spark.read.parquet(dir)
+        .filter(col("status") === "live")
+        .select("content_hash")) shouldBe Set(2L, 3L)
+      // bare (column-pruned) scan: pinned to the explicit file list and
+      // fully honored — both ledgered rows drop
+      runWith(spark.read.parquet(dir)
+        .select("content_hash")) shouldBe Set(3L)
     }
-    // row-filtered frame: the caller excluded the "removed" row — the
-    // pin must fall through (a column-name check would silently swap
-    // in the unfiltered files and wrongly drop doc 2)
-    runWith(spark.read.parquet(dir)
-      .filter(col("status") === "live")
-      .select("content_hash")) shouldBe Set(2L, 3L)
-    // bare (column-pruned) scan: pinned to the explicit file list and
-    // fully honored — both ledgered rows drop
-    runWith(spark.read.parquet(dir)
-      .select("content_hash")) shouldBe Set(3L)
   }
 
   test("ST7 streaming span decontamination: ledger overlap drops documents") {
@@ -426,8 +434,13 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("ST10 streaming near-dup matching equals batch d13 across " +
-      "micro-batches") {
+  /** ST10 over the test corpus: the src0 documents, then `extra`,
+    * arrive in two micro-batches against the other sources' band index.
+    * Returns the emitted (i, j) → jaccard and the query's last progress.
+    */
+  private def st10(t: Double, extra: Seq[(Long, String)]): (
+      Map[(Long, Long), Double],
+      org.apache.spark.sql.streaming.StreamingQueryProgress) = {
     import spark.implicits._
     val all = graft.sources.Tables.load(spark, TestSpark.sfDir, "documents")
     // the standing corpus' band index (d13's ledger schema), static
@@ -436,30 +449,71 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
       .localCheckpoint()
     val batchDocs = all.filter(col("source") === "src0")
       .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
+      .map(r => (r.getLong(0), r.getString(1))) ++ extra
     val in = MemoryStream[(Long, String)](spark)
     val out = StreamOps.nearDupMatches(
-      in.toDF.toDF("doc_id", "text"), ledger, "text", t = 0.8)
-    val q = out.writeStream.format("memory").queryName("st10")
+      in.toDF.toDF("doc_id", "text"), ledger, "text", t = t)
+    val name = s"st10_${System.nanoTime()}"
+    val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
       val (b1, b2) = batchDocs.splitAt(batchDocs.length / 2)
       in.addData(b1.toIndexedSeq); q.processAllAvailable()
       in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("st10").collect()
+      val got = spark.table(name).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      val expect = graft.SparkEntry.queries("d13_incremental_neardup")(
-          spark, TestSpark.sfDir).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
-      got.keySet shouldBe expect.keySet
-      expect.foreach { case (k, jac) =>
-        withClue(s"pair $k: ") { got(k) shouldBe jac +- 1e-12 }
-      }
-      // stateless by construction: no keyed state, no watermark — the
-      // query's progress reports zero state rows
-      val p = q.lastProgress
-      Option(p.stateOperators).map(_.length).getOrElse(0) shouldBe 0
+      (got, q.lastProgress)
     } finally q.stop()
+  }
+
+  test("ST10 streaming near-dup matching equals batch d13 across " +
+      "micro-batches") {
+    val (got, p) = st10(0.8, Seq())
+    val expect = graft.SparkEntry.queries("d13_incremental_neardup")(
+        spark, TestSpark.sfDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
+    got.keySet shouldBe expect.keySet
+    expect.foreach { case (k, jac) =>
+      withClue(s"pair $k: ") { got(k) shouldBe jac +- 1e-12 }
+    }
+    // stateless by construction: no keyed state, no watermark — the
+    // query's progress reports zero state rows
+    Option(p.stateOperators).map(_.length).getOrElse(0) shouldBe 0
+  }
+
+  test("ST10 honors its threshold: at t = 0.5 every pair's word-3-gram " +
+      "Jaccard clears 0.5 and equals the emitted value, and the t = 0.8 " +
+      "pairs are a subset") {
+    val docs = graft.sources.Tables.load(spark, TestSpark.sfDir, "documents")
+      .select("doc_id", "source", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    // standing documents re-sent with every 12th word replaced: about a
+    // fifth of their 3-grams change, so each sits near Jaccard 0.6 to
+    // its original, between the two thresholds
+    val variants = docs.filter(d => d._2 != "src0" && d._3.split(" ").length >= 40)
+      .take(4).toSeq.zipWithIndex.map { case ((_, _, text), k) =>
+        val w = text.split(" ", -1)
+        (1000000L + k) -> w.indices
+          .map(i => if (i % 12 == 11) s"variant$k-$i" else w(i)).mkString(" ")
+      }
+    variants.size shouldBe 4
+    val grams = (docs.map(d => d._1 -> d._3) ++ variants).map {
+      case (id, text) => id -> text.split(" ", -1).sliding(3)
+        .filter(_.length == 3).map(_.mkString(" ")).toSet
+    }.toMap
+    val (loose, _) = st10(0.5, variants)
+    val (strict, _) = st10(0.8, variants)
+    loose.foreach { case ((i, j), jac) =>
+      val inter = (grams(i) & grams(j)).size
+      val exact = inter.toDouble / (grams(i).size + grams(j).size - inter)
+      withClue(s"pair ($i, $j): ") {
+        exact should be >= 0.5
+        jac shouldBe exact
+      }
+    }
+    // the looser threshold admits pairs the default one drops
+    loose.values.exists(_ < 0.8) shouldBe true
+    strict.keySet.subsetOf(loose.keySet) shouldBe true
   }
 
   test("ST11 streaming scrub+score equals the batch t15/t2 projections " +
@@ -523,11 +577,7 @@ class StreamOpsSpec extends AnyFunSuite with Matchers {
 
   /** A recovery test over a fresh checkpoint dir, deleted afterwards. */
   private def recoveryTest(name: String)(body: String => Any): Unit =
-    test(name) {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
-      try body(ckpt.toString)
-      finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
-    }
+    test(name)(tempDir("graft-ckpt")(body))
 
   recoveryTest("ST2 recovery: sessions survive a kill + restart from " +
       "checkpoint") { ckpt =>
